@@ -54,7 +54,7 @@ def dsum_i(c: Column | str, digits: int) -> Column:
     per-row identity.
 
     Domain contract (verified per-row at sf0.001/0.01/0.1, zero mismatches
-    vs the decimal(27,6) cast — see OPTIMIZATION_r12.md "decimal tax"):
+    vs the decimal(27,6) cast — procedure in docs/SCALE.md "Aggregations"):
     l_quantity is integer-valued; l_extendedprice, l_discount, l_tax,
     o_totalprice, c_acctbal, s_acctbal, p_retailprice and events.value are
     exact 2-decimal values. Products compose: extprice*(1-disc) -> 4,

@@ -20,6 +20,11 @@ synthetic ``lineitem`` table:
 the flagship output by a coarser key — SUM of SUMs / MIN of MINs, the
 classic partial→final decomposition.
 
+Both shapes are frame-taking bodies (``supplier_summary(lineitem)``,
+``flag_summary(supplier_level)``); the registered queries wrap them over
+``load_table`` and the medallion's gold models (``plans/medallion.py``) run
+them over silver, so each gold shape has one definition.
+
 Scale notes: one shuffle on the 4 partition keys serves the window AND the
 (fused, r11) aggregate — the whole query is a single lineitem scan, a
 single Exchange, one Sort+Window and one aggregate pair; the reference's
@@ -40,30 +45,26 @@ from f1_lakehouse_spark.tables import load_table
 KEYS = ["ship_year", "l_returnflag", "l_linestatus", "l_suppkey"]
 
 
-def _timed_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The silver-style source CTE: typed keys + NULL-able measure + filter."""
-    li = load_table(spark, sf_dir, "lineitem")
+def _timed_lines(lineitem: DataFrame) -> DataFrame:
+    """The silver-style source CTE over a lineitem frame that carries
+    ``ship_year``: key columns + the NULL-able measure + its filter."""
     net_price = F.when(
         F.col("l_discount") > 0, F.col("l_extendedprice") * (F.lit(1) - F.col("l_discount"))
     )
-    return (
-        li.select(
-            F.year("l_shipdate").alias("ship_year"),
-            "l_returnflag",
-            "l_linestatus",
-            "l_suppkey",
-            "l_orderkey",
-            "l_linenumber",
-            "l_discount",
-            "l_tax",
-            net_price.alias("net_price"),
-        )
-        .filter(F.col("net_price").isNotNull())
-    )
+    return lineitem.select(
+        *KEYS,
+        "l_orderkey",
+        "l_linenumber",
+        "l_discount",
+        "l_tax",
+        net_price.alias("net_price"),
+    ).filter(F.col("net_price").isNotNull())
 
 
-def flagship_supplier_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    timed = _timed_lines(spark, sf_dir)
+def supplier_summary(lineitem: DataFrame) -> DataFrame:
+    """The driver_session_summary body over any lineitem frame with a
+    ``ship_year`` column (the bronze table here, silver in the medallion)."""
+    timed = _timed_lines(lineitem)
 
     # W1: personal-best ranking; ASC NULLS LAST to match DuckDB defaults
     # (reference driver_session_summary.sql:25 spells NULLS LAST explicitly).
@@ -104,6 +105,11 @@ def flagship_supplier_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce(F.col("_pb_lines"), F.lit(0)).alias("best_price_lines"),
         )
     )
+
+
+def flagship_supplier_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
+    li = load_table(spark, sf_dir, "lineitem")
+    return supplier_summary(li.withColumn("ship_year", F.year("l_shipdate")))
 
 
 FLAGSHIP_ORACLE = """
@@ -149,14 +155,13 @@ register(
 )(flagship_supplier_summary)
 
 
-def team_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
+def flag_summary(supplier_level: DataFrame) -> DataFrame:
     """A4: re-aggregate the flagship output by a coarser key (SUM of SUMs /
     MIN of MINs), exactly the reference's team_event_summary
     (team_event_summary.sql:7-15) including its IN-list filter (P6, line 5).
     """
-    driver_level = flagship_supplier_summary(spark, sf_dir)
     return (
-        driver_level.filter(F.col("l_returnflag").isin("A", "R"))
+        supplier_level.filter(F.col("l_returnflag").isin("A", "R"))
         .groupBy("ship_year", "l_returnflag")
         .agg(
             F.sum("lines_total").alias("lines_total"),
@@ -166,6 +171,10 @@ def team_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("supplier_groups"),
         )
     )
+
+
+def team_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return flag_summary(flagship_supplier_summary(spark, sf_dir))
 
 
 TEAM_ORACLE = f"""

@@ -11,10 +11,11 @@ columns, snake-case names. Gold models are the flagship shapes from
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from f1_lakehouse_spark.functions.expressions import to_snake_df
+from f1_lakehouse_spark.operators.gold import flag_summary, supplier_summary
 from f1_lakehouse_spark.plans.registry import ModelRegistry
 from f1_lakehouse_spark.tables import load_table
 
@@ -59,39 +60,7 @@ def build_registry(spark: SparkSession, sf_dir: str) -> ModelRegistry:
         description="flagship driver_session_summary shape over silver",
     )
     def gold_supplier_summary(inputs: dict[str, DataFrame]) -> DataFrame:
-        li = inputs["silver.lineitem_typed"]
-        keys = ["ship_year", "l_returnflag", "l_linestatus", "l_suppkey"]
-        net_price = F.when(
-            F.col("l_discount") > 0,
-            F.col("l_extendedprice") * (F.lit(1) - F.col("l_discount")),
-        )
-        timed = li.withColumn("net_price", net_price).filter(
-            F.col("net_price").isNotNull()
-        )
-        w = Window.partitionBy(*keys).orderBy(
-            F.col("net_price").asc_nulls_last(), "l_orderkey", "l_linenumber"
-        )
-        pb = (
-            timed.withColumn("rn", F.row_number().over(w))
-            .groupBy(*keys)
-            .agg(F.sum(F.when(F.col("rn") == 1, 1).otherwise(0)).alias("best_price_lines"))
-        )
-        agg = timed.groupBy(*keys).agg(
-            F.count("*").alias("lines_total"),
-            F.sum(F.when(F.col("l_discount") > 0.05, 1).otherwise(0)).alias(
-                "discounted_lines"
-            ),
-            F.sum(F.when(F.col("l_tax") > 0, 1).otherwise(0)).alias("taxed_lines"),
-            F.min("net_price").alias("best_price"),
-        )
-        return agg.join(pb, on=keys, how="left").select(
-            *keys,
-            "lines_total",
-            "discounted_lines",
-            "taxed_lines",
-            "best_price",
-            F.coalesce(F.col("best_price_lines"), F.lit(0)).alias("best_price_lines"),
-        )
+        return supplier_summary(inputs["silver.lineitem_typed"])
 
     @reg.model(
         "gold.flag_summary",
@@ -100,17 +69,6 @@ def build_registry(spark: SparkSession, sf_dir: str) -> ModelRegistry:
         description="team_event_summary shape: re-aggregation of gold",
     )
     def gold_flag_summary(inputs: dict[str, DataFrame]) -> DataFrame:
-        d = inputs["gold.supplier_summary"]
-        return (
-            d.filter(F.col("l_returnflag").isin("A", "R"))
-            .groupBy("ship_year", "l_returnflag")
-            .agg(
-                F.sum("lines_total").alias("lines_total"),
-                F.sum("discounted_lines").alias("discounted_lines"),
-                F.sum("taxed_lines").alias("taxed_lines"),
-                F.min("best_price").alias("best_price"),
-                F.count("*").alias("supplier_groups"),
-            )
-        )
+        return flag_summary(inputs["gold.supplier_summary"])
 
     return reg

@@ -9,9 +9,11 @@ dependency DAG, models materialize as full-rebuild tables in ``silver`` /
 Here a model is a Python function ``fn(inputs: dict[str, DataFrame]) ->
 DataFrame`` whose declared ``deps`` are other model names (``ref()``) or
 ``source:<table>`` pointers into the bronze layer. The runner topologically
-sorts, materializes each model (``saveAsTable`` full rebuild — the
-reference's ``+materialized: table``), and runs its ``not_null`` columns as
-DataFrame assertions (D4).
+sorts and materializes each model (``saveAsTable`` full rebuild — the
+reference's ``+materialized: table``). Its ``not_null`` columns (D4) are
+``observe()`` metrics on that write job: the row count and every declared
+column's null count come back from the one pass that writes the table,
+where dbt re-scans the built table once per test.
 
 Independent models can materialize concurrently (dbt's ``threads: 8``,
 reference ``profiles/profiles.yml:7``) — Spark's scheduler interleaves the
@@ -25,6 +27,10 @@ from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.observation import Observation
+
+from f1_lakehouse_spark.quality.checks import null_counts
 
 ModelFn = Callable[[dict[str, DataFrame]], DataFrame]
 
@@ -34,7 +40,7 @@ class Model:
     name: str  # e.g. "silver.lineitem_typed"
     fn: ModelFn
     deps: tuple[str, ...] = ()  # model names or "source:<table>"
-    not_null: tuple[str, ...] = ()  # D4 columns to assert post-build
+    not_null: tuple[str, ...] = ()  # D4 columns gated on the write job
     description: str = ""
 
     @property
@@ -121,17 +127,15 @@ class ModelRegistry:
         cache[name] = df
         return df
 
-    def run(
-        self,
-        spark: SparkSession,
-        materialize: bool = True,
-        max_workers: int = 4,
-    ) -> dict[str, RunResult]:
+    def run(self, spark: SparkSession, materialize: bool = True) -> dict[str, RunResult]:
         """Materialize every model in dependency order (full rebuild).
 
         Models at the same topological depth materialize concurrently
-        (dbt-threads analog). With ``materialize=False`` the DAG is only
-        resolved/validated and results report lazy row counts.
+        (dbt-threads analog, one thread per model of the wave). Each
+        model's row count and not_null failures are observed on its write
+        job, so a model costs that one job whatever it declares. With
+        ``materialize=False`` the same observed frame goes to the ``noop``
+        sink: the DAG is resolved and gated without writing tables.
         """
         order = self.topo_order()
         results: dict[str, RunResult] = {}
@@ -152,19 +156,20 @@ class ModelRegistry:
                     spark.sql(f"CREATE DATABASE IF NOT EXISTS {layer}")
 
             def _one(n: str) -> RunResult:
-                df = self.build_dataframe(n, cache)
+                not_null = self._models[n].not_null
+                obs = Observation()
+                df = self.build_dataframe(n, cache).observe(
+                    obs, F.count(F.lit(1)).alias("rows"), *null_counts(not_null, "nulls_")
+                )
+                writer = df.write.mode("overwrite")
                 if materialize:
-                    df.write.mode("overwrite").saveAsTable(n)
-                    out = spark.table(n)
+                    writer.saveAsTable(n)
                 else:
-                    out = df
-                failures = {
-                    c: out.filter(out[c].isNull()).count()
-                    for c in self._models[n].not_null
-                }
-                return RunResult(n, out.count(), failures)
+                    writer.format("noop").save()
+                got = obs.get
+                return RunResult(n, got["rows"], {c: got[f"nulls_{c}"] for c in not_null})
 
-            with concurrent.futures.ThreadPoolExecutor(max_workers=max_workers) as ex:
+            with concurrent.futures.ThreadPoolExecutor(max_workers=len(names)) as ex:
                 for res in ex.map(_one, names):
                     results[res.name] = res
         return results

@@ -12,8 +12,17 @@ scan per test like dbt does) and a row-count gate.
 
 from __future__ import annotations
 
+from collections.abc import Iterable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+
+def null_counts(columns: Iterable[str], prefix: str = "") -> list[Column]:
+    """The not_null measure every gate here shares: one aggregate per column
+    counting its NULL rows, aliased ``prefix + column`` (0, never NULL, on
+    an empty input)."""
+    return [F.count_if(F.col(c).isNull()).alias(prefix + c) for c in columns]
 
 
 def check_not_null(df: DataFrame, column: str) -> int:
@@ -25,13 +34,8 @@ def run_not_null_suite(df: DataFrame, columns: list[str]) -> dict[str, int]:
     """All declared columns in ONE aggregate pass over the table."""
     if not columns:
         return {}
-    row = df.agg(
-        *[
-            F.sum(F.col(c).isNull().cast("long")).alias(c)
-            for c in columns
-        ]
-    ).collect()[0]
-    return {c: int(row[c] or 0) for c in columns}
+    row = df.agg(*null_counts(columns)).collect()[0]
+    return {c: row[c] for c in columns}
 
 
 def check_row_counts(
@@ -99,9 +103,7 @@ def run_schema_suite(
     in ONE aggregate scan; unique checks share one extra aggregate (they
     need a groupBy, which can't fuse into the scan-level aggregate)."""
     out: dict[str, int] = {}
-    aggs = []
-    for c in not_null or []:
-        aggs.append(F.sum(F.col(c).isNull().cast("long")).alias(f"not_null__{c}"))
+    aggs = null_counts(not_null or [], "not_null__")
     for c, vals in (accepted_values or {}).items():
         aggs.append(
             F.sum(
@@ -132,10 +134,10 @@ def observed_write(
     from pyspark.sql.observation import Observation
 
     if metrics is None:
-        metrics = {"n_rows": F.count(F.lit(1))}
-        for c in df.columns:
-            metrics[f"nulls_{c}"] = F.count_if(F.col(c).isNull())
+        aggs = [F.count(F.lit(1)).alias("n_rows"), *null_counts(df.columns, "nulls_")]
+    else:
+        aggs = [m.alias(k) for k, m in metrics.items()]
     obs = Observation(name)
-    observed = df.observe(obs, *[m.alias(k) for k, m in metrics.items()])
+    observed = df.observe(obs, *aggs)
     observed.write.mode("overwrite").parquet(path)
     return obs.get

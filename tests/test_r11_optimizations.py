@@ -5,7 +5,7 @@ refactor can't silently undo it:
 
 - flagship_supplier_summary: window + aggregate fused — one lineitem scan,
   one shuffle Exchange, no join (the personal-best side used to be a second
-  scan + LeftOuter join).
+  scan + LeftOuter join); the medallion's gold.supplier_summary too.
 - q18_large_volume_customers: the HAVING aggregate IS the final quantity
   sum — no left_semi join, no re-aggregation of lineitem.
 - tables.load_table: DataFrame-handle memo (driver-side footer read once
@@ -48,13 +48,18 @@ def _plan_tree(df) -> str:
 
 def test_flagship_fused_single_scan_no_join(spark):
     from f1_lakehouse_spark.operators.gold import flagship_supplier_summary
+    from f1_lakehouse_spark.plans.medallion import build_registry
 
-    tree = _plan_tree(flagship_supplier_summary(spark, SF_DIR))
-    assert tree.count("Scan parquet") == 1, tree
-    # exactly the window's shuffle; the fused aggregate reuses its clustering
-    assert tree.count("Exchange") == 1, tree
-    assert "Join" not in tree, tree
-    assert "Window" in tree  # W1 stays a real window operator
+    # the registered query and the medallion's gold model over silver share
+    # one body, so both keep the fused plan
+    medallion_gold = build_registry(spark, SF_DIR).build_dataframe("gold.supplier_summary", {})
+    for df in (flagship_supplier_summary(spark, SF_DIR), medallion_gold):
+        tree = _plan_tree(df)
+        assert tree.count("Scan parquet") == 1, tree
+        # exactly the window's shuffle; the fused aggregate reuses its clustering
+        assert tree.count("Exchange") == 1, tree
+        assert "Join" not in tree, tree
+        assert "Window" in tree  # W1 stays a real window operator
 
 
 def test_q18_no_semi_join_single_lineitem_pass(spark):
