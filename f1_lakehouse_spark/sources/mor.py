@@ -24,11 +24,12 @@ window with no base at all)::
 
 Sequence semantics (Iceberg v2 sequence numbers, simplified): base rows
 carry seq 0; every committed fragment claims the next seq (shared across
-deletes and inserts, starting at 1). A delete file at seq s suppresses
-every row whose seq is < s with a matching key; an insert file's rows
-shadow every LOWER-seq row with the same key (latest-wins upsert), so an
-upsert is ONE atomic file commit — no delete-file companion whose torn
-half could publish a partial MERGE.
+deletes and inserts, starting at 1); a fragment's seq IS its file name
+(a carried-forward fragment is renamed to a freshly claimed seq). A
+delete file at seq s suppresses every row whose seq is < s with a
+matching key; an insert file's rows shadow every LOWER-seq row with the
+same key (latest-wins upsert), so an upsert is ONE atomic file commit —
+no delete-file companion whose torn half could publish a partial MERGE.
 
 Concurrent writers: a fragment commit claims its seq via an O_EXCL
 ``.lock`` create (the same fail-if-exists arbitration txn.py uses for
@@ -65,10 +66,11 @@ import os
 import re
 import shutil
 import uuid
-from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.observation import Observation
+from pyspark.sql.types import StructType
 
 POINTER = "_BASE"
 
@@ -157,40 +159,47 @@ def _next_seq(table_dir: str, gen: int) -> int:
     return top + 1
 
 
-def _commit_fragment(table_dir: str, gen: int, sub: str, src: str) -> bool:
-    """Claim the next seq in generation ``gen`` via an O_EXCL lock, move
-    the staged parquet file in atomically, then re-verify the generation
-    pointer. Returns False when a racing compaction displaced the
-    generation mid-commit (the orphan fragment is removed; the caller
-    redoes the operation against the new live generation)."""
+def _claim_and_move(table_dir: str, gen: int, sub: str, src: str) -> str:
+    """Claim the next seq in ``g{gen}/{sub}`` via an O_EXCL ``.lock``
+    create, then atomically rename ``src`` in under the claimed name
+    (readers never list a half file). Returns the fragment's path."""
     prefix = "d" if sub == "deletes" else "i"
     fdir = os.path.join(table_dir, _gen_name(gen), sub)
     os.makedirs(fdir, exist_ok=True)
     while True:
-        seq = _next_seq(table_dir, gen)
-        name = f"{prefix}{seq:010d}.parquet"
-        lock = os.path.join(fdir, name + ".lock")
+        target = os.path.join(fdir, f"{prefix}{_next_seq(table_dir, gen):010d}.parquet")
+        lock = target + ".lock"
         try:
-            fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            os.close(fd)
+            os.close(os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY))
         except FileExistsError:
             continue  # another writer claimed this seq: take the next
-        target = os.path.join(fdir, name)
-        os.replace(src, target)  # atomic; readers never list a half file
-        os.remove(lock)
-        if _live_gen(table_dir) == gen:
-            return True
-        # a compaction displaced this generation between our pointer read
-        # and the rename: the fragment is invisible to live readers and
-        # would be pruned — remove it and let the caller redo. If the
-        # remove finds it GONE, the compaction's carry-forward sweep
-        # already moved it into the new live generation: the commit is
-        # durable, report success instead of redoing it.
         try:
-            os.remove(target)
-        except FileNotFoundError:
-            return True
-        return False
+            os.replace(src, target)
+        finally:
+            os.remove(lock)
+        return target
+
+
+def _commit_fragment(table_dir: str, gen: int, sub: str, src: str) -> bool:
+    """Move the staged parquet file into generation ``gen`` under a
+    freshly claimed seq, then re-verify the generation pointer. Returns
+    False when a racing compaction displaced the generation mid-commit
+    (the orphan fragment is removed; the caller redoes the operation
+    against the new live generation)."""
+    target = _claim_and_move(table_dir, gen, sub, src)
+    if _live_gen(table_dir) == gen:
+        return True
+    # a compaction displaced this generation between our pointer read
+    # and the rename: the fragment is invisible to live readers and
+    # would be pruned — remove it and let the caller redo. If the
+    # remove finds it GONE, the compaction's carry-forward sweep
+    # already moved it into the new live generation: the commit is
+    # durable, report success instead of redoing it.
+    try:
+        os.remove(target)
+    except FileNotFoundError:
+        return True
+    return False
 
 
 _STAGING_TTL_SECONDS = 3600.0
@@ -208,26 +217,12 @@ def _carry_fragment_forward(
     whoever loses the rename/remove race sees FileNotFoundError and the
     fragment survives exactly once (the writer treats a vanished target
     as carried-forward success)."""
-    prefix = "d" if sub == "deletes" else "i"
-    fdir = os.path.join(table_dir, _gen_name(new_gen), sub)
-    os.makedirs(fdir, exist_ok=True)
-    while True:
-        seq = _next_seq(table_dir, new_gen)
-        name = f"{prefix}{seq:010d}.parquet"
-        lock = os.path.join(fdir, name + ".lock")
-        try:
-            fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            os.close(fd)
-        except FileExistsError:
-            continue
-        try:
-            os.replace(path, os.path.join(fdir, name))
-        except FileNotFoundError:
-            # the writer's displaced-commit cleanup removed the source
-            # first; its redo re-commits against the live generation
-            pass
-        os.remove(lock)
-        return
+    try:
+        _claim_and_move(table_dir, new_gen, sub, path)
+    except FileNotFoundError:
+        # the writer's displaced-commit cleanup removed the source
+        # first; its redo re-commits against the live generation
+        pass
 
 
 def _sweep_staging_orphans(table_dir: str) -> None:
@@ -251,19 +246,18 @@ def _sweep_staging_orphans(table_dir: str) -> None:
             shutil.rmtree(path, ignore_errors=True)
 
 
-def _stage_single_file(
-    spark: SparkSession, df: DataFrame, table_dir: str, count_rows: bool = True
-) -> tuple[str, str, int]:
+def _stage_single_file(df: DataFrame, table_dir: str) -> tuple[str, str, int]:
     """Write ``df`` as one staged parquet file; returns (staging_dir,
-    part_path, n_rows) — n_rows is -1 when ``count_rows`` is False (the
-    caller already knows the count and skips the extra read job). The
-    single-file coalesce is delta-bounded by construction (delete keys /
-    upsert batches, never the base)."""
+    part_path, n_rows), the row count observed on the write job itself.
+    The single-file coalesce is delta-bounded by construction (delete
+    keys / upsert batches, never the base)."""
     staging = os.path.join(table_dir, f"_staging_{uuid.uuid4().hex}")
-    df.coalesce(1).write.mode("overwrite").parquet(staging)
-    n = spark.read.parquet(staging).count() if count_rows else -1
+    obs = Observation()
+    df.observe(obs, F.count(F.lit(1)).alias("n")).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(staging)
     part = next(f for f in os.listdir(staging) if f.endswith(".parquet"))
-    return staging, os.path.join(staging, part), n
+    return staging, os.path.join(staging, part), obs.get["n"]
 
 
 def mor_delete(
@@ -286,7 +280,7 @@ def mor_delete(
             .select(key_col)
             .distinct()
         )
-        staging, part, n = _stage_single_file(spark, matched, table_dir)
+        staging, part, n = _stage_single_file(matched, table_dir)
         committed = _commit_fragment(table_dir, gen, "deletes", part)
         shutil.rmtree(staging, ignore_errors=True)
         if committed:
@@ -307,14 +301,27 @@ def mor_upsert(
     lower-seq row with the same key (latest-wins by sequence number), so
     no separate delete file is needed and a crash can never publish half
     the MERGE — matched keys update, unmatched keys insert, in the same
-    commit. ``rows`` must carry the base schema and unique keys (asserted:
-    two rows for one key in one batch would make latest-wins ambiguous).
+    commit. ``rows`` is checked, before any staging I/O, for the base
+    schema (column names and types; order and nullability are free —
+    readers scan insert files with the base schema, so a mismatched batch
+    would make the table unreadable) and for unique keys (two rows for
+    one key would make latest-wins ambiguous); both raise ValueError.
     Returns the number of rows committed."""
-    # validate the INPUT once, before any staging I/O — the invariant is
-    # about the caller's frame, and re-checking per displacement retry
-    # would repeat two read jobs for an unchanged answer
-    n = rows.count()
-    n_keys = rows.select(key_col).distinct().count()
+    base = spark.read.parquet(base_dir(table_dir)).schema
+    if {(f.name, f.dataType.simpleString()) for f in rows.schema} != {
+        (f.name, f.dataType.simpleString()) for f in base
+    }:
+        raise ValueError(
+            f"upsert batch schema {rows.schema.simpleString()} does not "
+            f"match the table's base schema {base.simpleString()}"
+        )
+    # one aggregate: groupBy keeps NULL keys as one group, as distinct does
+    n, n_keys = (
+        rows.groupBy(key_col)
+        .count()
+        .agg(F.coalesce(F.sum("count"), F.lit(0)), F.count("*"))
+        .first()
+    )
     if n_keys != n:
         raise ValueError(
             f"upsert batch has {n} rows but {n_keys} distinct "
@@ -322,9 +329,7 @@ def mor_upsert(
         )
     for _ in range(_MAX_COMMIT_RETRIES):
         gen = _live_gen(table_dir)
-        staging, part, _ = _stage_single_file(
-            spark, rows, table_dir, count_rows=False
-        )
+        staging, part, _ = _stage_single_file(rows, table_dir)
         committed = _commit_fragment(table_dir, gen, "inserts", part)
         shutil.rmtree(staging, ignore_errors=True)
         if committed:
@@ -345,28 +350,31 @@ def mor_read(
     3. minus every row suppressed by a delete fragment with a HIGHER seq
        (so a delete kills earlier versions, and a later upsert re-inserts).
 
-    Scale shape: the big side (base) only ever anti-joins against the
+    Scale shape: one scan per fragment kind (all insert files read with
+    the base schema, all delete files with the key's, each row's seq
+    taken from its file name), so planning cost does not grow with the
+    fragment count. The big side (base) only ever anti-joins against the
     bounded fragment key sets — what has been deleted/upserted since the
-    last compaction — so Spark's threshold/AQE broadcasts them without
-    any explicit hint (plan-lint rule: never hint a broadcast on an
-    unbounded side); the latest-wins window runs over insert fragments
-    only, never the base."""
+    last compaction — so Spark's threshold/AQE broadcasts them without any
+    explicit hint (plan-lint rule: never hint a broadcast on an unbounded
+    side); the latest-wins window runs over insert fragments only, never
+    the base."""
     if gen is None:
         gen = _live_gen(table_dir)
     base = spark.read.parquet(os.path.join(table_dir, _gen_name(gen), "base"))
-    ins = _fragments(table_dir, gen, "inserts")
-    dels = _fragments(table_dir, gen, "deletes")
+    ins = _insert_files(table_dir, gen)
+    dels = _delete_files(table_dir, gen)
     if not ins and not dels:
         return base
+
+    def scan(schema: StructType, paths: list[str]) -> DataFrame:
+        # _FRAGMENT_RE fixes every name as {d,i}{seq:010d}.parquet
+        seq = F.substring("_metadata.file_name", 2, 10).cast("long")
+        return spark.read.schema(schema).parquet(*paths).withColumn("_seq", seq)
+
     rows = base.withColumn("_seq", F.lit(0))
     if ins:
-        ins_df = reduce(
-            DataFrame.unionByName,
-            [
-                spark.read.parquet(p).withColumn("_seq", F.lit(s))
-                for s, p in ins
-            ],
-        )
+        ins_df = scan(base.schema, ins)
         latest = (
             ins_df.withColumn(
                 "_rn",
@@ -377,17 +385,12 @@ def mor_read(
             .filter(F.col("_rn") == 1)
             .drop("_rn")
         )
-        shadowed = ins_df.select(key_col).distinct()
+        # an anti-join's build side needs no distinct (saves a shuffle)
+        shadowed = ins_df.select(key_col)
         rows = rows.join(shadowed, key_col, "left_anti").unionByName(latest)
     if dels:
-        keys = reduce(
-            DataFrame.unionByName,
-            [
-                spark.read.parquet(p)
-                .select(F.col(key_col).alias("_dkey"))
-                .withColumn("_dseq", F.lit(s))
-                for s, p in dels
-            ],
+        keys = scan(StructType([base.schema[key_col]]), dels).select(
+            F.col(key_col).alias("_dkey"), F.col("_seq").alias("_dseq")
         )
         rows = rows.join(
             keys,

@@ -326,17 +326,100 @@ def test_mor_upsert_update_insert_delete_reinsert(spark, tmp_path):
     assert sorted(pinned.items()) == pre
 
 
-def test_mor_upsert_rejects_duplicate_keys(spark, tmp_path):
-    from f1_lakehouse_spark.sources.mor import mor_upsert
+@pytest.mark.parametrize(
+    "data, schema, error",
+    [
+        ([(1, 5), (1, 6)], "id int, grp int", "unique keys"),
+        ([(None, 5), (None, 6)], "id int, grp int", "unique keys"),
+        ([(None, 5)], "id int, grp int", None),
+        ([(1,)], "id int", "base schema"),
+        ([(1, 5, 0)], "id int, grp int, x int", "base schema"),
+        ([(1, 5)], "id long, grp int", "base schema"),
+    ],
+    ids=[
+        "duplicate_keys",
+        "two_null_keys",
+        "one_null_key",
+        "missing_column",
+        "extra_column",
+        "key_type",
+    ],
+)
+def test_mor_upsert_rejects_duplicate_keys(spark, tmp_path, data, schema, error):
+    """A batch with duplicate keys (NULL counts as one key) or a schema
+    other than the base's is rejected before anything is staged, and the
+    table stays readable; a single NULL-key row is a valid batch."""
+    from f1_lakehouse_spark.sources.mor import _insert_files, mor_read, mor_upsert
 
     tbl = _mor_base(spark, tmp_path)
-    dup = spark.createDataFrame([(1, 5), (1, 6)], "id int, grp int")
-    with pytest.raises(ValueError, match="unique keys"):
-        mor_upsert(spark, tbl, "id", dup)
-    # and no fragment was committed by the failed batch
-    from f1_lakehouse_spark.sources.mor import _insert_files
+    base_rows = [(i, i % 3) for i in range(10)]
+    batch = spark.createDataFrame(data, schema)
 
+    def view():
+        return sorted(
+            (tuple(r) for r in mor_read(spark, tbl, "id").collect()),
+            key=lambda r: (r[0] is not None, r),
+        )
+
+    if error is None:
+        assert mor_upsert(spark, tbl, "id", batch) == 1
+        assert view() == [(None, 5), *base_rows]
+        return
+    with pytest.raises(ValueError, match=error):
+        mor_upsert(spark, tbl, "id", batch)
+    # no fragment was committed by the failed batch
     assert _insert_files(tbl, 0) == []
+    assert view() == base_rows
+
+
+def test_mor_read_cost_independent_of_fragment_count(spark, tmp_path):
+    """One scan per fragment kind: the same filtered aggregate over the
+    merged view fires the same number of Spark jobs, and plans the same
+    three parquet relations (base, all insert files, all delete files), at
+    2 and at 6 live fragments."""
+    from f1_lakehouse_spark.sources.mor import mor_delete, mor_read, mor_upsert
+
+    tbl = _mor_base(spark, tmp_path)
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+
+    def upsert(key):
+        batch = spark.createDataFrame([(key, 7)], "id int, grp int")
+        assert mor_upsert(spark, tbl, "id", batch) == 1
+
+    def delete(key):
+        assert mor_delete(spark, tbl, "id", F.col("id") == key) == 1
+
+    def read():
+        j0 = int(dag.nextJobId())
+        df = mor_read(spark, tbl, "id").filter(F.col("grp") > 0)
+        got = tuple(df.agg(F.count("*"), F.sum("id")).first())
+        jobs = int(dag.nextJobId()) - j0
+        leaves = df._jdf.queryExecution().sparkPlan().collectLeaves()
+        nodes, relations = 0, set()
+        for i in range(leaves.size()):
+            leaf = leaves.apply(i)
+            if leaf.getClass().getSimpleName() == "FileSourceScanExec":
+                paths = leaf.relation().location().rootPaths()
+                nodes += 1
+                relations.add(
+                    frozenset(paths.apply(j).toString() for j in range(paths.size()))
+                )
+        return got, jobs, nodes, sorted(len(r) for r in relations)
+
+    upsert(20)
+    delete(1)
+    got2, jobs2, nodes2, rel2 = read()
+    upsert(21)
+    delete(2)
+    upsert(22)
+    delete(3)
+    got6, jobs6, nodes6, rel6 = read()
+    assert got2 == (6, 46) and got6 == (7, 87)
+    assert jobs2 == jobs6, (jobs2, jobs6)
+    assert nodes2 == nodes6, (nodes2, nodes6)
+    # base dir, the one insert file, the one delete file; then base dir,
+    # three insert files in one relation, three delete files in another
+    assert rel2 == [1, 1, 1] and rel6 == [1, 3, 3], (rel2, rel6)
 
 
 # ---------------------------------------------------------------------------
@@ -512,7 +595,7 @@ def test_mor_compaction_carries_forward_late_fragments(spark, tmp_path):
         # BEFORE the swap; its own re-verify passes (pointer still old)
         mor._swap_pointer = real_swap
         keys = spark.createDataFrame([(5,)], "id int")
-        staging, part, _ = mor._stage_single_file(spark, keys, table_dir)
+        staging, part, _ = mor._stage_single_file(keys, table_dir)
         assert mor._commit_fragment(table_dir, 0, "deletes", part) is True
         _sh.rmtree(staging, ignore_errors=True)
         real_swap(table_dir, gen)
