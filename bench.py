@@ -29,10 +29,10 @@ suite TOTAL is always honest):
   --------------------  -------------------------------------------------
   dedup_minhash_verified pays the warming cost for the pair-list +
                          shingle caches the queries below reuse
-  dedup_minhash_lsh      MinHash candidate pair list (_MH_PAIRS_CACHE)
+  dedup_minhash_lsh      MinHash candidate pair list (its own cache entry)
   dedup_clusters         same pair list
-  dedup_ngram_jaccard    distinct-shingles frame (_SHINGLE_CACHE)
-  text_lang_id_confusion pinned confusion matrix (_CONFUSION_CACHE, r9;
+  dedup_ngram_jaccard    distinct-shingles frame (dedup.shingle_keys_frame)
+  text_lang_id_confusion pinned confusion matrix (its own cache entry, r9;
                          warms text_lang_id_macro_f1 in the full suite)
 
 In the FULL suite the trigram/hashed-score/survivors caches make the

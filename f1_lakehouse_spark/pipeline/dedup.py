@@ -36,7 +36,7 @@ from f1_lakehouse_spark.pipeline.hashing import (
     sql_poly_hash,
 )
 from f1_lakehouse_spark.registry import REGISTRY, register
-from f1_lakehouse_spark.tables import load_table
+from f1_lakehouse_spark.tables import cached_per_input, load_table
 
 SHINGLE_WORDS = 3
 JACCARD_THRESHOLD = 0.35
@@ -131,23 +131,12 @@ _SQL_SHINGLE_KEYS = f"""
 # jaccard, LSH candidate recall's truth arm, edit distance, jaccard
 # prefix filter, containment) all start from the identical distinct
 # (doc_id, sk) 3-gram frame — a corpus scan + per-word md5 + explode +
-# DISTINCT shuffle each time. One persisted entry per (session, input),
-# the char_trigram_frame convention (never unpersisted inside a query
-# fn; rolls over on input change).
-_SHINGLE_CACHE: dict[tuple[str, str], DataFrame] = {}
-_MH_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+# DISTINCT shuffle each time. One persisted entry per (session, input)
+# (tables.cached_per_input; never unpersisted inside a query fn).
+@cached_per_input("documents")
 def shingle_keys_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _SHINGLE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    for old_key in list(_SHINGLE_CACHE):
-        _SHINGLE_CACHE.pop(old_key).unpersist()
     shk = _spark_shingle_keys(load_table(spark, sf_dir, "documents")).persist()
     shk.count()
-    _SHINGLE_CACHE[key] = shk
     return shk
 
 
@@ -394,17 +383,12 @@ MINHASH_PAIRS_SQL = _MINHASH_PAIRS_SQL
     doc="MinHash(16) + LSH(4x4 bands) candidate pairs",
     tags=("pipeline", "dedup", "minhash"),
 )
+@cached_per_input("documents")
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shared (session, input)-keyed persisted cache: the candidate pair
     # list is consumed by clusters / keep_list / candidate_recall too,
     # and is tiny (bucket-bounded) while its lineage is a full corpus
-    # md5+minhash pass
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _MH_PAIRS_CACHE.get(key)
-    if hit is not None:
-        return hit
-    for old_key in list(_MH_PAIRS_CACHE):
-        _MH_PAIRS_CACHE.pop(old_key).unpersist()
+    # md5+minhash pass.
     # r11: build the bands from the session-cached distinct shingle frame
     # (identical minima — MIN is duplicate-insensitive, and the oracle's
     # band CTEs read the DISTINCT shingle CTE) so the corpus is word-hashed
@@ -417,11 +401,10 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # minhash_lsh_pairs persists+materializes internally; only add our own
     # persist if a future refactor drops that, so the rollover unpersist
-    # above always releases the frame this cache actually pinned
+    # always releases the frame this cache actually pinned
     if not pairs.is_cached:
         pairs = pairs.persist()
         pairs.count()
-    _MH_PAIRS_CACHE[key] = pairs
     return pairs
 
 
@@ -731,7 +714,7 @@ def connected_components(
     # whole candidate-generation pipeline re-runs per materialization
     # (measured at 10x: dedup_clusters 32 s, ~2x the pipeline cost).
     # BORROWED frames (already persisted by a caller — e.g. the
-    # _MH_PAIRS_CACHE shared entry) must NOT be unpersisted here: that
+    # dedup_minhash_lsh shared entry) must NOT be unpersisted here: that
     # would silently turn the session cache cold for every later consumer
     # (the shared-frame rule: never unpersist inside a query fn).
     borrowed = pairs.is_cached
@@ -896,8 +879,8 @@ def dedup_minhash_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r11 optimization (guide §1.2 "don't compute things twice"): both
     # inputs come from the session's shared caches instead of a private
     # per-call shingle pass — the distinct (doc_id, sk) frame
-    # (_SHINGLE_CACHE, shared with the Jaccard/edit-distance/containment
-    # family) and the LSH candidate pair list (_MH_PAIRS_CACHE, shared with
+    # (shingle_keys_frame, shared with the Jaccard/edit-distance/containment
+    # family) and the LSH candidate pair list (dedup_minhash_lsh, shared with
     # clusters/keep_list/candidate-recall). Equivalent by construction:
     # MinHash MIN is duplicate-insensitive, so candidates over the distinct
     # shingle set equal candidates over the raw multiset (the oracle's own

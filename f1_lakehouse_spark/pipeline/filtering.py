@@ -29,7 +29,7 @@ from f1_lakehouse_spark.pipeline.hashing import (
     sql_md5_hash48,
 )
 from f1_lakehouse_spark.registry import register
-from f1_lakehouse_spark.tables import load_table
+from f1_lakehouse_spark.tables import cached_per_input, load_table
 
 # --- benchmark decontamination ------------------------------------------------------
 # The GPT-3/Llama-style n-gram overlap check: any training document sharing
@@ -84,17 +84,12 @@ LEFT JOIN hits h USING (doc_id)
     "48-bit integer hashes)",
     tags=("pipeline", "filtering", "decontam"),
 )
+@cached_per_input("documents")
 def decontam_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shared (session, input)-keyed persisted cache: called by its own
     # query AND the survivor composition; the previous per-call persist
     # (kept for the bench/verify double-read) accumulated one persisted
     # copy per invocation — a storage leak pattern at 100 TB
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _DECONTAM_CACHE.get(key)
-    if hit is not None:
-        return hit
-    for old_key in list(_DECONTAM_CACHE):
-        _DECONTAM_CACHE.pop(old_key).unpersist()
     d = load_table(spark, sf_dir, "documents")
     base = d.select(
         "doc_id",
@@ -136,7 +131,6 @@ def decontam_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = out.persist()
     out.count()
     grams.unpersist()
-    _DECONTAM_CACHE[key] = out
     return out
 
 
@@ -184,6 +178,7 @@ FROM feats
     "expressions (no shuffle anywhere)",
     tags=("pipeline", "filtering", "quality"),
 )
+@cached_per_input("documents")
 def quality_gopher_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r11: session-cached (the cache-roster convention, SCALE.md): eleven
     # queries consume this label frame (every scoring_* evaluation joins
@@ -191,10 +186,6 @@ def quality_gopher_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     # nested-HOF pass (O(words²) per doc) that cost ~0.8 s per CALL at
     # sf0.1 — one persisted entry per (session, input), rolled over on
     # input change; borrowed by consumers (never unpersisted by them).
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _GOPHER_CACHE.get(key)
-    if hit is not None:
-        return hit
     d = load_table(spark, sf_dir, "documents")
     # materialize ws as a real column first so lambdas reference a column,
     # not a re-evaluated split() expression (see CLAUDE.md determinism note)
@@ -241,11 +232,8 @@ def quality_gopher_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(0)
         .alias("passes_repetition"),
     )
-    for old_key in list(_GOPHER_CACHE):
-        _GOPHER_CACHE.pop(old_key).unpersist()
     out = out.persist()
     out.count()
-    _GOPHER_CACHE[key] = out
     return out
 
 
@@ -346,14 +334,6 @@ from f1_lakehouse_spark.pipeline import dedup as _dedup  # noqa: E402  (after re
 from f1_lakehouse_spark.registry import REGISTRY as _REGISTRY  # noqa: E402
 
 
-_DECONTAM_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-# (session, input) -> persisted gopher label frame (r11; see
-# quality_gopher_repetition — eleven consumers join this gate)
-_GOPHER_CACHE: dict[tuple[str, str], DataFrame] = {}
-_SURVIVORS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 @register(
     "pipeline_corpus_survivors",
     oracle=f"""
@@ -382,18 +362,13 @@ JOIN dec USING (doc_id)
     "pipeline composed and differentially checked end-to-end",
     tags=("pipeline", "filtering", "compose"),
 )
+@cached_per_input("documents")
 def pipeline_corpus_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # single-entry (session, input)-keyed persisted cache (the
-    # char_trigram_frame convention): the composed pipeline re-runs the
-    # dedup candidate+verify, gopher, and decontam stages — its one other
-    # consumer (filtering_bias_audit) audits the SAME survivors, so the
-    # three stages should run once per corpus, not once per query
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _SURVIVORS_CACHE.get(key)
-    if hit is not None:
-        return hit
-    for old_key in list(_SURVIVORS_CACHE):
-        _SURVIVORS_CACHE.pop(old_key).unpersist()
+    # single-entry (session, input)-keyed persisted cache: the composed
+    # pipeline re-runs the dedup candidate+verify, gopher, and decontam
+    # stages — its one other consumer (filtering_bias_audit) audits the
+    # SAME survivors, so the three stages should run once per corpus, not
+    # once per query
     kept = (
         _dedup.dedup_keep_list(spark, sf_dir)
         .filter(F.col("keep") == 1)
@@ -423,7 +398,6 @@ def pipeline_corpus_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = out.persist()
     out.count()
-    _SURVIVORS_CACHE[key] = out
     return out
 
 

@@ -34,7 +34,7 @@ from f1_lakehouse_spark.pipeline.hashing import (
     sql_salted_hash,
 )
 from f1_lakehouse_spark.registry import register
-from f1_lakehouse_spark.tables import load_table
+from f1_lakehouse_spark.tables import cached_per_input, load_table
 
 DSIR_B = 1024  # hash buckets per n-gram model
 DSIR_TARGET_LANG = "en"  # the "target domain" for the importance weights
@@ -358,17 +358,8 @@ def scoring_hashed_linear_quality(spark: SparkSession, sf_dir: str) -> DataFrame
 # per document. Same single-entry (session, input)-keyed persisted cache
 # as text.char_trigram_frame (CLAUDE.md shared-frame convention: never
 # unpersisted inside a query fn; rolls over on input change).
-
-_SCORE_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@cached_per_input("documents")
 def hashed_score_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _SCORE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    for old_key in list(_SCORE_CACHE):
-        _SCORE_CACHE.pop(old_key).unpersist()
     d = load_table(spark, sf_dir, "documents")
     toks = d.filter(F.col("text").isNotNull()).select(
         "doc_id", "lang", F.split("text", " ").alias("ws")
@@ -412,7 +403,6 @@ def hashed_score_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = out.persist()
     out.count()  # materialize: consumers join/aggregate it repeatedly
-    _SCORE_CACHE[key] = out
     return out
 
 

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from f1_lakehouse_spark.pipeline.hashing import spark_salted_hash, sql_salted_hash
 from f1_lakehouse_spark.registry import REGISTRY, register
-from f1_lakehouse_spark.tables import load_table
+from f1_lakehouse_spark.tables import cached_per_input, load_table
 
 QUERY_VEC_ID = 0  # the corpus vector used as the search query
 TOP_K = 10
@@ -758,37 +758,24 @@ def _spark_update(assigned: DataFrame) -> dict[int, list[float]]:
     return model
 
 
-# Cached like _PQ_MODEL_CACHE / top_pc_vector: the coarse quantizer is the
-# same trained model for every consumer (ann_ivf_kmeans, semdedup), and the
-# model is driver-side tiny (K x DIM floats).
-_KMEANS_CACHE: dict[tuple[str, str], dict[int, list[float]]] = {}
-
-
+# Cached like _pq_trained_models / top_pc_vector: the coarse quantizer is
+# the same trained model for every consumer (ann_ivf_kmeans, semdedup), and
+# the model is driver-side tiny (K x DIM floats).
+@cached_per_input("embeddings")
 def _train_kmeans(
-    e: DataFrame, spark: SparkSession | None = None, sf_dir: str | None = None
+    spark: SparkSession, sf_dir: str, e: DataFrame
 ) -> dict[int, list[float]]:
     """K corpus-seeded centroids after KMEANS_ITERS Lloyd iterations — the
-    deterministic training chain shared by ann_ivf_kmeans and semdedup.
-    Pass (spark, sf_dir) to hit the (session, input) model cache; on a
-    miss the frame is persisted for the iteration scans."""
-    key = None
-    if spark is not None and sf_dir is not None:
-        key = (spark.sparkContext.applicationId, sf_dir)
-        hit = _KMEANS_CACHE.get(key)
-        if hit is not None:
-            return hit
-        _KMEANS_CACHE.clear()  # one entry: model rolls over on input change
-    own = key is not None
-    if own:
-        e = e.persist()
-        e.count()  # materialize: assign+update scan per iteration
+    deterministic training chain shared by ann_ivf_kmeans and semdedup,
+    cached per (session, input); on a miss the frame is persisted for the
+    iteration scans."""
+    e = e.persist()
+    e.count()  # materialize: assign+update scan per iteration
     seeds = e.filter(F.col("vec_id") < KMEANS_K).collect()
     model = {int(r["vec_id"]): [float(x) for x in r["embedding"]] for r in seeds}
     for _ in range(KMEANS_ITERS):
         model = _spark_update(_spark_assign(e, model))
-    if own:
-        e.unpersist()
-        _KMEANS_CACHE[key] = model
+    e.unpersist()
     return model
 
 
@@ -805,7 +792,7 @@ def _train_kmeans(
 )
 def ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    final = _spark_assign(e, _train_kmeans(e, spark, sf_dir))
+    final = _spark_assign(e, _train_kmeans(spark, sf_dir, e))
     q = final.filter(F.col("vec_id") == QUERY_VEC_ID).collect()[0]
     q_emb = F.array(*[F.lit(float(v)) for v in q["embedding"]])
     return (
@@ -1132,22 +1119,13 @@ def _pq_adc_scored(
 # scans. One (session, input)-keyed cache of the DRIVER-SIDE model (tiny:
 # PQ_M x PQ_K x SUBDIM floats, no executor storage), same discipline as
 # text.char_trigram_frame / top_pc_vector.
-_PQ_MODEL_CACHE: dict[
-    tuple[str, str], tuple[list[dict[int, list[float]]], list[float]]
-] = {}
-
-
+@cached_per_input("embeddings")
 def _pq_trained_models(
     spark: SparkSession, sf_dir: str, e: DataFrame
 ) -> tuple[list[dict[int, list[float]]], list[float]]:
     """([per-subspace trained codebooks], query embedding), cached per
     (session, sf_dir); on a miss the embeddings frame is persisted for the
     PQ_M training scans and released before returning."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _PQ_MODEL_CACHE.get(key)
-    if hit is not None:
-        return hit
-    _PQ_MODEL_CACHE.clear()  # one entry: model rolls over on input change
     e = e.persist()
     e.count()  # materialize: scanned once per subspace below
     seed_rows = e.filter(F.col("vec_id") < PQ_K).collect()
@@ -1167,7 +1145,6 @@ def _pq_trained_models(
     )
     trained_list = [_pq_update(e, seeds[m], m) for m in range(PQ_M)]
     e.unpersist()
-    _PQ_MODEL_CACHE[key] = (trained_list, q_emb)
     return trained_list, q_emb
 
 
@@ -1352,7 +1329,7 @@ FROM a3 f LEFT JOIN dup d ON d.vec_id = f.vec_id
 )
 def semdedup_cluster_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    final = _spark_assign(e, _train_kmeans(e, spark, sf_dir))
+    final = _spark_assign(e, _train_kmeans(spark, sf_dir, e))
     # self-join on a derived frame: persist AND materialize first (CLAUDE.md)
     final = final.persist()
     final.count()
@@ -1806,9 +1783,7 @@ def _spark_pi_update(e: DataFrame, v: list[float]) -> list[float]:
 # single-entry cache keyed by (session, input), the same discipline as
 # text.char_trigram_frame. Whichever spectral query runs first pays the
 # PI_ITERS corpus scans; the other reuses the vector for free.
-_TOP_PC_CACHE: dict[tuple[str, str], list[float]] = {}
-
-
+@cached_per_input("embeddings")
 def top_pc_vector(
     spark: SparkSession, sf_dir: str, e: DataFrame | None = None
 ) -> list[float]:
@@ -1819,11 +1794,6 @@ def top_pc_vector(
     per the self-join/iteration discipline) its own frame for the
     iterations and unpersists it before returning.
     """
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _TOP_PC_CACHE.get(key)
-    if hit is not None:
-        return hit
-    _TOP_PC_CACHE.clear()  # one entry: model rolls over on input change
     own = e is None
     if own:
         e = load_table(spark, sf_dir, "embeddings").persist()
@@ -1833,7 +1803,6 @@ def top_pc_vector(
         v = _spark_pi_update(e, v)
     if own:
         e.unpersist()
-    _TOP_PC_CACHE[key] = v
     return v
 
 

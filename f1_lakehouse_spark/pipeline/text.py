@@ -17,7 +17,7 @@ from f1_lakehouse_spark.pipeline.hashing import (
     sql_poly_hash,
 )
 from f1_lakehouse_spark.registry import register
-from f1_lakehouse_spark.tables import load_table
+from f1_lakehouse_spark.tables import cached_per_input, load_table
 
 # --- token counting ------------------------------------------------------------
 # whitespace tokens + a BPE-ish regex segmentation (letter runs / digits /
@@ -172,23 +172,15 @@ FROM best GROUP BY 1, 2
     doc="profile-based language-ID confusion matrix (broadcast profile join)",
     tags=("pipeline", "text", "langid"),
 )
+@cached_per_input("documents")
 def text_lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered entry: the (session, sf_dir)-cached PINNED confusion
+    """Registered entry: the (session, input)-cached PINNED confusion
     frame. The matrix is |langs|^2 rows but costs a full corpus classify
     to build, and it has two registered consumers (this query and
     text_lang_id_macro_f1) — the shared-cache roster pattern. The cache
     stores a pin_small_result LocalRelation, so unlike the persisted
     frames there is nothing to unpersist on rollover."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _CONFUSION_CACHE.get(key)
-    if hit is None:
-        _CONFUSION_CACHE.clear()
-        hit = pin_small_result(_confusion_build(spark, sf_dir), 64)
-        _CONFUSION_CACHE[key] = hit
-    return hit
-
-
-_CONFUSION_CACHE: dict[tuple[str, str], DataFrame] = {}
+    return pin_small_result(_confusion_build(spark, sf_dir), 64)
 
 
 def _confusion_build(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -233,14 +225,12 @@ def _confusion_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 # surprisal — and any future model-based filter) start from the identical
 # exploded (doc_id, lang, g) frame; building it twice costs a full corpus
 # scan + explode each. One persisted, materialized frame is shared through
-# a single-entry cache (keyed by session + sf_dir; switching inputs
-# unpersists the previous frame, so executor storage holds at most one
-# corpus's grams — no session-lifetime leak across datasets).
+# tables.cached_per_input (switching inputs unpersists the previous frame,
+# so executor storage holds at most one corpus's grams — no
+# session-lifetime leak across datasets).
 
 
-_TRIGRAM_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@cached_per_input("documents")
 def char_trigram_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exploded char-trigram frame (doc_id, lang, g), persisted + shared.
 
@@ -248,12 +238,6 @@ def char_trigram_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     because Spark's sequence(1, n) runs DESCENDING for n < 1 and would
     fabricate phantom grams where DuckDB's generate_series is empty (same
     guard as _spark_shingle_keys)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _TRIGRAM_CACHE.get(key)
-    if hit is not None:
-        return hit
-    for old_key in list(_TRIGRAM_CACHE):
-        _TRIGRAM_CACHE.pop(old_key).unpersist()
     d = load_table(spark, sf_dir, "documents")
     grams_arr = F.transform(
         F.sequence(F.lit(1), F.length("text") - F.lit(2)),
@@ -264,7 +248,6 @@ def char_trigram_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     grams = d.select("doc_id", "lang", F.explode(grams_arr).alias("g")).persist()
     grams.count()  # materialize: every consumer self-joins against it
-    _TRIGRAM_CACHE[key] = grams
     return grams
 
 
@@ -658,25 +641,17 @@ p3 AS ({_sql_bpe_pairs("w2")}),
 w3 AS ({_sql_bpe_merge("w2", "p3")})"""
 
 
-# Trained-model cache, same single-entry discipline as _TRIGRAM_CACHE:
+# Trained-model cache, same single-entry discipline as char_trigram_frame:
 # both BPE queries (merges table, encode/apply) consume the identical
 # trained vocabulary; training runs the iterative merge loop (3 actions +
 # a driver round-trip each), so sharing it saves a full re-train per
 # consumer. Consumers must NOT unpersist the returned frame (CLAUDE.md
 # shared-frame convention); the cache rolls over on input change.
-_BPE_CACHE: dict[tuple[str, str], tuple[DataFrame, list]] = {}
-
-
+@cached_per_input("documents")
 def bpe_trained_frame(spark: SparkSession, sf_dir: str):
     """Trained BPE state: (final (w, cnt, seq) DataFrame — persisted,
     shared, do not unpersist — and the merge list
     [(iteration, a, b, weighted_count)])."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _BPE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    for old_key in list(_BPE_CACHE):
-        _BPE_CACHE.pop(old_key)[0].unpersist()
     d = load_table(spark, sf_dir, "documents")
     words = (
         d.select(F.explode(F.split("text", " ")).alias("w"))
@@ -725,7 +700,6 @@ def bpe_trained_frame(spark: SparkSession, sf_dir: str):
         merged.count()
         seqs.unpersist()
         seqs = merged
-    _BPE_CACHE[key] = (seqs, merges)
     return seqs, merges
 
 

@@ -70,14 +70,6 @@ def check_unique(df: DataFrame, column: str) -> int:
     )
 
 
-def check_accepted_values(df: DataFrame, column: str, values: list) -> int:
-    """dbt `accepted_values` shape: rows whose value is outside the
-    declared domain (NULLs are not_null's job, not ours)."""
-    return df.filter(
-        F.col(column).isNotNull() & ~F.col(column).isin(values)
-    ).count()
-
-
 def check_relationships(
     child: DataFrame, child_col: str, parent: DataFrame, parent_col: str
 ) -> int:

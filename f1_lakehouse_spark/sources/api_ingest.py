@@ -31,6 +31,8 @@ from dataclasses import dataclass
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from f1_lakehouse_spark.sources.txn import _atomic_write
+
 # A fetcher maps one task row (as a dict) to a pandas DataFrame of records.
 # It runs on executors — it must be picklable and self-contained.
 FetchFn = Callable[[dict], pd.DataFrame]
@@ -56,10 +58,7 @@ class CachedFetcher:
                 return pd.DataFrame(json.load(f))
         out = self.fetch(task)
         os.makedirs(self.cache_dir, exist_ok=True)
-        tmp = path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(out.to_dict(orient="records"), f, default=str)
-        os.replace(tmp, path)
+        _atomic_write(path, json.dumps(out.to_dict(orient="records"), default=str))
         return out
 
 

@@ -72,6 +72,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.observation import Observation
 from pyspark.sql.types import StructType
 
+from f1_lakehouse_spark.sources.txn import _atomic_write
+
 POINTER = "_BASE"
 
 _FRAGMENT_RE = re.compile(r"^([di])(\d{10})\.parquet(\.lock)?$")
@@ -100,11 +102,7 @@ def _live_gen(table_dir: str) -> int:
 
 
 def _swap_pointer(table_dir: str, gen: int) -> None:
-    ptr = os.path.join(table_dir, POINTER)
-    tmp = ptr + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(_gen_name(gen))
-    os.replace(tmp, ptr)
+    _atomic_write(os.path.join(table_dir, POINTER), _gen_name(gen))
 
 
 def base_dir(table_dir: str) -> str:

@@ -1,4 +1,5 @@
-"""Bronze-layer parquet sources/sinks (SURVEY.md §2.1 S3–S6).
+"""Bronze-layer parquet sources/sinks (SURVEY.md §2.1 S3–S5; S6 CTAS is
+``plans/registry`` materialization).
 
 The reference writes one hive-partitioned parquet dir per
 ``(season, round, grand_prix, session)`` with an idempotent skip when the
@@ -164,13 +165,3 @@ def write_bucketed_table(
         .format("parquet")
         .saveAsTable(name)
     )
-
-
-def create_table_as(
-    spark: SparkSession, name: str, df: DataFrame, layer: str | None = None
-) -> None:
-    """S6: CTAS full-rebuild materialization (dbt `+materialized: table`)."""
-    if layer:
-        spark.sql(f"CREATE DATABASE IF NOT EXISTS {layer}")
-        name = f"{layer}.{name}"
-    df.write.mode("overwrite").saveAsTable(name)

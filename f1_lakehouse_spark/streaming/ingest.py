@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from f1_lakehouse_spark.sources.txn import _atomic_write
 from f1_lakehouse_spark.tables import _pin_session_confs, table_path
 
 
@@ -264,10 +265,7 @@ def _mvcc_publish(batch_df: DataFrame, batch_id: int, path: str, merge_fn) -> No
     old = read_gold(sess, path)
     out = merge_fn(old, batch_df)
     out.write.mode("overwrite").parquet(os.path.join(path, version))
-    tmp = ptr + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(version)
-    os.replace(tmp, ptr)
+    _atomic_write(ptr, version)
     # retention: the displaced live version survives one cycle for
     # readers mid-scan; everything older is pruned
     keep = {version, prev}

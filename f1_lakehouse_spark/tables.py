@@ -12,6 +12,7 @@ table root picks up partition pruning automatically — no code change.
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -88,6 +89,58 @@ def _autosize_for(spark: SparkSession, sf_dir: str) -> None:
         pass
 
 
+def input_fingerprint(sf_dir: str, names: tuple[str, ...]) -> tuple:
+    """``(st_ino, st_mtime_ns, st_size)`` of each named input table: a
+    replaced or rewritten file changes it, so a memo keyed on it cannot
+    serve a frame built from the old bytes. A path the local filesystem
+    cannot stat (a remote URI, or a missing file that Spark reports itself
+    on read) fingerprints as None, i.e. unchecked."""
+    out = []
+    for name in names:
+        try:
+            st = os.stat(table_path(sf_dir, name))
+        except OSError:
+            out.append(None)
+        else:
+            out.append((st.st_ino, st.st_mtime_ns, st.st_size))
+    return tuple(out)
+
+
+def cached_per_input(*inputs: str):
+    """Decorator for builders ``fn(spark, sf_dir, ...)`` of a frame (or
+    driver-side model) shared by several queries: one entry per decorated
+    function, keyed by (session, absolute sf_dir, fingerprint of
+    ``inputs``). A hit returns the identical object; a key change first
+    releases the old value (unpersists each cached DataFrame in it, tuple
+    elements included). The builder does its own persist + materialize;
+    consumers borrow the value and never unpersist it."""
+
+    def deco(build):
+        entry: dict[tuple, object] = {}
+
+        @functools.wraps(build)
+        def cached(spark: SparkSession, sf_dir: str, *args, **kwargs):
+            key = (
+                spark.sparkContext.applicationId,
+                os.path.abspath(sf_dir),
+                input_fingerprint(sf_dir, inputs),
+            )
+            if key in entry:
+                return entry[key]
+            for old in entry.values():
+                for v in old if isinstance(old, tuple) else (old,):
+                    if isinstance(v, DataFrame) and v.is_cached:
+                        v.unpersist()
+            entry.clear()
+            entry[key] = build(spark, sf_dir, *args, **kwargs)
+            return entry[key]
+
+        cached.entries = entry
+        return cached
+
+    return deco
+
+
 # DataFrame HANDLE memo (r11, optimization guide §5 "the driver should do
 # almost no data work"): ``spark.read.parquet`` re-lists the path and
 # re-reads the parquet footer on the single-threaded driver at EVERY call
@@ -95,9 +148,10 @@ def _autosize_for(spark: SparkSession, sf_dir: str) -> None:
 # calls load_table 1-6 times per run. The memo stores the lazy DataFrame
 # (an unresolved plan object), never data: every action still scans the
 # parquet files, so bench/oracle runs keep computing from the inputs. This
-# is the path-read analog of Spark's own filesourcePartitionFileCache; like
-# that cache it assumes the test inputs are immutable within a session.
-_DF_MEMO: dict[tuple[str, str, str], DataFrame] = {}
+# is the path-read analog of Spark's own filesourcePartitionFileCache. Each
+# entry carries its input's fingerprint, so a rewritten or replaced file
+# is re-read instead of served through the handle's stale file listing.
+_DF_MEMO: dict[tuple[str, str, str], tuple[tuple, DataFrame]] = {}
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -114,16 +168,17 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     app_id = spark.sparkContext.applicationId
     key = (app_id, os.path.abspath(sf_dir), name)
+    fp = input_fingerprint(sf_dir, (name,))
     hit = _DF_MEMO.get(key)
-    if hit is not None:
-        return hit
+    if hit is not None and hit[0] == fp:
+        return hit[1]
     for old_key in list(_DF_MEMO):
         if old_key[0] != app_id:  # new session: drop stale handles
             del _DF_MEMO[old_key]
     df = spark.read.parquet(table_path(sf_dir, name))
     if name == "events":
         df = _normalize_event_ts(df)
-    _DF_MEMO[key] = df
+    _DF_MEMO[key] = (fp, df)
     return df
 
 

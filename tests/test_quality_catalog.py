@@ -10,7 +10,11 @@ from f1_lakehouse_spark.quality.checks import (
     check_row_counts,
     run_not_null_suite,
 )
-from f1_lakehouse_spark.sources.catalog import schema_doc, table_exists
+from f1_lakehouse_spark.sources.catalog import (
+    resolve_schema_prefix,
+    schema_doc,
+    table_exists,
+)
 from f1_lakehouse_spark.tables import load_table
 from tests.conftest import SF_DIR
 
@@ -46,6 +50,9 @@ def test_schema_doc_and_exists(spark):
     assert "region_doc_v(r_regionkey int, r_name string)" in doc
     assert table_exists(spark, "region_doc_v")
     assert not table_exists(spark, "no_such_table_xyz")
+    # the reference's schema-prefix probe: first candidate that exists
+    assert resolve_schema_prefix(spark, ["nope_xyz", "default"]) == "default"
+    assert resolve_schema_prefix(spark, ["nope_xyz"]) is None
 
 
 def test_schema_suite_full_dbt_vocabulary(spark):

@@ -13,6 +13,7 @@
 from __future__ import annotations
 
 import math
+import os
 
 from f1_lakehouse_spark.tables import load_table
 
@@ -389,6 +390,8 @@ def test_shared_frame_caches_hit_and_roll_over(spark):
 
     a = S.hashed_score_frame(spark, SF_DIR)
     assert S.hashed_score_frame(spark, SF_DIR) is a
+    # the key is the resolved input, not the spelling of its path
+    assert S.hashed_score_frame(spark, os.path.relpath(SF_DIR)) is a
     b = D.shingle_keys_frame(spark, SF_DIR)
     assert D.shingle_keys_frame(spark, SF_DIR) is b
     c = D.dedup_minhash_lsh(spark, SF_DIR)
@@ -401,11 +404,56 @@ def test_shared_frame_caches_hit_and_roll_over(spark):
     other = "/root/testdata/sf0.01"
     d2 = S.hashed_score_frame(spark, other)
     assert d2 is not a
-    assert len(S._SCORE_CACHE) == 1
+    assert len(S.hashed_score_frame.entries) == 1
     # the evicted frame is unpersisted (storage released)
     assert not a.is_cached
     # restore the sf0.001 entry so later tests in this session start clean
     S.hashed_score_frame(spark, SF_DIR)
+
+
+def test_shared_caches_follow_input_rewrite(spark, tmp_path):
+    """The load_table memo and the shared-frame caches are keyed on the
+    input's file fingerprint: rewriting documents.parquet in place (same
+    path, same session) must serve frames built from the NEW bytes and
+    release the stale persisted ones, never a count of the old file."""
+    import shutil
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from f1_lakehouse_spark.pipeline import dedup as D
+    from f1_lakehouse_spark.pipeline import scoring as S
+    from f1_lakehouse_spark.pipeline.dedup import _spark_shingle_keys
+
+    src = os.path.join(SF_DIR, "documents.parquet")
+    dst = str(tmp_path / "documents.parquet")
+    shutil.copyfile(src, dst)
+    d = str(tmp_path)
+    stale = load_table(spark, d, "documents")
+    assert stale.count() == 500
+    score = S.hashed_score_frame(spark, d)
+    shk = D.shingle_keys_frame(spark, d)
+    n_shk = shk.count()
+
+    tbl = pq.read_table(src)
+    pq.write_table(tbl.filter(pc.equal(pc.bit_wise_and(tbl["doc_id"], 1), 0)), dst)
+    truth = spark.read.parquet(dst)
+    want = truth.count()
+    assert 0 < want < 500
+
+    reread = load_table(spark, d, "documents")
+    assert reread is not stale and reread.count() == want
+    assert S.hashed_score_frame(spark, d).count() == truth.where("text IS NOT NULL").count()
+    fresh = D.shingle_keys_frame(spark, d)
+    assert fresh.count() == _spark_shingle_keys(truth).count() < n_shk
+    # the frames built from the old bytes were released, not leaked
+    assert not score.is_cached and not shk.is_cached
+    assert fresh.is_cached
+
+    # restore the sf0.001 entries so later tests in this session start warm
+    S.hashed_score_frame(spark, SF_DIR)
+    D.shingle_keys_frame(spark, SF_DIR)
+    assert not fresh.is_cached
 
 
 def test_hill_tail_index_matches_python_reference(spark):
