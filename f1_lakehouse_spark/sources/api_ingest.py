@@ -31,7 +31,7 @@ from dataclasses import dataclass
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from f1_lakehouse_spark.sources.txn import _atomic_write
+from f1_lakehouse_spark.sources.commit import atomic_write
 
 # A fetcher maps one task row (as a dict) to a pandas DataFrame of records.
 # It runs on executors — it must be picklable and self-contained.
@@ -58,7 +58,7 @@ class CachedFetcher:
                 return pd.DataFrame(json.load(f))
         out = self.fetch(task)
         os.makedirs(self.cache_dir, exist_ok=True)
-        _atomic_write(path, json.dumps(out.to_dict(orient="records"), default=str))
+        atomic_write(path, json.dumps(out.to_dict(orient="records"), default=str))
         return out
 
 

@@ -21,6 +21,7 @@ window with no base at all)::
     table_dir/g{gen}/base/*.parquet          # immutable data files (seq 0)
     table_dir/g{gen}/deletes/d{seq}.parquet  # one key file per delete
     table_dir/g{gen}/inserts/i{seq}.parquet  # one row file per upsert
+    table_dir/g{gen}/_FOLDED                 # g{gen-1} fragment seqs the base folded
 
 Sequence semantics (Iceberg v2 sequence numbers, simplified): base rows
 carry seq 0; every committed fragment claims the next seq (shared across
@@ -31,20 +32,24 @@ matching key; an insert file's rows shadow every LOWER-seq row with the
 same key (latest-wins upsert), so an upsert is ONE atomic file commit —
 no delete-file companion whose torn half could publish a partial MERGE.
 
-Concurrent writers: a fragment commit claims its seq via an O_EXCL
-``.lock`` create (the same fail-if-exists arbitration txn.py uses for
-commit records) — two racing deletes can never silently overwrite one
-another's key file; the loser of a seq claim retries with the next seq.
-After the rename the writer re-verifies the generation pointer: a commit
-that raced a compaction landed in a displaced generation (invisible to
-live readers), so it removes the orphan and redoes the operation against
-the new live generation. The OTHER ordering — the commit lands while the
-compaction's fold job is already running, so the writer's re-verify still
-sees the old pointer — is covered by the compaction's post-swap
-CARRY-FORWARD sweep: fragments committed after the fold's snapshot are
-moved into the new generation in sequence order. Between the two, a
-delete is never silently lost to a racing compaction. Crash-orphaned
-``_staging_*`` dirs are swept by the next compaction's retention pass.
+Concurrent writers: every pointer and claim goes through
+``sources/commit`` (the primitives ``txn`` commits with). A fragment
+commit claims its seq with an exclusive ``.lock`` create — two racing
+deletes can never silently overwrite one another's key file; the loser of
+a seq claim retries with the next seq. After the rename the writer
+re-verifies the generation pointer: a commit that raced a compaction
+landed in a displaced generation (invisible to live readers), so it
+removes the orphan and redoes the operation against the new live
+generation. The OTHER ordering — the commit lands while the compaction's
+fold job is already running, so the writer's re-verify still sees the old
+pointer — is covered by the compaction's CARRY-FORWARD: fragments
+committed after the fold's snapshot are moved into the new generation in
+sequence order. Compactions arbitrate like txn commits: each folds into
+its own staging dir, claims ``g{gen+1}`` with one fail-if-exists rename,
+and moves ``_BASE`` forward only, so a loser raises
+``txn.CommitConflictError`` and a stalled compactor can never rewind the
+table. Crash-orphaned ``_staging_*`` dirs are swept by the next
+compaction's retention pass.
 
 Delete files belong to their generation: a reader holding the old
 pointer mid-compaction still sees (old base + old fragments) — the same
@@ -62,6 +67,8 @@ INTO`` with merge-on-read table properties.
 
 from __future__ import annotations
 
+import errno
+import json
 import os
 import re
 import shutil
@@ -72,9 +79,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.observation import Observation
 from pyspark.sql.types import StructType
 
-from f1_lakehouse_spark.sources.txn import _atomic_write
+from f1_lakehouse_spark.sources.commit import advance, atomic_write, create_exclusive
+from f1_lakehouse_spark.sources.txn import CommitConflictError
 
 POINTER = "_BASE"
+FOLDED = "_FOLDED"
 
 _FRAGMENT_RE = re.compile(r"^([di])(\d{10})\.parquet(\.lock)?$")
 
@@ -96,13 +105,13 @@ def _size_or_zero(path: str) -> int:
         return 0
 
 
+def _gen_of(pointer_text: str) -> int:
+    return int(pointer_text.strip().lstrip("g"))
+
+
 def _live_gen(table_dir: str) -> int:
     with open(os.path.join(table_dir, POINTER)) as f:
-        return int(f.read().strip().lstrip("g"))
-
-
-def _swap_pointer(table_dir: str, gen: int) -> None:
-    _atomic_write(os.path.join(table_dir, POINTER), _gen_name(gen))
+        return _gen_of(f.read())
 
 
 def base_dir(table_dir: str) -> str:
@@ -116,7 +125,7 @@ def mor_write_base(df: DataFrame, table_dir: str) -> None:
     df.write.mode("overwrite").parquet(
         os.path.join(table_dir, _gen_name(0), "base")
     )
-    _swap_pointer(table_dir, 0)
+    atomic_write(os.path.join(table_dir, POINTER), _gen_name(0))
 
 
 def _fragments(table_dir: str, gen: int, sub: str) -> list[tuple[int, str]]:
@@ -158,7 +167,7 @@ def _next_seq(table_dir: str, gen: int) -> int:
 
 
 def _claim_and_move(table_dir: str, gen: int, sub: str, src: str) -> str:
-    """Claim the next seq in ``g{gen}/{sub}`` via an O_EXCL ``.lock``
+    """Claim the next seq in ``g{gen}/{sub}`` via an exclusive ``.lock``
     create, then atomically rename ``src`` in under the claimed name
     (readers never list a half file). Returns the fragment's path."""
     prefix = "d" if sub == "deletes" else "i"
@@ -168,7 +177,7 @@ def _claim_and_move(table_dir: str, gen: int, sub: str, src: str) -> str:
         target = os.path.join(fdir, f"{prefix}{_next_seq(table_dir, gen):010d}.parquet")
         lock = target + ".lock"
         try:
-            os.close(os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY))
+            create_exclusive(lock, "")
         except FileExistsError:
             continue  # another writer claimed this seq: take the next
         try:
@@ -265,7 +274,7 @@ def mor_delete(
     predicate selects (evaluated on the current merged view, so a key
     already deleted is not re-recorded) as one new delete file in the
     live generation. The base files are NOT touched — that is the whole
-    point; the commit itself is one O_EXCL-arbitrated atomic rename, and
+    point; the commit itself is one exclusively claimed atomic rename, and
     a commit displaced by a racing compaction is redone against the new
     generation (never silently lost). Returns the number of keys
     committed. NULL predicate follows SQL DELETE tri-state semantics:
@@ -398,27 +407,76 @@ def mor_read(
     return rows.drop("_seq")
 
 
+def _claim_generation(table_dir: str, staging: str, gen: int) -> bool:
+    """Claim generation ``gen`` by renaming a compactor's staging dir to
+    ``g{gen}``. Nothing creates ``g{gen}`` before its claim and a rename
+    onto an existing directory fails, so of the compactions of one
+    generation exactly one wins. Returns whether this one did. (A stale
+    compactor can win a number retention already pruned; its publish
+    then finds a later generation live and does nothing.)"""
+    try:
+        os.rename(staging, os.path.join(table_dir, _gen_name(gen)))
+    except OSError as e:
+        if e.errno not in (errno.EEXIST, errno.ENOTEMPTY):
+            raise
+        return False
+    return True
+
+
+def _publish_generation(table_dir: str, gen: int) -> None:
+    """Move the pointer forward to claimed generation ``gen``, then carry
+    forward the fragments of ``g{gen-1}`` its fold did not cover (those
+    not in ``_FOLDED``), in ascending seq. Idempotent: the claim's winner
+    runs it, a loser runs it for a winner that stopped after its claim,
+    and the next compaction runs it for one that stopped mid-carry. Once
+    a later generation is live there is nothing left to do: that
+    generation's compaction ran this carry before its fold snapshot."""
+    advance(os.path.join(table_dir, POINTER), gen, _gen_name(gen), _gen_of)
+    if _live_gen(table_dir) != gen:
+        return
+    try:
+        with open(os.path.join(table_dir, _gen_name(gen), FOLDED)) as f:
+            folded = json.load(f)
+    except FileNotFoundError:
+        return  # generation 0 folded nothing
+    late = sorted(
+        (seq, sub, path)
+        for sub in ("deletes", "inserts")
+        for seq, path in _fragments(table_dir, gen - 1, sub)
+        if seq not in folded[sub]
+    )
+    for _, sub, path in late:  # ascending seq: relative order preserved
+        _carry_fragment_forward(table_dir, gen, sub, path)
+
+
 def mor_compact(spark: SparkSession, table_dir: str, key_col: str) -> None:
-    """Fold the live generation's fragments into the next generation:
-    materialize the merged view into ``g{gen+1}/base``, atomically swap
-    the pointer, and prune generations older than the displaced one (plus
-    any crash-orphaned staging dirs). A reader holding the old pointer
+    """Fold the live generation's fragments into the next generation and
+    prune generations older than the displaced one (plus any
+    crash-orphaned staging dirs). A reader holding the old pointer
     mid-scan still has its full generation (base + fragments) for one
     compaction cycle; readers resolving the pointer see either the old or
     the new generation — both the same rows, never a half state.
 
-    Fragments committed into the displaced generation DURING the fold
-    (their writer's pointer re-verify read the old pointer, so the commit
-    reported success) are CARRIED FORWARD into the new generation after
-    the swap, in global sequence order — without this sweep a delete
-    racing the fold's write job would be silently lost. The snapshot of
-    what the fold covers is taken BEFORE the merged plan lists fragment
+    The commit follows the txn protocol. The fold is written into this
+    compactor's own ``_staging_*`` dir beside ``_FOLDED``, the fragment
+    seqs it covers (snapshotted BEFORE the merged plan lists fragment
     files, so a fragment in the plan but not the snapshot is merely
-    re-applied — idempotent on a base that already folded it (delete keys
-    already absent; insert rows shadow identical rows)."""
+    re-applied — idempotent on a base that already folded it). Renaming
+    the staging dir to ``g{gen+1}`` claims the generation;
+    :func:`_publish_generation` then moves the pointer forward only and
+    carries forward fragments committed into ``g{gen}`` during the fold
+    (their writer's pointer re-verify read the old pointer, so the commit
+    reported success — without the carry they would be silently lost).
+    A compaction that loses the claim publishes the winner's generation,
+    removes its staging and raises :class:`CommitConflictError`; a
+    compactor resuming after later compactions can never move the
+    pointer back."""
     gen = _live_gen(table_dir)
+    # finish a predecessor that stopped mid-carry BEFORE the snapshot, so
+    # nothing it stranded in g{gen-1} is pruned below
+    _publish_generation(table_dir, gen)
     folded = {
-        sub: {s for s, _ in _fragments(table_dir, gen, sub)}
+        sub: [s for s, _ in _fragments(table_dir, gen, sub)]
         for sub in ("deletes", "inserts")
     }
     merged = mor_read(spark, table_dir, key_col, gen=gen)
@@ -429,8 +487,8 @@ def mor_compact(spark: SparkSession, table_dir: str, key_col: str) -> None:
     # without a count job (the module is local-FS-addressed throughout)
     gen_dir = os.path.join(table_dir, _gen_name(gen))
     # the walk races with concurrent fragment commits (supported here:
-    # the carry-forward sweep exists precisely for them) — a .lock claim
-    # or a displaced fragment can vanish between listing and stat, so a
+    # the carry-forward exists precisely for them) — a .lock claim or a
+    # displaced fragment can vanish between listing and stat, so a
     # vanished file counts 0; .lock claims and delete fragments are
     # skipped outright (deletes only shrink the fold's output — the bound
     # stays conservative for base + insert bytes)
@@ -441,18 +499,19 @@ def mor_compact(spark: SparkSession, table_dir: str, key_col: str) -> None:
         if not f.endswith(".lock") and os.path.basename(dirpath) != "deletes"
     )
     n_files = max(1, -(-gen_bytes // (128 << 20)))
+    staging = os.path.join(table_dir, f"_staging_{uuid.uuid4().hex}")
     merged.coalesce(n_files).write.mode("overwrite").parquet(
-        os.path.join(table_dir, _gen_name(gen + 1), "base")
+        os.path.join(staging, "base")
     )
-    _swap_pointer(table_dir, gen + 1)
-    late = sorted(
-        (seq, sub, path)
-        for sub in ("deletes", "inserts")
-        for seq, path in _fragments(table_dir, gen, sub)
-        if seq not in folded[sub]
-    )
-    for _, sub, path in late:  # ascending seq: relative order preserved
-        _carry_fragment_forward(table_dir, gen + 1, sub, path)
+    atomic_write(os.path.join(staging, FOLDED), json.dumps(folded))
+    claimed = _claim_generation(table_dir, staging, gen + 1)
+    _publish_generation(table_dir, gen + 1)
+    if not claimed:
+        shutil.rmtree(staging, ignore_errors=True)
+        raise CommitConflictError(
+            f"generation {gen + 1} of {table_dir} was claimed by another "
+            f"compaction — the table is already compacted past generation {gen}"
+        )
     for entry in os.listdir(table_dir):
         if (
             entry.startswith("g")

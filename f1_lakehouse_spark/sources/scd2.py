@@ -12,10 +12,9 @@ emulated with pure DataFrame algebra — the standard pattern:
 Scale notes: both are one join on the business key (broadcast when the
 change set is small — change sets usually are) + union; no window over the
 full table. Rewriting the whole table per batch is the no-ACID-table
-trade-off; on Delta the same logic IS a MERGE INTO — implemented, not just
-noted: ``sources/delta_ops.py`` carries the gated branch
-(``delta_merge_upsert`` / ``delta_scd2_merge`` / time travel / history),
-equivalence-tested against these functions wherever the jar exists.
+trade-off; on Delta the same logic is a MERGE INTO. The ACID paths that
+run here are this module, ``sources/txn`` (atomic multi-table publishes
+with time travel) and ``sources/mor`` (merge-on-read deletes and upserts).
 """
 
 from __future__ import annotations

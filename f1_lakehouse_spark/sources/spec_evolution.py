@@ -45,7 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from f1_lakehouse_spark.sources.txn import _atomic_write
+from f1_lakehouse_spark.sources.commit import atomic_write
 
 SPECS_FILE = "_specs.json"
 
@@ -65,7 +65,7 @@ def read_specs(table_dir: str) -> dict:
 def _write_specs(table_dir: str, meta: dict) -> None:
     # atomic swap: readers see the old or the new spec list, never a torn
     # file (same contract as the txn layer's manifest swap)
-    _atomic_write(_specs_path(table_dir), json.dumps(meta))
+    atomic_write(_specs_path(table_dir), json.dumps(meta))
 
 
 def _frozen_schema(meta: dict) -> T.StructType:

@@ -30,10 +30,12 @@ Commit protocol (``publish_tables``):
    versions of every table, so readers keep seeing the old consistent
    snapshot. The replay re-runs this phase overwriting its own orphans
    (disjoint from every live dir — safe).
-3. **Atomic manifest swap** — write ``_MANIFEST.tmp``, ``os.replace``.
-   Locally that is one atomic rename; on HDFS the same; on S3 a single
-   pointer PUT. Tables not part of this transaction carry forward
-   unchanged (their pointer entries are copied into the new manifest).
+3. **Atomic manifest swap** — ``commit.advance`` writes a per-writer
+   ``_MANIFEST.tmp.*``, fsyncs it and ``os.replace``-s it, and only ever
+   moves the pointer to a higher txn. Locally that is one atomic rename;
+   on HDFS the same; on S3 a single pointer PUT. Tables not part of this
+   transaction carry forward unchanged (their pointer entries are copied
+   into the new manifest).
 4. **Retention** — for each table in the txn, keep the new version, the
    version the outgoing manifest named (readers holding the old manifest
    survive one publish cycle, exactly like the single-table layout), and
@@ -60,41 +62,16 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+
+from f1_lakehouse_spark.sources.commit import advance, atomic_write, create_exclusive
 
 MANIFEST = "_MANIFEST"
 
 
-def _atomic_write(path: str, payload: str) -> None:
-    """tmp-then-rename with a PER-WRITER tmp name: concurrent writers
-    (an OCC winner's final swap racing a loser's roll-forward of the same
-    record) sharing one tmp path can interleave open/truncate/replace —
-    corrupting the staged bytes or crashing on the vanished tmp. A unique
-    tmp makes every replace independent and atomic; ordering between
-    same-target replaces is arbitrated by the callers' guards."""
-    tmp = f"{path}.tmp.{uuid.uuid4().hex}"
-    with open(tmp, "w") as f:
-        f.write(payload)
-    os.replace(tmp, path)
-
-
-def _create_exclusive(path: str, payload: str) -> None:
-    """Exclusive create WITH full content: write a unique tmp, then
-    ``os.link(tmp, path)`` — the link is the atomic fail-if-exists commit
-    point, so a concurrent reader can never observe an empty or partial
-    record. (``O_CREAT|O_EXCL`` + a buffered write has exactly that torn
-    window: the loser of a record race would ``json.load`` an empty file
-    and crash with JSONDecodeError instead of the documented
-    CommitConflictError.) Raises FileExistsError when ``path`` exists."""
-    tmp = f"{path}.tmp.{uuid.uuid4().hex}"
-    with open(tmp, "w") as f:
-        f.write(payload)
-    try:
-        os.link(tmp, path)
-    finally:
-        os.remove(tmp)
+def _txn_of(manifest_text: str) -> int:
+    return json.loads(manifest_text)["txn"]
 
 
 class SimulatedCrash(RuntimeError):
@@ -252,8 +229,8 @@ def _commit_manifest(
     if writer is not None:
         new_manifest["writer"] = writer
     # history copy FIRST — it doubles as the COMMIT ARBITRATION record.
-    # With a writer token it is created EXCLUSIVELY (O_EXCL — the
-    # fail-if-exists create is the one compare-and-swap primitive local
+    # With a writer token it is created EXCLUSIVELY (the fail-if-exists
+    # ``commit.create_exclusive`` is the one compare-and-swap primitive local
     # FS / HDFS give us, and it is exactly how Delta's _delta_log/N.json
     # commit arbitrates concurrent writers): the winner of the create IS
     # the committer of txn N. A loser finds the file owned by another
@@ -263,12 +240,13 @@ def _commit_manifest(
     # crash between the two renames leaves a history file the replay's
     # rewrite makes identical, harmless.
     hist = os.path.join(root, f"{MANIFEST}.v{txn_id:010d}")
+    ptr = os.path.join(root, MANIFEST)
     payload = json.dumps(new_manifest)
     if writer is None:
-        _atomic_write(hist, payload)
+        atomic_write(hist, payload)
     else:
         try:
-            _create_exclusive(hist, payload)
+            create_exclusive(hist, payload)
         except FileExistsError:
             with open(hist) as f:
                 owner = json.load(f)
@@ -292,9 +270,7 @@ def _commit_manifest(
                 # unblocks the retry loop and makes the record's txn
                 # genuinely visible, so its time-travel snapshot is never
                 # a phantom.
-                live = read_manifest(root)
-                if live is None or live["txn"] < owner["txn"]:
-                    _atomic_write(os.path.join(root, MANIFEST), json.dumps(owner))
+                advance(ptr, owner["txn"], json.dumps(owner), _txn_of)
                 raise CommitConflictError(
                     f"txn {txn_id} commit record is owned by writer "
                     f"{owner.get('writer')!r}, not {writer!r} — re-read "
@@ -307,16 +283,14 @@ def _commit_manifest(
             f"simulated crash after txn {txn_id}'s commit record, before "
             "the live-pointer swap"
         )
-    # the final swap is GUARDED the same way the loser's roll-forward is:
-    # never move the live pointer backwards. Without the guard, a winner
+    # the final swap is forward-only like the loser's roll-forward: never
+    # move the live pointer backwards. Without the guard, a winner
     # that stalls between its commit record and its swap can be rolled
     # forward by a conflicting loser, which then commits txn N+1 — the
     # stalled winner resuming its unconditional swap would present the
     # stale txn N as live (a snapshot-monotonicity violation) until the
     # next write self-heals it. With the guard the resume is a no-op.
-    live = read_manifest(root)
-    if live is None or live["txn"] < new_manifest["txn"]:
-        _atomic_write(os.path.join(root, MANIFEST), json.dumps(new_manifest))
+    advance(ptr, new_manifest["txn"], json.dumps(new_manifest), _txn_of)
     # retention: per table, the displaced version survives one cycle for
     # readers holding the outgoing manifest; everything STRICTLY OLDER is
     # pruned UNLESS a ref (tag/branch) pins it — a tagged snapshot stays
@@ -622,7 +596,7 @@ def create_tag(root: str, name: str, txn_id: int) -> None:
     os.makedirs(os.path.join(root, REFS_DIR), exist_ok=True)
     # exists -> FileExistsError: tags never move; content-atomic so a
     # concurrent read_ref never sees a half-written id
-    _create_exclusive(_ref_path(root, name), str(txn_id))
+    create_exclusive(_ref_path(root, name), str(txn_id))
 
 
 def drop_ref(root: str, name: str) -> None:
@@ -635,11 +609,6 @@ def drop_ref(root: str, name: str) -> None:
     if not os.path.exists(path):
         raise ValueError(f"no such ref: {name!r}")
     os.remove(path)
-
-
-def _set_branch(root: str, name: str, txn_id: int) -> None:
-    os.makedirs(os.path.join(root, REFS_DIR), exist_ok=True)
-    _atomic_write(_ref_path(root, name), str(txn_id))
 
 
 def read_ref_manifest(root: str, name: str) -> dict | None:
@@ -666,7 +635,7 @@ def publish_staged(
     id gets a CommitConflictError, and the roll-forward helper explicitly
     REFUSES to promote a staged record (promoting an unaudited staging
     would defeat the entire WAP gate)."""
-    os.makedirs(root, exist_ok=True)
+    os.makedirs(os.path.join(root, REFS_DIR), exist_ok=True)
     cur = read_manifest(root)
     if cur is not None:
         _reject_mixed_token_mode(cur, writer)
@@ -690,9 +659,7 @@ def publish_staged(
             )
         # idempotent replay: re-point the branch — but never REWIND one
         # that has since advanced to a newer staging
-        ref = read_ref(root, branch)
-        if ref is None or ref < txn_id:
-            _set_branch(root, branch, txn_id)
+        advance(_ref_path(root, branch), txn_id, str(txn_id), int)
         return
     if cur is not None and cur["txn"] >= txn_id:
         raise ValueError(
@@ -710,7 +677,7 @@ def publish_staged(
         record["writer"] = writer
     hist = os.path.join(root, f"{MANIFEST}.v{txn_id:010d}")
     try:
-        _create_exclusive(hist, json.dumps(record))
+        create_exclusive(hist, json.dumps(record))
     except FileExistsError:
         for name in tables:
             shutil.rmtree(os.path.join(root, name, version), ignore_errors=True)
@@ -718,7 +685,7 @@ def publish_staged(
             f"lost the record race for staged txn {txn_id} — re-read and "
             "retry with the next txn id"
         ) from None
-    _set_branch(root, branch, txn_id)
+    atomic_write(_ref_path(root, branch), str(txn_id))
 
 
 def fast_forward(root: str, branch: str) -> dict:
@@ -733,14 +700,14 @@ def fast_forward(root: str, branch: str) -> dict:
     record = read_manifest(root, txn=txn)
     if record is None:
         raise ValueError(f"branch {branch!r} names txn {txn} with no record")
-    live = read_manifest(root)
-    if live is not None and live["txn"] >= record["txn"]:
-        raise StaleBranchError(
-            f"main is at txn {live['txn']}, branch {branch!r} at "
-            f"{record['txn']} — rebase the branch onto the live snapshot"
-        )
     promoted = {k: v for k, v in record.items() if k != "staged"}
-    _atomic_write(os.path.join(root, MANIFEST), json.dumps(promoted))
+    if not advance(
+        os.path.join(root, MANIFEST), txn, json.dumps(promoted), _txn_of
+    ):
+        raise StaleBranchError(
+            f"main is at txn {read_manifest(root)['txn']}, branch {branch!r} "
+            f"at {txn} — rebase the branch onto the live snapshot"
+        )
     return promoted
 
 

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from f1_lakehouse_spark.sources.txn import _atomic_write
+from f1_lakehouse_spark.sources.commit import advance
 from f1_lakehouse_spark.tables import _pin_session_confs, table_path
 
 
@@ -205,8 +205,8 @@ def read_gold(
     ``version`` (a name from :func:`list_versions`) for an as-of read of a
     retained older version — the local-retention layout keeps the current
     version plus its predecessor, so as-of reads reach exactly one publish
-    back (Delta/Iceberg time travel is the full-history upgrade,
-    sources/delta_ops.py). Returns None when nothing is published yet or
+    back (full history with time travel is ``sources/txn``'s manifest
+    layout). Returns None when nothing is published yet or
     the requested version has been pruned."""
     import os  # noqa: PLC0415
 
@@ -236,11 +236,18 @@ def list_versions(gold_path: str) -> list[str]:
     )
 
 
+def _version_id(version: str) -> int:
+    return int(version.strip().lstrip("v"))
+
+
 def _mvcc_publish(batch_df: DataFrame, batch_id: int, path: str, merge_fn) -> None:
     """Shared MVCC mechanics for every foreachBatch merge (gold aggregate
     refresh, silver upsert): crash-replay version guard, read the live
     version, ``merge_fn(old_or_none, batch_df) -> DataFrame``, write the new
-    version dir (fully distributed), atomic pointer swap, prune."""
+    version dir (fully distributed), forward-only pointer swap, prune. A
+    ``batch_id`` older than the live version raises ValueError before any
+    write: its directory may be the retained predecessor a reader holding
+    the old pointer is still scanning."""
     import os  # noqa: PLC0415
     import shutil  # noqa: PLC0415
 
@@ -262,10 +269,13 @@ def _mvcc_publish(batch_df: DataFrame, batch_id: int, path: str, merge_fn) -> No
         # older version, so the normal path below re-runs safely: it
         # reads prev's dir and overwrites its own, disjoint dir.)
         return
+    if prev is not None and _version_id(prev) > batch_id:
+        raise ValueError(f"version {batch_id} is older than the live {prev}")
     old = read_gold(sess, path)
     out = merge_fn(old, batch_df)
     out.write.mode("overwrite").parquet(os.path.join(path, version))
-    _atomic_write(ptr, version)
+    if not advance(ptr, batch_id, version, _version_id):
+        return  # a newer version went live meanwhile: a later retention prunes ours
     # retention: the displaced live version survives one cycle for
     # readers mid-scan; everything older is pruned
     keep = {version, prev}

@@ -142,6 +142,15 @@ def test_publish_gold_version_gc_contract(spark, tmp_path):
     # the live pointer always names a listed version
     with open(os.path.join(gold, "_CURRENT")) as f:
         assert f.read().strip() in list_versions(gold)
+    # an older version is refused before any write: the pointer never
+    # moves back and the retained v2 a reader may be scanning is untouched
+    v2 = read_gold(spark, gold, version="v0000000002").collect()
+    with pytest.raises(ValueError, match="older than the live"):
+        publish_gold_version(mk(9), 2, gold)
+    with open(os.path.join(gold, "_CURRENT")) as f:
+        assert f.read().strip() == "v0000000003"
+    assert list_versions(gold) == ["v0000000002", "v0000000003"]
+    assert read_gold(spark, gold, version="v0000000002").collect() == v2
 
 
 def test_wap_rejects_before_visibility_and_cleans(spark, tmp_path):

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -274,6 +275,152 @@ def test_mor_staging_orphans_swept_by_compaction(spark, tmp_path):
     mor_compact(spark, tbl, "id")
     assert not os.path.isdir(stale)
     assert os.path.isdir(fresh)
+
+
+def _mor_view(spark, tbl):
+    from f1_lakehouse_spark.sources.mor import mor_read
+
+    return {r["id"]: r["grp"] for r in mor_read(spark, tbl, "id").collect()}
+
+
+def _run_compaction(spark, tbl, outcomes):
+    """Thread body: record mor_compact's outcome ("ok" or the exception)."""
+    from f1_lakehouse_spark.sources.mor import mor_compact
+
+    try:
+        mor_compact(spark, tbl, "id")
+        outcomes.append("ok")
+    except Exception as e:  # the outcome is what the test asserts on
+        outcomes.append(e)
+
+
+def test_mor_stalled_compactor_cannot_rewind(spark, tmp_path, monkeypatch):
+    """Compactor B folds g0, then stalls at its commit point while A and C
+    compact, with an upsert committed after each. When B resumes, the
+    generation pointer never moves back, no committed upsert disappears,
+    and B either conflicts or succeeds without rewinding."""
+    import threading
+
+    import f1_lakehouse_spark.sources.mor as mor
+
+    tbl = _mor_base(spark, tmp_path)
+    model = {i: i % 3 for i in range(10)}
+    at_claim, release = threading.Event(), threading.Event()
+    real_claim = mor._claim_generation
+
+    def claim(table_dir, staging, gen):
+        if threading.current_thread().name == "B":
+            at_claim.set()
+            assert release.wait(120)
+        return real_claim(table_dir, staging, gen)
+
+    monkeypatch.setattr(mor, "_claim_generation", claim)
+    outcomes = []
+    b = threading.Thread(
+        target=_run_compaction, args=(spark, tbl, outcomes), name="B"
+    )
+    b.start()
+    try:
+        assert at_claim.wait(120)
+        gens = [mor._live_gen(tbl)]
+        for new_id in (100, 101):  # compaction A, then compaction C
+            mor.mor_compact(spark, tbl, "id")
+            gens.append(mor._live_gen(tbl))
+            rows = [(new_id, 7), (new_id - 99, 8)]
+            df = spark.createDataFrame(rows, "id int, grp int")
+            mor.mor_upsert(spark, tbl, "id", df)
+            model.update(dict(rows))
+            gens.append(mor._live_gen(tbl))
+    finally:
+        release.set()
+        b.join(180)
+    assert not b.is_alive()
+    gens.append(mor._live_gen(tbl))
+    assert gens == sorted(gens) and gens[-1] == 2, gens
+    assert _mor_view(spark, tbl) == model
+    assert outcomes == ["ok"] or isinstance(outcomes[0], CommitConflictError), outcomes
+
+
+def test_mor_racing_compactors_one_conflicts(spark, tmp_path, monkeypatch):
+    """Two compactions of the same generation meet at the claim: exactly
+    one raises CommitConflictError (not a Spark write error from both
+    writing one g1/base), the rows are unchanged and no staging is left."""
+    import threading
+
+    import f1_lakehouse_spark.sources.mor as mor
+
+    tbl = _mor_base(spark, tmp_path)
+    mor.mor_delete(spark, tbl, "id", F.col("id") == 3)
+    before = _mor_view(spark, tbl)
+    barrier = threading.Barrier(2, timeout=120)
+    real_claim = mor._claim_generation
+
+    def claim(table_dir, staging, gen):
+        barrier.wait()
+        return real_claim(table_dir, staging, gen)
+
+    monkeypatch.setattr(mor, "_claim_generation", claim)
+    outcomes = []
+    threads = [
+        threading.Thread(target=_run_compaction, args=(spark, tbl, outcomes))
+        for _ in range(2)
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(180)
+    assert not any(t.is_alive() for t in threads)
+    errors = [o for o in outcomes if o != "ok"]
+    assert len(outcomes) == 2 and len(errors) == 1, outcomes
+    assert isinstance(errors[0], CommitConflictError), errors
+    assert mor._live_gen(tbl) == 1
+    assert _mor_view(spark, tbl) == before
+    assert [e for e in os.listdir(tbl) if e.startswith("_staging_")] == []
+
+
+@pytest.mark.parametrize("stop", ["after_claim", "after_advance"])
+def test_mor_crashed_compactor_is_rolled_forward(spark, tmp_path, monkeypatch, stop):
+    """A compaction that stops after claiming g1 (or after moving the
+    pointer, before its carry-forward) is completed by the next
+    compaction: a delete committed into g0 after the fold's snapshot
+    survives."""
+    import f1_lakehouse_spark.sources.mor as mor
+
+    class Stop(Exception):
+        pass
+
+    tbl = _mor_base(spark, tmp_path)
+    real_claim = mor._claim_generation
+
+    def claim(table_dir, staging, gen):
+        keys = spark.createDataFrame([(5,)], "id int")  # lands after the snapshot
+        part_dir, part, _ = mor._stage_single_file(keys, table_dir)
+        assert mor._commit_fragment(table_dir, 0, "deletes", part) is True
+        shutil.rmtree(part_dir)
+        assert real_claim(table_dir, staging, gen)
+        if stop == "after_claim":
+            raise Stop
+        return True
+
+    def carry(*args):
+        raise Stop
+
+    with monkeypatch.context() as m:
+        m.setattr(mor, "_claim_generation", claim)
+        m.setattr(mor, "_carry_fragment_forward", carry)
+        with pytest.raises(Stop):
+            mor.mor_compact(spark, tbl, "id")
+    assert mor._live_gen(tbl) == (0 if stop == "after_claim" else 1)
+    if stop == "after_claim":
+        # the next compaction loses the claim and publishes the winner's g1
+        with pytest.raises(CommitConflictError):
+            mor.mor_compact(spark, tbl, "id")
+        assert mor._live_gen(tbl) == 1
+    else:
+        mor.mor_compact(spark, tbl, "id")
+        assert mor._live_gen(tbl) == 2
+    assert set(_mor_view(spark, tbl)) == set(range(10)) - {5}
+    assert [e for e in os.listdir(tbl) if e.startswith("_staging_")] == []
 
 
 # ---------------------------------------------------------------------------
@@ -588,23 +735,24 @@ def test_mor_compaction_carries_forward_late_fragments(spark, tmp_path):
 
     tbl = _mor_base(spark, tmp_path)
     mor.mor_delete(spark, tbl, "id", F.col("id") == 0)  # folded normally
-    real_swap = mor._swap_pointer
+    real_publish = mor._publish_generation
 
-    def swap_with_late_commit(table_dir, gen):
+    def publish_with_late_commit(table_dir, gen):
         # the racing writer's fragment lands AFTER the fold snapshot and
         # BEFORE the swap; its own re-verify passes (pointer still old)
-        mor._swap_pointer = real_swap
-        keys = spark.createDataFrame([(5,)], "id int")
-        staging, part, _ = mor._stage_single_file(keys, table_dir)
-        assert mor._commit_fragment(table_dir, 0, "deletes", part) is True
-        _sh.rmtree(staging, ignore_errors=True)
-        real_swap(table_dir, gen)
+        if gen == 1:
+            mor._publish_generation = real_publish
+            keys = spark.createDataFrame([(5,)], "id int")
+            staging, part, _ = mor._stage_single_file(keys, table_dir)
+            assert mor._commit_fragment(table_dir, 0, "deletes", part) is True
+            _sh.rmtree(staging, ignore_errors=True)
+        real_publish(table_dir, gen)
 
-    mor._swap_pointer = swap_with_late_commit
+    mor._publish_generation = publish_with_late_commit
     try:
         mor.mor_compact(spark, tbl, "id")
     finally:
-        mor._swap_pointer = real_swap
+        mor._publish_generation = real_publish
     assert mor._live_gen(tbl) == 1
     # the late delete was NOT lost: id 5 is suppressed in the new gen
     ids = {r["id"] for r in mor.mor_read(spark, tbl, "id").collect()}
@@ -652,15 +800,30 @@ def test_wap_loser_cleans_staging_on_conflict(spark, tmp_path):
 def test_create_exclusive_is_content_atomic(tmp_path):
     """The exclusive record create commits CONTENT atomically (link of a
     fully-written tmp): a second create fails, the first one's payload is
-    complete, and no tmp litter remains."""
-    from f1_lakehouse_spark.sources.txn import _create_exclusive
+    complete, and no tmp litter remains. ``advance`` only ever moves a
+    pointer to a higher ordinal."""
+    from f1_lakehouse_spark.sources.commit import advance, create_exclusive
 
     path = str(tmp_path / "rec")
-    _create_exclusive(path, '{"txn": 1}')
+    create_exclusive(path, '{"txn": 1}')
     assert json.load(open(path)) == {"txn": 1}
     with pytest.raises(FileExistsError):
-        _create_exclusive(path, '{"txn": 99}')
+        create_exclusive(path, '{"txn": 99}')
     assert json.load(open(path)) == {"txn": 1}  # loser never clobbers
+    assert [f for f in os.listdir(tmp_path) if ".tmp" in f] == []
+
+    ptr = str(tmp_path / "ptr")
+
+    def gen_of(text):
+        return int(text.lstrip("g"))
+
+    assert advance(ptr, 5, "g5", gen_of) is True  # a missing pointer is lower
+    assert advance(ptr, 4, "g4", gen_of) is False
+    assert open(ptr).read() == "g5"  # a lower ordinal is a no-op
+    assert advance(ptr, 5, "g05", gen_of) is False
+    assert open(ptr).read() == "g5"  # an equal one is a no-op
+    assert advance(ptr, 6, "g6", gen_of) is True
+    assert open(ptr).read() == "g6"  # a higher one replaces the pointer
     assert [f for f in os.listdir(tmp_path) if ".tmp" in f] == []
 
 

@@ -75,101 +75,3 @@ def test_scd2_apply_is_idempotent_for_unchanged_batch(spark):
     changes = spark.createDataFrame([(1, "Red Bull")], "k long, team string")
     out = scd2_apply(history, changes, "k", ["team"], F.lit("2024-06-01 00:00:00"))
     assert out.count() == 1  # replaying the same state adds nothing
-
-
-# --- Delta-gated ACID twins (sources/delta_ops.py) -----------------------------------
-# The sandbox ships no Delta jar, so the live-equivalence tests skip here
-# and run wherever the jar exists; the gate itself is tested everywhere.
-
-import pytest  # noqa: E402
-
-from f1_lakehouse_spark.sources.formats import delta_available  # noqa: E402
-
-
-def test_delta_ops_gate_raises_cleanly_without_jar(spark):
-    from f1_lakehouse_spark.sources import delta_ops
-
-    if delta_available(spark):
-        pytest.skip("Delta jar present - gate cannot fire")
-    updates = spark.createDataFrame([(1, "a")], "k long, v string")
-    with pytest.raises(delta_ops.DeltaUnavailableError, match="scd2"):
-        delta_ops.delta_merge_upsert(spark, "/tmp/nowhere", updates, "k")
-    with pytest.raises(delta_ops.DeltaUnavailableError):
-        delta_ops.delta_history(spark, "/tmp/nowhere")
-
-
-def _delta_skip(spark):
-    return pytest.mark.skipif(
-        not delta_available(spark), reason="Delta jar not on classpath"
-    )
-
-
-def test_delta_merge_upsert_equals_parquet_emulation(spark, tmp_path):
-    if not delta_available(spark):
-        pytest.skip("Delta jar not on classpath")
-    from f1_lakehouse_spark.sources import delta_ops
-
-    current = spark.createDataFrame(
-        [(1, "a"), (2, "b"), (3, "c")], "k long, v string"
-    )
-    updates = spark.createDataFrame([(2, "B"), (4, "d")], "k long, v string")
-    path = str(tmp_path / "t")
-    delta_ops.delta_write_table(current, path)
-    delta_ops.delta_merge_upsert(spark, path, updates, "k")
-    got = {
-        r["k"]: r["v"]
-        for r in spark.read.format("delta").load(path).collect()
-    }
-    want = {r["k"]: r["v"] for r in merge_upsert(current, updates, "k").collect()}
-    assert got == want
-    # time travel: version 0 is the pre-merge table
-    v0 = {
-        r["k"]: r["v"]
-        for r in delta_ops.delta_time_travel(spark, path, 0).collect()
-    }
-    assert v0 == {1: "a", 2: "b", 3: "c"}
-    hist = delta_ops.delta_history(spark, path)
-    assert hist.count() == 2  # write + merge
-
-
-def test_delta_scd2_merge_equals_parquet_emulation(spark, tmp_path):
-    if not delta_available(spark):
-        pytest.skip("Delta jar not on classpath")
-    from f1_lakehouse_spark.sources import delta_ops
-
-    history = _hist(
-        spark,
-        [
-            (1, "red", "2024-01-01 00:00:00", OPEN_END),
-            (2, "blue", "2024-01-01 00:00:00", OPEN_END),
-        ],
-    )
-    changes = spark.createDataFrame(
-        [(1, "green"), (2, "blue"), (3, "silver")], "k long, team string"
-    )
-    eff = F.lit("2024-06-01 00:00:00")
-    path = str(tmp_path / "scd2")
-    delta_ops.delta_write_table(history, path)
-    delta_ops.delta_scd2_merge(spark, path, changes, "k", ["team"], eff)
-    key = lambda r: (r["k"], r["team"], str(r["valid_from"]), str(r["valid_to"]))  # noqa: E731
-    got = sorted(
-        key(r) for r in spark.read.format("delta").load(path).collect()
-    )
-    want = sorted(
-        key(r)
-        for r in scd2_apply(history, changes, "k", ["team"], eff).collect()
-    )
-    assert got == want
-
-
-def test_iceberg_gate_raises_cleanly_without_jar(spark):
-    from f1_lakehouse_spark.sources import delta_ops
-    from f1_lakehouse_spark.sources.formats import iceberg_available
-
-    if iceberg_available(spark):
-        pytest.skip("Iceberg jar present - gate cannot fire")
-    updates = spark.createDataFrame([(1, "a")], "k long, v string")
-    with pytest.raises(delta_ops.IcebergUnavailableError, match="scd2"):
-        delta_ops.iceberg_merge_upsert(spark, "nowhere.t", updates, "k")
-    with pytest.raises(delta_ops.IcebergUnavailableError):
-        delta_ops.iceberg_time_travel(spark, "nowhere.t", 1)
