@@ -65,18 +65,27 @@ def wrap_limit(sql: str, max_rows: int = DEFAULT_MAX_ROWS) -> str:
     return f"SELECT * FROM ({sql}) AS safe_view LIMIT {int(max_rows)}"
 
 
+def guarded_sql(
+    raw_text: str,
+    max_rows: int = DEFAULT_MAX_ROWS,
+    schema_mapping: dict[str, str] | None = None,
+) -> str:
+    """The statement the guarded path runs: extract → validate → rewrite
+    → cap."""
+    sql = validate_select_only(extract_sql(raw_text))
+    if schema_mapping:
+        sql = rewrite_schema_names(sql, schema_mapping)
+    return wrap_limit(sql, max_rows)
+
+
 def execute_guarded(
     spark: SparkSession,
     raw_text: str,
     max_rows: int = DEFAULT_MAX_ROWS,
     schema_mapping: dict[str, str] | None = None,
 ) -> DataFrame:
-    """Full guarded path: extract → validate → rewrite → cap → spark.sql."""
-    sql = extract_sql(raw_text)
-    sql = validate_select_only(sql)
-    if schema_mapping:
-        sql = rewrite_schema_names(sql, schema_mapping)
-    return spark.sql(wrap_limit(sql, max_rows))
+    """Full guarded path: :func:`guarded_sql` → spark.sql."""
+    return spark.sql(guarded_sql(raw_text, max_rows, schema_mapping))
 
 
 # --- NL→SQL translator interface (LLM stays injectable; see §3.3) -----------
@@ -198,9 +207,10 @@ def ask_json(
             raise GuardrailError("AI did not provide SQL")
         chart = payload.get("chart_type")
         message = payload.get("justification") or message
-    df = execute_guarded(spark, sql_text, max_rows=max_rows, schema_mapping=schema_mapping)
+    sql = guarded_sql(sql_text, max_rows, schema_mapping)
+    df = spark.sql(sql)
     return {
-        "sql": wrap_limit(validate_select_only(extract_sql(sql_text)), max_rows),
+        "sql": sql,
         "df": df,
         "chart": chart or suggest_chart(df),
         "message": message,

@@ -1165,7 +1165,7 @@ def atomic_publish_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             raise AssertionError("simulated crash did not fire")
         except SimulatedCrash:
             pass
-        new_gold_dir = os.path.join(root, "gold", "v0000000002")
+        new_gold_dir = os.path.join(root, "gold", "v0000000002-default")
         assert os.path.isdir(new_gold_dir), (
             "crash fired before any write — the torn state was never exercised"
         )
@@ -1570,9 +1570,9 @@ def wap_publish_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         m_after = read_manifest(root)
         assert m_after == m1, "rejected batch mutated the manifest"
-        assert not os.path.isdir(os.path.join(root, "silver", "v0000000002")), (
-            "rejected staging not cleaned"
-        )
+        assert not os.path.isdir(
+            os.path.join(root, "silver", "v0000000002-default")
+        ), "rejected staging not cleaned"
         _assert_snapshot_consistent(spark, root, m_after)
         # replay of the COMMITTED txn no-ops and reports no violations
         assert write_audit_publish(
@@ -1995,10 +1995,9 @@ _WAP_CUT_MID = "2024-01-20 00:00:00"
     "staged manifest), pin the pre-promote state with an immutable tag "
     "(re-tagging raises — tags never move), assert a mainline writer "
     "colliding with the staged txn id CONFLICTS rather than promoting the "
-    "unaudited staging, assert an untokened publish on the tokened root "
-    "raises loudly (mixed writer-token mode), fast-forward the branch "
-    "(one atomic pointer swap), then exercise the STALE-BRANCH path: a "
-    "second branch staged before main advances must refuse to fast-forward "
+    "unaudited staging, fast-forward the branch (one atomic pointer "
+    "swap), then exercise the STALE-BRANCH path: a second branch staged "
+    "before main advances must refuse to fast-forward "
     "(StaleBranchError) and succeeds only after rebasing onto the new live "
     "snapshot at a fresh txn id. Returns the finally-promoted gold; the "
     "oracle recomputes the full medallion from the source, so a leaked "
@@ -2070,13 +2069,6 @@ def branch_wap_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         except CommitConflictError:
             pass
         assert read_manifest(root) == m1, "the conflict leaked the staging"
-
-        # mixed writer-token mode is rejected loudly, not silently degraded
-        try:
-            publish_tables(spark, root, t_full, txn_id=3)
-            raise AssertionError("untokened publish on a tokened root passed")
-        except ValueError:
-            pass
 
         live = fast_forward(root, "audit")
         assert live["txn"] == 2 and "staged" not in live, f"bad promote: {live}"

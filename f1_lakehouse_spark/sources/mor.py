@@ -21,6 +21,7 @@ window with no base at all)::
     table_dir/g{gen}/base/*.parquet          # immutable data files (seq 0)
     table_dir/g{gen}/deletes/d{seq}.parquet  # one key file per delete
     table_dir/g{gen}/inserts/i{seq}.parquet  # one row file per upsert
+    table_dir/g{gen}/_claims/{seq}           # one empty claim record per seq
     table_dir/g{gen}/_FOLDED                 # g{gen-1} fragment seqs the base folded
 
 Sequence semantics (Iceberg v2 sequence numbers, simplified): base rows
@@ -34,9 +35,11 @@ no delete-file companion whose torn half could publish a partial MERGE.
 
 Concurrent writers: every pointer and claim goes through
 ``sources/commit`` (the primitives ``txn`` commits with). A fragment
-commit claims its seq with an exclusive ``.lock`` create — two racing
-deletes can never silently overwrite one another's key file; the loser of
-a seq claim retries with the next seq. After the rename the writer
+commit claims its seq the way a txn claims its id: it creates the seq's
+claim record exclusively and never removes it (only pruning the
+generation does), so two racing writers can never share a seq or
+overwrite one another's fragment, whatever their kinds; the loser of a
+seq claim retries with the next seq. After the rename the writer
 re-verifies the generation pointer: a commit that raced a compaction
 landed in a displaced generation (invisible to live readers), so it
 removes the orphan and redoes the operation against the new live
@@ -85,7 +88,9 @@ from f1_lakehouse_spark.sources.txn import CommitConflictError
 POINTER = "_BASE"
 FOLDED = "_FOLDED"
 
-_FRAGMENT_RE = re.compile(r"^([di])(\d{10})\.parquet(\.lock)?$")
+CLAIMS = "_claims"
+
+_FRAGMENT_RE = re.compile(r"^[di](\d{10})\.parquet$")
 
 # a fragment commit retries when a racing compaction moves the generation
 # pointer mid-commit; compactions are rare maintenance ops, so more than a
@@ -130,16 +135,15 @@ def mor_write_base(df: DataFrame, table_dir: str) -> None:
 
 def _fragments(table_dir: str, gen: int, sub: str) -> list[tuple[int, str]]:
     """Committed fragment files under g{gen}/{sub} as (seq, path),
-    seq-ascending. ``.lock`` claims are not fragments."""
+    seq-ascending."""
     fdir = os.path.join(table_dir, _gen_name(gen), sub)
     if not os.path.isdir(fdir):
         return []
-    out = []
-    for f in os.listdir(fdir):
-        m = _FRAGMENT_RE.match(f)
-        if m and not m.group(3):
-            out.append((int(m.group(2)), os.path.join(fdir, f)))
-    return sorted(out)
+    return sorted(
+        (int(m.group(1)), os.path.join(fdir, f))
+        for f in os.listdir(fdir)
+        if (m := _FRAGMENT_RE.match(f))
+    )
 
 
 def _delete_files(table_dir: str, gen: int) -> list[str]:
@@ -150,40 +154,27 @@ def _insert_files(table_dir: str, gen: int) -> list[str]:
     return [p for _, p in _fragments(table_dir, gen, "inserts")]
 
 
-def _next_seq(table_dir: str, gen: int) -> int:
-    """Next free sequence number, shared across deletes and inserts (base
-    rows are seq 0, so fragments start at 1). ``.lock`` claims count too:
-    a crashed claim BURNS its seq rather than blocking it forever."""
-    top = 0
-    for sub in ("deletes", "inserts"):
-        fdir = os.path.join(table_dir, _gen_name(gen), sub)
-        if not os.path.isdir(fdir):
-            continue
-        for f in os.listdir(fdir):
-            m = _FRAGMENT_RE.match(f)
-            if m:
-                top = max(top, int(m.group(2)))
-    return top + 1
-
-
 def _claim_and_move(table_dir: str, gen: int, sub: str, src: str) -> str:
-    """Claim the next seq in ``g{gen}/{sub}`` via an exclusive ``.lock``
-    create, then atomically rename ``src`` in under the claimed name
-    (readers never list a half file). Returns the fragment's path."""
-    prefix = "d" if sub == "deletes" else "i"
-    fdir = os.path.join(table_dir, _gen_name(gen), sub)
-    os.makedirs(fdir, exist_ok=True)
+    """Claim the next seq of generation ``gen`` — 1 + the highest claim
+    record in ``g{gen}/_claims`` (base rows are seq 0) — by creating its
+    record exclusively, then rename ``src`` in as ``{d,i}{seq}.parquet``
+    (readers never list a half file). A record is never removed before
+    its generation is pruned, so no seq is claimed twice, whatever the
+    fragment kind, and the name is this commit's alone; a claim that
+    crashes before its rename burns its seq. Returns the fragment's path."""
+    gdir = os.path.join(table_dir, _gen_name(gen))
+    claims = os.path.join(gdir, CLAIMS)
+    os.makedirs(claims, exist_ok=True)
+    os.makedirs(os.path.join(gdir, sub), exist_ok=True)
     while True:
-        target = os.path.join(fdir, f"{prefix}{_next_seq(table_dir, gen):010d}.parquet")
-        lock = target + ".lock"
+        # all-digit names only: create_exclusive's *.tmp.* files are not claims
+        seq = 1 + max((int(f) for f in os.listdir(claims) if f.isdigit()), default=0)
         try:
-            create_exclusive(lock, "")
+            create_exclusive(os.path.join(claims, f"{seq:010d}"), "")
         except FileExistsError:
             continue  # another writer claimed this seq: take the next
-        try:
-            os.replace(src, target)
-        finally:
-            os.remove(lock)
+        target = os.path.join(gdir, sub, f"{sub[0]}{seq:010d}.parquet")
+        os.rename(src, target)
         return target
 
 
@@ -487,16 +478,16 @@ def mor_compact(spark: SparkSession, table_dir: str, key_col: str) -> None:
     # without a count job (the module is local-FS-addressed throughout)
     gen_dir = os.path.join(table_dir, _gen_name(gen))
     # the walk races with concurrent fragment commits (supported here:
-    # the carry-forward exists precisely for them) — a .lock claim or a
-    # displaced fragment can vanish between listing and stat, so a
-    # vanished file counts 0; .lock claims and delete fragments are
-    # skipped outright (deletes only shrink the fold's output — the bound
-    # stays conservative for base + insert bytes)
+    # the carry-forward exists precisely for them) — a displaced fragment
+    # can vanish between listing and stat, so a vanished file counts 0;
+    # delete fragments are skipped (they only shrink the fold's output —
+    # the bound stays conservative for base + insert bytes) and claim
+    # records are empty
     gen_bytes = sum(
         _size_or_zero(os.path.join(dirpath, f))
         for dirpath, _dirs, files in os.walk(gen_dir)
         for f in files
-        if not f.endswith(".lock") and os.path.basename(dirpath) != "deletes"
+        if os.path.basename(dirpath) != "deletes"
     )
     n_files = max(1, -(-gen_bytes // (128 << 20)))
     staging = os.path.join(table_dir, f"_staging_{uuid.uuid4().hex}")

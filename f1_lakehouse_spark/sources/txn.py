@@ -14,8 +14,9 @@ the manifest file IS the catalog pointer.
 
 Layout::
 
-    root/_MANIFEST                   # JSON {"txn": N, "tables": {name: "v..."}}
-    root/<table>/v0000000NNN/*.parquet
+    root/_MANIFEST                   # JSON {"txn": N, "tables": {name: "v..."}, "writer": w}
+    root/_MANIFEST.v0000000NNN       # txn N's commit record, created exclusively
+    root/<table>/v0000000NNN-{writer}/*.parquet
 
 Commit protocol (``publish_tables``):
 
@@ -24,13 +25,16 @@ Commit protocol (``publish_tables``):
    live; re-running would re-form read-write cycles for incremental
    tables).
 2. **Write all version dirs** — each table's new frame lands in its own
-   ``v{txn}`` directory, fully distributed, never touching any live dir.
+   ``v{txn}-{writer}`` directory, fully distributed, never touching any
+   live dir.
    A crash anywhere in this phase (simulated by ``fail_after_writes``)
    leaves only ORPHAN directories: the manifest still names the previous
    versions of every table, so readers keep seeing the old consistent
    snapshot. The replay re-runs this phase overwriting its own orphans
    (disjoint from every live dir — safe).
-3. **Atomic manifest swap** — ``commit.advance`` writes a per-writer
+3. **Commit record, then atomic manifest swap** — the txn's history
+   record is created exclusively (its creator commits txn N; no writer
+   rewrites it), then ``commit.advance`` writes a per-writer
    ``_MANIFEST.tmp.*``, fsyncs it and ``os.replace``-s it, and only ever
    moves the pointer to a higher txn. Locally that is one atomic rename;
    on HDFS the same; on S3 a single pointer PUT. Tables not part of this
@@ -68,6 +72,8 @@ from pyspark.sql import DataFrame, SparkSession
 from f1_lakehouse_spark.sources.commit import advance, atomic_write, create_exclusive
 
 MANIFEST = "_MANIFEST"
+# the token of a writer that names none: every record carries a writer
+DEFAULT_WRITER = "default"
 
 
 def _txn_of(manifest_text: str) -> int:
@@ -124,60 +130,51 @@ class CommitConflictError(RuntimeError):
     exactly Delta/Iceberg's optimistic commit-retry loop."""
 
 
-def _txn_guard(root: str, txn_id: int, writer: str | None) -> dict | str | None:
+def _txn_guard(root: str, txn_id: int, writer: str) -> dict | str | None:
     """Shared replay/monotonicity/conflict guard. Returns the string
     "committed" when THIS writer's txn is already live (caller no-ops —
     the idempotent crash-replay), raises :class:`CommitConflictError`
-    when a DIFFERENT writer won the race to this txn id (distinguishable
-    only when both sides pass ``writer`` tokens; with no token the
-    equal-txn case is treated as a replay, the pre-OCC behavior), and
-    otherwise returns the current manifest (possibly None) to proceed."""
+    when a DIFFERENT writer committed this txn id or a branch holds it
+    staged (checked before staging: with equal tokens the branch's
+    version dirs are the ones this publish would write), and otherwise
+    returns the current manifest (possibly None) to proceed."""
     cur = read_manifest(root)
-    if cur is not None:
-        _reject_mixed_token_mode(cur, writer)
-        if cur["txn"] == txn_id:
-            if writer is not None and cur.get("writer") not in (None, writer):
-                raise CommitConflictError(
-                    f"txn {txn_id} was committed by writer "
-                    f"{cur.get('writer')!r}, not {writer!r} — re-read the "
-                    "manifest and retry with the next txn id"
-                )
-            return "committed"
-        if cur["txn"] > txn_id:
-            # a replay of a txn this writer COMMITTED but that has since
-            # been superseded must still no-op (the commit record proves
-            # ownership); only a txn that never committed is a violation
-            rec = read_manifest(root, txn=txn_id)
-            if (
-                rec is not None
-                and not rec.get("staged")  # staged records never went live
-                and (writer is None or rec.get("writer") == writer)
-            ):
-                return "committed"
-            raise ValueError(
-                f"txn_id {txn_id} is older than the committed {cur['txn']}"
+    if cur is not None and cur["txn"] == txn_id:
+        if cur.get("writer") != writer:
+            raise CommitConflictError(
+                f"txn {txn_id} was committed by writer "
+                f"{cur.get('writer')!r}, not {writer!r} — re-read the "
+                "manifest and retry with the next txn id"
             )
+        return "committed"
+    rec = read_manifest(root, txn=txn_id)
+    if cur is not None and cur["txn"] > txn_id:
+        # a replay of a txn this writer COMMITTED but that has since
+        # been superseded must still no-op (the commit record proves
+        # ownership); only a txn that never committed is a violation
+        if (
+            rec is not None
+            and not rec.get("staged")  # staged records never went live
+            and rec.get("writer") == writer
+        ):
+            return "committed"
+        raise ValueError(
+            f"txn_id {txn_id} is older than the committed {cur['txn']}"
+        )
+    if rec is not None and rec.get("staged"):
+        raise _staged_conflict(txn_id)
     return cur
 
 
-def _reject_mixed_token_mode(cur: dict, writer: str | None) -> None:
-    """Mixed writer-token mode is a silent footgun (CLAUDE.md txn rule),
-    in BOTH directions: an UNTOKENED publish onto a tokened root treats
-    any equal-txn collision as its own replay, and a TOKENED publish onto
-    an untokened root no-ops on an equal-txn collision because the
-    untokened record proves nothing about ownership — either way OCC race
-    detection silently degrades exactly when it matters. Make it loud:
-    the caller must pass ``writer=`` from every writer or from none."""
-    if (writer is None) != (cur.get("writer") is None):
-        have = cur.get("writer")
-        raise ValueError(
-            "mixed writer-token mode: the live manifest was committed "
-            + (f"by writer {have!r}" if have is not None else "untokened")
-            + " but this publish is "
-            + ("untokened" if writer is None else f"tokened ({writer!r})")
-            + " — OCC race detection would silently degrade; pass writer= "
-            "tokens from EVERY writer or from none"
-        )
+def _staged_conflict(txn_id: int) -> CommitConflictError:
+    # a BRANCH holds this txn id: its record is deliberately unpromoted
+    # (write-audit-publish), not a crashed winner — promoting it would
+    # leak an unaudited staging to every reader; the branch promotes
+    # itself via fast_forward
+    return CommitConflictError(
+        f"txn {txn_id} is staged on a branch — fast_forward the branch or "
+        "retry with the next txn id"
+    )
 
 
 def _stage_writes(
@@ -200,13 +197,18 @@ def _stage_writes(
             )
 
 
-def _version_name(txn_id: int, writer: str | None) -> str:
-    """Staged version dir for a txn. Writer-suffixed under OCC so two
+def _version_name(txn_id: int, writer: str) -> str:
+    """Staged version dir for a txn, suffixed with its writer so two
     racing writers NEVER stage into the same directory — only the commit
     winner's dirs get referenced; the loser's are unreachable orphans
     (cleaned by its conflict handler, and by retention as a backstop)."""
-    base = f"v{txn_id:010d}"
-    return base if writer is None else f"{base}-{writer}"
+    return f"v{txn_id:010d}-{writer}"
+
+
+def _drop_stage(root: str, tables: dict[str, DataFrame], version: str) -> None:
+    """Remove a txn's staged version dirs that no record will name."""
+    for name in tables:
+        shutil.rmtree(os.path.join(root, name, version), ignore_errors=True)
 
 
 def _commit_manifest(
@@ -214,70 +216,55 @@ def _commit_manifest(
     cur: dict | None,
     tables: dict[str, DataFrame],
     txn_id: int,
-    writer: str | None,
+    writer: str,
     fail_after_record: bool = False,
 ) -> None:
     """Phases 3+4: atomic manifest swap (plus the immutable history copy
     for time travel / commit arbitration), then per-table one-cycle
-    retention."""
+    retention. A conflict removes this writer's stage before raising."""
     version = _version_name(txn_id, writer)
     prev_tables = dict(cur["tables"]) if cur else {}
     new_manifest = {
         "txn": txn_id,
         "tables": {**prev_tables, **{n: version for n in tables}},
+        "writer": writer,
     }
-    if writer is not None:
-        new_manifest["writer"] = writer
-    # history copy FIRST — it doubles as the COMMIT ARBITRATION record.
-    # With a writer token it is created EXCLUSIVELY (the fail-if-exists
-    # ``commit.create_exclusive`` is the one compare-and-swap primitive local
-    # FS / HDFS give us, and it is exactly how Delta's _delta_log/N.json
-    # commit arbitrates concurrent writers): the winner of the create IS
-    # the committer of txn N. A loser finds the file owned by another
-    # writer and raises; a crashed WINNER replaying finds its OWN record
-    # and idempotently completes the live-pointer swap. Without a token
-    # (single-writer mode) the history file is plain tmp+replace — a
-    # crash between the two renames leaves a history file the replay's
-    # rewrite makes identical, harmless.
+    # history copy FIRST — it doubles as the COMMIT ARBITRATION record,
+    # created EXCLUSIVELY and never rewritten (the fail-if-exists
+    # ``commit.create_exclusive`` is the one compare-and-swap primitive
+    # local FS / HDFS give us, and it is exactly how Delta's
+    # _delta_log/N.json commit arbitrates concurrent writers): the winner
+    # of the create IS the committer of txn N. A loser finds the file
+    # owned by another writer and raises; a crashed WINNER replaying finds
+    # its OWN record and idempotently completes the live-pointer swap.
     hist = os.path.join(root, f"{MANIFEST}.v{txn_id:010d}")
     ptr = os.path.join(root, MANIFEST)
-    payload = json.dumps(new_manifest)
-    if writer is None:
-        atomic_write(hist, payload)
-    else:
-        try:
-            create_exclusive(hist, payload)
-        except FileExistsError:
-            with open(hist) as f:
-                owner = json.load(f)
-            if owner.get("staged"):
-                # a BRANCH holds this txn id: its record is deliberately
-                # unpromoted (write-audit-publish), not a crashed winner —
-                # promoting it here would leak an unaudited staging to
-                # every reader. Conflict regardless of who owns it; the
-                # branch promotes itself via fast_forward.
-                raise CommitConflictError(
-                    f"txn {txn_id} is staged on a branch — fast_forward "
-                    "the branch or retry with the next txn id"
-                ) from None
-            if owner.get("writer") != writer:
-                # ROLL THE WINNER FORWARD before raising: the record IS
-                # the commit (Delta semantics — the N.json wins; the live
-                # pointer is derived state). If the winner crashed between
-                # record and swap, every loser would otherwise re-derive
-                # the SAME txn id against the stale manifest and conflict
-                # forever; completing the swap on the winner's behalf
-                # unblocks the retry loop and makes the record's txn
-                # genuinely visible, so its time-travel snapshot is never
-                # a phantom.
-                advance(ptr, owner["txn"], json.dumps(owner), _txn_of)
-                raise CommitConflictError(
-                    f"txn {txn_id} commit record is owned by writer "
-                    f"{owner.get('writer')!r}, not {writer!r} — re-read "
-                    "the manifest and retry with the next txn id"
-                ) from None
-            # our own crash leftover: fall through and complete the swap
-            new_manifest = owner
+    try:
+        create_exclusive(hist, json.dumps(new_manifest))
+    except FileExistsError:
+        with open(hist) as f:
+            owner = json.load(f)
+        if owner.get("staged"):
+            _drop_stage(root, tables, version)
+            raise _staged_conflict(txn_id) from None
+        if owner.get("writer") != writer:
+            _drop_stage(root, tables, version)
+            # ROLL THE WINNER FORWARD before raising: the record IS the
+            # commit (Delta semantics — the N.json wins; the live pointer
+            # is derived state). If the winner crashed between record and
+            # swap, every loser would otherwise re-derive the SAME txn id
+            # against the stale manifest and conflict forever; completing
+            # the swap on the winner's behalf unblocks the retry loop and
+            # makes the record's txn genuinely visible, so its time-travel
+            # snapshot is never a phantom.
+            advance(ptr, owner["txn"], json.dumps(owner), _txn_of)
+            raise CommitConflictError(
+                f"txn {txn_id} commit record is owned by writer "
+                f"{owner.get('writer')!r}, not {writer!r} — re-read "
+                "the manifest and retry with the next txn id"
+            ) from None
+        # our own crash leftover: fall through and complete the swap
+        new_manifest = owner
     if fail_after_record:
         raise SimulatedCrash(
             f"simulated crash after txn {txn_id}'s commit record, before "
@@ -321,16 +308,8 @@ def _ref_pinned_versions(root: str) -> dict[str, set[str]]:
     reproducibility guarantee refs exist for silently breaks. Cost is
     O(#refs) metadata file reads per commit — independent of data volume."""
     pinned: dict[str, set[str]] = {}
-    refs_dir = os.path.join(root, REFS_DIR)
-    if not os.path.isdir(refs_dir):
-        return pinned
-    for name in os.listdir(refs_dir):
-        if ".tmp" in name:  # in-flight unique tmps are not refs
-            continue
-        txn = read_ref(root, name)
-        rec = None if txn is None else read_manifest(root, txn=txn)
-        if rec is None:
-            continue
+    for txn in _ref_txns(root):
+        rec = read_manifest(root, txn=txn) or {}
         for tbl, ver in rec.get("tables", {}).items():
             pinned.setdefault(tbl, set()).add(ver)
     return pinned
@@ -342,7 +321,7 @@ def publish_tables(
     tables: dict[str, DataFrame],
     txn_id: int,
     fail_after_writes: int | None = None,
-    writer: str | None = None,
+    writer: str = DEFAULT_WRITER,
     fail_after_record: bool = False,
 ) -> None:
     """Atomically publish every frame in ``tables`` as transaction
@@ -350,30 +329,25 @@ def publish_tables(
     crash-replay; ``txn_id`` must be monotonically increasing across
     publishes to the same root.
 
-    ``writer`` opts into optimistic concurrency: each writer stages into
-    its own version dirs and the txn's commit record is created
-    exclusively (fail-if-exists — the Delta _delta_log arbitration), so
-    of N racing writers exactly ONE commits txn_id and every loser gets
+    Commits are optimistic: each ``writer`` token stages into its own
+    version dirs and the txn's commit record is created exclusively
+    (fail-if-exists — the Delta _delta_log arbitration), so of N racing
+    writers exactly ONE commits txn_id and every loser gets
     :class:`CommitConflictError` (re-read the manifest, re-derive, retry
-    with the next id) with its orphan staging removed. Without a token
-    the equal-txn case is treated as this writer's own replay —
-    single-writer mode, the pre-OCC behavior."""
+    with the next id) with its orphan staging removed. A writer's own
+    record at ``txn_id`` makes the publish its replay, so writers that
+    may race must pass distinct tokens; a lone writer can keep the
+    default one."""
     os.makedirs(root, exist_ok=True)
     cur = _txn_guard(root, txn_id, writer)
     if cur == "committed":
         # crash-replay AFTER a completed commit: the transaction is
         # durable and live — the no-op IS the idempotent replay
         return
-    version = _version_name(txn_id, writer)
-    _stage_writes(root, tables, version, fail_after_writes)
-    try:
-        _commit_manifest(
-            root, cur, tables, txn_id, writer, fail_after_record=fail_after_record
-        )
-    except CommitConflictError:
-        for name in tables:  # lost the race: remove our unreachable stage
-            shutil.rmtree(os.path.join(root, name, version), ignore_errors=True)
-        raise
+    _stage_writes(root, tables, _version_name(txn_id, writer), fail_after_writes)
+    _commit_manifest(
+        root, cur, tables, txn_id, writer, fail_after_record=fail_after_record
+    )
 
 
 def write_audit_publish(
@@ -382,8 +356,7 @@ def write_audit_publish(
     tables: dict[str, DataFrame],
     txn_id: int,
     audit_fn,
-    clean_rejected: bool = True,
-    writer: str | None = None,
+    writer: str = DEFAULT_WRITER,
 ) -> list[str]:
     """Write-Audit-Publish (the Iceberg WAP pattern; the scaled-up form of
     the reference's post-hoc gate `/root/reference/scripts/check_gold.sh`
@@ -395,10 +368,10 @@ def write_audit_publish(
 
     ``audit_fn(staged: dict[str, DataFrame]) -> list[str]`` returns
     human-readable violation strings (empty = pass). Returns the violation
-    list; on rejection the staged orphan dirs are removed (unless
-    ``clean_rejected=False`` — keep them for debugging) and the committed
-    snapshot is untouched. Idempotent like ``publish_tables``: a replay of
-    an already-committed txn no-ops (returns [])."""
+    list; on rejection the staged dirs are removed and the committed
+    snapshot is untouched, so the txn id stays free for a fixed retry.
+    Commits and conflicts like ``publish_tables``: a replay of an
+    already-committed txn no-ops (returns [])."""
     os.makedirs(root, exist_ok=True)
     cur = _txn_guard(root, txn_id, writer)
     if cur == "committed":
@@ -411,20 +384,9 @@ def write_audit_publish(
     }
     violations = list(audit_fn(staged))
     if violations:
-        if clean_rejected:
-            for name in tables:
-                shutil.rmtree(
-                    os.path.join(root, name, version), ignore_errors=True
-                )
+        _drop_stage(root, tables, version)
         return violations
-    try:
-        _commit_manifest(root, cur, tables, txn_id, writer)
-    except CommitConflictError:
-        # same loser contract as publish_tables: a WAP writer that loses
-        # the commit-record race must not leak its audited staging
-        for name in tables:
-            shutil.rmtree(os.path.join(root, name, version), ignore_errors=True)
-        raise
+    _commit_manifest(root, cur, tables, txn_id, writer)
     return []
 
 
@@ -611,6 +573,27 @@ def drop_ref(root: str, name: str) -> None:
     os.remove(path)
 
 
+def _ref_txns(root: str) -> list[int]:
+    """The txn ids the refs (tags and branches) name; in-flight unique
+    tmps and a ref dropped mid-listing are skipped."""
+    refs_dir = os.path.join(root, REFS_DIR)
+    if not os.path.isdir(refs_dir):
+        return []
+    txns = (read_ref(root, n) for n in os.listdir(refs_dir) if ".tmp" not in n)
+    return [t for t in txns if t is not None]
+
+
+def _history_txns(root: str) -> list[int]:
+    """The txn ids of the ``_MANIFEST.v{N}`` history records, ascending
+    (an in-flight ``create_exclusive`` tmp is not a record)."""
+    prefix = MANIFEST + ".v"
+    return sorted(
+        int(f[len(prefix):])
+        for f in os.listdir(root)
+        if f.startswith(prefix) and f[len(prefix):].isdigit()
+    )
+
+
 def read_ref_manifest(root: str, name: str) -> dict | None:
     """Resolve a ref to its manifest snapshot (tags and branches alike);
     feed the result to :func:`manifest_read_table`."""
@@ -624,7 +607,7 @@ def publish_staged(
     tables: dict[str, DataFrame],
     txn_id: int,
     branch: str,
-    writer: str | None = None,
+    writer: str = DEFAULT_WRITER,
 ) -> None:
     """Stage a transaction on a BRANCH without making it live: version
     dirs + commit record are written exactly like :func:`publish_tables`
@@ -637,8 +620,6 @@ def publish_staged(
     would defeat the entire WAP gate)."""
     os.makedirs(os.path.join(root, REFS_DIR), exist_ok=True)
     cur = read_manifest(root)
-    if cur is not None:
-        _reject_mixed_token_mode(cur, writer)
     # the writer's OWN record is checked BEFORE the ahead-of-live guard:
     # a crash-replay of a staging whose branch has since been
     # fast-forwarded (or superseded) finds cur['txn'] >= txn_id, but its
@@ -647,11 +628,7 @@ def publish_staged(
     # die on the monotonicity check.
     rec = read_manifest(root, txn=txn_id)
     if rec is not None:
-        if (
-            not rec.get("staged")
-            or writer is None
-            or rec.get("writer") != writer
-        ):
+        if not rec.get("staged") or rec.get("writer") != writer:
             raise CommitConflictError(
                 f"txn {txn_id} commit record already exists (writer "
                 f"{rec.get('writer')!r}) — re-read and retry with the "
@@ -672,15 +649,13 @@ def publish_staged(
         "txn": txn_id,
         "tables": {**prev_tables, **{n: version for n in tables}},
         "staged": True,
+        "writer": writer,
     }
-    if writer is not None:
-        record["writer"] = writer
     hist = os.path.join(root, f"{MANIFEST}.v{txn_id:010d}")
     try:
         create_exclusive(hist, json.dumps(record))
     except FileExistsError:
-        for name in tables:
-            shutil.rmtree(os.path.join(root, name, version), ignore_errors=True)
+        _drop_stage(root, tables, version)
         raise CommitConflictError(
             f"lost the record race for staged txn {txn_id} — re-read and "
             "retry with the next txn id"
@@ -732,15 +707,9 @@ def vacuum_orphans(root: str, ttl_seconds: float = 3600.0) -> list[str]:
     import time  # noqa: PLC0415
 
     referenced: set[tuple[str, str]] = set()
-    live = read_manifest(root)
-    manifests = [] if live is None else [live]
-    prefix = MANIFEST + ".v"
-    for f in os.listdir(root):
-        if f.startswith(prefix) and f[len(prefix):].isdigit():
-            rec = read_manifest(root, txn=int(f[len(prefix):]))
-            if rec is not None:
-                manifests.append(rec)
-    for rec in manifests:
+    manifests = [read_manifest(root)]
+    manifests += [read_manifest(root, txn=t) for t in _history_txns(root)]
+    for rec in filter(None, manifests):
         for tbl, ver in rec.get("tables", {}).items():
             referenced.add((tbl, ver))
     horizon = time.time() - ttl_seconds
@@ -779,24 +748,11 @@ def expire_history(root: str, keep_n: int) -> list[int]:
     Returns the expired txn ids (ascending)."""
     if keep_n < 0:
         raise ValueError(f"keep_n must be >= 0, got {keep_n}")
-    pinned: set[int] = set()
-    refs_dir = os.path.join(root, REFS_DIR)
-    if os.path.isdir(refs_dir):
-        for name in os.listdir(refs_dir):
-            if ".tmp" in name:  # in-flight unique tmps are not refs
-                continue
-            txn = read_ref(root, name)
-            if txn is not None:
-                pinned.add(txn)
+    pinned = set(_ref_txns(root))
     live = read_manifest(root)
     if live is not None:
         pinned.add(live["txn"])
-    prefix = MANIFEST + ".v"
-    history = sorted(
-        int(f[len(prefix):])
-        for f in os.listdir(root)
-        if f.startswith(prefix) and f[len(prefix):].isdigit()
-    )
+    history = _history_txns(root)
     keep = set(history[len(history) - keep_n:]) if keep_n else set()
     expired: list[int] = []
     for txn in history:

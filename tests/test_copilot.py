@@ -133,6 +133,8 @@ def test_ask_json_payload_and_fallback(spark):
             "region names": "```sql\nSELECT r_regionkey, r_name FROM region_v2\n```",
             # JSON present but mutating SQL → guardrail fires after parse
             "drop regions": '{"sql": "DROP TABLE region_v2"}',
+            # schema-prefixed SQL, resolved through schema_mapping
+            "gold regions": '{"sql": "SELECT r_regionkey, r_name FROM gold.region_g"}',
         }
     )
     out = ask_json(spark, "show regions by key", translator)
@@ -146,3 +148,14 @@ def test_ask_json_payload_and_fallback(spark):
 
     with pytest.raises(GuardrailError):
         ask_json(spark, "please drop regions", translator)
+
+    # the reported SQL is the statement that ran, schema rewrite included
+    load_table(spark, SF_DIR, "region").createOrReplaceGlobalTempView("region_g")
+    out3 = ask_json(
+        spark, "gold regions", translator, schema_mapping={"gold": "global_temp"}
+    )
+    assert out3["sql"] == (
+        "SELECT * FROM (SELECT r_regionkey, r_name FROM global_temp.region_g)"
+        " AS safe_view LIMIT 200"
+    )
+    assert out3["df"].count() == 5

@@ -99,8 +99,8 @@ def test_txn_carries_forward_tables_outside_the_transaction(spark, tmp_path):
     only_gold = {"gold": spark.createDataFrame([(9, 99)], "tag int, n int")}
     publish_tables(spark, root, only_gold, txn_id=2)
     m2 = read_manifest(root)
-    assert m2["tables"]["gold"] == "v0000000002"
-    assert m2["tables"]["silver"] == "v0000000001"
+    assert m2["tables"]["gold"] == "v0000000002-default"
+    assert m2["tables"]["silver"] == "v0000000001-default"
     assert _rows(manifest_read_table(spark, root, "silver", m2)) == [
         (i, 1) for i in range(10)
     ]
@@ -180,14 +180,12 @@ def test_wap_rejects_before_visibility_and_cleans(spark, tmp_path):
     }
     violations = write_audit_publish(spark, root, bad, 2, audit)
     assert violations == ["silver.tag has NULLs"]
-    # the committed snapshot is untouched and the orphans are gone
+    # the committed snapshot is untouched and the orphans are gone (the
+    # committed txn's dirs carry the same suffix, so the name is the one
+    # the rejected stage was written to)
     assert read_manifest(root) == m1
-    assert not (tmp_path / "m" / "silver" / "v0000000002").exists()
-    # keep-for-debugging mode leaves the staging dirs
-    violations = write_audit_publish(
-        spark, root, bad, 2, audit, clean_rejected=False
-    )
-    assert violations and (tmp_path / "m" / "silver" / "v0000000002").exists()
+    assert (tmp_path / "m" / "silver" / "v0000000001-default").is_dir()
+    assert not (tmp_path / "m" / "silver" / "v0000000002-default").exists()
     # a rejected txn id remains available for a FIXED retry
     fixed = {
         "silver": spark.createDataFrame([(3, 2)], "id int, tag int"),

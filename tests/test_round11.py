@@ -2,8 +2,8 @@
 
 - sources/txn.py hardening (r10 ADVICE): the final live-pointer swap is
   monotonic (a stalled winner resuming after being rolled forward can no
-  longer rewind the snapshot), mixed writer-token mode raises loudly
-  instead of silently degrading OCC race detection, publish_staged is
+  longer rewind the snapshot), every record names its writer so an
+  equal-txn collision between writers always conflicts, publish_staged is
   crash-replay idempotent even after its branch was fast-forwarded, and
   manifest history is expirable with tag/branch pins.
 - sources/mor.py hardening + upsert: fragment commits are O_EXCL-
@@ -100,24 +100,60 @@ def test_commit_manifest_swap_is_guarded_directly(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# txn.py: mixed writer-token mode raises
+# txn.py: every record names its writer; collisions conflict
 # ---------------------------------------------------------------------------
 
 
-def test_mixed_token_mode_raises(spark, tmp_path):
+def test_default_writer_conflicts_with_staged_branch(spark, tmp_path):
+    """A publish that names no writer, at the txn id a branch holds
+    staged under the same default token, conflicts before it stages: the
+    branch's record and rows are unchanged."""
+    from f1_lakehouse_spark.sources.txn import manifest_read_table, read_ref_manifest
+
     root = str(tmp_path / "m")
-    publish_tables(spark, root, _frames(spark, 1), txn_id=1, writer="a")
-    with pytest.raises(ValueError, match="mixed writer-token"):
-        publish_tables(spark, root, _frames(spark, 2), txn_id=2)
-    # tokened continuation is fine
-    publish_tables(spark, root, _frames(spark, 2), txn_id=2, writer="b")
-    # publish_staged is held to the same rule
-    with pytest.raises(ValueError, match="mixed writer-token"):
-        publish_staged(spark, root, _frames(spark, 3), txn_id=3, branch="wap")
-    # untokened roots keep working untokened (single-writer mode)
-    root2 = str(tmp_path / "m2")
-    publish_tables(spark, root2, _frames(spark, 1), txn_id=1)
-    publish_tables(spark, root2, _frames(spark, 2), txn_id=2)
+    publish_tables(spark, root, _frames(spark, 1), txn_id=1)
+    publish_staged(spark, root, _frames(spark, 2), txn_id=2, branch="wap")
+    staged = read_ref_manifest(root, "wap")
+    with pytest.raises(CommitConflictError, match="staged on a branch"):
+        publish_tables(spark, root, _frames(spark, 99), txn_id=2)
+    assert read_manifest(root)["txn"] == 1
+    assert read_ref_manifest(root, "wap") == staged
+    silver = manifest_read_table(spark, root, "silver", staged)
+    assert sorted(tuple(r) for r in silver.collect()) == [(i, 2) for i in range(10)]
+
+
+@pytest.mark.parametrize("stop", ["live", "after_record"])
+@pytest.mark.parametrize("first", ["default", "etl"])
+def test_default_and_named_writer_collide(spark, tmp_path, first, stop):
+    """The default writer and an ``etl`` writer publishing one txn id
+    conflict whichever commits first, whether the first one's txn is live
+    or only its record exists (it crashed before the swap): the first is
+    live afterwards with its rows, and the second's stage is removed."""
+    from f1_lakehouse_spark.sources.txn import manifest_read_table
+
+    root = str(tmp_path / "m")
+    second = "etl" if first == "default" else "default"
+
+    def publish(writer, tag, **kw):
+        if writer != "default":  # the default writer names no token
+            kw["writer"] = writer
+        publish_tables(spark, root, _frames(spark, tag), txn_id=2, **kw)
+
+    publish_tables(spark, root, _frames(spark, 1), txn_id=1, writer="etl")
+    if stop == "live":
+        publish(first, 2)
+    else:
+        with pytest.raises(SimulatedCrash):
+            publish(first, 2, fail_after_record=True)
+        assert read_manifest(root)["txn"] == 1
+    with pytest.raises(CommitConflictError):
+        publish(second, 99)
+    live = read_manifest(root)
+    assert live["txn"] == 2 and live["writer"] == first
+    silver = manifest_read_table(spark, root, "silver", live)
+    assert sorted(tuple(r) for r in silver.collect()) == [(i, 2) for i in range(10)]
+    if stop == "after_record":  # the second passed the guard and staged
+        assert not os.path.isdir(os.path.join(root, "silver", f"v0000000002-{second}"))
 
 
 # ---------------------------------------------------------------------------
@@ -213,18 +249,74 @@ def _mor_base(spark, tmp_path, name="t"):
 
 
 def test_mor_seq_claim_burned_by_stale_lock(spark, tmp_path):
-    """A crashed claim (orphan .lock) burns its seq: the next commit skips
-    to the following seq instead of blocking or clobbering."""
-    from f1_lakehouse_spark.sources.mor import _delete_files, mor_delete
+    """A crashed claim (an orphan claim record) burns its seq: the next
+    commit skips to the following seq instead of blocking or clobbering."""
+    from f1_lakehouse_spark.sources.mor import CLAIMS, _delete_files, mor_delete
 
     tbl = _mor_base(spark, tmp_path)
-    ddir = os.path.join(tbl, "g0000000000", "deletes")
-    os.makedirs(ddir)
-    open(os.path.join(ddir, "d0000000001.parquet.lock"), "w").close()
+    claims = os.path.join(tbl, "g0000000000", CLAIMS)
+    os.makedirs(claims)
+    open(os.path.join(claims, "0000000001"), "w").close()
     n = mor_delete(spark, tbl, "id", F.col("id") == 0)
     assert n == 1
     files = _delete_files(tbl, 0)
     assert [os.path.basename(p) for p in files] == ["d0000000002.parquet"]
+
+
+@pytest.mark.parametrize("kind", ["delete", "upsert"])
+def test_mor_held_writer_never_reuses_a_committed_seq(
+    spark, tmp_path, monkeypatch, kind
+):
+    """Writer Y picks its seq and is held at the claim while X commits
+    ``mor_delete(id == 1)`` at that seq. Y, a delete of id 2 or an upsert
+    of it, then lands at its own seq: the two fragments have distinct seqs
+    across deletes and inserts, and id 1 stays deleted."""
+    import threading
+
+    import f1_lakehouse_spark.sources.mor as mor
+
+    tbl = _mor_base(spark, tmp_path)
+    at_claim, release = threading.Event(), threading.Event()
+    real_create = mor.create_exclusive
+
+    def create(path, payload):
+        if threading.current_thread().name == "Y" and not at_claim.is_set():
+            at_claim.set()
+            assert release.wait(120)
+        return real_create(path, payload)
+
+    def commit_y():
+        try:
+            if kind == "delete":
+                mor.mor_delete(spark, tbl, "id", F.col("id") == 2)
+            else:
+                batch = spark.createDataFrame([(2, 9)], "id int, grp int")
+                mor.mor_upsert(spark, tbl, "id", batch)
+            outcomes.append("ok")
+        except Exception as e:  # the outcome is what the test asserts on
+            outcomes.append(e)
+
+    monkeypatch.setattr(mor, "create_exclusive", create)
+    outcomes = []
+    y = threading.Thread(target=commit_y, name="Y")
+    y.start()
+    try:
+        assert at_claim.wait(120)
+        assert mor.mor_delete(spark, tbl, "id", F.col("id") == 1) == 1
+    finally:
+        release.set()
+        y.join(180)
+    assert not y.is_alive() and outcomes == ["ok"], outcomes
+    seqs = sorted(
+        s for sub in ("deletes", "inserts") for s, _ in mor._fragments(tbl, 0, sub)
+    )
+    assert seqs == [1, 2], seqs
+    model = {i: i % 3 for i in range(10) if i != 1}
+    if kind == "delete":
+        del model[2]
+    else:
+        model[2] = 9
+    assert _mor_view(spark, tbl) == model
 
 
 def test_mor_commit_displaced_by_compaction_is_redone(spark, tmp_path):
@@ -758,18 +850,6 @@ def test_mor_compaction_carries_forward_late_fragments(spark, tmp_path):
     ids = {r["id"] for r in mor.mor_read(spark, tbl, "id").collect()}
     assert ids == set(range(1, 10)) - {5}, ids
     assert len(mor._delete_files(tbl, 1)) == 1  # carried fragment lives on
-
-
-def test_mixed_token_mode_raises_tokened_on_untokened(spark, tmp_path):
-    """The reverse direction: a TOKENED publish onto an untokened root
-    would silently no-op on an equal-txn collision (the untokened record
-    proves nothing about ownership) — it must raise instead."""
-    root = str(tmp_path / "m")
-    publish_tables(spark, root, _frames(spark, 1), txn_id=1)
-    with pytest.raises(ValueError, match="mixed writer-token"):
-        publish_tables(spark, root, _frames(spark, 2), txn_id=1, writer="b")
-    with pytest.raises(ValueError, match="mixed writer-token"):
-        publish_tables(spark, root, _frames(spark, 2), txn_id=2, writer="b")
 
 
 def test_wap_loser_cleans_staging_on_conflict(spark, tmp_path):
