@@ -4,7 +4,7 @@ streams, catalog state, physical layout), re-expressed as `queries()`
 entries whose RESULT encodes the round-trip property, so the external
 driver certifies them differentially instead of trusting the unit suite.
 
-Started with the r8 pair (streaming MVCC gold refresh, training-shard
+Started with the r8 pair (streaming gold refresh, training-shard
 handoff); r9 widened it to the full lakehouse maintenance surface:
 UPDATE-capable silver merge, compaction + z-order, SCD2 history, schema
 evolution (mergeSchema), static + dynamic partition pruning, bucketed
@@ -35,8 +35,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from f1_lakehouse_spark.pinning import pin_small_result
+from f1_lakehouse_spark.pipeline.filtering import pipeline_corpus_survivors
 from f1_lakehouse_spark.pipeline.hashing import sql_md5_hash48, sql_salted_hash
-from f1_lakehouse_spark.registry import register
+from f1_lakehouse_spark.registry import REGISTRY, register
 from f1_lakehouse_spark.tables import load_table
 
 # event_type is a TAXONOMY (a handful of product-defined names), not a
@@ -64,19 +65,23 @@ SELECT event_type,
 FROM events
 GROUP BY event_type
 """,
-    doc="Streaming MVCC gold refresh certified end-to-end: run the "
-    "foreachBatch key-replace merge over the events stream, RESTART it "
-    "with no new data (checkpoint recovery must no-op, not double-count), "
-    "read the published version back through the _CURRENT pointer, and "
-    "compare against the batch aggregate the oracle computes directly. "
-    "A replay double-count, a broken pointer swap, or stale version "
-    "retention all surface as a driver hash mismatch.",
+    doc="Streaming gold refresh certified end-to-end: run the "
+    "foreachBatch key-replace merge over the events stream (one one-table "
+    "txn per micro-batch), RESTART it with no new data (checkpoint "
+    "recovery must no-op, not double-count), read the live version back "
+    "through the txn manifest, and compare against the batch aggregate "
+    "the oracle computes directly. A replay double-count, a broken "
+    "manifest swap, or stale version retention all surface as a driver "
+    "hash mismatch.",
     tags=("streaming", "lifecycle"),
 )
 def incremental_gold_refresh_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from f1_lakehouse_spark.sources.txn import (  # noqa: PLC0415
+        manifest_read_table,
+        read_manifest,
+    )
     from f1_lakehouse_spark.streaming.ingest import (  # noqa: PLC0415
         incremental_gold_refresh,
-        read_gold,
     )
 
     base = tempfile.mkdtemp(prefix="f1ls_gold_refresh_")
@@ -89,10 +94,11 @@ def incremental_gold_refresh_roundtrip(spark: SparkSession, sf_dir: str) -> Data
     try:
         incremental_gold_refresh(spark, src, gold, ckpt, glob=glob)
         # restart against the same checkpoint with no new files: the
-        # recovered stream must publish nothing new and keep the pointer
+        # recovered stream must publish nothing new and keep the manifest
         # consistent (the crash-replay no-op path)
         incremental_gold_refresh(spark, src, gold, ckpt, glob=glob)
-        out = read_gold(spark, gold).select(
+        live = read_manifest(gold)
+        out = manifest_read_table(spark, gold, "gold", live).select(
             "event_type",
             "n_events",
             F.round("total_value", 3).cast("double").alias("total_value"),
@@ -215,7 +221,7 @@ _SILVER_SPLIT_FILES = 4
     "events backlog into files, stream it with maxFilesPerTrigger=1 so the "
     "latest-wins MERGE crosses micro-batch boundaries (real UPDATEs, not "
     "just INSERTs), RESTART with no new data (checkpoint recovery must "
-    "no-op), read the published version back through the _CURRENT pointer "
+    "no-op), read the live version back through the txn manifest "
     "and aggregate latest-event-per-user by event_type. The oracle computes "
     "latest-per-user directly from the source, so an append-only silver, a "
     "lost update, a replay double-apply, or batch-split dependence all "
@@ -223,9 +229,12 @@ _SILVER_SPLIT_FILES = 4
     tags=("streaming", "lifecycle"),
 )
 def incremental_silver_merge_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from f1_lakehouse_spark.sources.txn import (  # noqa: PLC0415
+        manifest_read_table,
+        read_manifest,
+    )
     from f1_lakehouse_spark.streaming.ingest import (  # noqa: PLC0415
         incremental_silver_merge,
-        read_gold,
     )
 
     base = tempfile.mkdtemp(prefix="f1ls_silver_merge_")
@@ -245,7 +254,7 @@ def incremental_silver_merge_roundtrip(spark: SparkSession, sf_dir: str) -> Data
             spark, src, silver, ckpt, glob="*.parquet", max_files_per_trigger=1
         )
         out = (
-            read_gold(spark, silver)
+            manifest_read_table(spark, silver, "silver", read_manifest(silver))
             .groupBy("event_type")
             .agg(
                 F.count("*").alias("n_users"),
@@ -929,9 +938,7 @@ def _curated_shard_oracle() -> str:
     composition of three registered oracles) feeds the shard-writer twin
     (salted md5 shard assignment + mod-2^62 row-hash checksum over the
     sorted column list)."""
-    from f1_lakehouse_spark.registry import REGISTRY as _REG  # noqa: PLC0415
-
-    surv = _REG["pipeline_corpus_survivors"].oracle
+    surv = REGISTRY["pipeline_corpus_survivors"].oracle
     row = " , ".join(
         f"COALESCE(CAST({c} AS VARCHAR), {_NULL_SENTINEL_SQL})" for c in _CURATED_COLS
     )
@@ -953,64 +960,51 @@ GROUP BY shard
 """
 
 
-def _register_curated_shards() -> None:
-    """Deferred registration: the oracle composes pipeline_corpus_survivors'
-    oracle, which registers when filtering.py imports — and lifecycle
-    imports after it in registry._ensure_loaded, so composing at module
-    import is safe; the indirection just keeps the dependency explicit."""
-
-    @register(
-        "curated_shards_roundtrip",
-        oracle=_curated_shard_oracle(),
-        doc="The curation -> training handoff certified as ONE query: "
-        "shard the composed survivors corpus (dedup representatives ∩ "
-        "repetition-gate passers ∩ uncontaminated docs) with the "
-        "training-shard writer, verify the written files consumer-side, "
-        "and return per-shard (count, checksum, verified). The oracle "
-        "recomputes the entire composition — three curation stages AND "
-        "shard membership AND the order-independent checksum — from the "
-        "source table, so a regression anywhere in the curation chain or "
-        "the handoff surfaces as one driver mismatch. The survivors frame "
-        "is the shared (session, sf_dir) cache entry — BORROWED, never "
-        "unpersisted here (CLAUDE.md cache roster).",
-        tags=("sink", "lifecycle"),
+@register(
+    "curated_shards_roundtrip",
+    oracle=_curated_shard_oracle(),
+    doc="The curation -> training handoff certified as ONE query: "
+    "shard the composed survivors corpus (dedup representatives ∩ "
+    "repetition-gate passers ∩ uncontaminated docs) with the "
+    "training-shard writer, verify the written files consumer-side, "
+    "and return per-shard (count, checksum, verified). The oracle "
+    "recomputes the entire composition — three curation stages AND "
+    "shard membership AND the order-independent checksum — from the "
+    "source table, so a regression anywhere in the curation chain or "
+    "the handoff surfaces as one driver mismatch. The survivors frame "
+    "is the shared (session, sf_dir) cache entry — BORROWED, never "
+    "unpersisted here (CLAUDE.md cache roster).",
+    tags=("sink", "lifecycle"),
+)
+def curated_shards_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from f1_lakehouse_spark.sources.shards import (  # noqa: PLC0415
+        verify_training_shards,
+        write_training_shards,
     )
-    def curated_shards_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from f1_lakehouse_spark.pipeline.filtering import (  # noqa: PLC0415
-            pipeline_corpus_survivors,
-        )
-        from f1_lakehouse_spark.sources.shards import (  # noqa: PLC0415
-            verify_training_shards,
-            write_training_shards,
-        )
 
-        surv = pipeline_corpus_survivors(spark, sf_dir)
-        base = tempfile.mkdtemp(prefix="f1ls_curated_shards_")
-        out = os.path.join(base, "shards")
-        try:
-            manifest = write_training_shards(
-                surv, out, key_col="doc_id", n_shards=SHARD_N
+    surv = pipeline_corpus_survivors(spark, sf_dir)
+    base = tempfile.mkdtemp(prefix="f1ls_curated_shards_")
+    out = os.path.join(base, "shards")
+    try:
+        manifest = write_training_shards(surv, out, key_col="doc_id", n_shards=SHARD_N)
+        report = verify_training_shards(spark, out)
+        rows = [
+            (
+                int(sid),
+                int(m["n_rows"]),
+                int(Decimal(m["checksum"]) % CHECKSUM_MOD),
+                int(bool(report["ok"])),
             )
-            report = verify_training_shards(spark, out)
-            rows = [
-                (
-                    int(sid),
-                    int(m["n_rows"]),
-                    int(Decimal(m["checksum"]) % CHECKSUM_MOD),
-                    int(bool(report["ok"])),
-                )
-                for sid, m in sorted(
-                    manifest["shards"].items(), key=lambda kv: int(kv[0])
-                )
-            ]
-            return spark.createDataFrame(
-                rows, "shard int, n_rows long, checksum long, verified int"
+            for sid, m in sorted(
+                manifest["shards"].items(), key=lambda kv: int(kv[0])
             )
-        finally:
-            shutil.rmtree(base, ignore_errors=True)
+        ]
+        return spark.createDataFrame(
+            rows, "shard int, n_rows long, checksum long, verified int"
+        )
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
 
-
-_register_curated_shards()
 
 # ---------------------------------------------------------------------------
 # Round-10 additions: cross-table atomic publish, version GC, stats/CBO
@@ -1058,16 +1052,14 @@ def _medallion_layers(src: DataFrame):
         SILVER_ORDER,
         SILVER_PAYLOAD,
         _latest_per_key,
+        _silver_to_gold,
     )
 
     silver = _latest_per_key(
         src.select(SILVER_KEY, *SILVER_ORDER, *SILVER_PAYLOAD)
     ).persist()
     n_silver = silver.count()
-    gold = silver.groupBy("event_type").agg(
-        F.count("*").alias("n_users"),
-        F.sum(F.col("value").cast("decimal(28,9)")).alias("total_value"),
-    )
+    gold = _silver_to_gold(silver)
     silver_files = max(1, -(-n_silver // 500_000))
     return (
         {"silver": silver.coalesce(silver_files), "gold": gold.coalesce(1)},
@@ -1098,14 +1090,12 @@ def _assert_snapshot_consistent(spark: SparkSession, root: str, manifest) -> Non
     compare; both collects are bounded by the event_type taxonomy
     (EVENT_TYPE_MAX)."""
     from f1_lakehouse_spark.sources.txn import manifest_read_table  # noqa: PLC0415
+    from f1_lakehouse_spark.streaming.ingest import _silver_to_gold  # noqa: PLC0415
 
     silver = manifest_read_table(spark, root, "silver", manifest)
     gold = manifest_read_table(spark, root, "gold", manifest)
     assert silver is not None and gold is not None, "snapshot missing a table"
-    expect = silver.groupBy("event_type").agg(
-        F.count("*").alias("n_users"),
-        F.sum(F.col("value").cast("decimal(28,9)")).alias("total_value"),
-    )
+    expect = _silver_to_gold(silver)
     got = sorted(tuple(r) for r in gold.collect())
     want = sorted(tuple(r) for r in expect.collect())
     assert got == want, (
@@ -1217,16 +1207,16 @@ GROUP BY event_type
 @register(
     "version_gc_roundtrip",
     oracle=_VERSION_GC_ORACLE,
-    doc="Version retention / vacuum contract of the pointer-versioned "
-    "MVCC layout certified end-to-end: publish three versions (cumulative "
+    doc="Version retention / vacuum contract of the one-table txn "
+    "layout certified end-to-end: publish three versions (cumulative "
     "aggregates of growing event slices) through the SAME key-replace "
     "merge path the streaming foreachBatch uses, asserting after each "
     "publish that (a) the displaced version survives exactly one cycle — "
     "still as-of readable and still listed after the NEXT publish "
     "displaces it is when it is GC'd, (b) a reader holding the displaced "
     "version mid-scan still materializes it, (c) the pruned version "
-    "resolves to None rather than a broken read, and (d) the live pointer "
-    "always names a listed version. Returns the final pointer-resolved "
+    "resolves to None rather than a broken read, and (d) the live manifest "
+    "always names a listed version. Returns the final manifest-resolved "
     "gold; the oracle aggregates the full source directly, so a merge "
     "regression or a GC that eats the live version surfaces as a driver "
     "mismatch. Delta VACUUM / Iceberg expire_snapshots is the same "
@@ -1234,10 +1224,12 @@ GROUP BY event_type
     tags=("sink", "lifecycle"),
 )
 def version_gc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from f1_lakehouse_spark.sources.txn import (  # noqa: PLC0415
+        manifest_read_table,
+        read_manifest,
+    )
     from f1_lakehouse_spark.streaming.ingest import (  # noqa: PLC0415
-        list_versions,
         publish_gold_version,
-        read_gold,
     )
 
     events = load_table(spark, sf_dir, "events")
@@ -1252,35 +1244,44 @@ def version_gc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     base = tempfile.mkdtemp(prefix="f1ls_gc_")
-    gold = os.path.join(base, "gold")
-    v1, v2, v3 = "v0000000001", "v0000000002", "v0000000003"
-    try:
-        publish_gold_version(cumulative(_GC_CUTS[0]), 1, gold)
-        assert list_versions(gold) == [v1], list_versions(gold)
+    root = os.path.join(base, "gold")
 
-        publish_gold_version(cumulative(_GC_CUTS[1]), 2, gold)
-        # (a) displaced version survives one cycle; (d) pointer is listed
-        assert list_versions(gold) == [v1, v2], list_versions(gold)
+    def retained() -> list[str]:
+        return sorted(os.listdir(os.path.join(root, "gold")))
+
+    def as_of(txn: int | None) -> DataFrame | None:
+        return manifest_read_table(spark, root, "gold", read_manifest(root, txn))
+
+    def live() -> str:
+        return read_manifest(root)["tables"]["gold"]
+
+    try:
+        publish_gold_version(cumulative(_GC_CUTS[0]), 1, root)
+        v1 = live()
+        assert retained() == [v1], retained()
+
+        publish_gold_version(cumulative(_GC_CUTS[1]), 2, root)
+        v2 = live()
+        # (a) displaced version survives one cycle; (d) the live one is listed
+        assert retained() == [v1, v2], retained()
         # (b) a reader of the displaced version still materializes it
-        displaced = read_gold(spark, gold, version=v1)
+        displaced = as_of(1)
         assert displaced is not None and displaced.count() > 0, (
             "displaced version unreadable within its retention cycle"
         )
 
-        publish_gold_version(cumulative(None), 3, gold)
-        assert list_versions(gold) == [v2, v3], list_versions(gold)
+        publish_gold_version(cumulative(None), 3, root)
+        assert retained() == [v2, live()], retained()
         # (c) the GC'd version resolves to None, not a broken scan
-        assert read_gold(spark, gold, version=v1) is None, (
-            "pruned version still resolves"
-        )
+        assert as_of(1) is None, "pruned version still resolves"
         # as-of read of the retained predecessor matches what it published
-        asof = read_gold(spark, gold, version=v2)
+        asof = as_of(2)
         assert asof is not None, "retained predecessor not as-of readable"
         got = sorted(tuple(r) for r in asof.collect())
         want = sorted(tuple(r) for r in cumulative(_GC_CUTS[1]).collect())
         assert got == want, f"as-of v2 drifted: {got} != {want}"
 
-        out = read_gold(spark, gold).select(
+        out = as_of(None).select(
             "event_type",
             "n_events",
             F.round("total_value", 3).cast("double").alias("total_value"),
@@ -2350,7 +2351,10 @@ def cdf_incremental_consumer(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_manifest,
         table_changes,
     )
-    from f1_lakehouse_spark.streaming.ingest import _latest_per_key  # noqa: PLC0415
+    from f1_lakehouse_spark.streaming.ingest import (  # noqa: PLC0415
+        _latest_per_key,
+        _silver_to_gold,
+    )
 
     events = load_table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", "event_type", "value"
@@ -2372,16 +2376,9 @@ def cdf_incremental_consumer(spark: SparkSession, sf_dir: str) -> DataFrame:
         publish_tables(spark, root, {"silver": new_state.coalesce(nf)}, txn_id=2)
 
         val_dec = F.col("value").cast("decimal(28,9)")
-
-        def gold_of(df: DataFrame) -> DataFrame:
-            return df.groupBy("event_type").agg(
-                F.count("*").alias("n_users"),
-                F.sum(val_dec).alias("total_value"),
-            )
-
         # the gold the consumer ALREADY HAS: aggregated from the old
         # snapshot resolved through its immutable history manifest
-        gold1 = gold_of(
+        gold1 = _silver_to_gold(
             manifest_read_table(spark, root, "silver", read_manifest(root, txn=1))
         )
         feed = table_changes(
@@ -2418,7 +2415,7 @@ def cdf_incremental_consumer(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("n_users") > 0)
         )
         # the identity: incremental maintenance == full recompute (exact)
-        recompute = gold_of(
+        recompute = _silver_to_gold(
             manifest_read_table(spark, root, "silver", read_manifest(root, txn=2))
         )
         got = sorted(

@@ -6,7 +6,7 @@ a single footer; Delta keeps the same stats in ``_delta_log`` JSON. Plain
 parquet directories have neither: Spark's own row-group skipping only
 kicks in AFTER every footer has been fetched and parsed — at 100 TB with
 millions of files the footer round-trips dominate a selective query. This
-module adds the missing layer over the txn/MVCC version-dir layout:
+module adds the missing layer over the txn version-dir layout:
 
 - :func:`collect_file_stats` — build the stats sidecar for a directory of
   parquet files. The FOOTER READS ARE DISTRIBUTED: the file list (names

@@ -13,8 +13,8 @@ partition rewrite, at the price of a per-read anti-join whose build side
 is the (bounded) fragment set.
 
 Layout — one GENERATION directory per compaction epoch, selected by a
-pointer file (the same atomic-swap discipline as the MVCC/manifest
-layers; two chained directory renames are NOT atomic and would leave a
+pointer file (the same atomic-swap discipline as the txn manifest;
+two chained directory renames are NOT atomic and would leave a
 window with no base at all)::
 
     table_dir/_BASE                          # names the live generation

@@ -100,7 +100,7 @@ def delete_rows_partition_scoped(
     On Delta/Iceberg this whole function is ``DELETE FROM t WHERE ...``
     (ACID, file-level). On plain parquet the rewrite is atomic per
     partition dir, not per table — run it in a maintenance window or on a
-    pointer-versioned copy (streaming/ingest MVCC layout) when readers
+    versioned copy (a one-table ``sources/txn`` transaction) when readers
     are live."""
     import shutil  # noqa: PLC0415
 

@@ -24,8 +24,7 @@ by that column — exactly Iceberg's per-spec residual evaluation. The
 union is a zero-shuffle concat: each segment keeps its own scan, its own
 pushed filters, and its own partition pruning.
 
-Concurrency: single-writer, like the MVCC pointer layout in
-streaming/ingest.py — the ``_specs.json`` swap is atomic (tmp + rename)
+Concurrency: single-writer — the ``_specs.json`` swap is atomic (tmp + rename)
 so readers never see a torn spec list, but concurrent APPENDS are not
 arbitrated here; route multi-writer tables through sources/txn.py.
 

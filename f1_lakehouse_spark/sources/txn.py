@@ -1,13 +1,12 @@
 """Cross-table atomic publish: snapshot isolation across the medallion via
 a manifest-of-pointers (r10).
 
-The single-table MVCC layout (streaming/ingest.py:195-294) makes ONE
-table's publish atomic — versioned dirs plus an atomic ``_CURRENT``
-pointer swap. A real pipeline publishes silver AND gold together, and a
-reader must never observe new gold over old silver (or vice versa). The
-multi-table upgrade is the same idea one level up: a single root
+A real pipeline publishes silver AND gold together, and a reader must
+never observe new gold over old silver (or vice versa). A single root
 ``_MANIFEST`` file names every table's live version directory, and ONE
-atomic manifest swap commits the whole transaction. This is the
+atomic manifest swap commits the whole transaction. A one-table
+transaction is how a single table is versioned (the streaming gold and
+silver merges in streaming/ingest.py commit that way). This is the
 transactional primitive Delta Lake's (legacy) multi-table transaction /
 an Iceberg catalog's atomic multi-table commit provides; on plain parquet
 the manifest file IS the catalog pointer.
@@ -42,7 +41,7 @@ Commit protocol (``publish_tables``):
    into the new manifest).
 4. **Retention** — for each table in the txn, keep the new version, the
    version the outgoing manifest named (readers holding the old manifest
-   survive one publish cycle, exactly like the single-table layout), and
+   survive one publish cycle), and
    every version a ref (tag/branch) still resolves — a tagged snapshot
    stays fully readable until the tag is dropped; everything else older
    is pruned.

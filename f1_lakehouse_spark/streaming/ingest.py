@@ -19,10 +19,17 @@ unchanged against Kafka/queue sources by swapping ``format``.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from f1_lakehouse_spark.sources.commit import advance
+from f1_lakehouse_spark.sources.txn import (
+    manifest_read_table,
+    publish_tables,
+    read_manifest,
+    snapshot_diff,
+)
 from f1_lakehouse_spark.tables import _pin_session_confs, table_path
 
 
@@ -193,127 +200,28 @@ def stream_stream_attribution_join(
     )
 
 
-GOLD_POINTER = "_CURRENT"
-
-
-def read_gold(
-    spark: SparkSession, gold_path: str, version: str | None = None
-) -> DataFrame | None:
-    """Resolve a version of a pointer-versioned table (the layout
-    ``incremental_gold_refresh`` / ``incremental_silver_merge`` maintain):
-    ``gold_path/_CURRENT`` names the live version directory; pass
-    ``version`` (a name from :func:`list_versions`) for an as-of read of a
-    retained older version — the local-retention layout keeps the current
-    version plus its predecessor, so as-of reads reach exactly one publish
-    back (full history with time travel is ``sources/txn``'s manifest
-    layout). Returns None when nothing is published yet or
-    the requested version has been pruned."""
-    import os  # noqa: PLC0415
-
-    if version is None:
-        ptr = os.path.join(gold_path, GOLD_POINTER)
-        if not os.path.exists(ptr):
-            return None
-        with open(ptr) as f:
-            version = f.read().strip()
-    if not os.path.isdir(os.path.join(gold_path, version)):
-        return None
-    return spark.read.parquet(os.path.join(gold_path, version))
-
-
-def list_versions(gold_path: str) -> list[str]:
-    """Retained version directories of a pointer-versioned table, oldest
-    first (the live one is last unless a publish is mid-flight — resolve
-    liveness through the pointer, never by position)."""
-    import os  # noqa: PLC0415
-
-    if not os.path.isdir(gold_path):
-        return []
-    return sorted(
-        e
-        for e in os.listdir(gold_path)
-        if e.startswith("v") and os.path.isdir(os.path.join(gold_path, e))
-    )
-
-
-def _version_id(version: str) -> int:
-    return int(version.strip().lstrip("v"))
-
-
-def _mvcc_publish(batch_df: DataFrame, batch_id: int, path: str, merge_fn) -> None:
-    """Shared MVCC mechanics for every foreachBatch merge (gold aggregate
-    refresh, silver upsert): crash-replay version guard, read the live
-    version, ``merge_fn(old_or_none, batch_df) -> DataFrame``, write the new
-    version dir (fully distributed), forward-only pointer swap, prune. A
-    ``batch_id`` older than the live version raises ValueError before any
-    write: its directory may be the retained predecessor a reader holding
-    the old pointer is still scanning."""
-    import os  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-
-    sess = batch_df.sparkSession
-    version = f"v{batch_id:010d}"
-    ptr = os.path.join(path, GOLD_POINTER)
-    prev = None
-    if os.path.exists(ptr):
-        with open(ptr) as f:
-            prev = f.read().strip()
-    if prev == version:
-        # crash-replay AFTER a completed publish: this batch's merge is
-        # already durable and live. Re-running it would read the live
-        # version THROUGH the pointer and overwrite the same directory —
-        # re-forming the read-write cycle (Spark refuses: "Cannot
-        # overwrite a path that is also being read from") and wedging
-        # the stream on every restart. The no-op IS the idempotent
-        # replay. (A crash BETWEEN write and repoint leaves prev on the
-        # older version, so the normal path below re-runs safely: it
-        # reads prev's dir and overwrites its own, disjoint dir.)
-        return
-    if prev is not None and _version_id(prev) > batch_id:
-        raise ValueError(f"version {batch_id} is older than the live {prev}")
-    old = read_gold(sess, path)
-    out = merge_fn(old, batch_df)
-    out.write.mode("overwrite").parquet(os.path.join(path, version))
-    if not advance(ptr, batch_id, version, _version_id):
-        return  # a newer version went live meanwhile: a later retention prunes ours
-    # retention: the displaced live version survives one cycle for
-    # readers mid-scan; everything older is pruned
-    keep = {version, prev}
-    for entry in os.listdir(path):
-        if entry.startswith("v") and entry not in keep:
-            shutil.rmtree(os.path.join(path, entry), ignore_errors=True)
-
-
-def _gold_merge(batch_df: DataFrame, batch_id: int, gold_path: str) -> None:
-    """One micro-batch's key-replace merge + MVCC publish — module-level so
-    the crash-replay no-op is unit-testable; ``incremental_gold_refresh``
-    wraps it in foreachBatch."""
-
-    def merge(old: DataFrame | None, batch: DataFrame) -> DataFrame:
-        if old is None:
-            return batch
+def publish_gold_version(df: DataFrame, txn_id: int, root: str) -> None:
+    """Publish ``df`` (cumulative aggregate rows, one per key) as txn
+    ``txn_id`` of the one-table transaction root ``root``: key-replace
+    merge into the live ``gold`` the manifest names, then
+    ``publish_tables`` (replay no-op, older-txn refusal, one-cycle
+    retention). The streaming ``foreachBatch`` in
+    :func:`incremental_gold_refresh` calls it with ``batch_id + 1``, so the
+    GC/retention contract ``version_gc_roundtrip`` certifies is the one the
+    stream runs under."""
+    sess = df.sparkSession
+    old = manifest_read_table(sess, root, "gold", read_manifest(root))
+    if old is not None:
         # key-replace upsert: update-mode rows are already cumulative
-        kept = old.join(batch.select("event_type"), "event_type", "left_anti")
-        return kept.unionByName(batch)
-
-    _mvcc_publish(batch_df, batch_id, gold_path, merge)
-
-
-def publish_gold_version(df: DataFrame, version_id: int, gold_path: str) -> None:
-    """Batch-side entry to the pointer-versioned layout: publish ``df``
-    (cumulative aggregate rows, one per key) as version ``version_id``
-    with the exact key-replace merge + MVCC pointer swap + one-cycle
-    retention the streaming ``foreachBatch`` path uses — same code path
-    (:func:`_gold_merge`), so the GC/retention contract the
-    ``version_gc_roundtrip`` driver query certifies is the one the stream
-    runs under."""
-    _gold_merge(df, version_id, gold_path)
+        kept = old.join(df.select("event_type"), "event_type", "left_anti")
+        df = kept.unionByName(df)
+    publish_tables(sess, root, {"gold": df}, txn_id)
 
 
 def incremental_gold_refresh(
     spark: SparkSession,
     src_dir: str,
-    gold_path: str,
+    root: str,
     checkpoint: str,
     glob: str = "events.parquet",
 ) -> None:
@@ -332,28 +240,18 @@ def incremental_gold_refresh(
     triggers — an additive old∪batch re-sum would, because the restored
     aggregation state already includes history.
 
-    The merged table is published MVCC-style with NO driver
-    materialization (the r2 ``out.collect()`` driver funnel is gone — the
-    merge scales to any gold cardinality):
+    Each batch publishes as one-table txn ``batch_id + 1`` of the root
+    (:func:`publish_gold_version`, sources/txn.py) with NO driver
+    materialization — the merge scales to any gold cardinality. The new
+    version dir never touches the live one, so reading the old version
+    while writing the new never forms a read-write cycle; a replay AFTER
+    a completed publish is txn's own-record no-op, and a crash before the
+    manifest swap leaves the previous snapshot live for the replay to
+    re-merge against. On a Delta/Iceberg deployment the whole merge is
+    one MERGE INTO (see sources/scd2.py).
 
-    - each batch writes a fully-distributed parquet dir
-      ``gold_path/v{batch_id}`` — reading the OLD version while writing the
-      NEW one touches different directories, so the read-write cycle the
-      collect() used to break never forms;
-    - ``gold_path/_CURRENT`` is then repointed via write-temp + atomic
-      rename (os.replace locally; the same commit maps to an atomic HDFS
-      rename or a single S3 pointer PUT — and on a Delta/Iceberg deployment
-      the whole merge is one MERGE INTO, see sources/scd2.py);
-    - the version dir is derived from ``batch_id``: a replay AFTER a
-      completed publish sees the pointer already on its own version and
-      NO-OPS (re-running would read the live dir through the pointer while
-      overwriting it — the read-write cycle again); a crash BETWEEN write
-      and repoint leaves the pointer on the old, fully-consistent version,
-      and the replay re-runs safely against disjoint directories;
-    - all versions before the previous one are pruned after the swap (the
-      previous survives one cycle for readers mid-scan).
-
-    Read the table back with ``read_gold`` (pointer-resolving)."""
+    Read the table back with ``manifest_read_table(spark, root, "gold",
+    read_manifest(root))``."""
     src = stream_events(spark, src_dir, glob=glob)
     partial = src.groupBy("event_type").agg(
         F.count("*").alias("n_events"),
@@ -361,7 +259,7 @@ def incremental_gold_refresh(
     )
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        _gold_merge(batch_df, batch_id, gold_path)
+        publish_gold_version(batch_df, batch_id + 1, root)
 
     q = (
         partial.writeStream.foreachBatch(merge)
@@ -398,23 +296,35 @@ def _latest_per_key(df: DataFrame) -> DataFrame:
     )
 
 
-def _silver_merge(batch_df: DataFrame, batch_id: int, silver_path: str) -> None:
-    """One micro-batch's ROW-LEVEL upsert + MVCC publish: reduce the batch
-    to its latest row per key, then merge with the live silver version by
+def _merge_silver(old: DataFrame | None, batch_df: DataFrame) -> DataFrame:
+    """The ROW-LEVEL latest-wins upsert every silver commit runs: reduce the
+    batch to its latest row per key, then merge with the live silver by
     re-reducing the union — a later record UPDATES the key's silver row, an
     unseen key INSERTS. Because latest-per-key is a max over the
     (ts, event_id) tuple, the merged state is independent of how the
     backlog was split into micro-batches (the property the twice-through
-    vanilla drive asserts). On Delta/Iceberg this whole function is one
+    vanilla drive asserts). On Delta/Iceberg this is one
     ``MERGE INTO ... WHEN MATCHED AND s.ts > t.ts THEN UPDATE``."""
+    latest = _latest_per_key(batch_df)
+    return latest if old is None else _latest_per_key(old.unionByName(latest))
 
-    def merge(old: DataFrame | None, batch: DataFrame) -> DataFrame:
-        latest = _latest_per_key(batch)
-        if old is None:
-            return latest
-        return _latest_per_key(old.unionByName(latest))
 
-    _mvcc_publish(batch_df, batch_id, silver_path, merge)
+def _silver_to_gold(silver: DataFrame) -> DataFrame:
+    """Gold as derived from silver: users and exact decimal value per
+    event_type."""
+    return silver.groupBy("event_type").agg(
+        F.count("*").alias("n_users"),
+        F.sum(F.col("value").cast("decimal(28,9)")).alias("total_value"),
+    )
+
+
+def _silver_merge(batch_df: DataFrame, batch_id: int, root: str) -> None:
+    """One micro-batch's silver upsert, published as one-table txn
+    ``batch_id + 1`` of ``root`` (merged against the silver the manifest
+    names)."""
+    sess = batch_df.sparkSession
+    old = manifest_read_table(sess, root, "silver", read_manifest(root))
+    publish_tables(sess, root, {"silver": _merge_silver(old, batch_df)}, batch_id + 1)
 
 
 def _medallion_txn_commit(batch_df: DataFrame, batch_id: int, root: str) -> None:
@@ -428,26 +338,17 @@ def _medallion_txn_commit(batch_df: DataFrame, batch_id: int, root: str) -> None
     recovery point, so the merge re-reads exactly the state the crashed
     attempt read). A reader can never observe batch N's gold over batch
     N-1's silver."""
-    from f1_lakehouse_spark.sources.txn import (  # noqa: PLC0415
-        manifest_read_table,
-        publish_tables,
-        read_manifest,
-    )
-
     sess = batch_df.sparkSession
     txn_id = batch_id + 1  # txn ids are 1-based; batch ids start at 0
     old = manifest_read_table(sess, root, "silver", read_manifest(root))
-    latest = _latest_per_key(batch_df)
-    silver = latest if old is None else _latest_per_key(old.unionByName(latest))
-    gold = silver.groupBy("event_type").agg(
-        F.count("*").alias("n_users"),
-        F.sum(F.col("value").cast("decimal(28,9)")).alias("total_value"),
-    )
+    silver = _merge_silver(old, batch_df)
     # gold derives from silver's lineage: both writes re-run the merge
     # shuffle once each — entity-bounded frames, two bounded jobs per
     # batch (persisting across foreachBatch writes would pin executor
     # memory for no asymptotic win)
-    publish_tables(sess, root, {"silver": silver, "gold": gold}, txn_id)
+    publish_tables(
+        sess, root, {"silver": silver, "gold": _silver_to_gold(silver)}, txn_id
+    )
 
 
 def _medallion_cdf_commit(batch_df: DataFrame, batch_id: int, root: str) -> None:
@@ -463,19 +364,11 @@ def _medallion_cdf_commit(batch_df: DataFrame, batch_id: int, root: str) -> None
     the same reason as the two-table commit: the manifest is the recovery
     point, so a replayed batch re-derives silver, the diff, AND the mart
     from exactly the state the crashed attempt read."""
-    from f1_lakehouse_spark.sources.txn import (  # noqa: PLC0415
-        manifest_read_table,
-        publish_tables,
-        read_manifest,
-        snapshot_diff,
-    )
-
     sess = batch_df.sparkSession
     txn_id = batch_id + 1
     manifest = read_manifest(root)
     old = manifest_read_table(sess, root, "silver", manifest)
-    latest = _latest_per_key(batch_df)
-    silver = latest if old is None else _latest_per_key(old.unionByName(latest))
+    silver = _merge_silver(old, batch_df)
     # three consumers re-derive silver's merge shuffle otherwise (its own
     # write, gold's lineage, the diff inside mart's lineage) — the
     # CLAUDE.md persist-before-fan-out barrier; entity-bounded, unpersisted
@@ -489,14 +382,7 @@ def _medallion_cdf_commit(batch_df: DataFrame, batch_id: int, root: str) -> None
     # still fans out
     silver_files = max(1, -(-n_silver // 500_000))
     val_dec = F.col("value").cast("decimal(28,9)")
-
-    def gold_of(df: DataFrame) -> DataFrame:
-        return df.groupBy("event_type").agg(
-            F.count("*").alias("n_users"),
-            F.sum(val_dec).alias("total_value"),
-        )
-
-    gold = gold_of(silver)
+    gold = _silver_to_gold(silver)
     if old is None:
         mart = gold  # first batch: nothing to diff against
     else:
@@ -550,6 +436,32 @@ def _medallion_cdf_commit(batch_df: DataFrame, batch_id: int, root: str) -> None
         silver.unpersist()
 
 
+def _stream_silver_rows(
+    spark: SparkSession,
+    src_dir: str,
+    root: str,
+    checkpoint: str,
+    glob: str,
+    max_files_per_trigger: int | None,
+    commit,
+) -> None:
+    """Drain the events source's silver columns through ``foreachBatch``:
+    ``commit(batch_df, batch_id, root)`` runs once per micro-batch in
+    append mode under ``trigger(availableNow=True)``."""
+    src = stream_events(
+        spark, src_dir, glob=glob, max_files_per_trigger=max_files_per_trigger
+    )
+    rows = src.select(SILVER_KEY, *SILVER_ORDER, *SILVER_PAYLOAD)
+    q = (
+        rows.writeStream.foreachBatch(functools.partial(commit, root=root))
+        .outputMode("append")
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+
+
 def streaming_cdf_consumer_publish(
     spark: SparkSession,
     src_dir: str,
@@ -567,22 +479,9 @@ def streaming_cdf_consumer_publish(
     cost is delta-proportional per batch while gold carries the
     recompute; a deployment keeps whichever side its latency budget
     affords — here both, so every snapshot is self-certifying."""
-    src = stream_events(
-        spark, src_dir, glob=glob, max_files_per_trigger=max_files_per_trigger
+    _stream_silver_rows(
+        spark, src_dir, root, checkpoint, glob, max_files_per_trigger, _medallion_cdf_commit
     )
-    rows = src.select(SILVER_KEY, *SILVER_ORDER, *SILVER_PAYLOAD)
-
-    def commit(batch_df: DataFrame, batch_id: int) -> None:
-        _medallion_cdf_commit(batch_df, batch_id, root)
-
-    q = (
-        rows.writeStream.foreachBatch(commit)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
 
 def streaming_medallion_publish(
@@ -594,36 +493,22 @@ def streaming_medallion_publish(
     max_files_per_trigger: int | None = None,
 ) -> None:
     """Exactly-once streaming maintenance of silver AND gold as one
-    transaction per micro-batch: the multi-table upgrade of
-    ``incremental_silver_merge`` — instead of one pointer-versioned table,
-    each batch commits a consistent (silver, gold) pair through the
-    manifest-of-pointers (sources/txn.py), so downstream readers join the
-    two layers without ever seeing a torn snapshot. Delta's
-    foreachBatch-with-MERGE gives per-TABLE exactly-once; the manifest
-    commit extends it across tables. Read back with
+    transaction per micro-batch: the two-table form of
+    ``incremental_silver_merge`` — each batch commits a consistent
+    (silver, gold) pair through one manifest swap (sources/txn.py), so
+    downstream readers join the two layers without ever seeing a torn
+    snapshot. Delta's foreachBatch-with-MERGE gives per-TABLE
+    exactly-once; the manifest commit extends it across tables. Read back with
     ``read_manifest`` + ``manifest_read_table``."""
-    src = stream_events(
-        spark, src_dir, glob=glob, max_files_per_trigger=max_files_per_trigger
+    _stream_silver_rows(
+        spark, src_dir, root, checkpoint, glob, max_files_per_trigger, _medallion_txn_commit
     )
-    rows = src.select(SILVER_KEY, *SILVER_ORDER, *SILVER_PAYLOAD)
-
-    def commit(batch_df: DataFrame, batch_id: int) -> None:
-        _medallion_txn_commit(batch_df, batch_id, root)
-
-    q = (
-        rows.writeStream.foreachBatch(commit)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
 
 def incremental_silver_merge(
     spark: SparkSession,
     src_dir: str,
-    silver_path: str,
+    root: str,
     checkpoint: str,
     glob: str = "events.parquet",
     max_files_per_trigger: int | None = None,
@@ -640,22 +525,10 @@ def incremental_silver_merge(
     O(entities + batch), independent of history length.
 
     Scale: silver is bounded by entity cardinality (users), not event
-    volume; each publish rewrites one versioned dir distributed across
-    executors; the pointer swap is a single atomic rename. Read it back
-    with ``read_gold`` (pointer-resolving, same layout)."""
-    src = stream_events(
-        spark, src_dir, glob=glob, max_files_per_trigger=max_files_per_trigger
+    volume; each batch publishes as one-table txn ``batch_id + 1`` of
+    ``root`` (sources/txn.py): one versioned dir distributed across
+    executors, then one manifest swap. Read it back with
+    ``manifest_read_table(spark, root, "silver", read_manifest(root))``."""
+    _stream_silver_rows(
+        spark, src_dir, root, checkpoint, glob, max_files_per_trigger, _silver_merge
     )
-    rows = src.select(SILVER_KEY, *SILVER_ORDER, *SILVER_PAYLOAD)
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        _silver_merge(batch_df, batch_id, silver_path)
-
-    q = (
-        rows.writeStream.foreachBatch(merge)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()

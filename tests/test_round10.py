@@ -5,10 +5,10 @@
   properties the round-trip doesn't cover: txn-id monotonicity, pointer
   carry-forward for tables outside a transaction, and one-cycle reader
   retention across a concurrent publish.
-- streaming/ingest.publish_gold_version: the batch entry to the MVCC
-  layout shares the streaming merge path; the GC contract (prune only
-  after displacement, live pointer always listed) is re-checked here on
-  synthetic frames so a regression is attributable without the driver.
+- streaming/ingest.publish_gold_version: the one-table txn the streaming
+  gold merge commits; the GC contract (prune only after displacement,
+  live version always listed) is re-checked here on synthetic frames so
+  a regression is attributable without the driver.
 """
 
 from __future__ import annotations
@@ -122,35 +122,47 @@ def test_txn_reader_survives_one_publish_cycle(spark, tmp_path):
 
 
 def test_publish_gold_version_gc_contract(spark, tmp_path):
-    from f1_lakehouse_spark.streaming.ingest import (
-        list_versions,
-        publish_gold_version,
-        read_gold,
-    )
+    from f1_lakehouse_spark.streaming.ingest import publish_gold_version
 
     gold = str(tmp_path / "gold")
     mk = lambda n: spark.createDataFrame(  # noqa: E731
         [("a", n)], "event_type string, n int"
     )
+
+    def listed() -> list[str]:
+        return sorted(os.listdir(os.path.join(gold, "gold")))
+
+    def as_of(txn):
+        return manifest_read_table(spark, gold, "gold", read_manifest(gold, txn))
+
+    def version(txn) -> str:
+        return read_manifest(gold, txn)["tables"]["gold"]
+
     publish_gold_version(mk(1), 1, gold)
     publish_gold_version(mk(2), 2, gold)
-    assert list_versions(gold) == ["v0000000001", "v0000000002"]
-    assert read_gold(spark, gold, version="v0000000001").count() == 1
+    assert listed() == [version(1), version(2)]
+    assert as_of(1).count() == 1
     publish_gold_version(mk(3), 3, gold)
-    assert list_versions(gold) == ["v0000000002", "v0000000003"]
-    assert read_gold(spark, gold, version="v0000000001") is None
-    # the live pointer always names a listed version
-    with open(os.path.join(gold, "_CURRENT")) as f:
-        assert f.read().strip() in list_versions(gold)
-    # an older version is refused before any write: the pointer never
-    # moves back and the retained v2 a reader may be scanning is untouched
-    v2 = read_gold(spark, gold, version="v0000000002").collect()
-    with pytest.raises(ValueError, match="older than the live"):
-        publish_gold_version(mk(9), 2, gold)
-    with open(os.path.join(gold, "_CURRENT")) as f:
-        assert f.read().strip() == "v0000000003"
-    assert list_versions(gold) == ["v0000000002", "v0000000003"]
-    assert read_gold(spark, gold, version="v0000000002").collect() == v2
+    assert listed() == [version(2), version(3)]
+    assert as_of(1) is None
+    # the live manifest always names a listed version
+    assert read_manifest(gold)["tables"]["gold"] in listed()
+    # a replay of the committed, superseded txn 2 is its own-record no-op:
+    # the live txn stays 3 and the retained v2 a reader may be scanning
+    # is untouched
+    v2 = as_of(2).collect()
+    publish_gold_version(mk(9), 2, gold)
+    assert read_manifest(gold)["txn"] == 3
+    assert listed() == [version(2), version(3)]
+    assert as_of(2).collect() == v2
+    # an older txn id that never committed is refused before any write
+    publish_gold_version(mk(5), 5, gold)
+    before = listed()
+    with pytest.raises(ValueError, match="older than the committed"):
+        publish_gold_version(mk(4), 4, gold)
+    assert read_manifest(gold)["txn"] == 5
+    assert listed() == before
+    assert read_manifest(gold, 4) is None
 
 
 def test_wap_rejects_before_visibility_and_cleans(spark, tmp_path):

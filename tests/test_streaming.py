@@ -8,6 +8,7 @@ import tempfile
 
 from pyspark.sql import functions as F
 
+from f1_lakehouse_spark.sources.txn import manifest_read_table, read_manifest
 from f1_lakehouse_spark.streaming.ingest import (
     run_available_now_to_memory,
     stream_bronze_ingest,
@@ -17,6 +18,11 @@ from f1_lakehouse_spark.streaming.ingest import (
 )
 from f1_lakehouse_spark.tables import load_table
 from tests.conftest import SF_DIR
+
+
+def _live(spark, root, name):
+    """The live version of table ``name`` of the txn root ``root``."""
+    return manifest_read_table(spark, root, name, read_manifest(root))
 
 
 def test_incremental_bronze_ingest_exactly_once(spark):
@@ -261,17 +267,14 @@ def test_watermark_drops_late_events_across_restarts(spark):
 def test_incremental_gold_refresh_equals_batch_aggregate(spark):
     import tempfile
 
-    from f1_lakehouse_spark.streaming.ingest import (
-        incremental_gold_refresh,
-        read_gold,
-    )
+    from f1_lakehouse_spark.streaming.ingest import incremental_gold_refresh
 
     with tempfile.TemporaryDirectory() as tmp:
         gold, ckpt = f"{tmp}/gold", f"{tmp}/ckpt"
         incremental_gold_refresh(spark, SF_DIR, gold, ckpt)
         got = {
             r["event_type"]: (r["n_events"], round(float(r["total_value"]), 6))
-            for r in read_gold(spark, gold).collect()
+            for r in _live(spark, gold, "gold").collect()
         }
         want = {
             r["event_type"]: (r["n"], round(float(r["t"]), 6))
@@ -288,7 +291,7 @@ def test_incremental_gold_refresh_equals_batch_aggregate(spark):
         incremental_gold_refresh(spark, SF_DIR, gold, ckpt)
         again = {
             r["event_type"]: (r["n_events"], round(float(r["total_value"]), 6))
-            for r in read_gold(spark, gold).collect()
+            for r in _live(spark, gold, "gold").collect()
         }
         assert again == want
 
@@ -300,10 +303,7 @@ def test_incremental_gold_refresh_second_run_with_new_data_no_double_count(spark
     counted twice."""
     import tempfile
 
-    from f1_lakehouse_spark.streaming.ingest import (
-        incremental_gold_refresh,
-        read_gold,
-    )
+    from f1_lakehouse_spark.streaming.ingest import incremental_gold_refresh
 
     import glob as globmod
     import os
@@ -327,7 +327,7 @@ def test_incremental_gold_refresh_second_run_with_new_data_no_double_count(spark
         incremental_gold_refresh(spark, src, gold, ckpt, glob="*.parquet")
         got = {
             r["event_type"]: (r["n_events"], round(float(r["total_value"]), 6))
-            for r in read_gold(spark, gold).collect()
+            for r in _live(spark, gold, "gold").collect()
         }
         want = {
             r["event_type"]: (r["n"], round(float(r["t"]), 6))
@@ -416,8 +416,8 @@ def test_streaming_incremental_dedup_matches_batch_cross_pairs(spark):
 
 def test_incremental_gold_refresh_mvcc_layout_no_driver_collect(spark):
     """The r2 merge collected gold to the driver to break the read-write
-    cycle on one path; the r3 merge publishes versioned dirs behind an
-    atomic pointer instead. Pin the layout contract: pointer resolves,
+    cycle on one path; the merge now publishes versioned dirs behind the
+    txn manifest instead. Pin the layout contract: the manifest resolves,
     displaced version survives exactly one cycle, older versions pruned,
     and the foreachBatch body contains no collect()."""
     import inspect
@@ -425,11 +425,7 @@ def test_incremental_gold_refresh_mvcc_layout_no_driver_collect(spark):
     import tempfile
 
     from f1_lakehouse_spark.streaming import ingest as ingest_mod
-    from f1_lakehouse_spark.streaming.ingest import (
-        GOLD_POINTER,
-        incremental_gold_refresh,
-        read_gold,
-    )
+    from f1_lakehouse_spark.streaming.ingest import incremental_gold_refresh
 
     src_text = inspect.getsource(ingest_mod.incremental_gold_refresh)
     code_after_docstring = src_text.split('"""')[-1]
@@ -452,23 +448,20 @@ def test_incremental_gold_refresh_mvcc_layout_no_driver_collect(spark):
         os.makedirs(src)
         drop_file(first, f"{tmp}/stage1", src, "events_a.parquet")
         incremental_gold_refresh(spark, src, gold, ckpt, glob="*.parquet")
-        versions1 = sorted(e for e in os.listdir(gold) if e.startswith("v"))
+        versions1 = sorted(os.listdir(os.path.join(gold, "gold")))
         assert len(versions1) == 1
-        with open(os.path.join(gold, GOLD_POINTER)) as f:
-            assert f.read().strip() == versions1[0]
+        assert read_manifest(gold)["tables"]["gold"] == versions1[0]
 
         drop_file(second, f"{tmp}/stage2", src, "events_b.parquet")
         incremental_gold_refresh(spark, src, gold, ckpt, glob="*.parquet")
-        versions2 = sorted(e for e in os.listdir(gold) if e.startswith("v"))
+        versions2 = sorted(os.listdir(os.path.join(gold, "gold")))
         # new live version + the displaced one kept for in-flight readers
         assert len(versions2) == 2 and versions1[0] in versions2
-        with open(os.path.join(gold, GOLD_POINTER)) as f:
-            live = f.read().strip()
-        assert live == max(versions2)
+        assert read_manifest(gold)["tables"]["gold"] == max(versions2)
 
         got = {
             r["event_type"]: (r["n_events"], round(float(r["total_value"]), 6))
-            for r in read_gold(spark, gold).collect()
+            for r in _live(spark, gold, "gold").collect()
         }
         want = {
             r["event_type"]: (r["n"], round(float(r["t"]), 6))
@@ -484,47 +477,44 @@ def test_incremental_gold_refresh_mvcc_layout_no_driver_collect(spark):
 
 def test_gold_merge_replay_after_publish_is_noop(spark):
     """Crash-replay of a batch whose publish COMPLETED must no-op: the
-    pointer already names this batch's version, and re-running the merge
-    would read the live version dir through the pointer while overwriting
+    manifest already names this txn's version, and re-running the merge
+    would read the live version dir through the manifest while overwriting
     that same dir (Spark refuses and the stream would wedge on every
     restart)."""
     import os
     import tempfile
 
-    from f1_lakehouse_spark.streaming.ingest import (
-        GOLD_POINTER,
-        _gold_merge,
-        read_gold,
-    )
+    from f1_lakehouse_spark.streaming.ingest import publish_gold_version
 
     batch = spark.createDataFrame(
         [("click", 3, 1.5)], "event_type string, n_events long, total_value double"
     )
     with tempfile.TemporaryDirectory() as tmp:
         gold = f"{tmp}/gold"
-        _gold_merge(batch, 7, gold)
-        with open(os.path.join(gold, GOLD_POINTER)) as f:
-            assert f.read().strip() == "v0000000007"
-        before = {tuple(r) for r in read_gold(spark, gold).collect()}
-        mtime = os.path.getmtime(os.path.join(gold, "v0000000007"))
+        publish_gold_version(batch, 7, gold)
+        live = read_manifest(gold)
+        assert live["txn"] == 7
+        before = {tuple(r) for r in _live(spark, gold, "gold").collect()}
+        vdir = os.path.join(gold, "gold", live["tables"]["gold"])
+        mtime = os.path.getmtime(vdir)
 
-        # replay the SAME batch id with different (stale re-emitted) data:
+        # replay the SAME txn id with different (stale re-emitted) data:
         # must not touch the published version
         stale = spark.createDataFrame(
             [("click", 999, 9.9)],
             "event_type string, n_events long, total_value double",
         )
-        _gold_merge(stale, 7, gold)
-        after = {tuple(r) for r in read_gold(spark, gold).collect()}
+        publish_gold_version(stale, 7, gold)
+        after = {tuple(r) for r in _live(spark, gold, "gold").collect()}
         assert after == before
-        assert os.path.getmtime(os.path.join(gold, "v0000000007")) == mtime
+        assert os.path.getmtime(vdir) == mtime
 
-        # a NEW batch id still merges normally
+        # a NEW txn id still merges normally
         nxt = spark.createDataFrame(
             [("view", 5, 2.0)], "event_type string, n_events long, total_value double"
         )
-        _gold_merge(nxt, 8, gold)
-        got = {r["event_type"]: r["n_events"] for r in read_gold(spark, gold).collect()}
+        publish_gold_version(nxt, 8, gold)
+        got = {r["event_type"]: r["n_events"] for r in _live(spark, gold, "gold").collect()}
         assert got == {"click": 3, "view": 5}
 
 
@@ -903,10 +893,7 @@ def test_incremental_silver_merge_latest_wins_and_batch_split_independent(spark)
     latest-per-user regardless of how the backlog split into batches."""
     from pyspark.sql import Window
 
-    from f1_lakehouse_spark.streaming.ingest import (
-        incremental_silver_merge,
-        read_gold,
-    )
+    from f1_lakehouse_spark.streaming.ingest import incremental_silver_merge
 
     events = load_table(spark, SF_DIR, "events").select(
         "user_id", "ts", "event_id", "event_type", "value"
@@ -934,7 +921,7 @@ def test_incremental_silver_merge_latest_wins_and_batch_split_independent(spark)
             )
             return {
                 r["user_id"]: (r["event_id"], r["event_type"], r["value"])
-                for r in read_gold(spark, silver).collect()
+                for r in _live(spark, silver, "silver").collect()
             }
 
     got3 = run(3)
@@ -945,11 +932,11 @@ def test_incremental_silver_merge_latest_wins_and_batch_split_independent(spark)
 
 def test_silver_merge_replay_after_publish_is_noop(spark):
     """Crash-replay of an already-published silver batch must not change
-    state (same guard as the gold merge, exercised through the silver
-    merge_fn)."""
+    state (same txn guard as the gold merge, exercised through the silver
+    merge)."""
     import os
 
-    from f1_lakehouse_spark.streaming.ingest import _silver_merge, read_gold
+    from f1_lakehouse_spark.streaming.ingest import _silver_merge
 
     with tempfile.TemporaryDirectory() as tmp:
         silver = f"{tmp}/silver"
@@ -959,29 +946,30 @@ def test_silver_merge_replay_after_publish_is_noop(spark):
             "user_id long, ts long, event_id long, event_type string, value double",
         )
         _silver_merge(b0, 0, silver)
-        first = read_gold(spark, silver).collect()
+        first = _live(spark, silver, "silver").collect()
         assert {(r["user_id"], r["event_id"]) for r in first} == {(1, 101)}
         # replay of batch 0 after its publish: no-op
         _silver_merge(b0.limit(1), 0, silver)
-        assert read_gold(spark, silver).collect() == first
+        assert _live(spark, silver, "silver").collect() == first
         # batch 1 with an older record for the same key: must NOT regress
         older = spark.createDataFrame(
             [(1, 5, 99, "view", 9.0)],
             "user_id long, ts long, event_id long, event_type string, value double",
         )
         _silver_merge(older, 1, silver)
-        after = read_gold(spark, silver).collect()
+        after = _live(spark, silver, "silver").collect()
         assert {(r["user_id"], r["event_id"]) for r in after} == {(1, 101)}
 
 
 def test_mvcc_versions_listable_and_as_of_readable(spark):
     """The retention window (current + predecessor) must be enumerable and
     as-of readable; pruned versions return None instead of a read error."""
-    from f1_lakehouse_spark.streaming.ingest import (
-        incremental_silver_merge,
-        list_versions,
-        read_gold,
-    )
+    import os
+
+    from f1_lakehouse_spark.streaming.ingest import incremental_silver_merge
+
+    def as_of(root, txn):
+        return manifest_read_table(spark, root, "silver", read_manifest(root, txn))
 
     events = load_table(spark, SF_DIR, "events").select(
         "user_id", "ts", "event_id", "event_type", "value"
@@ -992,13 +980,14 @@ def test_mvcc_versions_listable_and_as_of_readable(spark):
         incremental_silver_merge(
             spark, src, silver, ckpt, glob="*.parquet", max_files_per_trigger=1
         )
-        vs = list_versions(silver)
-        # 3 batches published v0..v2; retention keeps the last two
-        assert vs == ["v0000000001", "v0000000002"]
-        live = read_gold(spark, silver)
-        prev = read_gold(spark, silver, version=vs[0])
+        vs = sorted(os.listdir(os.path.join(silver, "silver")))
+        # 3 batches published txns 1..3; retention keeps the last two
+        assert read_manifest(silver)["txn"] == 3
+        assert vs == [read_manifest(silver, t)["tables"]["silver"] for t in (2, 3)]
+        live = _live(spark, silver, "silver")
+        prev = as_of(silver, 2)
         assert live.count() >= prev.count()  # merge only ever adds keys
         # the live read must equal the newest retained version
-        assert read_gold(spark, silver, version=vs[-1]).count() == live.count()
+        assert as_of(silver, 3).count() == live.count()
         # pruned version: None, not an exception
-        assert read_gold(spark, silver, version="v0000000000") is None
+        assert as_of(silver, 1) is None
