@@ -71,7 +71,7 @@ GROUP BY event_type
     "recovery must no-op, not double-count), read the live version back "
     "through the txn manifest, and compare against the batch aggregate "
     "the oracle computes directly. A replay double-count, a broken "
-    "manifest swap, or stale version retention all surface as a driver "
+    "commit, or stale version retention all surface as a driver "
     "hash mismatch.",
     tags=("streaming", "lifecycle"),
 )
@@ -1110,7 +1110,7 @@ def _assert_snapshot_consistent(spark: SparkSession, root: str, manifest) -> Non
     doc="Cross-table atomic publish (snapshot isolation across the "
     "medallion) certified end-to-end: publish silver+gold as transaction 1 "
     "(events before a cutoff), CRASH transaction 2 between its two "
-    "version-dir writes (the manifest swap never runs), assert readers "
+    "version-dir writes (its commit record is never created), assert readers "
     "resolving through the manifest still see the OLD consistent pair "
     "(gold == aggregate(silver) under one manifest snapshot — never new "
     "gold over old silver), replay transaction 2 to completion, assert "
@@ -1118,8 +1118,8 @@ def _assert_snapshot_consistent(spark: SparkSession, root: str, manifest) -> Non
     "through the manifest. The oracle recomputes both layers from the "
     "source, so a torn commit, a lost write, or a double-applied replay "
     "all surface as a driver mismatch. This is the multi-table commit "
-    "primitive of a Delta/Iceberg catalog, emulated with one atomic "
-    "manifest-of-pointers swap (sources/txn.py).",
+    "primitive of a Delta/Iceberg catalog, emulated with one exclusively "
+    "created commit record (sources/txn.py).",
     tags=("sink", "lifecycle"),
 )
 def atomic_publish_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1148,7 +1148,7 @@ def atomic_publish_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         # transaction 2 crashes between its two writes: sorted order writes
         # gold first, so gold's NEW version dir lands on disk while silver's
-        # does not and the manifest swap never runs — the torn state a
+        # does not and no commit record is created — the torn state a
         # non-atomic publish would expose
         try:
             publish_tables(spark, root, t2, txn_id=2, fail_after_writes=1)
@@ -1469,7 +1469,7 @@ def snapshot_time_travel_roundtrip(spark: SparkSession, sf_dir: str) -> DataFram
         releases.append(rel2)
         publish_tables(spark, root, t1, txn_id=1)
         publish_tables(spark, root, t2, txn_id=2)
-        # live pointer is txn 2; the as-of read resolves txn 1's history
+        # the live record is txn 2; the as-of read resolves txn 1's history
         # manifest and must see the OLD pair, still mutually consistent
         assert read_manifest(root)["txn"] == 2
         m_asof = read_manifest(root, txn=1)
@@ -1518,7 +1518,7 @@ def _medallion_audit(staged: dict[str, DataFrame]) -> list[str]:
     "medallion transaction through the staged-audit gate, then attempt a "
     "POISONED transaction (rows with NULL event_type on fresh keys, so "
     "the latest-per-key merge cannot mask them) — the audit must reject "
-    "it BEFORE the manifest swap, leaving the committed snapshot "
+    "it BEFORE the commit record, leaving the committed snapshot "
     "untouched, readers on the clean pair, and the staged orphans "
     "removed; a replay of the committed txn must no-op. Returns the live "
     "gold, which the oracle recomputes from the clean source — if the "
@@ -1603,7 +1603,7 @@ _STREAM_SPLIT_FILES = 4  # backlog split so the merge crosses batch bounds
     "transaction per micro-batch, certified end-to-end: split the events "
     "backlog into files, stream with maxFilesPerTrigger=1 so the "
     "latest-wins merge crosses micro-batch boundaries, commit each "
-    "batch's (silver, gold) pair through one manifest swap "
+    "batch's (silver, gold) pair through one commit record "
     "(streaming/ingest.streaming_medallion_publish over sources/txn.py), "
     "RESTART with no new data (checkpoint recovery + txn guard must "
     "no-op), then read BOTH layers through one manifest snapshot, assert "
@@ -1782,7 +1782,7 @@ GROUP BY event_type
     "100 TB the delete must cost O(matched keys), never a rewrite) and "
     "that the committed key counts exactly account for the merged view's "
     "row deficit, read through the anti-join merged view, COMPACT (fold "
-    "deletes into a new base via staged swap), assert the compacted "
+    "deletes into a new base via a staged generation claim), assert the compacted "
     "content is identical to the pre-compaction merged view and the "
     "delete files are gone, and return the aggregate the oracle computes "
     "with the inverse predicates. Iceberg v2 equality-delete files / "
@@ -1996,13 +1996,13 @@ _WAP_CUT_MID = "2024-01-20 00:00:00"
     "staged manifest), pin the pre-promote state with an immutable tag "
     "(re-tagging raises — tags never move), assert a mainline writer "
     "colliding with the staged txn id CONFLICTS rather than promoting the "
-    "unaudited staging, fast-forward the branch (one atomic pointer "
-    "swap), then exercise the STALE-BRANCH path: a second branch staged "
+    "unaudited staging, fast-forward the branch (one exclusively "
+    "created commit record), then exercise the STALE-BRANCH path: a second branch staged "
     "before main advances must refuse to fast-forward "
     "(StaleBranchError) and succeeds only after rebasing onto the new live "
     "snapshot at a fresh txn id. Returns the finally-promoted gold; the "
     "oracle recomputes the full medallion from the source, so a leaked "
-    "staging, a lost promotion, or a rewound pointer all surface as a "
+    "staging, a lost promotion, or a rewound snapshot all surface as a "
     "driver mismatch.",
     tags=("sink", "lifecycle"),
 )
@@ -2039,8 +2039,8 @@ def branch_wap_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         m1 = read_manifest(root)
         assert m1 is not None and m1["txn"] == 1, f"txn 1 did not commit: {m1}"
 
-        # stage txn 2 on a branch: version dirs + commit record written,
-        # branch ref moved — the live manifest must be UNTOUCHED
+        # stage txn 2 on a branch: version dirs + the branch's staged
+        # record written — the live manifest must be UNTOUCHED
         publish_staged(
             spark, root, t_mid, txn_id=2, branch="audit", writer="wap-bot"
         )
@@ -2145,16 +2145,16 @@ FROM events WHERE user_id % 4 = 3 GROUP BY event_type
     "tokens back), every loser gets CommitConflictError, cleans its orphan "
     "staging (asserted: each table dir holds exactly its committed "
     "version), and converges via the re-read → next-txn-id retry loop. "
-    "Then the CRASHED-WINNER path, sequenced deterministically: a writer "
-    "creates txn 3's commit record and crashes before its live swap; the "
-    "conflicting loser rolls it forward (the record IS the commit), "
-    "retries at txn 4, and the crashed winner's late replay NO-OPS — the "
-    "live pointer never moves backwards (the r10 ADVICE "
-    "snapshot-monotonicity fix, certified driver-side). Readers resolving "
+    "Then the LATE-REPLAY path, sequenced deterministically: a writer "
+    "commits txn 3 (its record IS the commit, so a crash right after it "
+    "changes nothing a reader sees); a conflicting writer at txn 3 raises "
+    "before it stages, retries at txn 4, and the first writer's late "
+    "replay of txn 3 NO-OPS — the live txn never moves backwards. "
+    "Readers resolving "
     "any committed manifest always see every named table (no torn pairs). "
     "Returns all four writers' gold tables through the final manifest; "
     "the oracle recomputes the four disjoint aggregates from the source, "
-    "so a lost commit, a double-applied retry, or a rewound pointer all "
+    "so a lost commit, a double-applied retry, or a rewound snapshot all "
     "surface as a driver mismatch.",
     tags=("sink", "lifecycle"),
 )
@@ -2164,7 +2164,6 @@ def occ_concurrent_writers_roundtrip(spark: SparkSession, sf_dir: str) -> DataFr
 
     from f1_lakehouse_spark.sources.txn import (  # noqa: PLC0415
         CommitConflictError,
-        SimulatedCrash,
         manifest_read_table,
         publish_tables,
         read_manifest,
@@ -2244,17 +2243,13 @@ def occ_concurrent_writers_roundtrip(spark: SparkSession, sf_dir: str) -> DataFr
                 f"{w}_gold holds uncommitted versions: {vdirs}"
             )
 
-        # --- part B: crashed winner + roll-forward, sequenced ---
-        try:
-            publish_tables(
-                spark, root, {"gamma_gold": frames["gamma"]},
-                txn_id=3, writer="gamma", fail_after_record=True,
-            )
-            raise AssertionError("simulated crash did not fire")
-        except SimulatedCrash:
-            pass
-        assert read_manifest(root)["txn"] == 2, (
-            "crashed winner swapped the pointer anyway"
+        # --- part B: the winner's record is live; a late replay no-ops ---
+        publish_tables(
+            spark, root, {"gamma_gold": frames["gamma"]}, txn_id=3, writer="gamma"
+        )
+        m3 = read_manifest(root)
+        assert m3["txn"] == 3 and m3.get("writer") == "gamma", (
+            f"the winner's record is not the live snapshot: {m3}"
         )
         try:
             publish_tables(
@@ -2264,10 +2259,7 @@ def occ_concurrent_writers_roundtrip(spark: SparkSession, sf_dir: str) -> DataFr
             raise AssertionError("loser did not conflict on the record")
         except CommitConflictError:
             pass
-        m3 = read_manifest(root)
-        assert m3["txn"] == 3 and m3.get("writer") == "gamma", (
-            f"loser did not roll the crashed winner forward: {m3}"
-        )
+        assert read_manifest(root) == m3, "the conflicting loser moved the snapshot"
         assert manifest_read_table(spark, root, "gamma_gold", m3) is not None
         assert not os.path.isdir(
             os.path.join(root, "delta_gold", "v0000000003-delta")
@@ -2277,12 +2269,12 @@ def occ_concurrent_writers_roundtrip(spark: SparkSession, sf_dir: str) -> DataFr
         )
         m4 = read_manifest(root)
         assert m4["txn"] == 4, m4
-        # the crashed winner's late replay must NO-OP, never rewinding
+        # the winner's late replay must NO-OP, never rewinding
         publish_tables(
             spark, root, {"gamma_gold": frames["gamma"]}, txn_id=3, writer="gamma"
         )
         assert read_manifest(root) == m4, (
-            "late replay moved the live pointer backwards"
+            "late replay moved the live snapshot backwards"
         )
 
         outs = []
@@ -2763,7 +2755,7 @@ def tag_pinned_time_travel_roundtrip(spark: SparkSession, sf_dir: str) -> DataFr
             manifest_read_table(spark, root, "gold", read_manifest(root, txn=1))
             is None
         ), "dropped-tag versions were still retained"
-        assert read_manifest(root)["txn"] == 5, "live pointer disturbed"
+        assert read_manifest(root)["txn"] == 5, "live snapshot disturbed"
         return out
     finally:
         shutil.rmtree(base, ignore_errors=True)

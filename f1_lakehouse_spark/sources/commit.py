@@ -1,11 +1,14 @@
-"""The package's commit primitives: every pointer and record write goes
-through them. Each write stages a per-writer tmp (a shared tmp name lets
+"""The package's commit primitives. A commit is one exclusive step: the
+fail-if-exists create of a record (:func:`create_exclusive`) or the
+rename that claims a name (:func:`claim_rename`); nothing a commit makes
+is replaced afterwards. :func:`atomic_write` replaces files that are not
+commit points. Each write stages a per-writer tmp (a shared tmp name lets
 writers interleave truncate/replace), fsyncs it before its rename or link
 and fsyncs the directory after, so a committed name survives power loss."""
 
+import errno
 import os
 import uuid
-from collections.abc import Callable
 
 
 def _synced_tmp(path: str, payload: str) -> str:
@@ -44,16 +47,17 @@ def create_exclusive(path: str, payload: str) -> None:
     _sync_dir(path)
 
 
-def advance(path: str, ordinal: int, payload: str, ordinal_of: Callable[[str], int]) -> bool:
-    """Forward-only pointer swap: write ``payload`` only when the pointer is
-    missing or ``ordinal_of`` reads an ordinal below ``ordinal`` from it.
-    Returns whether it moved. Read and replace are two steps: two advances
-    racing inside that window can still land the lower ordinal last."""
+def claim_rename(src: str, dst: str) -> bool:
+    """Move the fully written ``src`` to ``dst`` in one rename, the commit
+    point of a claim. A directory is never renamed onto a non-empty one,
+    so of racing directory claims exactly one wins; the others get False.
+    A file rename replaces, so a file's ``dst`` must be a name its caller
+    already owns (an exclusively created claim record)."""
     try:
-        with open(path) as f:
-            if ordinal_of(f.read()) >= ordinal:
-                return False
-    except FileNotFoundError:
-        pass
-    atomic_write(path, payload)
+        os.rename(src, dst)
+    except OSError as e:
+        if e.errno not in (errno.EEXIST, errno.ENOTEMPTY):
+            raise
+        return False
+    _sync_dir(dst)
     return True

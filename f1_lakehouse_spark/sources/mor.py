@@ -12,12 +12,11 @@ delete of one user cohort is then an O(matched-keys) write instead of a
 partition rewrite, at the price of a per-read anti-join whose build side
 is the (bounded) fragment set.
 
-Layout — one GENERATION directory per compaction epoch, selected by a
-pointer file (the same atomic-swap discipline as the txn manifest;
-two chained directory renames are NOT atomic and would leave a
-window with no base at all)::
+Layout — one GENERATION directory per compaction epoch; the highest
+claimed one is live. A generation is written in a staging dir and claimed
+with one rename (``commit.claim_rename``), so it appears whole or not at
+all, and nothing is replaced in place — the rule txn commits by::
 
-    table_dir/_BASE                          # names the live generation
     table_dir/g{gen}/base/*.parquet          # immutable data files (seq 0)
     table_dir/g{gen}/deletes/d{seq}.parquet  # one key file per delete
     table_dir/g{gen}/inserts/i{seq}.parquet  # one row file per upsert
@@ -33,32 +32,31 @@ matching key; an insert file's rows shadow every LOWER-seq row with the
 same key (latest-wins upsert), so an upsert is ONE atomic file commit —
 no delete-file companion whose torn half could publish a partial MERGE.
 
-Concurrent writers: every pointer and claim goes through
-``sources/commit`` (the primitives ``txn`` commits with). A fragment
-commit claims its seq the way a txn claims its id: it creates the seq's
-claim record exclusively and never removes it (only pruning the
-generation does), so two racing writers can never share a seq or
-overwrite one another's fragment, whatever their kinds; the loser of a
-seq claim retries with the next seq. After the rename the writer
-re-verifies the generation pointer: a commit that raced a compaction
-landed in a displaced generation (invisible to live readers), so it
-removes the orphan and redoes the operation against the new live
-generation. The OTHER ordering — the commit lands while the compaction's
-fold job is already running, so the writer's re-verify still sees the old
-pointer — is covered by the compaction's CARRY-FORWARD: fragments
-committed after the fold's snapshot are moved into the new generation in
-sequence order. Compactions arbitrate like txn commits: each folds into
-its own staging dir, claims ``g{gen+1}`` with one fail-if-exists rename,
-and moves ``_BASE`` forward only, so a loser raises
-``txn.CommitConflictError`` and a stalled compactor can never rewind the
-table. Crash-orphaned ``_staging_*`` dirs are swept by the next
-compaction's retention pass.
+Concurrent writers: every claim goes through ``sources/commit`` (the
+primitives ``txn`` commits with). A fragment commit claims its seq the
+way a txn claims its id: it creates the seq's claim record exclusively
+and never removes it (only pruning the generation does), so two racing
+writers can never share a seq or overwrite one another's fragment,
+whatever their kinds; the loser of a seq claim retries with the next seq.
+After the rename the writer re-verifies the live generation: a commit
+that raced a compaction landed in a displaced generation (invisible to
+live readers), so it removes the orphan and redoes the operation against
+the new live generation. The OTHER ordering — the commit lands while the
+compaction's fold job is already running, so the writer's re-verify
+still sees the old generation — is covered by the compaction's
+CARRY-FORWARD: fragments committed after the fold's snapshot are moved
+into the new generation in sequence order. Compactions arbitrate like txn
+commits: each folds into its own staging dir and claims ``g{gen+1}`` with
+one fail-if-exists rename, so a loser raises ``txn.CommitConflictError``
+and a stalled compactor can never rewind the table (a claim below the
+live generation is never live). Crash-orphaned ``_staging_*`` dirs are
+swept by the next compaction's retention pass.
 
-Delete files belong to their generation: a reader holding the old
-pointer mid-compaction still sees (old base + old fragments) — the same
-rows as the new compacted base — and the displaced generation survives
-one compaction cycle before being pruned, exactly like every other
-versioned layout in this package.
+Delete files belong to their generation: a reader that resolved the old
+generation mid-compaction still sees (old base + old fragments) — the
+same rows as the new compacted base — and the displaced generation
+survives one compaction cycle before being pruned, exactly like every
+other versioned layout in this package.
 
 Reference parity: the reference has no delete/update path at all (bronze
 is append-only, silver/gold are full rebuilds —
@@ -70,7 +68,6 @@ INTO`` with merge-on-read table properties.
 
 from __future__ import annotations
 
-import errno
 import json
 import os
 import re
@@ -82,18 +79,17 @@ from pyspark.sql import functions as F
 from pyspark.sql.observation import Observation
 from pyspark.sql.types import StructType
 
-from f1_lakehouse_spark.sources.commit import advance, atomic_write, create_exclusive
+from f1_lakehouse_spark.sources.commit import atomic_write, claim_rename, create_exclusive
 from f1_lakehouse_spark.sources.txn import CommitConflictError
 
-POINTER = "_BASE"
 FOLDED = "_FOLDED"
 
 CLAIMS = "_claims"
 
 _FRAGMENT_RE = re.compile(r"^[di](\d{10})\.parquet$")
 
-# a fragment commit retries when a racing compaction moves the generation
-# pointer mid-commit; compactions are rare maintenance ops, so more than a
+# a fragment commit retries when a racing compaction claims a new
+# generation mid-commit; compactions are rare maintenance ops, so more than a
 # handful of consecutive displacements means something is pathologically
 # wrong — fail loudly instead of spinning
 _MAX_COMMIT_RETRIES = 10
@@ -110,13 +106,17 @@ def _size_or_zero(path: str) -> int:
         return 0
 
 
-def _gen_of(pointer_text: str) -> int:
-    return int(pointer_text.strip().lstrip("g"))
+def _generations(table_dir: str) -> list[int]:
+    """The claimed ``g{gen}`` dirs' numbers (staging dirs are ``_staging_*``)."""
+    return [int(e[1:]) for e in os.listdir(table_dir) if e[:1] == "g" and e[1:].isdigit()]
 
 
 def _live_gen(table_dir: str) -> int:
-    with open(os.path.join(table_dir, POINTER)) as f:
-        return _gen_of(f.read())
+    """The live generation: the highest claimed one."""
+    gens = _generations(table_dir)
+    if not gens:
+        raise FileNotFoundError(f"{table_dir} holds no MoR generation")
+    return max(gens)
 
 
 def base_dir(table_dir: str) -> str:
@@ -124,13 +124,22 @@ def base_dir(table_dir: str) -> str:
     return os.path.join(table_dir, _gen_name(_live_gen(table_dir)), "base")
 
 
+def _new_staging(table_dir: str) -> str:
+    return os.path.join(table_dir, f"_staging_{uuid.uuid4().hex}")
+
+
 def mor_write_base(df: DataFrame, table_dir: str) -> None:
-    """Materialize generation 0 and point the table at it."""
+    """Materialize generation 0 in a staging dir and claim ``g0`` with the
+    rename a compaction claims its generation with. Raises
+    FileExistsError on a dir that already holds a generation."""
     os.makedirs(table_dir, exist_ok=True)
-    df.write.mode("overwrite").parquet(
-        os.path.join(table_dir, _gen_name(0), "base")
-    )
-    atomic_write(os.path.join(table_dir, POINTER), _gen_name(0))
+    if not _generations(table_dir):
+        staging = _new_staging(table_dir)
+        df.write.mode("overwrite").parquet(os.path.join(staging, "base"))
+        if _claim_generation(table_dir, staging, 0):
+            return
+        shutil.rmtree(staging, ignore_errors=True)
+    raise FileExistsError(f"{table_dir} already holds a MoR generation")
 
 
 def _fragments(table_dir: str, gen: int, sub: str) -> list[tuple[int, str]]:
@@ -174,21 +183,21 @@ def _claim_and_move(table_dir: str, gen: int, sub: str, src: str) -> str:
         except FileExistsError:
             continue  # another writer claimed this seq: take the next
         target = os.path.join(gdir, sub, f"{sub[0]}{seq:010d}.parquet")
-        os.rename(src, target)
+        claim_rename(src, target)
         return target
 
 
 def _commit_fragment(table_dir: str, gen: int, sub: str, src: str) -> bool:
     """Move the staged parquet file into generation ``gen`` under a
-    freshly claimed seq, then re-verify the generation pointer. Returns
+    freshly claimed seq, then re-verify the live generation. Returns
     False when a racing compaction displaced the generation mid-commit
     (the orphan fragment is removed; the caller redoes the operation
     against the new live generation)."""
     target = _claim_and_move(table_dir, gen, sub, src)
     if _live_gen(table_dir) == gen:
         return True
-    # a compaction displaced this generation between our pointer read
-    # and the rename: the fragment is invisible to live readers and
+    # a compaction claimed a newer generation between our live read and
+    # the rename: the fragment is invisible to live readers and
     # would be pruned — remove it and let the caller redo. If the
     # remove finds it GONE, the compaction's carry-forward sweep
     # already moved it into the new live generation: the commit is
@@ -208,7 +217,7 @@ def _carry_fragment_forward(
 ) -> None:
     """Move a fragment a racing writer committed into the displaced
     generation (after the fold's snapshot) into ``new_gen`` under a fresh
-    claimed seq. No pointer re-verify and no delete-on-displacement: if
+    claimed seq. No live re-verify and no delete-on-displacement: if
     yet another compaction displaces ``new_gen`` mid-carry, ITS
     carry-forward sweep moves the fragment again — the fragment is never
     dropped. Racing the writer's own displaced-commit cleanup is benign:
@@ -249,7 +258,7 @@ def _stage_single_file(df: DataFrame, table_dir: str) -> tuple[str, str, int]:
     part_path, n_rows), the row count observed on the write job itself.
     The single-file coalesce is delta-bounded by construction (delete
     keys / upsert batches, never the base)."""
-    staging = os.path.join(table_dir, f"_staging_{uuid.uuid4().hex}")
+    staging = _new_staging(table_dir)
     obs = Observation()
     df.observe(obs, F.count(F.lit(1)).alias("n")).coalesce(1).write.mode(
         "overwrite"
@@ -399,30 +408,24 @@ def mor_read(
 
 
 def _claim_generation(table_dir: str, staging: str, gen: int) -> bool:
-    """Claim generation ``gen`` by renaming a compactor's staging dir to
-    ``g{gen}``. Nothing creates ``g{gen}`` before its claim and a rename
-    onto an existing directory fails, so of the compactions of one
-    generation exactly one wins. Returns whether this one did. (A stale
-    compactor can win a number retention already pruned; its publish
-    then finds a later generation live and does nothing.)"""
-    try:
-        os.rename(staging, os.path.join(table_dir, _gen_name(gen)))
-    except OSError as e:
-        if e.errno not in (errno.EEXIST, errno.ENOTEMPTY):
-            raise
-        return False
-    return True
+    """Commit generation ``gen`` by renaming a staging dir to ``g{gen}``;
+    the claim makes it live when no higher generation exists. Nothing
+    creates ``g{gen}`` before its claim and a rename onto an existing
+    directory fails, so of the claims of one generation exactly one wins.
+    Returns whether this one did. (A stale compactor can win a number
+    retention already pruned; that generation is below the live one, so
+    it is never live and the next compaction prunes it.)"""
+    return claim_rename(staging, os.path.join(table_dir, _gen_name(gen)))
 
 
-def _publish_generation(table_dir: str, gen: int) -> None:
-    """Move the pointer forward to claimed generation ``gen``, then carry
-    forward the fragments of ``g{gen-1}`` its fold did not cover (those
-    not in ``_FOLDED``), in ascending seq. Idempotent: the claim's winner
-    runs it, a loser runs it for a winner that stopped after its claim,
-    and the next compaction runs it for one that stopped mid-carry. Once
-    a later generation is live there is nothing left to do: that
-    generation's compaction ran this carry before its fold snapshot."""
-    advance(os.path.join(table_dir, POINTER), gen, _gen_name(gen), _gen_of)
+def _carry_forward(table_dir: str, gen: int) -> None:
+    """Carry the fragments of ``g{gen-1}`` that live generation ``gen``'s
+    fold did not cover (those not in ``_FOLDED``) forward into it, in
+    ascending seq. Idempotent: the claim's winner runs it, a loser runs it
+    for a winner that stopped after its claim, and the next compaction
+    runs it for one that stopped mid-carry. Once a later generation is
+    live there is nothing left to do: that generation's compaction ran
+    this carry before its fold snapshot."""
     if _live_gen(table_dir) != gen:
         return
     try:
@@ -443,29 +446,29 @@ def _publish_generation(table_dir: str, gen: int) -> None:
 def mor_compact(spark: SparkSession, table_dir: str, key_col: str) -> None:
     """Fold the live generation's fragments into the next generation and
     prune generations older than the displaced one (plus any
-    crash-orphaned staging dirs). A reader holding the old pointer
-    mid-scan still has its full generation (base + fragments) for one
-    compaction cycle; readers resolving the pointer see either the old or
-    the new generation — both the same rows, never a half state.
+    crash-orphaned staging dirs). A reader that resolved the old
+    generation mid-scan still has it in full (base + fragments) for one
+    compaction cycle; readers resolving the live generation see either
+    the old or the new one — both the same rows, never a half state.
 
     The commit follows the txn protocol. The fold is written into this
     compactor's own ``_staging_*`` dir beside ``_FOLDED``, the fragment
     seqs it covers (snapshotted BEFORE the merged plan lists fragment
     files, so a fragment in the plan but not the snapshot is merely
     re-applied — idempotent on a base that already folded it). Renaming
-    the staging dir to ``g{gen+1}`` claims the generation;
-    :func:`_publish_generation` then moves the pointer forward only and
-    carries forward fragments committed into ``g{gen}`` during the fold
-    (their writer's pointer re-verify read the old pointer, so the commit
-    reported success — without the carry they would be silently lost).
-    A compaction that loses the claim publishes the winner's generation,
-    removes its staging and raises :class:`CommitConflictError`; a
-    compactor resuming after later compactions can never move the
-    pointer back."""
+    the staging dir to ``g{gen+1}`` claims the generation and makes it
+    live; :func:`_carry_forward` then moves fragments committed into
+    ``g{gen}`` during the fold (their writer's re-verify read the old
+    generation, so the commit reported success — without the carry they
+    would be silently lost). A compaction that loses the claim runs the
+    carry for the winner, removes its staging and raises
+    :class:`CommitConflictError`; a compactor resuming after later
+    compactions claims a generation below the live one, so it can never
+    move the table back."""
     gen = _live_gen(table_dir)
     # finish a predecessor that stopped mid-carry BEFORE the snapshot, so
     # nothing it stranded in g{gen-1} is pruned below
-    _publish_generation(table_dir, gen)
+    _carry_forward(table_dir, gen)
     folded = {
         sub: [s for s, _ in _fragments(table_dir, gen, sub)]
         for sub in ("deletes", "inserts")
@@ -490,24 +493,20 @@ def mor_compact(spark: SparkSession, table_dir: str, key_col: str) -> None:
         if os.path.basename(dirpath) != "deletes"
     )
     n_files = max(1, -(-gen_bytes // (128 << 20)))
-    staging = os.path.join(table_dir, f"_staging_{uuid.uuid4().hex}")
+    staging = _new_staging(table_dir)
     merged.coalesce(n_files).write.mode("overwrite").parquet(
         os.path.join(staging, "base")
     )
     atomic_write(os.path.join(staging, FOLDED), json.dumps(folded))
     claimed = _claim_generation(table_dir, staging, gen + 1)
-    _publish_generation(table_dir, gen + 1)
+    _carry_forward(table_dir, gen + 1)
     if not claimed:
         shutil.rmtree(staging, ignore_errors=True)
         raise CommitConflictError(
             f"generation {gen + 1} of {table_dir} was claimed by another "
             f"compaction — the table is already compacted past generation {gen}"
         )
-    for entry in os.listdir(table_dir):
-        if (
-            entry.startswith("g")
-            and entry[1:].isdigit()
-            and int(entry[1:]) < gen
-        ):
-            shutil.rmtree(os.path.join(table_dir, entry), ignore_errors=True)
+    for old in _generations(table_dir):
+        if old < gen:
+            shutil.rmtree(os.path.join(table_dir, _gen_name(old)), ignore_errors=True)
     _sweep_staging_orphans(table_dir)

@@ -63,7 +63,7 @@ def read_specs(table_dir: str) -> dict:
 
 def _write_specs(table_dir: str, meta: dict) -> None:
     # atomic swap: readers see the old or the new spec list, never a torn
-    # file (same contract as the txn layer's manifest swap)
+    # file (commit.atomic_write)
     atomic_write(_specs_path(table_dir), json.dumps(meta))
 
 

@@ -1,63 +1,60 @@
-"""Cross-table atomic publish: snapshot isolation across the medallion via
-a manifest-of-pointers (r10).
+"""Cross-table atomic publish: snapshot isolation across the medallion
+through exclusively created commit records (Delta Lake's log rule).
 
 A real pipeline publishes silver AND gold together, and a reader must
-never observe new gold over old silver (or vice versa). A single root
-``_MANIFEST`` file names every table's live version directory, and ONE
-atomic manifest swap commits the whole transaction. A one-table
-transaction is how a single table is versioned (the streaming gold and
-silver merges in streaming/ingest.py commit that way). This is the
-transactional primitive Delta Lake's (legacy) multi-table transaction /
-an Iceberg catalog's atomic multi-table commit provides; on plain parquet
-the manifest file IS the catalog pointer.
+never observe new gold over old silver (or vice versa). A transaction's
+one commit record names every table's version directory; its
+fail-if-exists create is the whole commit, and the highest record is the
+live snapshot, so no commit can rewind another. A single table is
+versioned as a one-table transaction (streaming/ingest.py). This is
+Delta Lake's ``_delta_log/N.json`` rule on plain parquet.
 
 Layout::
 
-    root/_MANIFEST                   # JSON {"txn": N, "tables": {name: "v..."}, "writer": w}
     root/_MANIFEST.v0000000NNN       # txn N's commit record, created exclusively
+                                     # {"txn": N, "tables": {name: "v..."}, "writer": w}
+    root/_STAGED.v0000000NNN         # a branch's staged txn N (never live)
+    root/_refs/{tag}                 # write-once tag: a txn id
     root/<table>/v0000000NNN-{writer}/*.parquet
 
 Commit protocol (``publish_tables``):
 
-1. **Replay guard** — if the manifest's txn is already >= this txn id, the
-   publish is a crash-replay AFTER a completed commit: no-op (the data is
-   live; re-running would re-form read-write cycles for incremental
-   tables).
+1. **Guard** — this writer's own record for the txn id means the publish
+   is a crash-replay AFTER its commit: no-op (the data is committed;
+   re-running would re-form read-write cycles for incremental tables).
+   Another writer's record, a branch's staged record, or a txn id not
+   after the live one raise before anything is written.
 2. **Write all version dirs** — each table's new frame lands in its own
    ``v{txn}-{writer}`` directory, fully distributed, never touching any
-   live dir.
-   A crash anywhere in this phase (simulated by ``fail_after_writes``)
-   leaves only ORPHAN directories: the manifest still names the previous
-   versions of every table, so readers keep seeing the old consistent
-   snapshot. The replay re-runs this phase overwriting its own orphans
-   (disjoint from every live dir — safe).
-3. **Commit record, then atomic manifest swap** — the txn's history
-   record is created exclusively (its creator commits txn N; no writer
-   rewrites it), then ``commit.advance`` writes a per-writer
-   ``_MANIFEST.tmp.*``, fsyncs it and ``os.replace``-s it, and only ever
-   moves the pointer to a higher txn. Locally that is one atomic rename;
-   on HDFS the same; on S3 a single pointer PUT. Tables not part of this
-   transaction carry forward unchanged (their pointer entries are copied
-   into the new manifest).
+   live dir. A crash anywhere in this phase (simulated by
+   ``fail_after_writes``) leaves only ORPHAN directories: the live record
+   still names the previous versions of every table, so readers keep
+   seeing the old consistent snapshot. The replay re-runs this phase
+   overwriting its own orphans (disjoint from every live dir — safe).
+3. **Commit record** — ``commit.create_exclusive`` creates
+   ``_MANIFEST.v{txn}`` (on S3 a conditional PUT): its creator commits,
+   a loser removes its stage and raises :class:`CommitConflictError`.
+   Tables outside the transaction carry their live entries forward.
 4. **Retention** — for each table in the txn, keep the new version, the
-   version the outgoing manifest named (readers holding the old manifest
-   survive one publish cycle), and
-   every version a ref (tag/branch) still resolves — a tagged snapshot
-   stays fully readable until the tag is dropped; everything else older
-   is pruned.
+   version the previous record named (readers holding it survive one
+   publish cycle), and every version a ref (tag/branch) still resolves —
+   a tagged snapshot stays fully readable until the tag is dropped;
+   everything else older is pruned.
 
 Snapshot isolation for readers: call :func:`read_manifest` ONCE and
 resolve every table through that one dict (:func:`manifest_read_table`) —
 all reads then come from the same committed transaction regardless of
 concurrent publishes.
 
-At 100 TB: the manifest is O(#tables) bytes — the commit cost is
-independent of data volume; version-dir writes are ordinary distributed
-parquet jobs; nothing here funnels data through the driver. Reference
-parity: the reference rebuilds silver+gold as one ``dbt build``
-(/root/reference/transform/dbt_project.yml:6-11) and gets cross-model
-consistency only because the warehouse is a single-process DuckDB file —
-this module is the distributed, crash-safe equivalent of that guarantee.
+At 100 TB: a record is O(#tables) bytes and a live lookup lists the root
+once — the commit cost is independent of data volume
+(:func:`expire_history` bounds the record count); version-dir writes are
+ordinary distributed parquet jobs; nothing here funnels data through the
+driver. Reference parity: the reference rebuilds silver+gold as one
+``dbt build`` (/root/reference/transform/dbt_project.yml:6-11) and gets
+cross-model consistency only because the warehouse is a single-process
+DuckDB file — this module is the distributed, crash-safe equivalent of
+that guarantee.
 """
 
 from __future__ import annotations
@@ -68,43 +65,74 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
-from f1_lakehouse_spark.sources.commit import advance, atomic_write, create_exclusive
+from f1_lakehouse_spark.sources.commit import create_exclusive
 
 MANIFEST = "_MANIFEST"
+STAGED = "_STAGED"
 # the token of a writer that names none: every record carries a writer
 DEFAULT_WRITER = "default"
 
 
-def _txn_of(manifest_text: str) -> int:
-    return json.loads(manifest_text)["txn"]
-
-
 class SimulatedCrash(RuntimeError):
     """Raised by the ``fail_after_writes`` test hook to emulate a process
-    crash between a transaction's version-dir writes and its manifest
-    swap. Production code never raises this."""
+    crash between a transaction's version-dir writes and its commit
+    record. Production code never raises this."""
+
+
+def _record_path(root: str, txn: int, kind: str = MANIFEST) -> str:
+    return os.path.join(root, f"{kind}.v{txn:010d}")
+
+
+def _read_record(path: str) -> dict | None:
+    try:
+        with open(path) as f:
+            return json.load(f)
+    except FileNotFoundError:
+        return None
+
+
+def _history_txns(root: str, kind: str = MANIFEST) -> list[int]:
+    """The txn ids of the ``{kind}.v{N}`` records, ascending (an in-flight
+    ``create_exclusive`` tmp is not a record; no root, no records)."""
+    prefix = kind + ".v"
+    try:
+        names = os.listdir(root)
+    except FileNotFoundError:
+        return []
+    return sorted(
+        int(f[len(prefix):])
+        for f in names
+        if f.startswith(prefix) and f[len(prefix):].isdigit()
+    )
 
 
 def read_manifest(root: str, txn: int | None = None) -> dict | None:
     """The committed transaction: ``{"txn": int, "tables": {name: version}}``,
     or None before the first publish. Read it ONCE per logical read and
-    resolve all tables through the same dict — that is the snapshot.
+    resolve all tables through the same dict — that is the snapshot. The
+    live transaction is the highest-numbered record; one listing of the
+    root finds it.
 
-    ``txn`` gives TIME TRAVEL: resolve the manifest history file a past
-    commit wrote (``_MANIFEST.v{txn}``, immutable, O(#tables) bytes each —
-    the history costs nothing at any data scale). The snapshot's version
-    DIRS are only retained one publish cycle (see ``publish_tables``)
-    unless a ref pins them, so an UNPINNED as-of read reaches exactly one
-    commit back before :func:`manifest_read_table` starts degrading to
-    None while a TAGGED snapshot stays fully readable until its tag is
-    dropped — Iceberg's snapshot list with a short expire_snapshots
-    horizon plus tag retention."""
-    name = MANIFEST if txn is None else f"{MANIFEST}.v{txn:010d}"
-    path = os.path.join(root, name)
-    if not os.path.exists(path):
-        return None
-    with open(path) as f:
-        return json.load(f)
+    ``txn`` gives TIME TRAVEL: the record a past commit wrote
+    (``_MANIFEST.v{txn}``, immutable, O(#tables) bytes each — the history
+    costs nothing at any data scale). The snapshot's version DIRS are only
+    retained one publish cycle (see ``publish_tables``) unless a ref pins
+    them, so an UNPINNED as-of read reaches exactly one commit back before
+    :func:`manifest_read_table` starts degrading to None while a TAGGED
+    snapshot stays fully readable until its tag is dropped — Iceberg's
+    snapshot list with a short expire_snapshots horizon plus tag
+    retention."""
+    if txn is not None:
+        return _read_record(_record_path(root, txn))
+    while True:
+        txns = _history_txns(root)
+        if not txns:
+            return None
+        live = _read_record(_record_path(root, txns[-1]))
+        if live is not None:
+            return live
+        # expired between the listing and the open, so a newer record
+        # exists: list again
 
 
 def manifest_read_table(
@@ -129,51 +157,40 @@ class CommitConflictError(RuntimeError):
     exactly Delta/Iceberg's optimistic commit-retry loop."""
 
 
+def _conflict(txn_id: int, owner: dict | None) -> CommitConflictError:
+    return CommitConflictError(
+        f"txn {txn_id} was committed by writer "
+        f"{(owner or {}).get('writer')!r} — re-read the manifest and retry "
+        "with the next txn id"
+    )
+
+
 def _txn_guard(root: str, txn_id: int, writer: str) -> dict | str | None:
-    """Shared replay/monotonicity/conflict guard. Returns the string
-    "committed" when THIS writer's txn is already live (caller no-ops —
-    the idempotent crash-replay), raises :class:`CommitConflictError`
-    when a DIFFERENT writer committed this txn id or a branch holds it
-    staged (checked before staging: with equal tokens the branch's
-    version dirs are the ones this publish would write), and otherwise
-    returns the current manifest (possibly None) to proceed."""
+    """Returns "committed" when THIS writer's record for ``txn_id`` exists
+    (the caller's idempotent replay no-ops), raises ValueError for an
+    older txn id, :class:`CommitConflictError` when another writer's
+    record or a branch's staging holds it (before staging: with equal
+    tokens the branch's version dirs are the ones this publish would
+    write), and otherwise returns the live manifest (or None)."""
     cur = read_manifest(root)
-    if cur is not None and cur["txn"] == txn_id:
-        if cur.get("writer") != writer:
-            raise CommitConflictError(
-                f"txn {txn_id} was committed by writer "
-                f"{cur.get('writer')!r}, not {writer!r} — re-read the "
-                "manifest and retry with the next txn id"
-            )
+    rec = cur if cur is not None and cur["txn"] == txn_id else read_manifest(root, txn_id)
+    if rec is not None and rec.get("writer") == writer:
         return "committed"
-    rec = read_manifest(root, txn=txn_id)
     if cur is not None and cur["txn"] > txn_id:
-        # a replay of a txn this writer COMMITTED but that has since
-        # been superseded must still no-op (the commit record proves
-        # ownership); only a txn that never committed is a violation
-        if (
-            rec is not None
-            and not rec.get("staged")  # staged records never went live
-            and rec.get("writer") == writer
-        ):
-            return "committed"
         raise ValueError(
             f"txn_id {txn_id} is older than the committed {cur['txn']}"
         )
-    if rec is not None and rec.get("staged"):
-        raise _staged_conflict(txn_id)
+    if rec is not None:
+        raise _conflict(txn_id, rec)
+    if os.path.exists(_record_path(root, txn_id, STAGED)):
+        # a BRANCH holds this txn id: its staging is deliberately
+        # unpromoted (write-audit-publish) — the branch promotes itself
+        # via fast_forward
+        raise CommitConflictError(
+            f"txn {txn_id} is staged on a branch — fast_forward the branch "
+            "or retry with the next txn id"
+        )
     return cur
-
-
-def _staged_conflict(txn_id: int) -> CommitConflictError:
-    # a BRANCH holds this txn id: its record is deliberately unpromoted
-    # (write-audit-publish), not a crashed winner — promoting it would
-    # leak an unaudited staging to every reader; the branch promotes
-    # itself via fast_forward
-    return CommitConflictError(
-        f"txn {txn_id} is staged on a branch — fast_forward the branch or "
-        "retry with the next txn id"
-    )
 
 
 def _stage_writes(
@@ -204,83 +221,51 @@ def _version_name(txn_id: int, writer: str) -> str:
     return f"v{txn_id:010d}-{writer}"
 
 
+def _record(cur: dict | None, tables: dict, txn_id: int, writer: str) -> dict:
+    """Txn ``txn_id``'s record: the live tables, with ``tables`` at their
+    new version."""
+    version = _version_name(txn_id, writer)
+    prev_tables = dict(cur["tables"]) if cur else {}
+    return {
+        "txn": txn_id,
+        "tables": {**prev_tables, **{n: version for n in tables}},
+        "writer": writer,
+    }
+
+
 def _drop_stage(root: str, tables: dict[str, DataFrame], version: str) -> None:
     """Remove a txn's staged version dirs that no record will name."""
     for name in tables:
         shutil.rmtree(os.path.join(root, name, version), ignore_errors=True)
 
 
-def _commit_manifest(
+def _commit(
     root: str,
     cur: dict | None,
     tables: dict[str, DataFrame],
     txn_id: int,
     writer: str,
-    fail_after_record: bool = False,
 ) -> None:
-    """Phases 3+4: atomic manifest swap (plus the immutable history copy
-    for time travel / commit arbitration), then per-table one-cycle
+    """Phases 3+4: create the commit record, then per-table one-cycle
     retention. A conflict removes this writer's stage before raising."""
     version = _version_name(txn_id, writer)
-    prev_tables = dict(cur["tables"]) if cur else {}
-    new_manifest = {
-        "txn": txn_id,
-        "tables": {**prev_tables, **{n: version for n in tables}},
-        "writer": writer,
-    }
-    # history copy FIRST — it doubles as the COMMIT ARBITRATION record,
-    # created EXCLUSIVELY and never rewritten (the fail-if-exists
-    # ``commit.create_exclusive`` is the one compare-and-swap primitive
-    # local FS / HDFS give us, and it is exactly how Delta's
-    # _delta_log/N.json commit arbitrates concurrent writers): the winner
-    # of the create IS the committer of txn N. A loser finds the file
-    # owned by another writer and raises; a crashed WINNER replaying finds
-    # its OWN record and idempotently completes the live-pointer swap.
-    hist = os.path.join(root, f"{MANIFEST}.v{txn_id:010d}")
-    ptr = os.path.join(root, MANIFEST)
+    # the record is the commit: the fail-if-exists create (the one
+    # compare-and-swap local FS / HDFS give us, Delta's N.json rule) is
+    # won by exactly one writer, whose record is live from that instant
     try:
-        create_exclusive(hist, json.dumps(new_manifest))
-    except FileExistsError:
-        with open(hist) as f:
-            owner = json.load(f)
-        if owner.get("staged"):
-            _drop_stage(root, tables, version)
-            raise _staged_conflict(txn_id) from None
-        if owner.get("writer") != writer:
-            _drop_stage(root, tables, version)
-            # ROLL THE WINNER FORWARD before raising: the record IS the
-            # commit (Delta semantics — the N.json wins; the live pointer
-            # is derived state). If the winner crashed between record and
-            # swap, every loser would otherwise re-derive the SAME txn id
-            # against the stale manifest and conflict forever; completing
-            # the swap on the winner's behalf unblocks the retry loop and
-            # makes the record's txn genuinely visible, so its time-travel
-            # snapshot is never a phantom.
-            advance(ptr, owner["txn"], json.dumps(owner), _txn_of)
-            raise CommitConflictError(
-                f"txn {txn_id} commit record is owned by writer "
-                f"{owner.get('writer')!r}, not {writer!r} — re-read "
-                "the manifest and retry with the next txn id"
-            ) from None
-        # our own crash leftover: fall through and complete the swap
-        new_manifest = owner
-    if fail_after_record:
-        raise SimulatedCrash(
-            f"simulated crash after txn {txn_id}'s commit record, before "
-            "the live-pointer swap"
+        create_exclusive(
+            _record_path(root, txn_id), json.dumps(_record(cur, tables, txn_id, writer))
         )
-    # the final swap is forward-only like the loser's roll-forward: never
-    # move the live pointer backwards. Without the guard, a winner
-    # that stalls between its commit record and its swap can be rolled
-    # forward by a conflicting loser, which then commits txn N+1 — the
-    # stalled winner resuming its unconditional swap would present the
-    # stale txn N as live (a snapshot-monotonicity violation) until the
-    # next write self-heals it. With the guard the resume is a no-op.
-    advance(ptr, new_manifest["txn"], json.dumps(new_manifest), _txn_of)
+    except FileExistsError:
+        owner = read_manifest(root, txn_id)
+        if owner is not None and owner.get("writer") == writer:
+            return  # its own record: this publish raced its own replay
+        _drop_stage(root, tables, version)
+        raise _conflict(txn_id, owner) from None
     # retention: per table, the displaced version survives one cycle for
-    # readers holding the outgoing manifest; everything STRICTLY OLDER is
+    # readers holding the previous record; everything STRICTLY OLDER is
     # pruned UNLESS a ref (tag/branch) pins it — a tagged snapshot stays
-    # FULLY readable (manifest + dirs) until the tag is dropped, Iceberg's
+    # FULLY readable (record + dirs) until the tag is dropped, Iceberg's
     # tag-retention semantics (r11). Same-or-newer txn dirs are never
     # touched here — a concurrent OCC loser may still be mid-write into
     # its own v{txn}-{writer} dir, and rmtree-ing under a running Spark
@@ -288,6 +273,7 @@ def _commit_manifest(
     # crash; the loser cleans its own stage on conflict, and the NEXT
     # commit's retention prunes anything it abandoned (by then strictly
     # older).
+    prev_tables = dict(cur["tables"]) if cur else {}
     pinned = _ref_pinned_versions(root)
     for name in tables:
         keep = {version, prev_tables.get(name)} | pinned.get(name, set())
@@ -307,8 +293,7 @@ def _ref_pinned_versions(root: str) -> dict[str, set[str]]:
     reproducibility guarantee refs exist for silently breaks. Cost is
     O(#refs) metadata file reads per commit — independent of data volume."""
     pinned: dict[str, set[str]] = {}
-    for txn in _ref_txns(root):
-        rec = read_manifest(root, txn=txn) or {}
+    for rec in _ref_records(root):
         for tbl, ver in rec.get("tables", {}).items():
             pinned.setdefault(tbl, set()).add(ver)
     return pinned
@@ -321,7 +306,6 @@ def publish_tables(
     txn_id: int,
     fail_after_writes: int | None = None,
     writer: str = DEFAULT_WRITER,
-    fail_after_record: bool = False,
 ) -> None:
     """Atomically publish every frame in ``tables`` as transaction
     ``txn_id`` (see module docstring for the protocol). Idempotent under
@@ -341,12 +325,10 @@ def publish_tables(
     cur = _txn_guard(root, txn_id, writer)
     if cur == "committed":
         # crash-replay AFTER a completed commit: the transaction is
-        # durable and live — the no-op IS the idempotent replay
+        # durable — the no-op IS the idempotent replay
         return
     _stage_writes(root, tables, _version_name(txn_id, writer), fail_after_writes)
-    _commit_manifest(
-        root, cur, tables, txn_id, writer, fail_after_record=fail_after_record
-    )
+    _commit(root, cur, tables, txn_id, writer)
 
 
 def write_audit_publish(
@@ -361,9 +343,9 @@ def write_audit_publish(
     the reference's post-hoc gate `/root/reference/scripts/check_gold.sh`
     + dbt not_null tests, which only check AFTER the tables are live):
     stage every table's version dir, run ``audit_fn`` against the STAGED
-    data read back from disk (what readers would actually see), and swap
-    the manifest ONLY if the audit returns no violations — a failing batch
-    never becomes visible to any reader.
+    data read back from disk (what readers would actually see), and create
+    the commit record ONLY if the audit returns no violations — a failing
+    batch never becomes visible to any reader.
 
     ``audit_fn(staged: dict[str, DataFrame]) -> list[str]`` returns
     human-readable violation strings (empty = pass). Returns the violation
@@ -385,7 +367,7 @@ def write_audit_publish(
     if violations:
         _drop_stage(root, tables, version)
         return violations
-    _commit_manifest(root, cur, tables, txn_id, writer)
+    _commit(root, cur, tables, txn_id, writer)
     return []
 
 
@@ -520,7 +502,7 @@ def snapshot_diff(
 
 
 # ---------------------------------------------------------------------------
-# Refs: branches and tags over the manifest history (Iceberg refs / Delta
+# Refs: branches and tags over the commit records (Iceberg refs / Delta
 # does not have these; the branch-WAP flow is Iceberg's
 # stage-on-branch -> audit -> fast-forward-main pattern)
 # ---------------------------------------------------------------------------
@@ -539,20 +521,49 @@ def _ref_path(root: str, name: str) -> str:
     return os.path.join(root, REFS_DIR, name)
 
 
+def _tag_txn(root: str, name: str) -> int | None:
+    try:
+        with open(_ref_path(root, name)) as f:
+            return int(f.read().strip())
+    except FileNotFoundError:
+        return None
+
+
+def _staged_records(root: str) -> list[dict]:
+    """Every branch's staged records, txn-ascending (one a concurrent
+    drop_ref removed mid-listing is skipped)."""
+    paths = (_record_path(root, t, STAGED) for t in _history_txns(root, STAGED))
+    return [r for r in map(_read_record, paths) if r is not None]
+
+
+def _branch_records(root: str, branch: str) -> list[dict]:
+    return [r for r in _staged_records(root) if r["branch"] == branch]
+
+
+def read_ref_manifest(root: str, name: str) -> dict | None:
+    """Resolve a ref to its manifest snapshot: a tag's record, or a
+    branch's head — its highest staged record, so the head only ever moves
+    forward. Feed the result to :func:`manifest_read_table`."""
+    txn = _tag_txn(root, name)
+    if txn is not None:
+        return read_manifest(root, txn)
+    branch = _branch_records(root, name)
+    return branch[-1] if branch else None
+
+
 def read_ref(root: str, name: str) -> int | None:
     """The txn id a ref names, or None."""
-    path = _ref_path(root, name)
-    if not os.path.exists(path):
-        return None
-    with open(path) as f:
-        return int(f.read().strip())
+    rec = read_ref_manifest(root, name)
+    return None if rec is None else rec["txn"]
 
 
 def create_tag(root: str, name: str, txn_id: int) -> None:
     """An IMMUTABLE named pointer to a committed txn (audit marker,
-    reproducibility pin). Write-once: re-tagging an existing name is an
-    error, never a silent move."""
-    if read_manifest(root, txn=txn_id) is None:
+    reproducibility pin). Write-once: re-tagging an existing name, or
+    tagging under a branch's name, is an error, never a silent move."""
+    if _tag_txn(root, name) is not None or _branch_records(root, name):
+        raise FileExistsError(f"ref {name!r} already exists")
+    if read_manifest(root, txn_id) is None:
         raise ValueError(f"cannot tag txn {txn_id}: no commit record")
     os.makedirs(os.path.join(root, REFS_DIR), exist_ok=True)
     # exists -> FileExistsError: tags never move; content-atomic so a
@@ -561,43 +572,30 @@ def create_tag(root: str, name: str, txn_id: int) -> None:
 
 
 def drop_ref(root: str, name: str) -> None:
-    """Remove a tag or branch. The versions only this ref pinned become
-    prunable at the NEXT commit's retention pass, and its history record
-    becomes expirable (Iceberg: dropping a tag releases its snapshot to
-    expire_snapshots). Loud on a missing ref — silently 'dropping' a typo
-    would leave the real pin in place."""
-    path = _ref_path(root, name)
-    if not os.path.exists(path):
+    """Remove a tag, or a branch with all its staged records (never live).
+    The versions only this ref pinned become prunable at the NEXT commit's
+    retention pass, and a tag's record becomes expirable (Iceberg:
+    dropping a tag releases its snapshot to expire_snapshots). Loud on a
+    missing ref — silently 'dropping' a typo would leave the real pin in
+    place."""
+    if _tag_txn(root, name) is not None:
+        os.remove(_ref_path(root, name))
+        return
+    branch = _branch_records(root, name)
+    if not branch:
         raise ValueError(f"no such ref: {name!r}")
-    os.remove(path)
+    for rec in branch:
+        os.remove(_record_path(root, rec["txn"], STAGED))
 
 
-def _ref_txns(root: str) -> list[int]:
-    """The txn ids the refs (tags and branches) name; in-flight unique
-    tmps and a ref dropped mid-listing are skipped."""
+def _ref_records(root: str) -> list[dict]:
+    """The records the refs resolve: every tag's, and every branch's head
+    (in-flight unique tmps and a ref dropped mid-listing are skipped)."""
     refs_dir = os.path.join(root, REFS_DIR)
-    if not os.path.isdir(refs_dir):
-        return []
-    txns = (read_ref(root, n) for n in os.listdir(refs_dir) if ".tmp" not in n)
-    return [t for t in txns if t is not None]
-
-
-def _history_txns(root: str) -> list[int]:
-    """The txn ids of the ``_MANIFEST.v{N}`` history records, ascending
-    (an in-flight ``create_exclusive`` tmp is not a record)."""
-    prefix = MANIFEST + ".v"
-    return sorted(
-        int(f[len(prefix):])
-        for f in os.listdir(root)
-        if f.startswith(prefix) and f[len(prefix):].isdigit()
-    )
-
-
-def read_ref_manifest(root: str, name: str) -> dict | None:
-    """Resolve a ref to its manifest snapshot (tags and branches alike);
-    feed the result to :func:`manifest_read_table`."""
-    txn = read_ref(root, name)
-    return None if txn is None else read_manifest(root, txn=txn)
+    tags = os.listdir(refs_dir) if os.path.isdir(refs_dir) else []
+    recs = [read_ref_manifest(root, n) for n in tags if ".tmp" not in n]
+    heads = {r["branch"]: r for r in _staged_records(root)}  # ascending: the last wins
+    return [r for r in recs if r is not None] + list(heads.values())
 
 
 def publish_staged(
@@ -609,90 +607,81 @@ def publish_staged(
     writer: str = DEFAULT_WRITER,
 ) -> None:
     """Stage a transaction on a BRANCH without making it live: version
-    dirs + commit record are written exactly like :func:`publish_tables`
-    (the record carries ``staged: true``), the branch ref moves to it,
-    but the live ``_MANIFEST`` is untouched — main readers cannot see it.
-    Audit the branch via :func:`read_ref_manifest`, then
-    :func:`fast_forward` main. A mainline writer racing to the same txn
-    id gets a CommitConflictError, and the roll-forward helper explicitly
-    REFUSES to promote a staged record (promoting an unaudited staging
-    would defeat the entire WAP gate)."""
-    os.makedirs(os.path.join(root, REFS_DIR), exist_ok=True)
-    cur = read_manifest(root)
+    dirs are written exactly like :func:`publish_tables`, but the record
+    is created exclusively as ``_STAGED.v{txn_id}`` (``staged: true``,
+    naming its branch), which no live lookup lists — main readers cannot
+    see it. The branch's head is its highest staged record. Audit the
+    branch via :func:`read_ref_manifest`, then :func:`fast_forward` main.
+    A mainline writer at the same txn id gets a CommitConflictError
+    (promoting an unaudited staging would defeat the entire WAP gate).
+    A replay whose own staged record exists is a no-op."""
+    if _tag_txn(root, branch) is not None:
+        raise ValueError(f"{branch!r} is a tag, not a branch")
+    os.makedirs(root, exist_ok=True)
     # the writer's OWN record is checked BEFORE the ahead-of-live guard:
     # a crash-replay of a staging whose branch has since been
-    # fast-forwarded (or superseded) finds cur['txn'] >= txn_id, but its
-    # own commit record proves the staging succeeded — the replay must
-    # no-op/re-point, mirroring _txn_guard's superseded-replay path, not
-    # die on the monotonicity check.
-    rec = read_manifest(root, txn=txn_id)
+    # fast-forwarded (or superseded) finds the live txn >= txn_id, but
+    # its own record proves the staging succeeded — the replay no-ops,
+    # mirroring _txn_guard's superseded-replay path
+    rec = _read_record(_record_path(root, txn_id, STAGED))
     if rec is not None:
-        if not rec.get("staged") or rec.get("writer") != writer:
+        if rec["writer"] != writer or rec["branch"] != branch:
             raise CommitConflictError(
-                f"txn {txn_id} commit record already exists (writer "
-                f"{rec.get('writer')!r}) — re-read and retry with the "
-                "next txn id"
+                f"txn {txn_id} is staged by writer {rec['writer']!r} on "
+                f"branch {rec['branch']!r} — re-read and retry with the next "
+                "txn id"
             )
-        # idempotent replay: re-point the branch — but never REWIND one
-        # that has since advanced to a newer staging
-        advance(_ref_path(root, branch), txn_id, str(txn_id), int)
         return
+    cur = read_manifest(root)
     if cur is not None and cur["txn"] >= txn_id:
         raise ValueError(
             f"staged txn_id {txn_id} is not ahead of the live {cur['txn']}"
         )
     version = _version_name(txn_id, writer)
     _stage_writes(root, tables, version, None)
-    prev_tables = dict(cur["tables"]) if cur else {}
-    record = {
-        "txn": txn_id,
-        "tables": {**prev_tables, **{n: version for n in tables}},
-        "staged": True,
-        "writer": writer,
-    }
-    hist = os.path.join(root, f"{MANIFEST}.v{txn_id:010d}")
+    record = {**_record(cur, tables, txn_id, writer), "staged": True, "branch": branch}
     try:
-        create_exclusive(hist, json.dumps(record))
+        create_exclusive(_record_path(root, txn_id, STAGED), json.dumps(record))
     except FileExistsError:
         _drop_stage(root, tables, version)
         raise CommitConflictError(
             f"lost the record race for staged txn {txn_id} — re-read and "
             "retry with the next txn id"
         ) from None
-    atomic_write(_ref_path(root, branch), str(txn_id))
 
 
 def fast_forward(root: str, branch: str) -> dict:
-    """Promote a branch's staged txn to the live manifest — the publish
-    half of branch-WAP, ONE atomic pointer swap. Refuses when main has
-    advanced to or past the branch txn (:class:`StaleBranchError` — the
-    branch must rebase); never moves main backwards. Returns the now-live
-    manifest."""
-    txn = read_ref(root, branch)
-    if txn is None:
+    """Promote a branch's head to main — the publish half of branch-WAP:
+    create the commit record ``_MANIFEST.v{N}`` for the branch's txn N,
+    the same one exclusive step a publish commits with. Refuses when main
+    is at or past N, or when another commit takes N first
+    (:class:`StaleBranchError` — the branch must rebase); never moves main
+    backwards. Returns the now-live manifest."""
+    records = _branch_records(root, branch)
+    if not records:
         raise ValueError(f"no such branch: {branch!r}")
-    record = read_manifest(root, txn=txn)
-    if record is None:
-        raise ValueError(f"branch {branch!r} names txn {txn} with no record")
-    promoted = {k: v for k, v in record.items() if k != "staged"}
-    if not advance(
-        os.path.join(root, MANIFEST), txn, json.dumps(promoted), _txn_of
-    ):
-        raise StaleBranchError(
-            f"main is at txn {read_manifest(root)['txn']}, branch {branch!r} "
-            f"at {txn} — rebase the branch onto the live snapshot"
-        )
-    return promoted
+    head = records[-1]
+    promoted = {k: v for k, v in head.items() if k not in ("staged", "branch")}
+    live = read_manifest(root)
+    if live is None or live["txn"] < head["txn"]:
+        try:
+            create_exclusive(_record_path(root, head["txn"]), json.dumps(promoted))
+            return promoted
+        except FileExistsError:
+            live = read_manifest(root)
+    raise StaleBranchError(
+        f"main is at txn {live['txn']}, branch {branch!r} at {head['txn']} "
+        "— rebase the branch onto the live snapshot"
+    )
 
 
 def vacuum_orphans(root: str, ttl_seconds: float = 3600.0) -> list[str]:
     """Iceberg ``remove_orphan_files`` analog: delete version dirs NO
-    manifest can reach — not the live manifest, not any ref's record, not
-    any retained history record. Per-commit retention never catches two
-    orphan classes: a crashed writer's staging whose txn id is AHEAD of
-    the live txn (retention only prunes strictly-older dirs), and
-    abandoned stagings of tables no later transaction touches. Both
-    accumulate forever without this pass.
+    record can reach — no commit record and no branch's staged record.
+    Per-commit retention never catches two orphan classes: a crashed
+    writer's staging whose txn id is AHEAD of the live txn (retention only
+    prunes strictly-older dirs), and abandoned stagings of tables no later
+    transaction touches. Both accumulate forever without this pass.
 
     ``ttl_seconds`` age-gates the delete: a dir younger than the TTL may
     be a RACING writer's in-flight staging (its commit record does not
@@ -706,9 +695,8 @@ def vacuum_orphans(root: str, ttl_seconds: float = 3600.0) -> list[str]:
     import time  # noqa: PLC0415
 
     referenced: set[tuple[str, str]] = set()
-    manifests = [read_manifest(root)]
-    manifests += [read_manifest(root, txn=t) for t in _history_txns(root)]
-    for rec in filter(None, manifests):
+    records = [read_manifest(root, t) for t in _history_txns(root)]
+    for rec in filter(None, records + _staged_records(root)):
         for tbl, ver in rec.get("tables", {}).items():
             referenced.add((tbl, ver))
     horizon = time.time() - ttl_seconds
@@ -732,31 +720,26 @@ def vacuum_orphans(root: str, ttl_seconds: float = 3600.0) -> list[str]:
 
 
 def expire_history(root: str, keep_n: int) -> list[int]:
-    """Expire old ``_MANIFEST.v{N}`` history files — the Iceberg
-    ``expire_snapshots`` analog for the manifest layer. Each history file
-    is O(#tables) bytes, so data volume is irrelevant; what grows
-    unboundedly is the FILE COUNT at real commit rates (one txn per
-    streaming micro-batch, streaming/ingest.py), and time-travel reads
-    degrade to None after one version-dir retention cycle anyway, so old
-    history is dead weight.
+    """Expire old ``_MANIFEST.v{N}`` commit records — the Iceberg
+    ``expire_snapshots`` analog for the manifest layer. Each record is
+    O(#tables) bytes, so data volume is irrelevant; what grows unboundedly
+    is the FILE COUNT at real commit rates (one txn per streaming
+    micro-batch, streaming/ingest.py), which every live lookup lists, and
+    time-travel reads degrade to None after one version-dir retention
+    cycle anyway, so old history is dead weight.
 
-    Keeps: the newest ``keep_n`` records, every record PINNED by a ref
-    (tag or branch — expiring a pinned snapshot would silently break the
-    reproducibility guarantee tags exist for), and the live manifest's
-    own record. The live ``_MANIFEST`` file itself is never a candidate.
-    Returns the expired txn ids (ascending)."""
+    Keeps: the newest ``keep_n`` records — the live record is always the
+    newest, so it survives whatever ``keep_n`` — and every record PINNED
+    by a ref (tag or branch head — expiring a pinned snapshot would
+    silently break the reproducibility guarantee tags exist for). Staged
+    records are not history: dropping their branch removes them. Returns
+    the expired txn ids (ascending)."""
     if keep_n < 0:
         raise ValueError(f"keep_n must be >= 0, got {keep_n}")
-    pinned = set(_ref_txns(root))
-    live = read_manifest(root)
-    if live is not None:
-        pinned.add(live["txn"])
     history = _history_txns(root)
-    keep = set(history[len(history) - keep_n:]) if keep_n else set()
-    expired: list[int] = []
-    for txn in history:
-        if txn in keep or txn in pinned:
-            continue
-        os.remove(os.path.join(root, f"{MANIFEST}.v{txn:010d}"))
-        expired.append(txn)
+    keep = set(history[len(history) - max(keep_n, 1):])
+    keep |= {r["txn"] for r in _ref_records(root)}
+    expired = [txn for txn in history if txn not in keep]
+    for txn in expired:
+        os.remove(_record_path(root, txn))
     return expired

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from f1_lakehouse_spark.sources.txn import (
+    expire_history,
     manifest_read_table,
     publish_tables,
     read_manifest,
@@ -200,6 +201,14 @@ def stream_stream_attribution_join(
     )
 
 
+def _publish_batch(sess: SparkSession, root: str, tables: dict, txn_id: int) -> None:
+    """Commit one micro-batch, then keep only the records a checkpoint
+    replay (the live one) or a one-cycle reader (its predecessor) can
+    name; every live lookup lists them."""
+    publish_tables(sess, root, tables, txn_id)
+    expire_history(root, keep_n=2)
+
+
 def publish_gold_version(df: DataFrame, txn_id: int, root: str) -> None:
     """Publish ``df`` (cumulative aggregate rows, one per key) as txn
     ``txn_id`` of the one-table transaction root ``root``: key-replace
@@ -215,7 +224,7 @@ def publish_gold_version(df: DataFrame, txn_id: int, root: str) -> None:
         # key-replace upsert: update-mode rows are already cumulative
         kept = old.join(df.select("event_type"), "event_type", "left_anti")
         df = kept.unionByName(df)
-    publish_tables(sess, root, {"gold": df}, txn_id)
+    _publish_batch(sess, root, {"gold": df}, txn_id)
 
 
 def incremental_gold_refresh(
@@ -246,7 +255,7 @@ def incremental_gold_refresh(
     version dir never touches the live one, so reading the old version
     while writing the new never forms a read-write cycle; a replay AFTER
     a completed publish is txn's own-record no-op, and a crash before the
-    manifest swap leaves the previous snapshot live for the replay to
+    commit record leaves the previous snapshot live for the replay to
     re-merge against. On a Delta/Iceberg deployment the whole merge is
     one MERGE INTO (see sources/scd2.py).
 
@@ -324,14 +333,14 @@ def _silver_merge(batch_df: DataFrame, batch_id: int, root: str) -> None:
     names)."""
     sess = batch_df.sparkSession
     old = manifest_read_table(sess, root, "silver", read_manifest(root))
-    publish_tables(sess, root, {"silver": _merge_silver(old, batch_df)}, batch_id + 1)
+    _publish_batch(sess, root, {"silver": _merge_silver(old, batch_df)}, batch_id + 1)
 
 
 def _medallion_txn_commit(batch_df: DataFrame, batch_id: int, root: str) -> None:
     """One micro-batch's ATOMIC two-table commit: merge the batch into
     silver (latest-per-key upsert against the silver the manifest names),
     derive gold from the merged silver, and publish BOTH through one
-    manifest swap (sources/txn.py). Exactly-once across tables: a replay
+    commit record (sources/txn.py). Exactly-once across tables: a replay
     of a committed batch no-ops on the txn guard; a crash between the two
     version writes leaves the manifest on the previous batch's snapshot,
     and the replay re-merges against THAT silver (the manifest is the
@@ -346,9 +355,7 @@ def _medallion_txn_commit(batch_df: DataFrame, batch_id: int, root: str) -> None
     # shuffle once each — entity-bounded frames, two bounded jobs per
     # batch (persisting across foreachBatch writes would pin executor
     # memory for no asymptotic win)
-    publish_tables(
-        sess, root, {"silver": silver, "gold": _silver_to_gold(silver)}, txn_id
-    )
+    _publish_batch(sess, root, {"silver": silver, "gold": _silver_to_gold(silver)}, txn_id)
 
 
 def _medallion_cdf_commit(batch_df: DataFrame, batch_id: int, root: str) -> None:
@@ -422,7 +429,7 @@ def _medallion_cdf_commit(batch_df: DataFrame, batch_id: int, root: str) -> None
         # gold and mart are taxonomy-bounded (one row per event_type):
         # write each as one file so the per-batch commit doesn't pay a
         # write task per shuffle partition for a handful of rows
-        publish_tables(
+        _publish_batch(
             sess,
             root,
             {
@@ -495,7 +502,7 @@ def streaming_medallion_publish(
     """Exactly-once streaming maintenance of silver AND gold as one
     transaction per micro-batch: the two-table form of
     ``incremental_silver_merge`` — each batch commits a consistent
-    (silver, gold) pair through one manifest swap (sources/txn.py), so
+    (silver, gold) pair through one commit record (sources/txn.py), so
     downstream readers join the two layers without ever seeing a torn
     snapshot. Delta's foreachBatch-with-MERGE gives per-TABLE
     exactly-once; the manifest commit extends it across tables. Read back with
@@ -527,7 +534,7 @@ def incremental_silver_merge(
     Scale: silver is bounded by entity cardinality (users), not event
     volume; each batch publishes as one-table txn ``batch_id + 1`` of
     ``root`` (sources/txn.py): one versioned dir distributed across
-    executors, then one manifest swap. Read it back with
+    executors, then one commit record. Read it back with
     ``manifest_read_table(spark, root, "silver", read_manifest(root))``."""
     _stream_silver_rows(
         spark, src_dir, root, checkpoint, glob, max_files_per_trigger, _silver_merge

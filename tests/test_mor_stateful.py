@@ -1,8 +1,13 @@
 """Stateful property test for the merge-on-read layer (r11).
 
 Hypothesis drives random interleavings of equality deletes, latest-wins
-upserts, and compactions against a pure-Python dict model of the table,
-asserting after every step that the merged view equals the model exactly.
+upserts, and compactions — plus a compaction that crashes right after its
+generation claim and a fragment commit that crashes right after its seq
+claim record — against a pure-Python dict model of the table, asserting
+after every step that the live generation never goes back and that the
+merged view equals the model exactly (a crashed compaction has committed
+its content-identical generation; a crashed fragment commit committed
+nothing).
 This is the test that pins the SEQUENCE-NUMBER semantics (a later delete
 kills an earlier upsert, a later upsert survives an earlier delete,
 stacked upserts resolve latest-wins, compaction is content-identical)
@@ -18,7 +23,9 @@ from __future__ import annotations
 
 import os
 import threading
+from unittest import mock
 
+import pytest
 from hypothesis import HealthCheck, settings
 from hypothesis import strategies as st
 from hypothesis.stateful import (
@@ -30,6 +37,7 @@ from hypothesis.stateful import (
 )
 from pyspark.sql import functions as F
 
+import f1_lakehouse_spark.sources.mor as mor_mod
 from f1_lakehouse_spark.sources.mor import (
     mor_compact,
     mor_delete,
@@ -39,6 +47,18 @@ from f1_lakehouse_spark.sources.mor import (
 )
 
 N_BASE = 8  # ids 0..7, grp = id % 3
+
+
+class _Crash(Exception):
+    """A simulated crash right after a claim."""
+
+
+def _then_crash(real):
+    def step(*args):
+        assert real(*args) is not False
+        raise _Crash
+
+    return step
 
 
 def test_mor_state_machine(spark, tmp_path):
@@ -53,6 +73,7 @@ def test_mor_state_machine(spark, tmp_path):
             )
             mor_write_base(base, self.tbl)
             self.model: dict[int, int] = {i: i % 3 for i in range(N_BASE)}
+            self.gen = 0
 
         @rule(lo=st.integers(0, N_BASE + 3), hi=st.integers(0, N_BASE + 3))
         def delete_range(self, lo: int, hi: int) -> None:
@@ -82,6 +103,32 @@ def test_mor_state_machine(spark, tmp_path):
         @rule()
         def compact(self) -> None:
             mor_compact(spark, self.tbl, "id")
+
+        @rule()
+        def compact_crash_after_claim(self) -> None:
+            claim = _then_crash(mor_mod._claim_generation)
+            with mock.patch.object(mor_mod, "_claim_generation", claim):
+                with pytest.raises(_Crash):
+                    mor_compact(spark, self.tbl, "id")
+
+        @rule(key=st.integers(0, N_BASE + 3), delete=st.booleans())
+        def fragment_crash_after_claim_record(self, key: int, delete: bool) -> None:
+            create = _then_crash(mor_mod.create_exclusive)
+            with mock.patch.object(mor_mod, "create_exclusive", create):
+                with pytest.raises(_Crash):
+                    if delete:
+                        mor_delete(spark, self.tbl, "id", F.col("id") == key)
+                    else:
+                        rows = spark.createDataFrame([(key, 15)], "id int, grp int")
+                        mor_upsert(spark, self.tbl, "id", rows)
+
+        @invariant()
+        def live_generation_never_decreases(self) -> None:
+            if not hasattr(self, "tbl"):
+                return
+            gen = mor_mod._live_gen(self.tbl)
+            assert gen >= self.gen, f"live generation went back from {self.gen} to {gen}"
+            self.gen = gen
 
         @invariant()
         def merged_view_equals_model(self) -> None:

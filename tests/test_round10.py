@@ -1,8 +1,8 @@
 """Round-10 lifecycle mechanics beyond the differential gate.
 
-- sources/txn.py: the manifest-of-pointers commit protocol, exercised at
+- sources/txn.py: the commit-record protocol, exercised at
   every crash point (the driver round-trip only simulates one), plus the
-  properties the round-trip doesn't cover: txn-id monotonicity, pointer
+  properties the round-trip doesn't cover: txn-id monotonicity, version-entry
   carry-forward for tables outside a transaction, and one-cycle reader
   retention across a concurrent publish.
 - streaming/ingest.publish_gold_version: the one-table txn the streaming
@@ -92,7 +92,7 @@ def test_txn_replay_after_commit_noops_and_regression_raises(spark, tmp_path):
 
 def test_txn_carries_forward_tables_outside_the_transaction(spark, tmp_path):
     """A txn touching only one table repoints that table and carries the
-    other's pointer forward — the untouched table stays readable at its
+    other's entry forward — the untouched table stays readable at its
     committed version through the new manifest."""
     root = str(tmp_path / "m")
     publish_tables(spark, root, _frames(spark, 1), txn_id=1)
@@ -303,35 +303,36 @@ def test_occ_own_replay_still_noops(spark, tmp_path):
     assert read_manifest(root) == m1
 
 
-def test_occ_crashed_winner_completes_via_commit_record(spark, tmp_path):
-    """A writer that crashed AFTER creating the exclusive commit record
-    but BEFORE the live-pointer swap completes idempotently on replay
-    (its own record is found, not a conflict)."""
-    import json
-    import os as _os
+def test_occ_crashed_winner_completes_via_commit_record(spark, tmp_path, monkeypatch):
+    """A writer that crashes right AFTER creating its exclusive commit
+    record has committed: the record is live at once, its replay no-ops
+    (its own record is found, not a conflict, and its version dirs are
+    not rewritten), and a DIFFERENT writer at that txn conflicts."""
+    import f1_lakehouse_spark.sources.txn as txn
+    from f1_lakehouse_spark.sources.txn import CommitConflictError
 
-    from f1_lakehouse_spark.sources.txn import MANIFEST
+    class Crash(Exception):
+        pass
 
     root = str(tmp_path / "m")
     publish_tables(spark, root, _frames(spark, 1), txn_id=1, writer="a")
-    # forge the crash: txn 2's commit record exists (owned by a), the
-    # live manifest still points at txn 1
-    hist = _os.path.join(root, f"{MANIFEST}.v{2:010d}")
-    record = {
-        "txn": 2,
-        "tables": {"silver": "v0000000002-a", "gold": "v0000000002-a"},
-        "writer": "a",
-    }
-    with open(hist, "w") as f:
-        json.dump(record, f)
-    assert read_manifest(root)["txn"] == 1
-    publish_tables(spark, root, _frames(spark, 2), txn_id=2, writer="a")
-    m = read_manifest(root)
-    # the replay completed the swap using ITS OWN commit record
-    assert m == record
-    # ...while a DIFFERENT writer replaying that txn conflicts
-    from f1_lakehouse_spark.sources.txn import CommitConflictError
+    real_create = txn.create_exclusive
 
+    def create_then_crash(path, payload):
+        real_create(path, payload)
+        raise Crash
+
+    with monkeypatch.context() as m:
+        m.setattr(txn, "create_exclusive", create_then_crash)
+        with pytest.raises(Crash):
+            publish_tables(spark, root, _frames(spark, 2), txn_id=2, writer="a")
+    m2 = read_manifest(root)
+    assert m2["txn"] == 2 and m2["writer"] == "a"
+    publish_tables(spark, root, _frames(spark, 99), txn_id=2, writer="a")
+    assert read_manifest(root) == m2
+    assert _rows(manifest_read_table(spark, root, "silver", m2)) == [
+        (i, 2) for i in range(10)
+    ]
     with pytest.raises(CommitConflictError):
         publish_tables(spark, root, _frames(spark, 3), txn_id=2, writer="b")
 
@@ -373,7 +374,7 @@ def test_mor_delete_read_compact_cycle(spark, tmp_path):
     assert len(_delete_files(tbl, 0)) == 2
     base0 = base_dir(tbl)
     mor_compact(spark, tbl, "id")
-    # pointer swapped atomically to the new generation; the displaced
+    # the new generation is live at its claim; the displaced
     # generation (base + deletes) survives one compaction cycle
     assert base_dir(tbl) != base0
     assert _os.path.isdir(base0)
@@ -435,45 +436,44 @@ def test_table_changes_classification(spark, tmp_path):
         )
 
 
-def test_occ_loser_stages_then_cleans_and_rolls_winner_forward(spark, tmp_path):
+def test_occ_loser_stages_then_cleans_and_winner_stays_live(
+    spark, tmp_path, monkeypatch
+):
     """The racy path the guard cannot catch: the loser passes the guard
-    (manifest still old), STAGES its version dirs, then loses the O_EXCL
-    arbitration. It must (a) roll the crashed winner's commit record
-    forward to the live manifest — otherwise every retry re-derives the
-    same txn id against the stale manifest and livelocks — and (b) remove
-    its own orphan staging before re-raising."""
-    import json
+    (txn 1 still live), STAGES its version dirs, and meanwhile the winner
+    commits txn 2. The loser's exclusive create then fails: it removes
+    its own orphan staging and raises, and the winner's record — live
+    since its create — stays the snapshot, so the retry loop converges at
+    the next id."""
     import os as _os
 
-    from f1_lakehouse_spark.sources.txn import MANIFEST, CommitConflictError
+    import f1_lakehouse_spark.sources.txn as txn
+    from f1_lakehouse_spark.sources.txn import CommitConflictError
 
     root = str(tmp_path / "m")
     publish_tables(spark, root, _frames(spark, 1), txn_id=1, writer="a")
-    # forge writer b's crash: its txn-2 commit record exists, the live
-    # manifest still points at txn 1
-    b_record = {
-        "txn": 2,
-        "tables": {"silver": "v0000000002-b", "gold": "v0000000002-b"},
-        "writer": "b",
-    }
-    with open(_os.path.join(root, f"{MANIFEST}.v{2:010d}"), "w") as f:
-        json.dump(b_record, f)
-    assert read_manifest(root)["txn"] == 1
+    real_stage = txn._stage_writes
 
-    # writer a passes the guard, stages (including a table only IT
-    # writes, so the surviving parent dir proves staging really ran),
-    # then loses the arbitration
+    def stage_then_lose(root_, tables, version, fail_after_writes):
+        real_stage(root_, tables, version, fail_after_writes)
+        if version.endswith("-a"):  # writer b commits txn 2 meanwhile
+            publish_tables(spark, root, _frames(spark, 2), txn_id=2, writer="b")
+
+    monkeypatch.setattr(txn, "_stage_writes", stage_then_lose)
+    # writer a stages (including a table only IT writes, so the surviving
+    # parent dir proves staging really ran), then loses the arbitration
     loser_tables = {**_frames(spark, 99), "extra": _frames(spark, 99)["gold"]}
     with pytest.raises(CommitConflictError):
         publish_tables(spark, root, loser_tables, txn_id=2, writer="a")
-    # (a) the winner was rolled forward: the record IS the commit
-    assert read_manifest(root) == b_record
-    # (b) staging genuinely happened (parent dir created by the stage
-    # write survives) and the orphan version dirs were cleaned
+    b_record = read_manifest(root, txn=2)
+    assert b_record["writer"] == "b" and read_manifest(root) == b_record
     assert _os.path.isdir(_os.path.join(root, "extra"))
     assert _os.listdir(_os.path.join(root, "extra")) == []
     assert not _os.path.isdir(_os.path.join(root, "silver", "v0000000002-a"))
-    # the retry loop now converges: re-read shows txn 2, retry with 3
+    assert _rows(manifest_read_table(spark, root, "silver", b_record)) == [
+        (i, 2) for i in range(10)
+    ]
+    # the retry loop converges: re-read shows txn 2, retry with 3
     publish_tables(spark, root, loser_tables, txn_id=3, writer="a")
     assert read_manifest(root)["txn"] == 3
 

@@ -1,11 +1,11 @@
 """Round-11 lifecycle mechanics beyond the differential gate.
 
-- sources/txn.py hardening (r10 ADVICE): the final live-pointer swap is
-  monotonic (a stalled winner resuming after being rolled forward can no
-  longer rewind the snapshot), every record names its writer so an
-  equal-txn collision between writers always conflicts, publish_staged is
-  crash-replay idempotent even after its branch was fast-forwarded, and
-  manifest history is expirable with tag/branch pins.
+- sources/txn.py hardening: the exclusive record is the commit, so a
+  stalled winner resuming after a newer commit can never rewind the
+  snapshot (nor a replayed staging its branch head), every record names
+  its writer so an equal-txn collision between writers always conflicts,
+  publish_staged is crash-replay idempotent even after its branch was
+  fast-forwarded, and manifest history is expirable with tag/branch pins.
 - sources/mor.py hardening + upsert: fragment commits are O_EXCL-
   arbitrated (racing deletes can't overwrite each other), a commit
   displaced by a racing compaction is redone rather than silently lost,
@@ -47,56 +47,168 @@ def _frames(spark, tag: int):
 
 
 # ---------------------------------------------------------------------------
-# txn.py: monotonic final swap / stalled-winner resume
+# txn.py: the record is the commit — a stalled winner cannot rewind
 # ---------------------------------------------------------------------------
 
 
-def test_stalled_winner_cannot_rewind_live_pointer(spark, tmp_path):
-    """The r10 ADVICE medium: winner W creates txn-2's commit record then
-    stalls before its swap; loser L conflicts (rolling W forward to
-    live=2) and retries as txn 3. When W resumes, its swap must be a
-    no-op — the live pointer never moves backwards."""
+class _Stop(Exception):
+    """A simulated crash at a monkeypatched commit step."""
+
+
+def _hold_thread_a(monkeypatch, root: str, ref: str = MANIFEST):
+    """Hold thread ``a`` at its last commit write: in a layout that keeps
+    a live pointer file (``ref`` under ``root``), that file's replacing
+    write; otherwise right after its record's exclusive create. Returns
+    (held, release) events."""
+    import threading
+
+    import f1_lakehouse_spark.sources.commit as commit
+    import f1_lakehouse_spark.sources.txn as txn
+
+    pointer = os.path.join(root, ref)
+    held, release = threading.Event(), threading.Event()
+    real_write, real_create = commit.atomic_write, txn.create_exclusive
+
+    def hold() -> None:
+        if threading.current_thread().name == "a" and not held.is_set():
+            held.set()
+            assert release.wait(120)
+
+    def atomic_write(path, payload):
+        if path == pointer:
+            hold()
+        return real_write(path, payload)
+
+    def create_exclusive(path, payload):
+        real_create(path, payload)
+        if not os.path.exists(os.path.join(root, MANIFEST)):
+            hold()
+
+    monkeypatch.setattr(commit, "atomic_write", atomic_write)
+    monkeypatch.setattr(txn, "create_exclusive", create_exclusive)
+    return held, release
+
+
+def _in_thread_a(fn, outcomes: list, done):
+    import threading
+
+    def body():
+        try:
+            fn()
+            outcomes.append("ok")
+        except Exception as e:  # the outcome is what the test asserts on
+            outcomes.append(e)
+        finally:
+            done.set()
+
+    t = threading.Thread(target=body, name="a")
+    t.start()
+    return t
+
+
+def test_stalled_winner_cannot_rewind_live_pointer(spark, tmp_path, monkeypatch):
+    """Writer ``a`` commits txn 2 and is held at its last commit write.
+    Meanwhile ``b`` conflicts on txn 2 and commits txn 3. After ``a``
+    resumes, the live txn is still 3 (never back to 2), ``b``'s next
+    publish at the live id + 1 commits a new txn id (or raises), and txn
+    3 still reads ``b``'s rows."""
+    import threading
+
     root = str(tmp_path / "m")
-    publish_tables(spark, root, _frames(spark, 1), txn_id=1, writer="w")
-    # W stalls between its commit record and its live swap
-    with pytest.raises(SimulatedCrash):
-        publish_tables(
-            spark, root, _frames(spark, 2), txn_id=2, writer="w",
-            fail_after_record=True,
-        )
-    assert read_manifest(root)["txn"] == 1  # record exists, swap never ran
-    # L conflicts on txn 2 and rolls W forward
-    with pytest.raises(CommitConflictError):
-        publish_tables(spark, root, _frames(spark, 99), txn_id=2, writer="l")
-    assert read_manifest(root)["txn"] == 2
-    # L retries with txn 3 and wins the timeline
-    publish_tables(spark, root, _frames(spark, 3), txn_id=3, writer="l")
-    m3 = read_manifest(root)
-    assert m3["txn"] == 3
-    # W resumes its crashed txn-2 publish: replay must no-op, never
-    # presenting the stale txn-2 snapshot as live
-    publish_tables(spark, root, _frames(spark, 2), txn_id=2, writer="w")
-    assert read_manifest(root) == m3
+    publish_tables(spark, root, _frames(spark, 1), txn_id=1, writer="a")
+    held, release = _hold_thread_a(monkeypatch, root)
+    outcomes: list = []
+    a = _in_thread_a(
+        lambda: publish_tables(spark, root, _frames(spark, 2), txn_id=2, writer="a"),
+        outcomes,
+        threading.Event(),
+    )
+    try:
+        assert held.wait(120)
+        with pytest.raises(CommitConflictError):
+            publish_tables(spark, root, _frames(spark, 99), txn_id=2, writer="b")
+        publish_tables(spark, root, _frames(spark, 3), txn_id=3, writer="b")
+        assert read_manifest(root)["txn"] == 3
+    finally:
+        release.set()
+        a.join(180)
+    assert not a.is_alive() and outcomes == ["ok"], outcomes
+    assert read_manifest(root)["txn"] == 3, "the live txn went back"
+    # b re-reads the live snapshot, as the conflict message says, and
+    # publishes its next batch at the following id
+    nxt = read_manifest(root)["txn"] + 1
+    try:
+        publish_tables(spark, root, _frames(spark, 4), txn_id=nxt, writer="b")
+    except (CommitConflictError, ValueError):
+        pass
+    else:
+        assert nxt == 4, f"b's next publish reused txn {nxt}"
+    from f1_lakehouse_spark.sources.txn import manifest_read_table
+
+    silver3 = manifest_read_table(spark, root, "silver", read_manifest(root, txn=3))
+    assert sorted(tuple(r) for r in silver3.collect()) == [(i, 3) for i in range(10)]
+
+
+def test_staged_replay_racing_newer_staging_never_moves_branch_back(
+    spark, tmp_path, monkeypatch
+):
+    """Writer ``a`` stages txn 2 on branch ``wap`` and stops right after
+    its record. Its replay races ``b``'s staging of txn 3 on the same
+    branch, held at its last commit write if it makes one: afterwards the
+    branch head is txn 3, and it stays there."""
+    import f1_lakehouse_spark.sources.txn as txn
+
+    root = str(tmp_path / "m")
+    publish_tables(spark, root, _frames(spark, 1), txn_id=1, writer="etl")
+
+    def stage_a():
+        publish_staged(spark, root, _frames(spark, 2), txn_id=2, branch="wap", writer="a")
+
+    real_create = txn.create_exclusive
+
+    def create_then_stop(path, payload):
+        real_create(path, payload)
+        raise _Stop
+
+    with monkeypatch.context() as m:
+        m.setattr(txn, "create_exclusive", create_then_stop)
+        with pytest.raises(_Stop):
+            stage_a()
+    with monkeypatch.context() as m:
+        held, release = _hold_thread_a(m, root, ref=os.path.join("_refs", "wap"))
+        outcomes: list = []
+        a = _in_thread_a(stage_a, outcomes, held)
+        try:
+            # a is held at its ref write, or has finished without one
+            assert held.wait(120)
+            publish_staged(
+                spark, root, _frames(spark, 3), txn_id=3, branch="wap", writer="b"
+            )
+        finally:
+            release.set()
+            a.join(180)
+    assert not a.is_alive() and outcomes == ["ok"], outcomes
+    assert read_ref(root, "wap") == 3, "the branch head moved back"
+    stage_a()
+    assert read_ref(root, "wap") == 3
 
 
 def test_commit_manifest_swap_is_guarded_directly(spark, tmp_path):
-    """Unit-level guard check: _commit_manifest invoked with a stale view
-    of the world (the resume-inside-the-function case the API-level test
-    can't reach) must not move the live pointer backwards."""
-    from f1_lakehouse_spark.sources.txn import _commit_manifest
+    """Unit-level check of the commit step: a resumed txn-2 commit, with
+    the stale view of the world it read long ago, finds its own record
+    and changes nothing — the live snapshot stays txn 3."""
+    from f1_lakehouse_spark.sources.txn import _commit
 
     root = str(tmp_path / "m")
     publish_tables(spark, root, _frames(spark, 1), txn_id=1, writer="w")
     cur1 = read_manifest(root)
     publish_tables(spark, root, _frames(spark, 2), txn_id=2, writer="w")
+    rec2 = read_manifest(root, txn=2)
     publish_tables(spark, root, _frames(spark, 3), txn_id=3, writer="w")
     m3 = read_manifest(root)
-    # stage txn-2's dirs again so the resumed commit has something to name
-    frames = _frames(spark, 2)
-    # a resumed txn-2 commit (guard was passed long ago, cur snapshot
-    # stale) finds its own record and must SKIP the swap
-    _commit_manifest(root, cur1, frames, 2, "w")
+    _commit(root, cur1, _frames(spark, 2), 2, "w")
     assert read_manifest(root) == m3
+    assert read_manifest(root, txn=2) == rec2
 
 
 # ---------------------------------------------------------------------------
@@ -124,11 +236,12 @@ def test_default_writer_conflicts_with_staged_branch(spark, tmp_path):
 
 @pytest.mark.parametrize("stop", ["live", "after_record"])
 @pytest.mark.parametrize("first", ["default", "etl"])
-def test_default_and_named_writer_collide(spark, tmp_path, first, stop):
+def test_default_and_named_writer_collide(spark, tmp_path, monkeypatch, first, stop):
     """The default writer and an ``etl`` writer publishing one txn id
-    conflict whichever commits first, whether the first one's txn is live
-    or only its record exists (it crashed before the swap): the first is
-    live afterwards with its rows, and the second's stage is removed."""
+    conflict whichever commits first, whether the first one's publish
+    completed or crashed right after its record: the first is live
+    afterwards with its rows, and the second stages nothing."""
+    import f1_lakehouse_spark.sources.txn as txn
     from f1_lakehouse_spark.sources.txn import manifest_read_table
 
     root = str(tmp_path / "m")
@@ -143,17 +256,23 @@ def test_default_and_named_writer_collide(spark, tmp_path, first, stop):
     if stop == "live":
         publish(first, 2)
     else:
-        with pytest.raises(SimulatedCrash):
-            publish(first, 2, fail_after_record=True)
-        assert read_manifest(root)["txn"] == 1
+        real_create = txn.create_exclusive
+
+        def create_then_stop(path, payload):
+            real_create(path, payload)
+            raise _Stop
+
+        with monkeypatch.context() as m:
+            m.setattr(txn, "create_exclusive", create_then_stop)
+            with pytest.raises(_Stop):
+                publish(first, 2)
     with pytest.raises(CommitConflictError):
         publish(second, 99)
     live = read_manifest(root)
     assert live["txn"] == 2 and live["writer"] == first
     silver = manifest_read_table(spark, root, "silver", live)
     assert sorted(tuple(r) for r in silver.collect()) == [(i, 2) for i in range(10)]
-    if stop == "after_record":  # the second passed the guard and staged
-        assert not os.path.isdir(os.path.join(root, "silver", f"v0000000002-{second}"))
+    assert not os.path.isdir(os.path.join(root, "silver", f"v0000000002-{second}"))
 
 
 # ---------------------------------------------------------------------------
@@ -229,7 +348,9 @@ def test_expire_history_branch_pin(spark, tmp_path):
     publish_tables(spark, root, _frames(spark, 3), txn_id=3, writer="w")
     # hold on to txn 3 (live+newest); txn 2 is branch-pinned; txn 1 expires
     assert expire_history(root, keep_n=1) == [1]
-    assert read_manifest(root, txn=2) is not None
+    from f1_lakehouse_spark.sources.txn import read_ref_manifest
+
+    assert read_ref_manifest(root, "wap")["txn"] == 2
 
 
 # ---------------------------------------------------------------------------
@@ -470,16 +591,12 @@ def test_mor_racing_compactors_one_conflicts(spark, tmp_path, monkeypatch):
     assert [e for e in os.listdir(tbl) if e.startswith("_staging_")] == []
 
 
-@pytest.mark.parametrize("stop", ["after_claim", "after_advance"])
-def test_mor_crashed_compactor_is_rolled_forward(spark, tmp_path, monkeypatch, stop):
-    """A compaction that stops after claiming g1 (or after moving the
-    pointer, before its carry-forward) is completed by the next
-    compaction: a delete committed into g0 after the fold's snapshot
-    survives."""
+def test_mor_crashed_compactor_is_rolled_forward(spark, tmp_path, monkeypatch):
+    """A compaction that stops right after claiming g1, before its
+    carry-forward, has committed: g1 is live at its claim. The next
+    compaction carries forward the delete committed into g0 after the
+    fold's snapshot before it folds, so the delete survives."""
     import f1_lakehouse_spark.sources.mor as mor
-
-    class Stop(Exception):
-        pass
 
     tbl = _mor_base(spark, tmp_path)
     real_claim = mor._claim_generation
@@ -490,27 +607,15 @@ def test_mor_crashed_compactor_is_rolled_forward(spark, tmp_path, monkeypatch, s
         assert mor._commit_fragment(table_dir, 0, "deletes", part) is True
         shutil.rmtree(part_dir)
         assert real_claim(table_dir, staging, gen)
-        if stop == "after_claim":
-            raise Stop
-        return True
-
-    def carry(*args):
-        raise Stop
+        raise _Stop
 
     with monkeypatch.context() as m:
         m.setattr(mor, "_claim_generation", claim)
-        m.setattr(mor, "_carry_fragment_forward", carry)
-        with pytest.raises(Stop):
+        with pytest.raises(_Stop):
             mor.mor_compact(spark, tbl, "id")
-    assert mor._live_gen(tbl) == (0 if stop == "after_claim" else 1)
-    if stop == "after_claim":
-        # the next compaction loses the claim and publishes the winner's g1
-        with pytest.raises(CommitConflictError):
-            mor.mor_compact(spark, tbl, "id")
-        assert mor._live_gen(tbl) == 1
-    else:
-        mor.mor_compact(spark, tbl, "id")
-        assert mor._live_gen(tbl) == 2
+    assert mor._live_gen(tbl) == 1
+    mor.mor_compact(spark, tbl, "id")
+    assert mor._live_gen(tbl) == 2
     assert set(_mor_view(spark, tbl)) == set(range(10)) - {5}
     assert [e for e in os.listdir(tbl) if e.startswith("_staging_")] == []
 
@@ -816,9 +921,9 @@ def test_vacuum_orphans_classes_and_age_gate(spark, tmp_path):
 # ---------------------------------------------------------------------------
 
 
-def test_mor_compaction_carries_forward_late_fragments(spark, tmp_path):
+def test_mor_compaction_carries_forward_late_fragments(spark, tmp_path, monkeypatch):
     """A fragment committed while the compaction's fold job is running
-    (writer's pointer re-verify still sees the old pointer → reports
+    (writer's re-verify still sees the old generation → reports
     success) must be carried forward into the new generation — the
     ordering the displaced-commit redo cannot catch."""
     import shutil as _sh
@@ -827,24 +932,19 @@ def test_mor_compaction_carries_forward_late_fragments(spark, tmp_path):
 
     tbl = _mor_base(spark, tmp_path)
     mor.mor_delete(spark, tbl, "id", F.col("id") == 0)  # folded normally
-    real_publish = mor._publish_generation
+    real_claim = mor._claim_generation
 
-    def publish_with_late_commit(table_dir, gen):
+    def claim_after_late_commit(table_dir, staging, gen):
         # the racing writer's fragment lands AFTER the fold snapshot and
-        # BEFORE the swap; its own re-verify passes (pointer still old)
-        if gen == 1:
-            mor._publish_generation = real_publish
-            keys = spark.createDataFrame([(5,)], "id int")
-            staging, part, _ = mor._stage_single_file(keys, table_dir)
-            assert mor._commit_fragment(table_dir, 0, "deletes", part) is True
-            _sh.rmtree(staging, ignore_errors=True)
-        real_publish(table_dir, gen)
+        # BEFORE the claim; its own re-verify passes (g0 still live)
+        keys = spark.createDataFrame([(5,)], "id int")
+        part_dir, part, _ = mor._stage_single_file(keys, table_dir)
+        assert mor._commit_fragment(table_dir, 0, "deletes", part) is True
+        _sh.rmtree(part_dir, ignore_errors=True)
+        return real_claim(table_dir, staging, gen)
 
-    mor._publish_generation = publish_with_late_commit
-    try:
-        mor.mor_compact(spark, tbl, "id")
-    finally:
-        mor._publish_generation = real_publish
+    monkeypatch.setattr(mor, "_claim_generation", claim_after_late_commit)
+    mor.mor_compact(spark, tbl, "id")
     assert mor._live_gen(tbl) == 1
     # the late delete was NOT lost: id 5 is suppressed in the new gen
     ids = {r["id"] for r in mor.mor_read(spark, tbl, "id").collect()}
@@ -873,16 +973,16 @@ def test_wap_loser_cleans_staging_on_conflict(spark, tmp_path):
         )
     assert not os.path.isdir(os.path.join(root, "silver", "v0000000002-a"))
     assert not os.path.isdir(os.path.join(root, "gold", "v0000000002-a"))
-    # the winner was still rolled forward
+    # the winner's record is the live snapshot
     assert read_manifest(root) == b_record
 
 
 def test_create_exclusive_is_content_atomic(tmp_path):
     """The exclusive record create commits CONTENT atomically (link of a
     fully-written tmp): a second create fails, the first one's payload is
-    complete, and no tmp litter remains. ``advance`` only ever moves a
-    pointer to a higher ordinal."""
-    from f1_lakehouse_spark.sources.commit import advance, create_exclusive
+    complete, and no tmp litter remains. ``claim_rename`` moves a staged
+    directory onto a free name, and never onto a claimed one."""
+    from f1_lakehouse_spark.sources.commit import claim_rename, create_exclusive
 
     path = str(tmp_path / "rec")
     create_exclusive(path, '{"txn": 1}')
@@ -892,19 +992,13 @@ def test_create_exclusive_is_content_atomic(tmp_path):
     assert json.load(open(path)) == {"txn": 1}  # loser never clobbers
     assert [f for f in os.listdir(tmp_path) if ".tmp" in f] == []
 
-    ptr = str(tmp_path / "ptr")
-
-    def gen_of(text):
-        return int(text.lstrip("g"))
-
-    assert advance(ptr, 5, "g5", gen_of) is True  # a missing pointer is lower
-    assert advance(ptr, 4, "g4", gen_of) is False
-    assert open(ptr).read() == "g5"  # a lower ordinal is a no-op
-    assert advance(ptr, 5, "g05", gen_of) is False
-    assert open(ptr).read() == "g5"  # an equal one is a no-op
-    assert advance(ptr, 6, "g6", gen_of) is True
-    assert open(ptr).read() == "g6"  # a higher one replaces the pointer
-    assert [f for f in os.listdir(tmp_path) if ".tmp" in f] == []
+    for stage in ("s1", "s2"):
+        os.makedirs(tmp_path / stage)
+        (tmp_path / stage / "part").write_text(stage)
+    assert claim_rename(str(tmp_path / "s1"), str(tmp_path / "g1")) is True
+    assert claim_rename(str(tmp_path / "s2"), str(tmp_path / "g1")) is False
+    assert (tmp_path / "g1" / "part").read_text() == "s1"  # the winner's
+    assert (tmp_path / "s2" / "part").read_text() == "s2"  # loser untouched
 
 
 # --- Bloom-filter runtime join filter (operators/joins.py) -------------------

@@ -991,3 +991,6 @@ def test_mvcc_versions_listable_and_as_of_readable(spark):
         assert as_of(silver, 3).count() == live.count()
         # pruned version: None, not an exception
         assert as_of(silver, 1) is None
+        # each commit expired the history to its two newest records
+        records = sorted(f for f in os.listdir(silver) if f.startswith("_MANIFEST.v"))
+        assert records == [f"_MANIFEST.v{t:010d}" for t in (2, 3)], records

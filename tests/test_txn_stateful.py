@@ -1,17 +1,18 @@
 """Stateful property test for the manifest transaction layer (r11).
 
 Hypothesis drives random interleavings of the full maintenance surface —
-publish, crash-before-record, own-replay, stage-on-branch, fast-forward
-(including the stale path), tag, drop_ref, expire_history, vacuum_orphans
-— against a pure-Python model, asserting the core safety invariants after
-every step:
+publish, crash-before-record, crash-after-record, own-replay,
+stage-on-branch, fast-forward (including the stale path), tag, drop_ref,
+expire_history, vacuum_orphans — against a pure-Python model, asserting
+the core safety invariants after every step:
 
-- the live pointer is MONOTONIC (never moves backwards);
+- the live txn is MONOTONIC (never moves backwards);
 - every table the live manifest names RESOLVES and its content equals
   what the committing transaction published (no torn/partial states
   survive any interleaving);
 - a tag's history record is never expired while the tag exists;
-- a crashed (record-less) publish never becomes visible.
+- a crashed (record-less) publish never becomes visible, and one that
+  crashed right after its record is committed.
 
 The per-step frames are single-row so a whole machine run costs seconds;
 the value of the test is the INTERLEAVINGS, which the example-based
@@ -19,6 +20,8 @@ round-trips fix in advance and this machine does not.
 """
 
 from __future__ import annotations
+
+from unittest import mock
 
 import pytest
 from hypothesis import HealthCheck, settings
@@ -32,6 +35,7 @@ from hypothesis.stateful import (
     run_state_machine_as_test,
 )
 
+import f1_lakehouse_spark.sources.txn as txn_mod
 from f1_lakehouse_spark.sources.txn import (
     SimulatedCrash,
     StaleBranchError,
@@ -47,6 +51,18 @@ from f1_lakehouse_spark.sources.txn import (
 )
 
 TABLES = ("silver", "gold")
+
+
+_REAL_CREATE = txn_mod.create_exclusive
+
+
+class _Crash(Exception):
+    """A simulated crash right after a commit record's create."""
+
+
+def _create_then_crash(path: str, payload: str) -> None:
+    _REAL_CREATE(path, payload)
+    raise _Crash
 
 
 def test_txn_state_machine(spark, tmp_path):
@@ -68,6 +84,7 @@ def test_txn_state_machine(spark, tmp_path):
             self.root = str(tmp_path / f"m{self.n}")
             self.next_txn = 1
             self.live: int | None = None        # model of the live txn
+            self.high = 0                       # highest live txn seen
             self.content: dict[int, int] = {}   # txn -> published tag
             self.tags: dict[str, int] = {}
             self.branch: int | None = None      # staged txn on branch "b"
@@ -95,6 +112,17 @@ def test_txn_state_machine(spark, tmp_path):
                     spark, self.root, frames(tag), txn, writer="w",
                     fail_after_writes=1,
                 )
+
+        @rule(tag=st.integers(0, 4))
+        def publish_crash_after_record(self, tag: int) -> None:
+            """A publish that stops right after its record has committed:
+            the record is the commit, so only its retention is skipped."""
+            txn = self._alloc()
+            with mock.patch.object(txn_mod, "create_exclusive", _create_then_crash):
+                with pytest.raises(_Crash):
+                    publish_tables(spark, self.root, frames(tag), txn, writer="w")
+            self.live = txn
+            self.content[txn] = tag
 
         @precondition(lambda self: self.live is not None)
         @rule()
@@ -160,7 +188,11 @@ def test_txn_state_machine(spark, tmp_path):
             if getattr(self, "live", None) is None:
                 return
             m = read_manifest(self.root)
-            assert m is not None and m["txn"] == self.live, (
+            assert m is not None and m["txn"] >= self.high, (
+                f"live txn went back from {self.high} to {m}"
+            )
+            self.high = m["txn"]
+            assert m["txn"] == self.live, (
                 f"live manifest {m} drifted from model txn {self.live}"
             )
             tag = self.content[self.live]
