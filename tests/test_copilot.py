@@ -11,6 +11,7 @@ from f1_lakehouse_spark.copilot.guardrails import (
     ask,
     execute_guarded,
     extract_sql,
+    guarded_sql,
     rewrite_schema_names,
     validate_select_only,
     wrap_limit,
@@ -36,14 +37,72 @@ def test_extract_sql_fenced():
         "EXPLAIN SELECT 1",
     ],
 )
-def test_validate_rejects(bad):
+def test_validate_rejects(spark, bad):
     with pytest.raises(GuardrailError):
-        validate_select_only(bad)
+        validate_select_only(spark, bad)
 
 
-def test_validate_accepts():
-    assert validate_select_only("SELECT * FROM t").startswith("SELECT")
-    assert validate_select_only("  with x as (select 1) select * from x")
+def test_validate_accepts(spark):
+    assert validate_select_only(spark, "SELECT * FROM t").startswith("SELECT")
+    assert validate_select_only(spark, "  with x as (select 1) select * from x")
+
+
+_REFLECT = "reflect('java.lang.Thread','sleep',CAST(1500 AS BIGINT))"
+
+
+@pytest.mark.parametrize(
+    "bad",
+    [
+        # Commands below a leading WITH
+        "WITH x AS (SELECT 1) UPDATE t SET a = 1",
+        "WITH s AS (SELECT 1 AS a) MERGE INTO t USING s ON t.a = s.a "
+        "WHEN MATCHED THEN DELETE",
+        # inserts are not Commands in the parsed plan
+        "WITH x AS (SELECT 1) INSERT INTO t SELECT * FROM x",
+        "WITH x AS (SELECT 1) INSERT OVERWRITE DIRECTORY '/tmp/out' SELECT * FROM x",
+        # reflection runs any static Java method, in any position
+        f"SELECT {_REFLECT} AS r",
+        "SELECT java_method('java.lang.System', 'exit', 1) AS r",
+        "SELECT try_reflect('java.lang.System', 'exit', 1) AS r",
+        f"SELECT system.builtin.{_REFLECT} AS r",
+        f"SELECT (SELECT max({_REFLECT}) FROM t) AS r",
+        f"WITH x AS (SELECT {_REFLECT} AS r) SELECT * FROM x",
+        # a script transformation runs a shell command
+        "SELECT TRANSFORM(a) USING 'cat' AS (b) FROM t",
+        # text that does not parse: two statements, an open parenthesis
+        "SELECT 1 FROM t; SET spark.sql.ansi.enabled=true",
+        "SELECT (1 FROM t",
+    ],
+)
+def test_guard_refuses_hidden_writes_and_code(spark, bad):
+    with pytest.raises(GuardrailError):
+        guarded_sql(spark, bad)
+
+
+@pytest.mark.parametrize(
+    "good",
+    [
+        "SELECT o_orderkey FROM orders_kw WHERE o_orderpriority LIKE '%delete%'",
+        "SELECT o_orderstatus AS set FROM orders_kw",
+    ],
+)
+def test_guard_accepts_reads_with_keywords(spark, good):
+    load_table(spark, SF_DIR, "orders").createOrReplaceTempView("orders_kw")
+    df = execute_guarded(spark, good, max_rows=5)
+    assert df.count() <= 5
+
+
+@pytest.mark.parametrize(
+    "hidden",
+    [
+        "SELECT IDENTIFIER('reflect')('java.lang.Math', 'abs', -1) AS r",
+        "SELECT sum(id) OVER w AS s FROM range(3) "
+        "WINDOW w AS (PARTITION BY java_method('java.lang.Math', 'abs', id))",
+    ],
+)
+def test_guard_refuses_reflection_resolved_at_analysis(spark, hidden):
+    with pytest.raises(GuardrailError):
+        execute_guarded(spark, hidden)
 
 
 def test_schema_rewrite():
@@ -109,15 +168,15 @@ def test_suggest_chart_shapes(spark):
     line = spark.createDataFrame(
         [(1, 2.0)], "lapnumber int, median_laptime double"
     )
-    assert suggest_chart(line) == "line"
+    assert suggest_chart(line, 1) == "line"
     bar = spark.createDataFrame([("a", 1.0)], "team string, pts double")
-    assert suggest_chart(bar) == "bar"  # numeric + 1 row <= 25
+    assert suggest_chart(bar, 1) == "bar"  # numeric + 1 row <= 25
     table_wide = spark.createDataFrame(
         [(str(i),) for i in range(30)], "name string"
     )
-    assert suggest_chart(table_wide) == "table"  # no numeric column
+    assert suggest_chart(table_wide, 30) == "table"  # no numeric column
     big = spark.createDataFrame([(i, float(i)) for i in range(40)], "k int, v double")
-    assert suggest_chart(big) == "table"  # numeric but > 25 rows, no trend axis
+    assert suggest_chart(big, 40) == "table"  # numeric but > 25 rows, no trend axis
 
 
 def test_ask_json_payload_and_fallback(spark):
@@ -140,6 +199,7 @@ def test_ask_json_payload_and_fallback(spark):
     out = ask_json(spark, "show regions by key", translator)
     assert out["chart"] == "bar" and out["message"] == "small lookup"
     assert out["df"].count() == 5
+    assert sorted(out["rows"]["r_regionkey"]) == [0, 1, 2, 3, 4]
     assert out["sql"].startswith("SELECT * FROM (")
 
     out2 = ask_json(spark, "list region names", translator)
