@@ -5,13 +5,17 @@ twin of the reference Streamlit app's five queries (reference
 
 Each function returns a lazy DataFrame; filters are real parameters (the
 reference's DuckDB ``$param`` binding) that Catalyst folds into pushed
-predicates.
+predicates. A repeat call over unchanged inputs and confs returns the
+identical frame (``tables.cached_per_input(..., request=True)``), so a
+dashboard rerun builds nothing.
 """
 
 from __future__ import annotations
 
+import functools
 import os
 import threading
+import weakref
 from collections import OrderedDict
 from urllib.parse import unquote, urlparse
 
@@ -20,7 +24,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from f1_lakehouse_spark.functions.expressions import date_fmt
-from f1_lakehouse_spark.tables import load_table
+from f1_lakehouse_spark.tables import (
+    FRAME_MEMO_STATS,
+    cached_per_input,
+    conf_hash,
+    load_table,
+)
 
 
 def _lineitem_year(spark: SparkSession, sf_dir: str, year: int) -> DataFrame:
@@ -28,6 +37,7 @@ def _lineitem_year(spark: SparkSession, sf_dir: str, year: int) -> DataFrame:
     return li.filter(F.year("l_shipdate") == F.lit(year))
 
 
+@cached_per_input("lineitem", request=True)
 def session_date(spark: SparkSession, sf_dir: str, year: int) -> DataFrame:
     """dashboard/app.py:130-137: MIN(timestamp) of the selected scope,
     formatted yyyy-MM-dd."""
@@ -36,6 +46,7 @@ def session_date(spark: SparkSession, sf_dir: str, year: int) -> DataFrame:
     )
 
 
+@cached_per_input("lineitem", request=True)
 def kpis(spark: SparkSession, sf_dir: str, year: int) -> DataFrame:
     """dashboard/app.py:145-158: scope KPI row (counts + distincts + best)."""
     return _lineitem_year(spark, sf_dir, year).agg(
@@ -46,6 +57,7 @@ def kpis(spark: SparkSession, sf_dir: str, year: int) -> DataFrame:
     )
 
 
+@cached_per_input("lineitem", request=True)
 def fastest_topk(
     spark: SparkSession, sf_dir: str, year: int, k: int = 50
 ) -> DataFrame:
@@ -58,6 +70,7 @@ def fastest_topk(
     )
 
 
+@cached_per_input("lineitem", request=True)
 def team_summary_view(spark: SparkSession, sf_dir: str, year: int) -> DataFrame:
     """dashboard/app.py:196-205: per-group rollup of the scope."""
     return (
@@ -71,6 +84,7 @@ def team_summary_view(spark: SparkSession, sf_dir: str, year: int) -> DataFrame:
     )
 
 
+@cached_per_input("lineitem", request=True)
 def pace_curve(spark: SparkSession, sf_dir: str, year: int) -> DataFrame:
     """dashboard/app.py:231-242: exact MEDIAN measure per sequence position."""
     return (
@@ -93,17 +107,22 @@ _CACHEABLE_LEAVES = frozenset({"LocalRelation", "OneRowRelation", "Range"})
 _cache: OrderedDict[tuple, tuple[object, pd.DataFrame, int]] = OrderedDict()
 _cache_lock = threading.Lock()
 _cache_state = {"app": None, "bytes": 0, "hits": 0, "misses": 0, "bypasses": 0}
+# per DataFrame object and row cap: (capped frame, _plan_part of it), so a
+# repeat of a memoized request frame analyzes and walks nothing
+_planned: weakref.WeakKeyDictionary[DataFrame, dict[int, tuple]] = (
+    weakref.WeakKeyDictionary()
+)
 
 
 def _scala_list(seq) -> list:
     return [seq.apply(i) for i in range(seq.size())]
 
 
-def _local_file_stats(uris: list[str]) -> tuple | None:
+def _local_file_stats(uris: tuple[str, ...]) -> tuple | None:
     """``(uri, st_ino, st_mtime_ns, st_size)`` per input file, or None when
     one is not a local file the driver can stat."""
     out = []
-    for uri in sorted(uris):
+    for uri in uris:
         parsed = urlparse(uri)
         if parsed.scheme not in ("", "file"):
             return None
@@ -115,14 +134,24 @@ def _local_file_stats(uris: list[str]) -> tuple | None:
     return tuple(out)
 
 
-def _result_key(capped: DataFrame) -> tuple[tuple, object] | None:
-    """(cache key, optimized plan) of ``capped``, or None when its result
-    must not be reused. No Spark job runs."""
-    spark = capped.sparkSession
-    plan = capped._jdf.queryExecution().optimizedPlan()
+@functools.lru_cache(maxsize=None)
+def _current_like(jvm):
+    """Spark's ``TreePattern.CURRENT_LIKE``, looked up once per gateway (a
+    lookup is a few Py4J round trips, 1.5-3 ms)."""
+    return jvm.org.apache.spark.sql.catalyst.trees.TreePattern.CURRENT_LIKE()
+
+
+def _plan_part(capped: DataFrame) -> tuple | None:
+    """(analyzed plan, its semanticHash, sorted input file URIs) of
+    ``capped``, or None when its result must not be reused. Nothing is
+    optimized and no Spark job runs."""
+    plan = capped._jdf.queryExecution().analyzed()
+    current_like = _current_like(capped.sparkSession._jvm)
     uris: list[str] = []
     for p in [plan, *_scala_list(plan.subqueriesAll())]:
-        if not p.deterministic():
+        # current_date()/now() count as deterministic until the optimizer
+        # folds them (ComputeCurrentTime); its pruning bit finds them
+        if not p.deterministic() or p.containsPattern(current_like):
             return None
         for leaf in _scala_list(p.collectLeaves()):
             name = leaf.nodeName()
@@ -133,16 +162,26 @@ def _result_key(capped: DataFrame) -> tuple[tuple, object] | None:
                 uris.extend(relation.inputFiles())
             elif name not in _CACHEABLE_LEAVES:
                 return None
-    files = _local_file_stats(uris)
+    return plan, plan.semanticHash(), tuple(sorted(uris))
+
+
+def _capped(df: DataFrame, max_rows: int) -> tuple[DataFrame, tuple | None]:
+    """``df.limit(max_rows)`` and its ``_plan_part``, once per frame object."""
+    per_df = _planned.setdefault(df, {})
+    found = per_df.get(max_rows)
+    if found is None:
+        capped = df.limit(max_rows)
+        found = per_df[max_rows] = (capped, _plan_part(capped))
+    return found
+
+
+def _result_key(spark: SparkSession, plan_part: tuple) -> tuple | None:
+    """The cache key of a reusable plan, or None when an input file cannot
+    be stat'ed. Application, confs and file stats are read on every call."""
+    files = _local_file_stats(plan_part[2])
     if files is None:
         return None
-    key = (
-        spark.sparkContext.applicationId,
-        spark._jsparkSession.sessionState().conf().getAllConfs().hashCode(),
-        plan.semanticHash(),
-        files,
-    )
-    return key, plan
+    return (spark.sparkContext.applicationId, conf_hash(spark), plan_part[1], files)
 
 
 def _lookup(key: tuple, plan) -> pd.DataFrame | None:
@@ -177,7 +216,9 @@ def _store(key: tuple, plan, pdf: pd.DataFrame) -> None:
 
 def result_cache_stats() -> dict[str, int]:
     """The client result cache's counters: hits, misses, bypasses (plans
-    never cached), entries held and the pandas bytes they hold."""
+    never cached), entries held and the pandas bytes they hold; and the
+    request-frame memo's (``tables.cached_per_input(..., request=True)``)
+    reuses and builds."""
     with _cache_lock:
         return {
             "hits": _cache_state["hits"],
@@ -185,6 +226,8 @@ def result_cache_stats() -> dict[str, int]:
             "bypasses": _cache_state["bypasses"],
             "entries": len(_cache),
             "bytes": _cache_state["bytes"],
+            "frame_reuses": FRAME_MEMO_STATS["reuses"],
+            "frame_builds": FRAME_MEMO_STATS["builds"],
         }
 
 
@@ -193,13 +236,13 @@ def to_client(df: DataFrame, max_rows: int = 10_000) -> pd.DataFrame:
     materialization, always behind a row cap. A repeat of a cached plan
     over unchanged input files returns a copy of the stored result and
     runs no Spark job."""
-    capped = df.limit(max_rows)
-    found = _result_key(capped)
-    if found is None:
+    capped, plan_part = _capped(df, max_rows)
+    key = None if plan_part is None else _result_key(capped.sparkSession, plan_part)
+    if key is None:
         with _cache_lock:
             _cache_state["bypasses"] += 1
         return capped.toPandas()
-    key, plan = found
+    plan = plan_part[0]
     hit = _lookup(key, plan)
     if hit is not None:
         return hit

@@ -114,8 +114,9 @@ def rewrite_schema_names(sql: str, mapping: dict[str, str]) -> str:
 
 
 def wrap_limit(sql: str, max_rows: int = DEFAULT_MAX_ROWS) -> str:
-    """O4: hard row-cap wrap — identical trick works verbatim in Spark SQL."""
-    return f"SELECT * FROM ({sql}) AS safe_view LIMIT {int(max_rows)}"
+    """O4: hard row-cap wrap — identical trick works verbatim in Spark SQL.
+    The newline ends a trailing ``--`` comment before the closing paren."""
+    return f"SELECT * FROM ({sql}\n) AS safe_view LIMIT {int(max_rows)}"
 
 
 def guarded_sql(

@@ -49,6 +49,11 @@ reference's own semantics); its shape is driver-covered by the generic
 covering the whole slice so the reference's presentation-order LIMIT
 cannot make the selected SET nondeterministic (the k=50 presentation cut
 itself stays pytest-verified in tests/test_f1_domain.py).
+
+Every registered adapter is a memoized request frame
+(``tables.cached_per_input(..., request=True)`` naming the tables its
+mapping reads): a repeat over unchanged inputs and confs returns the
+identical frame.
 """
 
 from __future__ import annotations
@@ -58,7 +63,7 @@ from pyspark.sql import functions as F
 
 from f1_lakehouse_spark.f1 import analytics, models
 from f1_lakehouse_spark.registry import register
-from f1_lakehouse_spark.tables import load_table
+from f1_lakehouse_spark.tables import cached_per_input, load_table
 
 SEASON = 1996  # present at every SF (shipdate years span 1995-2001)
 SESSION = "R"
@@ -224,6 +229,7 @@ def _dss(spark: SparkSession, sf_dir: str) -> DataFrame:
     "over the documented lineitem→silver mapping",
     tags=("f1", "gold", "J1", "W1"),
 )
+@cached_per_input("lineitem", request=True)
 def f1_driver_session_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _dss(spark, sf_dir)
 
@@ -242,6 +248,7 @@ GROUP BY 1, 2, 3, 4, 5""",
     "re-aggregation) over the mapped dss",
     tags=("f1", "gold", "A4", "P6"),
 )
+@cached_per_input("lineitem", request=True)
 def f1_team_event_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     return models.team_event_summary(_dss(spark, sf_dir))
 
@@ -258,6 +265,7 @@ FROM silver WHERE season = {SEASON} AND session_code = '{SESSION}'""",
     "MIN(lapstartdate) date-formatted) over the mapped silver frame",
     tags=("f1", "dashboard", "F11"),
 )
+@cached_per_input("lineitem", request=True)
 def f1_session_date(spark: SparkSession, sf_dir: str) -> DataFrame:
     return analytics.session_date(silver_laps_analog(spark, sf_dir), SEASON, SESSION)
 
@@ -274,6 +282,7 @@ FROM silver WHERE season = {SEASON} AND session_code = '{SESSION}'""",
     "lap count, distinct drivers/teams, best lap) over the mapped silver",
     tags=("f1", "dashboard", "A1", "A5"),
 )
+@cached_per_input("lineitem", request=True)
 def f1_session_kpis(spark: SparkSession, sf_dir: str) -> DataFrame:
     return analytics.session_kpis(silver_laps_analog(spark, sf_dir), SEASON, SESSION)
 
@@ -297,6 +306,7 @@ FROM dss WHERE season = {SEASON} AND session_code = '{SESSION}'""",
     "guarantee via the ORDER BY covering all output columns.",
     tags=("f1", "dashboard", "F8", "F9", "O3"),
 )
+@cached_per_input("lineitem", request=True)
 def f1_fastest_laps(spark: SparkSession, sf_dir: str) -> DataFrame:
     return analytics.fastest_laps(_dss(spark, sf_dir), SEASON, SESSION, k=None)
 
@@ -312,6 +322,7 @@ GROUP BY 1""",
     "exact median laptime by lap number) over the mapped silver",
     tags=("f1", "dashboard", "A7"),
 )
+@cached_per_input("lineitem", request=True)
 def f1_pace_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     return analytics.pace_curve(silver_laps_analog(spark, sf_dir), SEASON, SESSION)
 
@@ -343,6 +354,7 @@ FROM pace p LEFT JOIN weather w USING (season, round, session_code)""",
     "integer-valued temps keep the AVGs exact across engines",
     tags=("f1", "notebook", "J2"),
 )
+@cached_per_input("lineitem", "orders", request=True)
 def f1_weather_pace_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return analytics.weather_pace_join(
         _dss(spark, sf_dir), weather_analog(spark, sf_dir)
@@ -363,6 +375,7 @@ HAVING COUNT(DISTINCT drivernumber) > 1 OR COUNT(DISTINCT team) > 1""",
     "exists to catch",
     tags=("f1", "notebook", "A11"),
 )
+@cached_per_input("lineitem", request=True)
 def f1_driver_alias_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return analytics.driver_alias_audit(silver_laps_analog(spark, sf_dir))
 
@@ -380,6 +393,7 @@ GROUP BY 1""",
     "exact across engines",
     tags=("f1", "notebook", "A1"),
 )
+@cached_per_input("orders", request=True)
 def f1_team_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     return analytics.team_points(results_analog(spark, sf_dir), SEASON)
 
@@ -393,5 +407,6 @@ FROM results GROUP BY 1, 2""",
     "distribution per season)",
     tags=("f1", "notebook", "A1"),
 )
+@cached_per_input("orders", request=True)
 def f1_classification_breakdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     return analytics.classification_breakdown(results_analog(spark, sf_dir))

@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import functools
 import os
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -106,36 +107,72 @@ def input_fingerprint(sf_dir: str, names: tuple[str, ...]) -> tuple:
     return tuple(out)
 
 
-def cached_per_input(*inputs: str):
+def conf_hash(spark: SparkSession) -> int:
+    """Hash of every SQL conf set on the session: analysis and
+    optimization read them, so a memo of a plan or its result keys on it."""
+    return spark._jsparkSession.sessionState().conf().getAllConfs().hashCode()
+
+
+# the request-frame memo's counters (cached_per_input(..., request=True))
+FRAME_MEMO_STATS = {"reuses": 0, "builds": 0}
+_frame_memo_lock = threading.Lock()
+
+
+def cached_per_input(*inputs: str, request: bool = False):
     """Decorator for builders ``fn(spark, sf_dir, ...)`` of a frame (or
     driver-side model) shared by several queries: one entry per decorated
     function, keyed by (session, absolute sf_dir, fingerprint of
     ``inputs``). A hit returns the identical object; a key change first
     releases the old value (unpersists each cached DataFrame in it, tuple
     elements included). The builder does its own persist + materialize;
-    consumers borrow the value and never unpersist it."""
+    consumers borrow the value and never unpersist it. Extra arguments
+    stay out of the key.
+
+    ``request=True`` memoizes a lazy request frame (a dashboard page query,
+    an ``f1_*`` view): the key also holds ``conf_hash`` and the call's
+    (hashable) arguments, so one entry is kept per argument tuple of the
+    current inputs and confs, and a repeat call builds nothing. Entries
+    of any other session, fingerprint or conf are dropped on first sight.
+    Two racing first calls may both build; either frame is correct.
+
+    ``inputs`` must name every table the value reads: a rewrite of an
+    undeclared one would be served stale (tests/test_declared_inputs.py)."""
 
     def deco(build):
         entry: dict[tuple, object] = {}
 
         @functools.wraps(build)
         def cached(spark: SparkSession, sf_dir: str, *args, **kwargs):
-            key = (
+            state = (
                 spark.sparkContext.applicationId,
                 os.path.abspath(sf_dir),
                 input_fingerprint(sf_dir, inputs),
-            )
-            if key in entry:
-                return entry[key]
-            for old in entry.values():
-                for v in old if isinstance(old, tuple) else (old,):
-                    if isinstance(v, DataFrame) and v.is_cached:
-                        v.unpersist()
-            entry.clear()
-            entry[key] = build(spark, sf_dir, *args, **kwargs)
-            return entry[key]
+            ) + ((conf_hash(spark),) if request else ())
+            call = (args, tuple(sorted(kwargs.items()))) if request else ()
+            key = (state, call)
+            value = entry.get(key)
+            if value is not None:
+                if request:
+                    with _frame_memo_lock:
+                        FRAME_MEMO_STATS["reuses"] += 1
+                return value
+            for old_key in list(entry):
+                if old_key[0] != state:
+                    old = entry.pop(old_key, None)
+                    for v in old if isinstance(old, tuple) else (old,):
+                        if isinstance(v, DataFrame) and v.is_cached:
+                            v.unpersist()
+            value = build(spark, sf_dir, *args, **kwargs)
+            if request:
+                with _frame_memo_lock:
+                    FRAME_MEMO_STATS["builds"] += 1
+                # keyed on the confs the build ran under (load_table pins some)
+                key = (state[:-1] + (conf_hash(spark),), call)
+            entry[key] = value
+            return value
 
         cached.entries = entry
+        cached.inputs = inputs
         return cached
 
     return deco

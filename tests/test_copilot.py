@@ -111,13 +111,31 @@ def test_schema_rewrite():
 
 
 def test_wrap_limit():
-    assert wrap_limit("SELECT 1", 7) == "SELECT * FROM (SELECT 1) AS safe_view LIMIT 7"
+    assert wrap_limit("SELECT 1", 7) == "SELECT * FROM (SELECT 1\n) AS safe_view LIMIT 7"
 
 
 def test_execute_guarded_caps_rows(spark):
     load_table(spark, SF_DIR, "nation").createOrReplaceTempView("nation_v")
     df = execute_guarded(spark, "```sql\nSELECT * FROM nation_v\n```", max_rows=10)
     assert df.count() == 10
+
+
+def test_trailing_line_comment_keeps_the_row_cap(spark):
+    from f1_lakehouse_spark.copilot.guardrails import ask_json
+
+    load_table(spark, SF_DIR, "nation").createOrReplaceTempView("nation_c")
+    df = execute_guarded(
+        spark, "```sql\nSELECT * FROM nation_c -- every nation\n```", max_rows=3
+    )
+    assert df.count() == 3
+    translator = TemplateTranslator(
+        {
+            "nations": '{"sql": "SELECT n_nationkey FROM nation_c -- the keys"}',
+            "count": "SELECT COUNT(*) AS n FROM nation_c -- how many",
+        }
+    )
+    assert len(ask_json(spark, "nations", translator, max_rows=4)["rows"]) == 4
+    assert ask_json(spark, "count", translator)["rows"]["n"].tolist() == [25]
 
 
 def test_ask_end_to_end(spark):
@@ -215,7 +233,7 @@ def test_ask_json_payload_and_fallback(spark):
         spark, "gold regions", translator, schema_mapping={"gold": "global_temp"}
     )
     assert out3["sql"] == (
-        "SELECT * FROM (SELECT r_regionkey, r_name FROM global_temp.region_g)"
+        "SELECT * FROM (SELECT r_regionkey, r_name FROM global_temp.region_g\n)"
         " AS safe_view LIMIT 200"
     )
     assert out3["df"].count() == 5

@@ -1,10 +1,13 @@
 """The plan-keyed result cache inside ``analytics.to_client``: a repeat of a
 plan over unchanged local files runs no Spark job, and anything that could
 change the answer (a rewritten or added input file, a non-deterministic
-expression, a non-file source, a new application) does not hit."""
+expression, a time function, a non-file source, a new application) does
+not hit. The memoized request frames: a repeat call returns the identical
+frame, and new inputs, confs or arguments build a new one."""
 
 from __future__ import annotations
 
+import shutil
 import sys
 import uuid
 from concurrent.futures import ThreadPoolExecutor
@@ -16,6 +19,11 @@ from pyspark import SparkContext
 from pyspark.sql import functions as F
 
 from f1_lakehouse_spark import analytics
+from f1_lakehouse_spark.registry import REGISTRY, _ensure_loaded
+from f1_lakehouse_spark.tables import table_path
+from tests.conftest import SF_DIR
+
+_ensure_loaded()
 
 
 def _write(path, ids: list[int]) -> None:
@@ -158,3 +166,103 @@ def test_concurrent_requests_keep_the_byte_count(spark, tmp_path, monkeypatch):
     stats = analytics.result_cache_stats()
     assert stats["entries"] <= 3
     assert stats["bytes"] == stats["entries"] * size
+
+
+# --- request frames and the analyzed-plan key --------------------------------
+
+
+def test_distinct_aggregate_views_key_the_same_on_every_build(spark):
+    """Two countDistincts over derived columns gave optimized plans whose
+    hash differed from build to build; the analyzed plan's does not."""
+    for name in ("f1_session_kpis", "f1_driver_alias_audit"):
+        build = getattr(REGISTRY[name].fn, "__wrapped__", REGISTRY[name].fn)
+        cold = analytics.to_client(build(spark, SF_DIR))
+        before = analytics.result_cache_stats()
+        for _ in range(8):
+            pd.testing.assert_frame_equal(analytics.to_client(build(spark, SF_DIR)), cold)
+        assert (_delta(before, "hits"), _delta(before, "misses")) == (8, 0), name
+
+
+def test_repeat_request_returns_the_identical_frame_without_a_job(spark):
+    first = analytics.kpis(spark, SF_DIR, 1996)
+    analytics.to_client(first)
+    before = analytics.result_cache_stats()
+    (again, rows), jobs = _jobs_during(
+        spark,
+        lambda: (lambda df: (df, analytics.to_client(df)))(analytics.kpis(spark, SF_DIR, 1996)),
+    )
+    assert again is first
+    assert jobs == 0
+    assert (_delta(before, "frame_reuses"), _delta(before, "frame_builds")) == (1, 0)
+    assert _delta(before, "hits") == 1
+    assert rows["n_lines"].tolist()[0] > 0
+    view = REGISTRY["f1_fastest_laps"].fn
+    assert view(spark, SF_DIR) is view(spark, SF_DIR)
+
+
+def test_request_frame_is_rebuilt_for_new_inputs_confs_and_arguments(spark, tmp_path):
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    lineitem = sf / "lineitem.parquet"
+    shutil.copyfile(table_path(SF_DIR, "lineitem"), lineitem)
+    lineitem.chmod(0o644)
+    first = analytics.kpis(spark, str(sf), 1996)
+    n = analytics.to_client(first)["n_lines"].tolist()[0]
+    assert analytics.kpis(spark, str(sf), 1996) is first
+    assert analytics.kpis(spark, str(sf), 1997) is not first
+
+    table = pq.read_table(lineitem)
+    pq.write_table(table.slice(0, table.num_rows // 2), str(lineitem))  # in place
+    rewritten = analytics.kpis(spark, str(sf), 1996)
+    assert rewritten is not first
+    assert analytics.to_client(rewritten)["n_lines"].tolist()[0] < n
+
+    key = "spark.sql.caseSensitive"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "true" if old == "false" else "false")
+    try:
+        assert analytics.kpis(spark, str(sf), 1996) is not rewritten
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_concurrent_request_frames_count_every_call(spark):
+    years = (1995, 1996, 1997, 1998)
+    want = {y: analytics.to_client(analytics.kpis(spark, SF_DIR, y)) for y in years}
+    before = analytics.result_cache_stats()
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(8) as pool:
+            got = list(
+                pool.map(
+                    lambda i: analytics.to_client(analytics.kpis(spark, SF_DIR, years[i % 4])),
+                    range(40),
+                )
+            )
+    finally:
+        sys.setswitchinterval(interval)
+    for i, pdf in enumerate(got):
+        pd.testing.assert_frame_equal(pdf, want[years[i % 4]])
+    assert _delta(before, "frame_reuses") + _delta(before, "frame_builds") == 40
+    assert _delta(before, "hits") == 40
+
+
+def test_time_functions_bypass_even_inside_a_subquery(spark, tmp_path):
+    path = tmp_path / "t.parquet"
+    _write(path, list(range(5)))
+    spark.read.parquet(str(path)).createOrReplaceTempView("result_cache_t")
+    frames = [
+        lambda: spark.read.parquet(str(path)).select("id", F.current_date().alias("d")),
+        lambda: spark.read.parquet(str(path)).filter(F.current_timestamp().isNotNull()),
+        lambda: spark.sql(
+            "SELECT id FROM result_cache_t WHERE id < "
+            "(SELECT count(*) FROM result_cache_t WHERE now() IS NOT NULL)"
+        ),
+    ]
+    before = analytics.result_cache_stats()
+    for _ in range(2):
+        for frame in frames:
+            analytics.to_client(frame())
+    assert _delta(before, "bypasses") == 6
+    assert (_delta(before, "hits"), _delta(before, "misses")) == (0, 0)
