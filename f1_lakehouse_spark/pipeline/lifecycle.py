@@ -1782,7 +1782,7 @@ GROUP BY event_type
     "100 TB the delete must cost O(matched keys), never a rewrite) and "
     "that the committed key counts exactly account for the merged view's "
     "row deficit, read through the anti-join merged view, COMPACT (fold "
-    "deletes into a new base via a staged generation claim), assert the compacted "
+    "deletes into a new base, one log entry), assert the compacted "
     "content is identical to the pre-compaction merged view and the "
     "delete files are gone, and return the aggregate the oracle computes "
     "with the inverse predicates. Iceberg v2 equality-delete files / "
@@ -1796,15 +1796,15 @@ def mor_delete_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         mor_delete,
         mor_read,
         mor_write_base,
+        stats,
     )
-    from f1_lakehouse_spark.sources.mor import _delete_files  # noqa: PLC0415
 
     events = load_table(spark, sf_dir, "events")
     base = tempfile.mkdtemp(prefix="f1ls_mor_")
     tbl = os.path.join(base, "events_mor")
 
     def census() -> dict[str, int]:
-        bdir = base_dir(tbl)  # resolves the LIVE generation's base
+        bdir = base_dir(tbl)  # resolves the LIVE base
         return {
             f: os.path.getsize(os.path.join(bdir, f))
             for f in os.listdir(bdir)
@@ -1838,17 +1838,18 @@ def mor_delete_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"{n_merged} != {n1} + {n2}"
         )
         pre = sorted(tuple(r) for r in agg(merged).collect())
-        mor_compact(spark, tbl, "event_id")
-        assert _delete_files(tbl, 1) == [], (
-            "compaction left delete files in the new live generation"
+        folded = mor_compact(spark, tbl, "event_id")
+        assert stats(tbl)["delete_fragments"] == 0, (
+            "compaction left delete fragments live"
         )
         assert census() != before, "compaction did not rewrite the base"
-        # a reader pinned to the displaced generation (one-cycle
+        # a reader pinned to the log before the compaction (one-cycle
         # retention) still reconstructs the same rows from base+deletes
         displaced = sorted(
-            tuple(r) for r in agg(mor_read(spark, tbl, "event_id", gen=0)).collect()
+            tuple(r)
+            for r in agg(mor_read(spark, tbl, "event_id", at=folded - 1)).collect()
         )
-        assert displaced == pre, "displaced generation lost read consistency"
+        assert displaced == pre, "displaced base lost read consistency"
         compacted = mor_read(spark, tbl, "event_id")
         post = sorted(tuple(r) for r in agg(compacted).collect())
         assert pre == post, (
@@ -2479,14 +2480,13 @@ GROUP BY event_type
 )
 def mor_upsert_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from f1_lakehouse_spark.sources.mor import (  # noqa: PLC0415
-        _delete_files,
-        _insert_files,
         base_dir,
         mor_compact,
         mor_delete,
         mor_read,
         mor_upsert,
         mor_write_base,
+        stats,
     )
 
     events = load_table(spark, sf_dir, "events")
@@ -2550,8 +2550,9 @@ def mor_upsert_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         pre = sorted(tuple(r) for r in agg(merged).collect())
         mor_compact(spark, tbl, "event_id")
-        assert _delete_files(tbl, 1) == [] and _insert_files(tbl, 1) == [], (
-            "compaction left fragments in the new live generation"
+        st = stats(tbl)
+        assert st["delete_fragments"] == st["insert_fragments"] == 0, (
+            "compaction left fragments live"
         )
         post = sorted(tuple(r) for r in agg(mor_read(spark, tbl, "event_id")).collect())
         assert pre == post, (

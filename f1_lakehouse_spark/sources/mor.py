@@ -1,77 +1,48 @@
-"""Merge-on-read (MoR) equality deletes and upserts on plain parquet
-(r10; upsert + concurrent-writer arbitration r11).
+"""Merge-on-read (MoR) equality deletes and latest-wins upserts on plain
+parquet (Iceberg v2 equality-delete files, Delta deletion vectors).
 
-The r9 row-level delete (sources/parquet_io.delete_rows_partition_scoped)
-is COPY-ON-WRITE: the affected partitions are rewritten at delete time —
-right when deletes are rare and reads are hot. Merge-on-read is the other
-side of that trade (Iceberg v2 equality-delete files, Delta deletion
-vectors): a delete commits as a tiny KEY FILE, an upsert as a tiny ROW
-FILE, the base data files are never touched, and every reader applies the
-accumulated fragments until a compaction folds them in. At 100 TB a GDPR
-delete of one user cohort is then an O(matched-keys) write instead of a
-partition rewrite, at the price of a per-read anti-join whose build side
-is the (bounded) fragment set.
+A delete commits the matched keys as a small key file and an upsert its
+rows as a small row file; the base files are never rewritten, and every
+read applies the fragments until a compaction folds them into a new base.
+At 100 TB a GDPR delete is then an O(matched keys) write instead of a
+partition rewrite (the copy-on-write side is
+``parquet_io.delete_rows_partition_scoped``), at the price of a per-read
+anti-join against the bounded fragment set.
 
-Layout — one GENERATION directory per compaction epoch; the highest
-claimed one is live. A generation is written in a staging dir and claimed
-with one rename (``commit.claim_rename``), so it appears whole or not at
-all, and nothing is replaced in place — the rule txn commits by::
+Layout: one commit log, one directory per commit::
 
-    table_dir/g{gen}/base/*.parquet          # immutable data files (seq 0)
-    table_dir/g{gen}/deletes/d{seq}.parquet  # one key file per delete
-    table_dir/g{gen}/inserts/i{seq}.parquet  # one row file per upsert
-    table_dir/g{gen}/_claims/{seq}           # one empty claim record per seq
-    table_dir/g{gen}/_FOLDED                 # g{gen-1} fragment seqs the base folded
+    table_dir/_log/{seq:010d}/base/*.parquet, _THROUGH   # a base entry
+    table_dir/_log/{seq:010d}/deletes/*.parquet          # keys deleted
+    table_dir/_log/{seq:010d}/inserts/*.parquet          # rows upserted
+    table_dir/_staging_*                                 # writes in flight
 
-Sequence semantics (Iceberg v2 sequence numbers, simplified): base rows
-carry seq 0; every committed fragment claims the next seq (shared across
-deletes and inserts, starting at 1); a fragment's seq IS its file name
-(a carried-forward fragment is renamed to a freshly claimed seq). A
-delete file at seq s suppresses every row whose seq is < s with a
-matching key; an insert file's rows shadow every LOWER-seq row with the
-same key (latest-wins upsert), so an upsert is ONE atomic file commit —
-no delete-file companion whose torn half could publish a partial MERGE.
+Every commit (base write, delete, upsert, compaction) writes its entry in
+a staging dir and renames it onto the next free seq with
+``commit.claim_rename``; a lost rename retries at the next seq. So seqs are
+dense and the log order is the commit order, whatever the kinds of the
+racing writers (Delta Lake's log rule).
 
-Concurrent writers: every claim goes through ``sources/commit`` (the
-primitives ``txn`` commits with). A fragment commit claims its seq the
-way a txn claims its id: it creates the seq's claim record exclusively
-and never removes it (only pruning the generation does), so two racing
-writers can never share a seq or overwrite one another's fragment,
-whatever their kinds; the loser of a seq claim retries with the next seq.
-After the rename the writer re-verifies the live generation: a commit
-that raced a compaction landed in a displaced generation (invisible to
-live readers), so it removes the orphan and redoes the operation against
-the new live generation. The OTHER ordering — the commit lands while the
-compaction's fold job is already running, so the writer's re-verify
-still sees the old generation — is covered by the compaction's
-CARRY-FORWARD: fragments committed after the fold's snapshot are moved
-into the new generation in sequence order. Compactions arbitrate like txn
-commits: each folds into its own staging dir and claims ``g{gen+1}`` with
-one fail-if-exists rename, so a loser raises ``txn.CommitConflictError``
-and a stalled compactor can never rewind the table (a claim below the
-live generation is never live). Crash-orphaned ``_staging_*`` dirs are
-swept by the next compaction's retention pass.
+A base's ``_THROUGH`` is the highest seq its fold covers. The live base is
+the base with the highest ``_THROUGH`` (ties: the higher seq), and the view
+is that base plus every fragment entry above its ``_THROUGH``, in seq
+order: a delete hides the lower-seq rows of its keys, an insert row shadows
+the lower-seq rows of its key. A compaction folds an exact prefix of the
+log, so nothing moves after its commit; a stalled compactor whose fold
+another one passed is never live. Compaction keeps the live base, the
+base it displaced (for readers still on it) and the fragments above the
+latter. A writer held between its log listing and its rename across two
+compactions could rename into a pruned seq, below the live base.
 
-Delete files belong to their generation: a reader that resolved the old
-generation mid-compaction still sees (old base + old fragments) — the
-same rows as the new compacted base — and the displaced generation
-survives one compaction cycle before being pruned, exactly like every
-other versioned layout in this package.
-
-Reference parity: the reference has no delete/update path at all (bronze
-is append-only, silver/gold are full rebuilds —
-/root/reference/ingestion/src/ingestion/utils.py:36-44); both delete
-strategies are the lakehouse capabilities a 100 TB deployment adds on
-top. Delta/Iceberg equivalent: ``DELETE FROM t WHERE ...`` / ``MERGE
-INTO`` with merge-on-read table properties.
+Reference parity: the reference has no delete/update path (bronze is
+append-only, silver/gold are full rebuilds); Delta/Iceberg equivalent:
+``DELETE FROM`` / ``MERGE INTO`` with merge-on-read table properties.
 """
 
 from __future__ import annotations
 
-import json
 import os
-import re
 import shutil
+import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -79,241 +50,161 @@ from pyspark.sql import functions as F
 from pyspark.sql.observation import Observation
 from pyspark.sql.types import StructType
 
-from f1_lakehouse_spark.sources.commit import atomic_write, claim_rename, create_exclusive
+from f1_lakehouse_spark.sources.commit import atomic_write, claim_rename
 from f1_lakehouse_spark.sources.txn import CommitConflictError
 
-FOLDED = "_FOLDED"
-
-CLAIMS = "_claims"
-
-_FRAGMENT_RE = re.compile(r"^[di](\d{10})\.parquet$")
-
-# a fragment commit retries when a racing compaction claims a new
-# generation mid-commit; compactions are rare maintenance ops, so more than a
-# handful of consecutive displacements means something is pathologically
-# wrong — fail loudly instead of spinning
-_MAX_COMMIT_RETRIES = 10
+LOG = "_log"
+THROUGH = "_THROUGH"
+FRAGMENT_KINDS = ("deletes", "inserts")
+# a fragment row's seq, from its part file's path
+_PART_SEQ = r"(\d{10})/(?:deletes|inserts)/[^/]*$"
+_STAGING_TTL_SECONDS = 3600.0
 
 
-def _gen_name(gen: int) -> str:
-    return f"g{gen:010d}"
+def _entry(table_dir: str, seq: int) -> str:
+    return os.path.join(table_dir, LOG, f"{seq:010d}")
 
 
-def _size_or_zero(path: str) -> int:
-    try:
-        return os.path.getsize(path)
-    except FileNotFoundError:  # vanished under a racing commit/compaction
-        return 0
+def _seqs(table_dir: str) -> list[int]:
+    """The log's seqs, ascending (create_exclusive/atomic_write tmps and
+    other non-digit names are not entries)."""
+    return sorted(int(e) for e in os.listdir(os.path.join(table_dir, LOG)) if e.isdigit())
 
 
-def _generations(table_dir: str) -> list[int]:
-    """The claimed ``g{gen}`` dirs' numbers (staging dirs are ``_staging_*``)."""
-    return [int(e[1:]) for e in os.listdir(table_dir) if e[:1] == "g" and e[1:].isdigit()]
+def _through(entry: str) -> int:
+    with open(os.path.join(entry, THROUGH)) as f:
+        return int(f.read())
 
 
-def _live_gen(table_dir: str) -> int:
-    """The live generation: the highest claimed one."""
-    gens = _generations(table_dir)
-    if not gens:
-        raise FileNotFoundError(f"{table_dir} holds no MoR generation")
-    return max(gens)
+def _bytes(path: str) -> int:
+    return sum(os.path.getsize(os.path.join(d, f)) for d, _, fs in os.walk(path) for f in fs)
+
+
+def _view(table_dir: str, at: int | None = None) -> tuple[int, list]:
+    """The view of the log up to seq ``at`` (default: all of it): (live
+    base seq, [(seq, kind, part paths)] of the fragment entries above its
+    ``_THROUGH``, seq-ascending). Walks down from the head and stops
+    at the best ``_THROUGH`` found, since a base folds less than its own
+    seq. An entry with neither ``_THROUGH`` nor a fragment dir, or one
+    that vanishes, is being pruned and skipped."""
+    base, through, frags = None, -1, []
+    for seq in reversed(_seqs(table_dir)):
+        if seq <= through:
+            break
+        if at is not None and seq > at:
+            continue
+        entry = _entry(table_dir, seq)
+        try:
+            names = os.listdir(entry)
+            if THROUGH in names and (t := _through(entry)) > through:
+                base, through = seq, t
+            frags += [
+                (seq, kind, sorted(
+                    os.path.join(entry, kind, f)
+                    for f in os.listdir(os.path.join(entry, kind))
+                    if f.endswith(".parquet")
+                ))
+                for kind in FRAGMENT_KINDS
+                if kind in names
+            ]
+        except FileNotFoundError:
+            continue
+    if base is None:
+        raise FileNotFoundError(f"{table_dir} holds no MoR base at or below seq {at}")
+    return base, frags[::-1]
 
 
 def base_dir(table_dir: str) -> str:
-    """The live generation's base directory (for file-level audits)."""
-    return os.path.join(table_dir, _gen_name(_live_gen(table_dir)), "base")
+    """The live base's directory (for file-level audits)."""
+    return os.path.join(_entry(table_dir, _view(table_dir)[0]), "base")
+
+
+def stats(table_dir: str) -> dict:
+    """The table's health: the live base's seq, the live delete and insert
+    fragment entries, the bytes under ``table_dir`` and the space
+    amplification (those bytes over the live base's)."""
+    base_seq, frags = _view(table_dir)
+    total = _bytes(table_dir)
+    return {
+        "base_seq": base_seq,
+        "delete_fragments": sum(kind == "deletes" for _, kind, _ in frags),
+        "insert_fragments": sum(kind == "inserts" for _, kind, _ in frags),
+        "bytes": total,
+        "space_amp": total / _bytes(os.path.join(_entry(table_dir, base_seq), "base")),
+    }
 
 
 def _new_staging(table_dir: str) -> str:
     return os.path.join(table_dir, f"_staging_{uuid.uuid4().hex}")
 
 
+def _append(table_dir: str, staging: str) -> int:
+    """Commit a fully written staging dir as the next log entry: rename it
+    onto the seq after the head, and onto the following one when a racing
+    commit took that. Returns the entry's seq."""
+    while True:
+        seq = _seqs(table_dir)[-1] + 1
+        if claim_rename(staging, _entry(table_dir, seq)):
+            return seq
+
+
 def mor_write_base(df: DataFrame, table_dir: str) -> None:
-    """Materialize generation 0 in a staging dir and claim ``g0`` with the
-    rename a compaction claims its generation with. Raises
-    FileExistsError on a dir that already holds a generation."""
-    os.makedirs(table_dir, exist_ok=True)
-    if not _generations(table_dir):
+    """Commit ``df`` as log entry 0, a base with ``_THROUGH`` 0. Raises
+    FileExistsError on a dir that already holds a table."""
+    os.makedirs(os.path.join(table_dir, LOG), exist_ok=True)
+    if not _seqs(table_dir):
         staging = _new_staging(table_dir)
-        df.write.mode("overwrite").parquet(os.path.join(staging, "base"))
-        if _claim_generation(table_dir, staging, 0):
+        df.write.parquet(os.path.join(staging, "base"))
+        atomic_write(os.path.join(staging, THROUGH), "0")
+        if claim_rename(staging, _entry(table_dir, 0)):
             return
         shutil.rmtree(staging, ignore_errors=True)
-    raise FileExistsError(f"{table_dir} already holds a MoR generation")
+    raise FileExistsError(f"{table_dir} already holds a MoR table")
 
 
-def _fragments(table_dir: str, gen: int, sub: str) -> list[tuple[int, str]]:
-    """Committed fragment files under g{gen}/{sub} as (seq, path),
-    seq-ascending."""
-    fdir = os.path.join(table_dir, _gen_name(gen), sub)
-    if not os.path.isdir(fdir):
-        return []
-    return sorted(
-        (int(m.group(1)), os.path.join(fdir, f))
-        for f in os.listdir(fdir)
-        if (m := _FRAGMENT_RE.match(f))
-    )
-
-
-def _delete_files(table_dir: str, gen: int) -> list[str]:
-    return [p for _, p in _fragments(table_dir, gen, "deletes")]
-
-
-def _insert_files(table_dir: str, gen: int) -> list[str]:
-    return [p for _, p in _fragments(table_dir, gen, "inserts")]
-
-
-def _claim_and_move(table_dir: str, gen: int, sub: str, src: str) -> str:
-    """Claim the next seq of generation ``gen`` — 1 + the highest claim
-    record in ``g{gen}/_claims`` (base rows are seq 0) — by creating its
-    record exclusively, then rename ``src`` in as ``{d,i}{seq}.parquet``
-    (readers never list a half file). A record is never removed before
-    its generation is pruned, so no seq is claimed twice, whatever the
-    fragment kind, and the name is this commit's alone; a claim that
-    crashes before its rename burns its seq. Returns the fragment's path."""
-    gdir = os.path.join(table_dir, _gen_name(gen))
-    claims = os.path.join(gdir, CLAIMS)
-    os.makedirs(claims, exist_ok=True)
-    os.makedirs(os.path.join(gdir, sub), exist_ok=True)
-    while True:
-        # all-digit names only: create_exclusive's *.tmp.* files are not claims
-        seq = 1 + max((int(f) for f in os.listdir(claims) if f.isdigit()), default=0)
-        try:
-            create_exclusive(os.path.join(claims, f"{seq:010d}"), "")
-        except FileExistsError:
-            continue  # another writer claimed this seq: take the next
-        target = os.path.join(gdir, sub, f"{sub[0]}{seq:010d}.parquet")
-        claim_rename(src, target)
-        return target
-
-
-def _commit_fragment(table_dir: str, gen: int, sub: str, src: str) -> bool:
-    """Move the staged parquet file into generation ``gen`` under a
-    freshly claimed seq, then re-verify the live generation. Returns
-    False when a racing compaction displaced the generation mid-commit
-    (the orphan fragment is removed; the caller redoes the operation
-    against the new live generation)."""
-    target = _claim_and_move(table_dir, gen, sub, src)
-    if _live_gen(table_dir) == gen:
-        return True
-    # a compaction claimed a newer generation between our live read and
-    # the rename: the fragment is invisible to live readers and
-    # would be pruned — remove it and let the caller redo. If the
-    # remove finds it GONE, the compaction's carry-forward sweep
-    # already moved it into the new live generation: the commit is
-    # durable, report success instead of redoing it.
-    try:
-        os.remove(target)
-    except FileNotFoundError:
-        return True
-    return False
-
-
-_STAGING_TTL_SECONDS = 3600.0
-
-
-def _carry_fragment_forward(
-    table_dir: str, new_gen: int, sub: str, path: str
-) -> None:
-    """Move a fragment a racing writer committed into the displaced
-    generation (after the fold's snapshot) into ``new_gen`` under a fresh
-    claimed seq. No live re-verify and no delete-on-displacement: if
-    yet another compaction displaces ``new_gen`` mid-carry, ITS
-    carry-forward sweep moves the fragment again — the fragment is never
-    dropped. Racing the writer's own displaced-commit cleanup is benign:
-    whoever loses the rename/remove race sees FileNotFoundError and the
-    fragment survives exactly once (the writer treats a vanished target
-    as carried-forward success)."""
-    try:
-        _claim_and_move(table_dir, new_gen, sub, path)
-    except FileNotFoundError:
-        # the writer's displaced-commit cleanup removed the source
-        # first; its redo re-commits against the live generation
-        pass
-
-
-def _sweep_staging_orphans(table_dir: str) -> None:
-    """Remove ``_staging_*`` dirs a crashed fragment commit abandoned.
-    Run from compaction's retention pass, and AGE-GATED: a staging dir is
-    only an orphan once it is older than any plausible in-flight write —
-    a compaction racing a live delete/upsert must not eat its staging
-    mid-commit (that would turn a benign race into a failed write)."""
-    import time  # noqa: PLC0415
-
-    horizon = time.time() - _STAGING_TTL_SECONDS
-    for entry in os.listdir(table_dir):
-        if not entry.startswith("_staging_"):
-            continue
-        path = os.path.join(table_dir, entry)
-        try:
-            stale = os.path.getmtime(path) < horizon
-        except OSError:
-            continue  # vanished concurrently: its writer is cleaning up
-        if stale:
-            shutil.rmtree(path, ignore_errors=True)
-
-
-def _stage_single_file(df: DataFrame, table_dir: str) -> tuple[str, str, int]:
-    """Write ``df`` as one staged parquet file; returns (staging_dir,
-    part_path, n_rows), the row count observed on the write job itself.
-    The single-file coalesce is delta-bounded by construction (delete
-    keys / upsert batches, never the base)."""
+def _stage(df: DataFrame, table_dir: str, kind: str) -> tuple[str, int]:
+    """Write ``df`` as one parquet file under ``kind`` in a new staging
+    dir; returns (staging dir, row count observed on the write job). The
+    single-file coalesce is bounded by construction (delete keys, upsert
+    batches, never the base)."""
     staging = _new_staging(table_dir)
     obs = Observation()
-    df.observe(obs, F.count(F.lit(1)).alias("n")).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(staging)
-    part = next(f for f in os.listdir(staging) if f.endswith(".parquet"))
-    return staging, os.path.join(staging, part), obs.get["n"]
+    df.observe(obs, F.count(F.lit(1)).alias("n")).coalesce(1).write.parquet(
+        os.path.join(staging, kind)
+    )
+    return staging, obs.get["n"]
 
 
 def mor_delete(
     spark: SparkSession, table_dir: str, key_col: str, predicate
 ) -> int:
-    """Commit an equality delete: write the DISTINCT keys of the rows the
-    predicate selects (evaluated on the current merged view, so a key
-    already deleted is not re-recorded) as one new delete file in the
-    live generation. The base files are NOT touched — that is the whole
-    point; the commit itself is one exclusively claimed atomic rename, and
-    a commit displaced by a racing compaction is redone against the new
-    generation (never silently lost). Returns the number of keys
-    committed. NULL predicate follows SQL DELETE tri-state semantics:
-    only TRUE deletes."""
-    for _ in range(_MAX_COMMIT_RETRIES):
-        gen = _live_gen(table_dir)
-        matched = (
-            mor_read(spark, table_dir, key_col, gen=gen)
-            .filter(F.coalesce(predicate, F.lit(False)))
-            .select(key_col)
-            .distinct()
-        )
-        staging, part, n = _stage_single_file(matched, table_dir)
-        committed = _commit_fragment(table_dir, gen, "deletes", part)
-        shutil.rmtree(staging, ignore_errors=True)
-        if committed:
-            return n
-        # generation moved mid-commit: re-evaluate against the new live
-        # merged view (the compacted base already folded older fragments)
-    raise RuntimeError(
-        f"mor_delete displaced by {_MAX_COMMIT_RETRIES} consecutive "
-        "compactions — compaction is not supposed to run in a tight loop"
+    """Commit an equality delete: the DISTINCT keys of the rows the
+    predicate selects in the live view (so a key already deleted is not
+    re-recorded), appended as one key file. The base files are NOT
+    touched. Returns the number of keys committed. A NULL predicate
+    follows SQL DELETE tri-state semantics: only TRUE deletes."""
+    matched = (
+        mor_read(spark, table_dir, key_col)
+        .filter(F.coalesce(predicate, F.lit(False)))
+        .select(key_col)
+        .distinct()
     )
+    staging, n = _stage(matched, table_dir, "deletes")
+    _append(table_dir, staging)
+    return n
 
 
 def mor_upsert(
     spark: SparkSession, table_dir: str, key_col: str, rows: DataFrame
 ) -> int:
-    """Row-level upsert (MERGE write path, Iceberg v2 delete+insert shape)
-    as ONE atomic fragment commit: the insert file's rows shadow every
-    lower-seq row with the same key (latest-wins by sequence number), so
-    no separate delete file is needed and a crash can never publish half
-    the MERGE — matched keys update, unmatched keys insert, in the same
-    commit. ``rows`` is checked, before any staging I/O, for the base
-    schema (column names and types; order and nullability are free —
-    readers scan insert files with the base schema, so a mismatched batch
-    would make the table unreadable) and for unique keys (two rows for
-    one key would make latest-wins ambiguous); both raise ValueError.
-    Returns the number of rows committed."""
+    """Row-level upsert (MERGE: matched keys update, unmatched keys insert)
+    as ONE appended row file whose rows shadow every lower-seq row of
+    their key, so a crash never publishes half a MERGE. ``rows`` is
+    checked, before any staging I/O, for the base schema (column names and
+    types; order and nullability are free — readers scan insert files with
+    the base schema) and for unique keys (two rows for one key would make
+    latest-wins ambiguous); both raise ValueError. Returns the number of
+    rows committed."""
     base = spark.read.parquet(base_dir(table_dir)).schema
     if {(f.name, f.dataType.simpleString()) for f in rows.schema} != {
         (f.name, f.dataType.simpleString()) for f in base
@@ -334,49 +225,37 @@ def mor_upsert(
             f"upsert batch has {n} rows but {n_keys} distinct "
             f"{key_col!r} keys — latest-wins needs unique keys per batch"
         )
-    for _ in range(_MAX_COMMIT_RETRIES):
-        gen = _live_gen(table_dir)
-        staging, part, _ = _stage_single_file(rows, table_dir)
-        committed = _commit_fragment(table_dir, gen, "inserts", part)
-        shutil.rmtree(staging, ignore_errors=True)
-        if committed:
-            return n
-    raise RuntimeError(
-        f"mor_upsert displaced by {_MAX_COMMIT_RETRIES} consecutive "
-        "compactions — compaction is not supposed to run in a tight loop"
-    )
+    staging, _ = _stage(rows, table_dir, "inserts")
+    _append(table_dir, staging)
+    return n
 
 
 def mor_read(
-    spark: SparkSession, table_dir: str, key_col: str, gen: int | None = None
+    spark: SparkSession, table_dir: str, key_col: str, at: int | None = None
 ) -> DataFrame:
-    """The merged view of the (live, or explicitly pinned) generation:
+    """The merged view of the log (up to seq ``at``, default all of it):
 
-    1. base rows (seq 0) not shadowed by any insert fragment's key and
+    1. base rows not shadowed by any insert fragment's key and
     2. the HIGHEST-seq insert row per key (latest-wins upsert),
     3. minus every row suppressed by a delete fragment with a HIGHER seq
        (so a delete kills earlier versions, and a later upsert re-inserts).
 
-    Scale shape: one scan per fragment kind (all insert files read with
-    the base schema, all delete files with the key's, each row's seq
-    taken from its file name), so planning cost does not grow with the
-    fragment count. The big side (base) only ever anti-joins against the
-    bounded fragment key sets — what has been deleted/upserted since the
-    last compaction — so Spark's threshold/AQE broadcasts them without any
-    explicit hint (plan-lint rule: never hint a broadcast on an unbounded
-    side); the latest-wins window runs over insert fragments only, never
-    the base."""
-    if gen is None:
-        gen = _live_gen(table_dir)
-    base = spark.read.parquet(os.path.join(table_dir, _gen_name(gen), "base"))
-    ins = _insert_files(table_dir, gen)
-    dels = _delete_files(table_dir, gen)
+    Scale shape: one scan per fragment kind over the part files, listed by
+    path (all insert files read with the base schema, all delete files
+    with the key's), so planning cost does not grow with the fragment
+    count. The base only ever anti-joins against the bounded fragment key
+    sets, which Spark's threshold/AQE broadcasts without a hint (plan-lint
+    rule: never hint a broadcast on an unbounded side); the latest-wins
+    window runs over insert fragments only."""
+    base_seq, frags = _view(table_dir, at)
+    base = spark.read.parquet(os.path.join(_entry(table_dir, base_seq), "base"))
+    ins = [p for _, kind, parts in frags if kind == "inserts" for p in parts]
+    dels = [p for _, kind, parts in frags if kind == "deletes" for p in parts]
     if not ins and not dels:
         return base
 
     def scan(schema: StructType, paths: list[str]) -> DataFrame:
-        # _FRAGMENT_RE fixes every name as {d,i}{seq:010d}.parquet
-        seq = F.substring("_metadata.file_name", 2, 10).cast("long")
+        seq = F.regexp_extract("_metadata.file_path", _PART_SEQ, 1).cast("long")
         return spark.read.schema(schema).parquet(*paths).withColumn("_seq", seq)
 
     rows = base.withColumn("_seq", F.lit(0))
@@ -407,106 +286,76 @@ def mor_read(
     return rows.drop("_seq")
 
 
-def _claim_generation(table_dir: str, staging: str, gen: int) -> bool:
-    """Commit generation ``gen`` by renaming a staging dir to ``g{gen}``;
-    the claim makes it live when no higher generation exists. Nothing
-    creates ``g{gen}`` before its claim and a rename onto an existing
-    directory fails, so of the claims of one generation exactly one wins.
-    Returns whether this one did. (A stale compactor can win a number
-    retention already pruned; that generation is below the live one, so
-    it is never live and the next compaction prunes it.)"""
-    return claim_rename(staging, os.path.join(table_dir, _gen_name(gen)))
+def _prune(table_dir: str) -> None:
+    """Remove every entry but the head (so a fresh listing never picks a
+    pruned seq), the live base, the base it displaced and the fragments above the latter's
+    ``_THROUGH``."""
+    seqs = _seqs(table_dir)
+    bases = {}
+    for seq in seqs:
+        try:
+            bases[seq] = _through(_entry(table_dir, seq))
+        except FileNotFoundError:
+            pass  # a fragment, or an entry being pruned
+    ranked = sorted(bases, key=lambda s: (bases[s], s), reverse=True)  # live first
+    live = ranked[0]
+    displaced = next((s for s in ranked if bases[s] < bases[live]), live)
+    low = bases[displaced]
+    keep = {seqs[-1], live, displaced}
+    # ascending: a reader walking down from a stale head that finds an
+    # entry gone finds every base below it gone too, so it raises instead
+    # of reading a view with fragments missing
+    for seq in seqs:
+        if seq not in keep and (seq in bases or seq <= low):
+            shutil.rmtree(_entry(table_dir, seq), ignore_errors=True)
 
 
-def _carry_forward(table_dir: str, gen: int) -> None:
-    """Carry the fragments of ``g{gen-1}`` that live generation ``gen``'s
-    fold did not cover (those not in ``_FOLDED``) forward into it, in
-    ascending seq. Idempotent: the claim's winner runs it, a loser runs it
-    for a winner that stopped after its claim, and the next compaction
-    runs it for one that stopped mid-carry. Once a later generation is
-    live there is nothing left to do: that generation's compaction ran
-    this carry before its fold snapshot."""
-    if _live_gen(table_dir) != gen:
-        return
-    try:
-        with open(os.path.join(table_dir, _gen_name(gen), FOLDED)) as f:
-            folded = json.load(f)
-    except FileNotFoundError:
-        return  # generation 0 folded nothing
-    late = sorted(
-        (seq, sub, path)
-        for sub in ("deletes", "inserts")
-        for seq, path in _fragments(table_dir, gen - 1, sub)
-        if seq not in folded[sub]
-    )
-    for _, sub, path in late:  # ascending seq: relative order preserved
-        _carry_fragment_forward(table_dir, gen, sub, path)
+def _sweep_staging_orphans(table_dir: str) -> None:
+    """Remove ``_staging_*`` dirs a crashed commit abandoned. AGE-GATED: a
+    staging dir is only an orphan once it is older than any plausible
+    in-flight write, so a compaction never eats a live writer's staging."""
+    horizon = time.time() - _STAGING_TTL_SECONDS
+    for entry in os.listdir(table_dir):
+        if not entry.startswith("_staging_"):
+            continue
+        path = os.path.join(table_dir, entry)
+        try:
+            stale = os.path.getmtime(path) < horizon
+        except OSError:
+            continue  # vanished concurrently: its writer is cleaning up
+        if stale:
+            shutil.rmtree(path, ignore_errors=True)
 
 
-def mor_compact(spark: SparkSession, table_dir: str, key_col: str) -> None:
-    """Fold the live generation's fragments into the next generation and
-    prune generations older than the displaced one (plus any
-    crash-orphaned staging dirs). A reader that resolved the old
-    generation mid-scan still has it in full (base + fragments) for one
-    compaction cycle; readers resolving the live generation see either
-    the old or the new one — both the same rows, never a half state.
-
-    The commit follows the txn protocol. The fold is written into this
-    compactor's own ``_staging_*`` dir beside ``_FOLDED``, the fragment
-    seqs it covers (snapshotted BEFORE the merged plan lists fragment
-    files, so a fragment in the plan but not the snapshot is merely
-    re-applied — idempotent on a base that already folded it). Renaming
-    the staging dir to ``g{gen+1}`` claims the generation and makes it
-    live; :func:`_carry_forward` then moves fragments committed into
-    ``g{gen}`` during the fold (their writer's re-verify read the old
-    generation, so the commit reported success — without the carry they
-    would be silently lost). A compaction that loses the claim runs the
-    carry for the winner, removes its staging and raises
-    :class:`CommitConflictError`; a compactor resuming after later
-    compactions claims a generation below the live one, so it can never
-    move the table back."""
-    gen = _live_gen(table_dir)
-    # finish a predecessor that stopped mid-carry BEFORE the snapshot, so
-    # nothing it stranded in g{gen-1} is pruned below
-    _carry_forward(table_dir, gen)
-    folded = {
-        sub: [s for s, _ in _fragments(table_dir, gen, sub)]
-        for sub in ("deletes", "inserts")
-    }
-    merged = mor_read(spark, table_dir, key_col, gen=gen)
+def mor_compact(spark: SparkSession, table_dir: str, key_col: str) -> int:
+    """Fold the view up to the head seq T into a new base entry with
+    ``_THROUGH`` T, then prune and sweep stale staging. Every entry up to
+    T is committed (the rename that commits an entry takes its seq), so
+    the fold is an exact prefix of the log and fragments committed during
+    it apply on top of the new base. Returns the new entry's seq, or
+    raises :class:`CommitConflictError` when it is not the live base
+    right after its append (another compaction folded further, or as far
+    and appended later), so a stalled compactor never becomes live."""
+    head = _seqs(table_dir)[-1]
+    base_seq, frags = _view(table_dir, head)
     # output sizing: the fold's anti-join/union would otherwise write one
     # near-empty file per shuffle partition; the merged rows are bounded
-    # by the generation's on-disk bytes (base + insert fragments), so a
-    # ceil(bytes / 128 MB) coalesce keeps ~128 MB files at any scale
-    # without a count job (the module is local-FS-addressed throughout)
-    gen_dir = os.path.join(table_dir, _gen_name(gen))
-    # the walk races with concurrent fragment commits (supported here:
-    # the carry-forward exists precisely for them) — a displaced fragment
-    # can vanish between listing and stat, so a vanished file counts 0;
-    # delete fragments are skipped (they only shrink the fold's output —
-    # the bound stays conservative for base + insert bytes) and claim
-    # records are empty
-    gen_bytes = sum(
-        _size_or_zero(os.path.join(dirpath, f))
-        for dirpath, _dirs, files in os.walk(gen_dir)
-        for f in files
-        if os.path.basename(dirpath) != "deletes"
+    # by the base and insert bytes (deletes only shrink it), so a
+    # ceil(bytes / 128 MB) coalesce keeps ~128 MB files without a count job
+    fold_bytes = _bytes(os.path.join(_entry(table_dir, base_seq), "base")) + sum(
+        os.path.getsize(p) for _, kind, parts in frags if kind == "inserts" for p in parts
     )
-    n_files = max(1, -(-gen_bytes // (128 << 20)))
     staging = _new_staging(table_dir)
-    merged.coalesce(n_files).write.mode("overwrite").parquet(
-        os.path.join(staging, "base")
-    )
-    atomic_write(os.path.join(staging, FOLDED), json.dumps(folded))
-    claimed = _claim_generation(table_dir, staging, gen + 1)
-    _carry_forward(table_dir, gen + 1)
-    if not claimed:
-        shutil.rmtree(staging, ignore_errors=True)
+    mor_read(spark, table_dir, key_col, at=head).coalesce(
+        max(1, -(-fold_bytes // (128 << 20)))
+    ).write.parquet(os.path.join(staging, "base"))
+    atomic_write(os.path.join(staging, THROUGH), str(head))
+    seq = _append(table_dir, staging)
+    if _view(table_dir)[0] != seq:
         raise CommitConflictError(
-            f"generation {gen + 1} of {table_dir} was claimed by another "
-            f"compaction — the table is already compacted past generation {gen}"
+            f"another compaction of {table_dir} folded at least through seq "
+            f"{head}; base entry {seq} is not live"
         )
-    for old in _generations(table_dir):
-        if old < gen:
-            shutil.rmtree(os.path.join(table_dir, _gen_name(old)), ignore_errors=True)
+    _prune(table_dir)
     _sweep_staging_orphans(table_dir)
+    return seq

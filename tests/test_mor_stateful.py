@@ -1,22 +1,20 @@
-"""Stateful property test for the merge-on-read layer (r11).
+"""Stateful property test for the merge-on-read layer.
 
 Hypothesis drives random interleavings of equality deletes, latest-wins
-upserts, and compactions — plus a compaction that crashes right after its
-generation claim and a fragment commit that crashes right after its seq
-claim record — against a pure-Python dict model of the table, asserting
-after every step that the live generation never goes back and that the
-merged view equals the model exactly (a crashed compaction has committed
-its content-identical generation; a crashed fragment commit committed
-nothing).
-This is the test that pins the SEQUENCE-NUMBER semantics (a later delete
-kills an earlier upsert, a later upsert survives an earlier delete,
-stacked upserts resolve latest-wins, compaction is content-identical)
-under orderings the example-based tests fix in advance.
+upserts and compactions against a pure-Python dict model of the table.
+Every commit is one rename onto the next seq of the log, so the crash
+rules stop a delete, upsert or compaction right before that rename (it
+committed nothing) or right after it (it committed), and one rule commits
+a delete or upsert between a compaction's snapshot and its commit. After
+every step the live base never goes back and the merged view equals the
+model, so no compaction ever changes it. This pins the SEQUENCE-NUMBER
+semantics (a later delete kills an earlier upsert, a later upsert
+survives an earlier delete, stacked upserts resolve latest-wins) under
+orderings the example-based tests fix in advance.
 
 Also includes a genuinely CONCURRENT commit test: threads racing
-delete/upsert commits through the O_EXCL seq arbitration must all land
-(distinct sequence numbers, no overwrites) and the merged view must
-reflect every commit.
+delete/upsert commits onto the log must all land (distinct seqs, no
+overwrites) and the merged view must reflect every commit.
 """
 
 from __future__ import annotations
@@ -44,21 +42,27 @@ from f1_lakehouse_spark.sources.mor import (
     mor_read,
     mor_upsert,
     mor_write_base,
+    stats,
 )
 
 N_BASE = 8  # ids 0..7, grp = id % 3
 
 
 class _Crash(Exception):
-    """A simulated crash right after a claim."""
+    """A simulated crash at the commit rename."""
 
 
-def _then_crash(real):
-    def step(*args):
-        assert real(*args) is not False
+def _crash_at_commit(after: bool):
+    """``claim_rename`` that stops the committer right before the rename,
+    or right after it claimed the name."""
+    real = mor_mod.claim_rename
+
+    def claim(src, dst):
+        if after and not real(src, dst):
+            return False  # a racing commit took this seq: retry, as usual
         raise _Crash
 
-    return step
+    return claim
 
 
 def test_mor_state_machine(spark, tmp_path):
@@ -73,7 +77,7 @@ def test_mor_state_machine(spark, tmp_path):
             )
             mor_write_base(base, self.tbl)
             self.model: dict[int, int] = {i: i % 3 for i in range(N_BASE)}
-            self.gen = 0
+            self.base = 0
 
         @rule(lo=st.integers(0, N_BASE + 3), hi=st.integers(0, N_BASE + 3))
         def delete_range(self, lo: int, hi: int) -> None:
@@ -104,31 +108,62 @@ def test_mor_state_machine(spark, tmp_path):
         def compact(self) -> None:
             mor_compact(spark, self.tbl, "id")
 
-        @rule()
-        def compact_crash_after_claim(self) -> None:
-            claim = _then_crash(mor_mod._claim_generation)
-            with mock.patch.object(mor_mod, "_claim_generation", claim):
+        def _write(self, delete: bool, key: int) -> None:
+            """Delete ``key`` or upsert it to grp 15, and apply it to the
+            model (a delete of an absent key commits no key)."""
+            if delete:
+                n = mor_delete(spark, self.tbl, "id", F.col("id") == key)
+                assert n == (key in self.model)
+            else:
+                rows = spark.createDataFrame([(key, 15)], "id int, grp int")
+                assert mor_upsert(spark, self.tbl, "id", rows) == 1
+            self._apply(delete, key)
+
+        def _apply(self, delete: bool, key: int) -> None:
+            if delete:
+                self.model.pop(key, None)
+            else:
+                self.model[key] = 15
+
+        @rule(
+            op=st.sampled_from(["delete", "upsert", "compact"]),
+            key=st.integers(0, N_BASE + 3),
+            after=st.booleans(),
+        )
+        def crash_at_commit(self, op: str, key: int, after: bool) -> None:
+            with mock.patch.object(mor_mod, "claim_rename", _crash_at_commit(after)):
                 with pytest.raises(_Crash):
-                    mor_compact(spark, self.tbl, "id")
+                    if op == "compact":
+                        mor_compact(spark, self.tbl, "id")
+                    else:
+                        self._write(op == "delete", key)
+            if after and op != "compact":
+                self._apply(op == "delete", key)
 
         @rule(key=st.integers(0, N_BASE + 3), delete=st.booleans())
-        def fragment_crash_after_claim_record(self, key: int, delete: bool) -> None:
-            create = _then_crash(mor_mod.create_exclusive)
-            with mock.patch.object(mor_mod, "create_exclusive", create):
-                with pytest.raises(_Crash):
-                    if delete:
-                        mor_delete(spark, self.tbl, "id", F.col("id") == key)
-                    else:
-                        rows = spark.createDataFrame([(key, 15)], "id int, grp int")
-                        mor_upsert(spark, self.tbl, "id", rows)
+        def write_during_compaction(self, key: int, delete: bool) -> None:
+            """A delete or upsert commits between the compaction's
+            snapshot and its commit."""
+            real = mor_mod.claim_rename
+            pending = [True]
+
+            def claim(src, dst):
+                if pending and os.path.isdir(os.path.join(src, "base")):
+                    pending.clear()
+                    self._write(delete, key)
+                return real(src, dst)
+
+            with mock.patch.object(mor_mod, "claim_rename", claim):
+                mor_compact(spark, self.tbl, "id")
+            assert not pending
 
         @invariant()
-        def live_generation_never_decreases(self) -> None:
+        def live_base_never_goes_back(self) -> None:
             if not hasattr(self, "tbl"):
                 return
-            gen = mor_mod._live_gen(self.tbl)
-            assert gen >= self.gen, f"live generation went back from {self.gen} to {gen}"
-            self.gen = gen
+            base = stats(self.tbl)["base_seq"]
+            assert base >= self.base, f"live base went back from {self.base} to {base}"
+            self.base = base
 
         @invariant()
         def merged_view_equals_model(self) -> None:
@@ -156,13 +191,11 @@ def test_mor_state_machine(spark, tmp_path):
 
 
 def test_mor_concurrent_commits_all_land(spark, tmp_path):
-    """Four barrier-released threads race delete/upsert commits: the
-    O_EXCL seq arbitration must give every commit a distinct fragment
-    (no silent overwrite — the lost-GDPR-delete hazard), and the merged
-    view must reflect all of them. Disjoint key ranges make the expected
-    final state order-independent."""
-    from f1_lakehouse_spark.sources.mor import _delete_files, _insert_files
-
+    """Four barrier-released threads race delete/upsert commits: each
+    lost rename retries at the next seq, so every commit gets its own log
+    entry (no silent overwrite — the lost-GDPR-delete hazard), and the
+    merged view must reflect all of them. Disjoint key ranges make the
+    expected final state order-independent."""
     tbl = str(tmp_path / "t")
     base = spark.createDataFrame(
         [(i, i % 3) for i in range(40)], "id int, grp int"
@@ -200,8 +233,8 @@ def test_mor_concurrent_commits_all_land(spark, tmp_path):
         t.join(timeout=600)
     assert errs == [], errs
     # every commit landed as its own fragment — distinct seqs, no clobber
-    assert len(_delete_files(tbl, 0)) == 2
-    assert len(_insert_files(tbl, 0)) == 2
+    st_ = stats(tbl)
+    assert (st_["delete_fragments"], st_["insert_fragments"]) == (2, 2)
     got = {r["id"]: r["grp"] for r in mor_read(spark, tbl, "id").collect()}
     expect = {i: i % 3 for i in range(40)}
     for k in list(range(0, 5)) + list(range(10, 15)):
@@ -209,10 +242,6 @@ def test_mor_concurrent_commits_all_land(spark, tmp_path):
     expect[20] = expect[21] = 99
     expect[30] = 88
     assert got == expect
-    # filenames prove the arbitration: four distinct sequence numbers
-    names = sorted(
-        os.path.basename(p)
-        for p in _delete_files(tbl, 0) + _insert_files(tbl, 0)
-    )
-    seqs = sorted(int(n[1:11]) for n in names)
-    assert seqs == [1, 2, 3, 4], names
+    # the log proves the arbitration: the base and four dense seqs
+    log = sorted(os.listdir(os.path.join(tbl, "_log")))
+    assert [int(e) for e in log] == [0, 1, 2, 3, 4], log

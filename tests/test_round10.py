@@ -369,24 +369,28 @@ def test_mor_delete_read_compact_cycle(spark, tmp_path):
     assert n2 == 1  # only id 1 — id 0 is already gone from the view
     ids = {r["id"] for r in mor_read(spark, tbl, "id").collect()}
     assert ids == {2, 4, 5, 7, 8}
-    from f1_lakehouse_spark.sources.mor import _delete_files, base_dir
+    from f1_lakehouse_spark.sources.mor import base_dir, stats
 
-    assert len(_delete_files(tbl, 0)) == 2
+    assert stats(tbl)["delete_fragments"] == 2
     base0 = base_dir(tbl)
-    mor_compact(spark, tbl, "id")
-    # the new generation is live at its claim; the displaced
-    # generation (base + deletes) survives one compaction cycle
+    folded = mor_compact(spark, tbl, "id")
+    # the new base is live at its commit; the displaced base and its
+    # delete entries survive one compaction cycle
     assert base_dir(tbl) != base0
     assert _os.path.isdir(base0)
-    assert _delete_files(tbl, 1) == []
+    assert stats(tbl)["delete_fragments"] == 0
     ids = {r["id"] for r in mor_read(spark, tbl, "id").collect()}
     assert ids == {2, 4, 5, 7, 8}
-    # a pinned reader of the displaced generation reconstructs the same rows
-    ids0 = {r["id"] for r in mor_read(spark, tbl, "id", gen=0).collect()}
+    # a reader pinned to the log before the compaction reconstructs the
+    # same rows
+    ids0 = {r["id"] for r in mor_read(spark, tbl, "id", at=folded - 1).collect()}
     assert ids0 == {2, 4, 5, 7, 8}
-    # one more compaction prunes the twice-displaced generation
+    # one more compaction prunes the twice-displaced base and its deletes
     mor_compact(spark, tbl, "id")
-    assert not _os.path.isdir(_os.path.join(tbl, "g0000000000"))
+    assert not _os.path.isdir(base0)
+    assert sorted(_os.listdir(_os.path.join(tbl, "_log"))) == [
+        f"{s:010d}" for s in (folded, folded + 1)
+    ]
 
 
 def test_table_changes_classification(spark, tmp_path):

@@ -6,11 +6,12 @@
   its writer so an equal-txn collision between writers always conflicts,
   publish_staged is crash-replay idempotent even after its branch was
   fast-forwarded, and manifest history is expirable with tag/branch pins.
-- sources/mor.py hardening + upsert: fragment commits are O_EXCL-
-  arbitrated (racing deletes can't overwrite each other), a commit
-  displaced by a racing compaction is redone rather than silently lost,
-  crash-orphaned staging dirs are swept, and latest-wins insert fragments
-  give MERGE semantics in one atomic commit.
+- sources/mor.py: every commit is one rename onto the next seq of one
+  log, so racing deletes, upserts and compactions each get their own
+  entry, a compaction never changes the view (not even for a commit that
+  races its fold), a stalled compactor is never live, crash-orphaned
+  staging dirs are swept, and latest-wins insert fragments give MERGE
+  semantics in one atomic commit.
 - sources/txn.table_changes(emit_pre_post=True): Delta-CDF row semantics
   (update_preimage/update_postimage) and the signed-delta identity an
   incremental consumer relies on.
@@ -20,7 +21,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -354,7 +354,7 @@ def test_expire_history_branch_pin(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# mor.py: O_EXCL seq arbitration, displaced-commit redo, orphan sweep
+# mor.py: one commit log — every commit is one rename onto the next seq
 # ---------------------------------------------------------------------------
 
 
@@ -369,70 +369,202 @@ def _mor_base(spark, tmp_path, name="t"):
     return tbl
 
 
-def test_mor_seq_claim_burned_by_stale_lock(spark, tmp_path):
-    """A crashed claim (an orphan claim record) burns its seq: the next
-    commit skips to the following seq instead of blocking or clobbering."""
-    from f1_lakehouse_spark.sources.mor import CLAIMS, _delete_files, mor_delete
+_MOR_BASE_VIEW = {i: i % 3 for i in range(10)}
+
+
+def _mor_base_view_without(key):
+    return {k: v for k, v in _MOR_BASE_VIEW.items() if k != key}
+
+
+def _mor_view(spark, tbl):
+    from f1_lakehouse_spark.sources.mor import mor_read
+
+    return {r["id"]: r["grp"] for r in mor_read(spark, tbl, "id").collect()}
+
+
+def _mor_upsert(spark, tbl, rows):
+    from f1_lakehouse_spark.sources.mor import mor_upsert
+
+    df = spark.createDataFrame(rows, "id int, grp int")
+    assert mor_upsert(spark, tbl, "id", df) == len(rows)
+
+
+def _mor_log(tbl):
+    return sorted(int(e) for e in os.listdir(os.path.join(tbl, "_log")))
+
+
+def _hook_commits(monkeypatch, hook):
+    """Route every MoR commit rename through ``hook(kind, rename)``:
+    ``kind`` is "base" for a staged base (a compaction) and "fragment"
+    otherwise, and ``rename()`` performs the real rename and returns
+    whether it claimed the name. Commits the hook makes itself come back
+    through it, so it keeps its own state."""
+    import f1_lakehouse_spark.sources.mor as mor
+
+    real = mor.claim_rename
+
+    def claim(src, dst):
+        kind = "base" if os.path.isdir(os.path.join(src, "base")) else "fragment"
+        return hook(kind, lambda: real(src, dst))
+
+    monkeypatch.setattr(mor, "claim_rename", claim)
+
+
+def test_mor_delete_after_fold_snapshot_stays_hidden(spark, tmp_path, monkeypatch):
+    """A delete of id 5 commits after a compaction's snapshot and before
+    its commit. Every read from the delete's commit on hides id 5: right
+    after it, right after the compaction's commit, and after the
+    compaction returns."""
+    import f1_lakehouse_spark.sources.mor as mor
 
     tbl = _mor_base(spark, tmp_path)
-    claims = os.path.join(tbl, "g0000000000", CLAIMS)
-    os.makedirs(claims)
-    open(os.path.join(claims, "0000000001"), "w").close()
-    n = mor_delete(spark, tbl, "id", F.col("id") == 0)
-    assert n == 1
-    files = _delete_files(tbl, 0)
-    assert [os.path.basename(p) for p in files] == ["d0000000002.parquet"]
+    views = []
+
+    def hook(kind, rename):
+        if kind == "base" and not views:
+            assert mor.mor_delete(spark, tbl, "id", F.col("id") == 5) == 1
+            views.append(_mor_view(spark, tbl))
+        ok = rename()
+        if kind == "base" and ok:
+            views.append(_mor_view(spark, tbl))
+        return ok
+
+    _hook_commits(monkeypatch, hook)
+    mor.mor_compact(spark, tbl, "id")
+    views.append(_mor_view(spark, tbl))
+    model = _mor_base_view_without(5)
+    assert views == [model] * 3, views
+
+
+def test_mor_folded_upsert_is_not_redone_over_a_newer_one(spark, tmp_path, monkeypatch):
+    """W's upsert of id 5 -> 1 commits, a compaction folds it and X
+    upserts id 5 -> 2, all before W returns. W's commit is not redone
+    over X's: id 5 stays 2."""
+    import f1_lakehouse_spark.sources.mor as mor
+
+    tbl = _mor_base(spark, tmp_path)
+    done = []
+
+    def hook(kind, rename):
+        ok = rename()
+        if kind == "fragment" and not done:
+            done.append(True)
+            mor.mor_compact(spark, tbl, "id")
+            assert _mor_view(spark, tbl)[5] == 1
+            _mor_upsert(spark, tbl, [(5, 2)])
+        return ok
+
+    _hook_commits(monkeypatch, hook)
+    _mor_upsert(spark, tbl, [(5, 1)])
+    assert _mor_view(spark, tbl) == {**_MOR_BASE_VIEW, 5: 2}
+
+
+def test_mor_late_delete_does_not_change_the_view_across_compaction(
+    spark, tmp_path, monkeypatch
+):
+    """W's delete of id 5 is held at its rename while X upserts id 5 -> 2
+    and a compaction folds X. W's rename is let go right before the
+    compaction's commit. The view just before that commit equals the view
+    after the compaction returns: a compaction never changes the table.
+    W's delete commits after X's upsert, so in the end id 5 is gone."""
+    import f1_lakehouse_spark.sources.mor as mor
+
+    tbl = _mor_base(spark, tmp_path)
+    held, views = [], []
+
+    def hook(kind, rename):
+        if kind == "fragment" and not held:  # W
+            held.append(rename)
+            _mor_upsert(spark, tbl, [(5, 2)])  # X
+            mor.mor_compact(spark, tbl, "id")
+            views.append(_mor_view(spark, tbl))
+            return held[1]  # whether W's rename claimed its seq
+        if kind == "base" and len(held) == 1:
+            held.append(held[0]())  # W lands before the compaction commits
+            views.append(_mor_view(spark, tbl))
+        return rename()
+
+    _hook_commits(monkeypatch, hook)
+    assert mor.mor_delete(spark, tbl, "id", F.col("id") == 5) == 1
+    assert views[0] == views[1] == {**_MOR_BASE_VIEW, 5: 2}, views
+    assert _mor_view(spark, tbl) == _mor_base_view_without(5)
+
+
+def test_mor_racing_compactions_furthest_fold_stays_live(spark, tmp_path, monkeypatch):
+    """Compaction A folds, then a delete commits, then A commits. Before A
+    checks its commit, compaction B folds through the delete and commits.
+    B's fold reaches further, so B's base is live and B returns, A raises
+    CommitConflictError, and the view equals the model."""
+    import f1_lakehouse_spark.sources.mor as mor
+
+    tbl = _mor_base(spark, tmp_path)
+    steps = []
+
+    def hook(kind, rename):
+        if kind == "base" and not steps:  # A, after its fold
+            steps.append("delete")
+            assert mor.mor_delete(spark, tbl, "id", F.col("id") == 3) == 1
+        ok = rename()
+        if kind == "base" and ok and steps == ["delete"]:  # A has committed
+            steps.append("B")
+            steps.append(mor.mor_compact(spark, tbl, "id"))
+        return ok
+
+    _hook_commits(monkeypatch, hook)
+    with pytest.raises(CommitConflictError):
+        mor.mor_compact(spark, tbl, "id")
+    assert mor.stats(tbl)["base_seq"] == steps[2]
+    assert _mor_view(spark, tbl) == _mor_base_view_without(3)
 
 
 @pytest.mark.parametrize("kind", ["delete", "upsert"])
 def test_mor_held_writer_never_reuses_a_committed_seq(
     spark, tmp_path, monkeypatch, kind
 ):
-    """Writer Y picks its seq and is held at the claim while X commits
+    """Writer Y picks its seq and is held at its rename while X commits
     ``mor_delete(id == 1)`` at that seq. Y, a delete of id 2 or an upsert
-    of it, then lands at its own seq: the two fragments have distinct seqs
-    across deletes and inserts, and id 1 stays deleted."""
+    of it, then loses the rename and lands at the next seq: the log is
+    dense, each commit has its own entry, and id 1 stays deleted."""
     import threading
 
     import f1_lakehouse_spark.sources.mor as mor
 
     tbl = _mor_base(spark, tmp_path)
-    at_claim, release = threading.Event(), threading.Event()
-    real_create = mor.create_exclusive
+    at_rename, release = threading.Event(), threading.Event()
 
-    def create(path, payload):
-        if threading.current_thread().name == "Y" and not at_claim.is_set():
-            at_claim.set()
+    def hook(_kind, rename):
+        if threading.current_thread().name == "Y" and not at_rename.is_set():
+            at_rename.set()
             assert release.wait(120)
-        return real_create(path, payload)
+        return rename()
 
     def commit_y():
         try:
             if kind == "delete":
                 mor.mor_delete(spark, tbl, "id", F.col("id") == 2)
             else:
-                batch = spark.createDataFrame([(2, 9)], "id int, grp int")
-                mor.mor_upsert(spark, tbl, "id", batch)
+                _mor_upsert(spark, tbl, [(2, 9)])
             outcomes.append("ok")
         except Exception as e:  # the outcome is what the test asserts on
             outcomes.append(e)
 
-    monkeypatch.setattr(mor, "create_exclusive", create)
+    _hook_commits(monkeypatch, hook)
     outcomes = []
     y = threading.Thread(target=commit_y, name="Y")
     y.start()
     try:
-        assert at_claim.wait(120)
+        assert at_rename.wait(120)
         assert mor.mor_delete(spark, tbl, "id", F.col("id") == 1) == 1
     finally:
         release.set()
         y.join(180)
     assert not y.is_alive() and outcomes == ["ok"], outcomes
-    seqs = sorted(
-        s for sub in ("deletes", "inserts") for s, _ in mor._fragments(tbl, 0, sub)
+    assert _mor_log(tbl) == [0, 1, 2]
+    st = mor.stats(tbl)
+    assert (st["delete_fragments"], st["insert_fragments"]) == (
+        (2, 0) if kind == "delete" else (1, 1)
     )
-    assert seqs == [1, 2], seqs
-    model = {i: i % 3 for i in range(10) if i != 1}
+    model = _mor_base_view_without(1)
     if kind == "delete":
         del model[2]
     else:
@@ -440,60 +572,33 @@ def test_mor_held_writer_never_reuses_a_committed_seq(
     assert _mor_view(spark, tbl) == model
 
 
-def test_mor_commit_displaced_by_compaction_is_redone(spark, tmp_path):
-    """A fragment commit that lands in a generation a racing compaction
-    just displaced is removed and redone against the new live generation —
-    the delete is never silently lost."""
+def test_mor_staging_orphans_swept_by_compaction(spark, tmp_path, monkeypatch):
+    """A delete that stops before its rename has committed nothing and
+    leaves its staging dir. Only STALE staging dirs are swept (age-gated):
+    a compaction racing a live writer's in-flight staging must leave it
+    alone."""
+    import time
+
     import f1_lakehouse_spark.sources.mor as mor
 
     tbl = _mor_base(spark, tmp_path)
-    real_commit = mor._commit_fragment
-    calls = {"n": 0}
 
-    def racing_commit(table_dir, gen, sub, src):
-        calls["n"] += 1
-        if calls["n"] == 1:
-            # compaction wins the race just before our rename lands
-            mor.mor_compact(spark, table_dir, "id")
-        return real_commit(table_dir, gen, sub, src)
+    def crash(_kind, _rename):
+        raise _Stop
 
-    try:
-        mor._commit_fragment = racing_commit
-        n = mor.mor_delete(spark, tbl, "id", F.col("id") < 2)
-    finally:
-        mor._commit_fragment = real_commit
-    assert n == 2
-    assert calls["n"] == 2  # first commit displaced, second succeeded
-    assert mor._live_gen(tbl) == 1
-    # the displaced generation holds no orphan fragment
-    assert mor._delete_files(tbl, 0) == []
-    ids = {r["id"] for r in mor.mor_read(spark, tbl, "id").collect()}
-    assert ids == set(range(2, 10))
-
-
-def test_mor_staging_orphans_swept_by_compaction(spark, tmp_path):
-    """Only STALE staging dirs are swept (age-gated): a compaction racing
-    a live writer's in-flight staging must leave it alone."""
-    import time
-
-    from f1_lakehouse_spark.sources.mor import _STAGING_TTL_SECONDS, mor_compact
-
-    tbl = _mor_base(spark, tmp_path)
-    stale = os.path.join(tbl, "_staging_deadbeef")
+    with monkeypatch.context() as m:
+        _hook_commits(m, crash)
+        with pytest.raises(_Stop):
+            mor.mor_delete(spark, tbl, "id", F.col("id") == 4)
+    assert _mor_log(tbl) == [0] and _mor_view(spark, tbl) == _MOR_BASE_VIEW
+    (stale,) = [os.path.join(tbl, e) for e in os.listdir(tbl) if e.startswith("_staging_")]
     fresh = os.path.join(tbl, "_staging_cafebabe")
-    os.makedirs(stale)
     os.makedirs(fresh)
-    old = time.time() - _STAGING_TTL_SECONDS - 60
+    old = time.time() - mor._STAGING_TTL_SECONDS - 60
     os.utime(stale, (old, old))
-    mor_compact(spark, tbl, "id")
+    mor.mor_compact(spark, tbl, "id")
     assert not os.path.isdir(stale)
     assert os.path.isdir(fresh)
-
-
-def _mor_view(spark, tbl):
-    from f1_lakehouse_spark.sources.mor import mor_read
-
-    return {r["id"]: r["grp"] for r in mor_read(spark, tbl, "id").collect()}
 
 
 def _run_compaction(spark, tbl, outcomes):
@@ -508,56 +613,55 @@ def _run_compaction(spark, tbl, outcomes):
 
 
 def test_mor_stalled_compactor_cannot_rewind(spark, tmp_path, monkeypatch):
-    """Compactor B folds g0, then stalls at its commit point while A and C
-    compact, with an upsert committed after each. When B resumes, the
-    generation pointer never moves back, no committed upsert disappears,
-    and B either conflicts or succeeds without rewinding."""
+    """Compactor B folds the base, then stalls at its commit while A and C
+    compact, with an upsert committed after each. When B resumes, its
+    base is appended but never live: B raises CommitConflictError, the
+    live base never moves back and no committed upsert disappears."""
     import threading
 
     import f1_lakehouse_spark.sources.mor as mor
 
     tbl = _mor_base(spark, tmp_path)
-    model = {i: i % 3 for i in range(10)}
-    at_claim, release = threading.Event(), threading.Event()
-    real_claim = mor._claim_generation
+    model = dict(_MOR_BASE_VIEW)
+    at_rename, release = threading.Event(), threading.Event()
 
-    def claim(table_dir, staging, gen):
-        if threading.current_thread().name == "B":
-            at_claim.set()
+    def hook(_kind, rename):
+        if threading.current_thread().name == "B" and not at_rename.is_set():
+            at_rename.set()
             assert release.wait(120)
-        return real_claim(table_dir, staging, gen)
+        return rename()
 
-    monkeypatch.setattr(mor, "_claim_generation", claim)
+    _hook_commits(monkeypatch, hook)
     outcomes = []
     b = threading.Thread(
         target=_run_compaction, args=(spark, tbl, outcomes), name="B"
     )
     b.start()
     try:
-        assert at_claim.wait(120)
-        gens = [mor._live_gen(tbl)]
+        assert at_rename.wait(120)
+        live = [mor.stats(tbl)["base_seq"]]
         for new_id in (100, 101):  # compaction A, then compaction C
             mor.mor_compact(spark, tbl, "id")
-            gens.append(mor._live_gen(tbl))
+            live.append(mor.stats(tbl)["base_seq"])
             rows = [(new_id, 7), (new_id - 99, 8)]
-            df = spark.createDataFrame(rows, "id int, grp int")
-            mor.mor_upsert(spark, tbl, "id", df)
+            _mor_upsert(spark, tbl, rows)
             model.update(dict(rows))
-            gens.append(mor._live_gen(tbl))
+            live.append(mor.stats(tbl)["base_seq"])
     finally:
         release.set()
         b.join(180)
     assert not b.is_alive()
-    gens.append(mor._live_gen(tbl))
-    assert gens == sorted(gens) and gens[-1] == 2, gens
+    live.append(mor.stats(tbl)["base_seq"])
+    assert live == sorted(live) and live[-1] == live[-2], live
     assert _mor_view(spark, tbl) == model
-    assert outcomes == ["ok"] or isinstance(outcomes[0], CommitConflictError), outcomes
+    assert len(outcomes) == 1 and isinstance(outcomes[0], CommitConflictError), outcomes
 
 
 def test_mor_racing_compactors_one_conflicts(spark, tmp_path, monkeypatch):
-    """Two compactions of the same generation meet at the claim: exactly
-    one raises CommitConflictError (not a Spark write error from both
-    writing one g1/base), the rows are unchanged and no staging is left."""
+    """Two compactions fold the same log prefix and meet at the commit:
+    both append, and only then check. The later entry wins the tie and is
+    live, the other raises CommitConflictError (not a Spark write error),
+    the rows are unchanged and no staging is left."""
     import threading
 
     import f1_lakehouse_spark.sources.mor as mor
@@ -565,18 +669,24 @@ def test_mor_racing_compactors_one_conflicts(spark, tmp_path, monkeypatch):
     tbl = _mor_base(spark, tmp_path)
     mor.mor_delete(spark, tbl, "id", F.col("id") == 3)
     before = _mor_view(spark, tbl)
-    barrier = threading.Barrier(2, timeout=120)
-    real_claim = mor._claim_generation
+    at_rename, appended = threading.Barrier(2, timeout=120), threading.Barrier(2, timeout=120)
+    first_try = set()
 
-    def claim(table_dir, staging, gen):
-        barrier.wait()
-        return real_claim(table_dir, staging, gen)
+    def hook(_kind, rename):
+        me = threading.current_thread().name
+        if me not in first_try:
+            first_try.add(me)
+            at_rename.wait()
+        ok = rename()
+        if ok:
+            appended.wait()
+        return ok
 
-    monkeypatch.setattr(mor, "_claim_generation", claim)
+    _hook_commits(monkeypatch, hook)
     outcomes = []
     threads = [
-        threading.Thread(target=_run_compaction, args=(spark, tbl, outcomes))
-        for _ in range(2)
+        threading.Thread(target=_run_compaction, args=(spark, tbl, outcomes), name=f"c{i}")
+        for i in range(2)
     ]
     for t in threads:
         t.start()
@@ -586,37 +696,8 @@ def test_mor_racing_compactors_one_conflicts(spark, tmp_path, monkeypatch):
     errors = [o for o in outcomes if o != "ok"]
     assert len(outcomes) == 2 and len(errors) == 1, outcomes
     assert isinstance(errors[0], CommitConflictError), errors
-    assert mor._live_gen(tbl) == 1
+    assert mor.stats(tbl)["base_seq"] == 3  # base 0, delete 1, the two folds 2 and 3
     assert _mor_view(spark, tbl) == before
-    assert [e for e in os.listdir(tbl) if e.startswith("_staging_")] == []
-
-
-def test_mor_crashed_compactor_is_rolled_forward(spark, tmp_path, monkeypatch):
-    """A compaction that stops right after claiming g1, before its
-    carry-forward, has committed: g1 is live at its claim. The next
-    compaction carries forward the delete committed into g0 after the
-    fold's snapshot before it folds, so the delete survives."""
-    import f1_lakehouse_spark.sources.mor as mor
-
-    tbl = _mor_base(spark, tmp_path)
-    real_claim = mor._claim_generation
-
-    def claim(table_dir, staging, gen):
-        keys = spark.createDataFrame([(5,)], "id int")  # lands after the snapshot
-        part_dir, part, _ = mor._stage_single_file(keys, table_dir)
-        assert mor._commit_fragment(table_dir, 0, "deletes", part) is True
-        shutil.rmtree(part_dir)
-        assert real_claim(table_dir, staging, gen)
-        raise _Stop
-
-    with monkeypatch.context() as m:
-        m.setattr(mor, "_claim_generation", claim)
-        with pytest.raises(_Stop):
-            mor.mor_compact(spark, tbl, "id")
-    assert mor._live_gen(tbl) == 1
-    mor.mor_compact(spark, tbl, "id")
-    assert mor._live_gen(tbl) == 2
-    assert set(_mor_view(spark, tbl)) == set(range(10)) - {5}
     assert [e for e in os.listdir(tbl) if e.startswith("_staging_")] == []
 
 
@@ -627,13 +708,12 @@ def test_mor_crashed_compactor_is_rolled_forward(spark, tmp_path, monkeypatch):
 
 def test_mor_upsert_update_insert_delete_reinsert(spark, tmp_path):
     from f1_lakehouse_spark.sources.mor import (
-        _delete_files,
-        _insert_files,
         base_dir,
         mor_compact,
         mor_delete,
         mor_read,
         mor_upsert,
+        stats,
     )
 
     tbl = _mor_base(spark, tmp_path)
@@ -662,11 +742,13 @@ def test_mor_upsert_update_insert_delete_reinsert(spark, tmp_path):
     assert view()[20] == 9
     # compaction folds inserts AND deletes, content-identically
     pre = sorted(view().items())
-    mor_compact(spark, tbl, "id")
+    folded = mor_compact(spark, tbl, "id")
     assert sorted(view().items()) == pre
-    assert _delete_files(tbl, 1) == [] and _insert_files(tbl, 1) == []
-    # pinned reader of the displaced generation reconstructs the same rows
-    pinned = {r["id"]: r["grp"] for r in mor_read(spark, tbl, "id", gen=0).collect()}
+    st = stats(tbl)
+    assert (st["base_seq"], st["delete_fragments"], st["insert_fragments"]) == (folded, 0, 0)
+    # a reader pinned to the log before the compaction (the displaced
+    # base and its fragments) reconstructs the same rows
+    pinned = {r["id"]: r["grp"] for r in mor_read(spark, tbl, "id", at=folded - 1).collect()}
     assert sorted(pinned.items()) == pre
 
 
@@ -693,7 +775,7 @@ def test_mor_upsert_rejects_duplicate_keys(spark, tmp_path, data, schema, error)
     """A batch with duplicate keys (NULL counts as one key) or a schema
     other than the base's is rejected before anything is staged, and the
     table stays readable; a single NULL-key row is a valid batch."""
-    from f1_lakehouse_spark.sources.mor import _insert_files, mor_read, mor_upsert
+    from f1_lakehouse_spark.sources.mor import mor_read, mor_upsert
 
     tbl = _mor_base(spark, tmp_path)
     base_rows = [(i, i % 3) for i in range(10)]
@@ -712,7 +794,7 @@ def test_mor_upsert_rejects_duplicate_keys(spark, tmp_path, data, schema, error)
     with pytest.raises(ValueError, match=error):
         mor_upsert(spark, tbl, "id", batch)
     # no fragment was committed by the failed batch
-    assert _insert_files(tbl, 0) == []
+    assert _mor_log(tbl) == [0]
     assert view() == base_rows
 
 
@@ -916,40 +998,8 @@ def test_vacuum_orphans_classes_and_age_gate(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# review fixes (r11): carry-forward, two-sided token guard, WAP loser
-# cleanup, content-atomic exclusive creates
+# review fixes (r11): WAP loser cleanup, content-atomic exclusive creates
 # ---------------------------------------------------------------------------
-
-
-def test_mor_compaction_carries_forward_late_fragments(spark, tmp_path, monkeypatch):
-    """A fragment committed while the compaction's fold job is running
-    (writer's re-verify still sees the old generation → reports
-    success) must be carried forward into the new generation — the
-    ordering the displaced-commit redo cannot catch."""
-    import shutil as _sh
-
-    import f1_lakehouse_spark.sources.mor as mor
-
-    tbl = _mor_base(spark, tmp_path)
-    mor.mor_delete(spark, tbl, "id", F.col("id") == 0)  # folded normally
-    real_claim = mor._claim_generation
-
-    def claim_after_late_commit(table_dir, staging, gen):
-        # the racing writer's fragment lands AFTER the fold snapshot and
-        # BEFORE the claim; its own re-verify passes (g0 still live)
-        keys = spark.createDataFrame([(5,)], "id int")
-        part_dir, part, _ = mor._stage_single_file(keys, table_dir)
-        assert mor._commit_fragment(table_dir, 0, "deletes", part) is True
-        _sh.rmtree(part_dir, ignore_errors=True)
-        return real_claim(table_dir, staging, gen)
-
-    monkeypatch.setattr(mor, "_claim_generation", claim_after_late_commit)
-    mor.mor_compact(spark, tbl, "id")
-    assert mor._live_gen(tbl) == 1
-    # the late delete was NOT lost: id 5 is suppressed in the new gen
-    ids = {r["id"] for r in mor.mor_read(spark, tbl, "id").collect()}
-    assert ids == set(range(1, 10)) - {5}, ids
-    assert len(mor._delete_files(tbl, 1)) == 1  # carried fragment lives on
 
 
 def test_wap_loser_cleans_staging_on_conflict(spark, tmp_path):
