@@ -30,8 +30,11 @@ the lower-seq rows of its key. A compaction folds an exact prefix of the
 log, so nothing moves after its commit; a stalled compactor whose fold
 another one passed is never live. Compaction keeps the live base, the
 base it displaced (for readers still on it) and the fragments above the
-latter. A writer held between its log listing and its rename across two
-compactions could rename into a pruned seq, below the live base.
+latter, and empties the rest: a pruned entry keeps its dir with a
+``_PRUNED`` marker, so its seq is never free again and a writer held
+between its log listing and its rename loses the rename there and
+retries at the head. The marked dirs go once older than the staging TTL,
+the premise of the staging sweep too (no commit is in flight that long).
 
 Reference parity: the reference has no delete/update path (bronze is
 append-only, silver/gold are full rebuilds); Delta/Iceberg equivalent:
@@ -55,6 +58,7 @@ from f1_lakehouse_spark.sources.txn import CommitConflictError
 
 LOG = "_log"
 THROUGH = "_THROUGH"
+PRUNED = "_PRUNED"
 FRAGMENT_KINDS = ("deletes", "inserts")
 # a fragment row's seq, from its part file's path
 _PART_SEQ = r"(\d{10})/(?:deletes|inserts)/[^/]*$"
@@ -85,8 +89,7 @@ def _view(table_dir: str, at: int | None = None) -> tuple[int, list]:
     base seq, [(seq, kind, part paths)] of the fragment entries above its
     ``_THROUGH``, seq-ascending). Walks down from the head and stops
     at the best ``_THROUGH`` found, since a base folds less than its own
-    seq. An entry with neither ``_THROUGH`` nor a fragment dir, or one
-    that vanishes, is being pruned and skipped."""
+    seq. An entry marked ``_PRUNED``, or one that vanishes, is skipped."""
     base, through, frags = None, -1, []
     for seq in reversed(_seqs(table_dir)):
         if seq <= through:
@@ -96,6 +99,8 @@ def _view(table_dir: str, at: int | None = None) -> tuple[int, list]:
         entry = _entry(table_dir, seq)
         try:
             names = os.listdir(entry)
+            if PRUNED in names:
+                continue
             if THROUGH in names and (t := _through(entry)) > through:
                 base, through = seq, t
             frags += [
@@ -141,7 +146,8 @@ def _new_staging(table_dir: str) -> str:
 def _append(table_dir: str, staging: str) -> int:
     """Commit a fully written staging dir as the next log entry: rename it
     onto the seq after the head, and onto the following one when a racing
-    commit took that. Returns the entry's seq."""
+    commit took that (or took it and was pruned since: the marked dir
+    stays). Returns the entry's seq."""
     while True:
         seq = _seqs(table_dir)[-1] + 1
         if claim_rename(staging, _entry(table_dir, seq)):
@@ -287,27 +293,48 @@ def mor_read(
 
 
 def _prune(table_dir: str) -> None:
-    """Remove every entry but the head (so a fresh listing never picks a
-    pruned seq), the live base, the base it displaced and the fragments above the latter's
-    ``_THROUGH``."""
+    """Empty every entry but the head, the live base, the base it
+    displaced and the fragments above the latter's ``_THROUGH``, and
+    remove the entries emptied more than the staging TTL ago (never the
+    head, so a fresh listing never picks a freed seq). The ``_PRUNED``
+    marker is written before the data goes, so an entry's dir is never
+    empty and no rename lands in it: a writer whose listing predates that
+    seq's commit retries at the head instead of below the live base."""
+    horizon = time.time() - _STAGING_TTL_SECONDS
     seqs = _seqs(table_dir)
-    bases = {}
+    bases, marked = {}, set()
     for seq in seqs:
+        entry = _entry(table_dir, seq)
         try:
-            bases[seq] = _through(_entry(table_dir, seq))
+            if os.path.exists(os.path.join(entry, PRUNED)):
+                marked.add(seq)
+            else:
+                bases[seq] = _through(entry)
         except FileNotFoundError:
-            pass  # a fragment, or an entry being pruned
+            pass  # a fragment
     ranked = sorted(bases, key=lambda s: (bases[s], s), reverse=True)  # live first
     live = ranked[0]
     displaced = next((s for s in ranked if bases[s] < bases[live]), live)
     low = bases[displaced]
     keep = {seqs[-1], live, displaced}
-    # ascending: a reader walking down from a stale head that finds an
-    # entry gone finds every base below it gone too, so it raises instead
-    # of reading a view with fragments missing
+    # ascending: a reader walking down from a stale head that skips a
+    # marked entry finds every pruned entry below it marked too, so it
+    # reads a kept base's view or raises (no base), never a view with
+    # fragments missing
     for seq in seqs:
-        if seq not in keep and (seq in bases or seq <= low):
-            shutil.rmtree(_entry(table_dir, seq), ignore_errors=True)
+        entry = _entry(table_dir, seq)
+        try:
+            if seq in keep:
+                continue
+            if seq in marked:
+                if os.path.getmtime(entry) < horizon:
+                    shutil.rmtree(entry, ignore_errors=True)
+            elif seq in bases or seq <= low:
+                open(os.path.join(entry, PRUNED), "w").close()
+                for name in ("base", *FRAGMENT_KINDS):
+                    shutil.rmtree(os.path.join(entry, name), ignore_errors=True)
+        except FileNotFoundError:
+            pass  # pruned by a racing compaction
 
 
 def _sweep_staging_orphans(table_dir: str) -> None:

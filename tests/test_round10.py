@@ -385,12 +385,37 @@ def test_mor_delete_read_compact_cycle(spark, tmp_path):
     # same rows
     ids0 = {r["id"] for r in mor_read(spark, tbl, "id", at=folded - 1).collect()}
     assert ids0 == {2, 4, 5, 7, 8}
-    # one more compaction prunes the twice-displaced base and its deletes
+    # one more compaction prunes the twice-displaced base and its deletes:
+    # their entries are emptied and marked, keeping their seqs taken
+    import time as _time
+
+    from f1_lakehouse_spark.sources import mor as _mor
+
     mor_compact(spark, tbl, "id")
     assert not _os.path.isdir(base0)
-    assert sorted(_os.listdir(_os.path.join(tbl, "_log"))) == [
+    log = _os.path.join(tbl, "_log")
+
+    def entries():
+        return {e: set(_os.listdir(_os.path.join(log, e))) for e in _os.listdir(log)}
+
+    def holds_data(names):
+        return bool(names & {"base", "deletes", "inserts"})
+
+    pruned = sorted(e for e, names in entries().items() if "_PRUNED" in names)
+    assert pruned == [f"{s:010d}" for s in range(folded)]
+    assert not any(holds_data(entries()[e]) for e in pruned)
+    assert sorted(set(entries()) - set(pruned)) == [
         f"{s:010d}" for s in (folded, folded + 1)
     ]
+    # marked entries older than the staging TTL are removed outright
+    old = _time.time() - _mor._STAGING_TTL_SECONDS - 60
+    for e in pruned:
+        _os.utime(_os.path.join(log, e), (old, old))
+    mor_compact(spark, tbl, "id")
+    now = entries()
+    assert sorted(now) == [f"{s:010d}" for s in (folded, folded + 1, folded + 2)]
+    assert "_PRUNED" in now[f"{folded:010d}"] and not holds_data(now[f"{folded:010d}"])
+    assert {r["id"] for r in mor_read(spark, tbl, "id").collect()} == {2, 4, 5, 7, 8}
 
 
 def test_table_changes_classification(spark, tmp_path):

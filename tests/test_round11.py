@@ -572,6 +572,54 @@ def test_mor_held_writer_never_reuses_a_committed_seq(
     assert _mor_view(spark, tbl) == model
 
 
+@pytest.mark.parametrize("compactions", [1, 2])
+def test_mor_writer_held_across_compactions_lands_above_the_live_base(
+    spark, tmp_path, monkeypatch, compactions
+):
+    """Writer W's delete of id 5 picks seq 1 and is held at its rename
+    while X upserts id 7 -> 9 at seq 1 and one or two compactions fold
+    X. Two compactions prune seq 1, yet W never lands there, below the
+    live base where no read would see it: W's rename loses to the pruned
+    entry's dir too, and W commits at the head. The delete is visible."""
+    import threading
+
+    import f1_lakehouse_spark.sources.mor as mor
+
+    tbl = _mor_base(spark, tmp_path)
+    at_rename, release = threading.Event(), threading.Event()
+
+    def hook(_kind, rename):
+        if threading.current_thread().name == "W" and not at_rename.is_set():
+            at_rename.set()
+            assert release.wait(120)
+        return rename()
+
+    def commit_w():
+        try:
+            assert mor.mor_delete(spark, tbl, "id", F.col("id") == 5) == 1
+            outcomes.append("ok")
+        except Exception as e:  # the outcome is what the test asserts on
+            outcomes.append(e)
+
+    _hook_commits(monkeypatch, hook)
+    outcomes = []
+    w = threading.Thread(target=commit_w, name="W")
+    w.start()
+    try:
+        assert at_rename.wait(120)
+        _mor_upsert(spark, tbl, [(7, 9)])  # X, seq 1
+        folds = [mor.mor_compact(spark, tbl, "id") for _ in range(compactions)]
+    finally:
+        release.set()
+        w.join(180)
+    assert not w.is_alive() and outcomes == ["ok"], outcomes
+    st = mor.stats(tbl)
+    assert st["base_seq"] == folds[-1]
+    assert (st["delete_fragments"], st["insert_fragments"]) == (1, 0)
+    assert _mor_log(tbl)[-1] == folds[-1] + 1  # W, at the head
+    assert _mor_view(spark, tbl) == {**_mor_base_view_without(5), 7: 9}
+
+
 def test_mor_staging_orphans_swept_by_compaction(spark, tmp_path, monkeypatch):
     """A delete that stops before its rename has committed nothing and
     leaves its staging dir. Only STALE staging dirs are swept (age-gated):
